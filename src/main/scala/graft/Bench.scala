@@ -203,10 +203,18 @@ object Bench {
       // mixed-format ingest-to-WAND pipeline
       "q_docx_extract", "q_pdf_extract", "q_markdown_chunks",
       "q_multiformat_wand")
+    // a leaf that throws still records its wall time, so it is also named
+    // in "failed" and the run exits non-zero — a failure never reads as a
+    // fast query
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val battery = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+        }
         name -> (System.nanoTime() - t0) / 1e9
       }
     }
@@ -261,7 +269,8 @@ object Bench {
       math.min(calibStart, math.min(calibMid, calibEnd)) <
         DegradedFraction * NominalMops
     println(
-      s"""{"metric":"build ${f"$buildDocsPerSec%.0f"} docs/sec; query ${f"$queriesPerSec%.1f"} q/s; total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","build_docs_per_sec":${f"$buildDocsPerSec%.1f"},"query_qps":${f"$queriesPerSec%.1f"},"ds_batch_qps":${f"$dsQps%.1f"},"ds_100k_qps":${f"$ds2Qps%.1f"},"n_pages":$nPages,"n_queries":$nQueries,"n_ds_queries":$nDsQueries,"n_ds2_queries":$nDs2,"cpu_calib_start_mops":${f"$calibStart%.0f"},"cpu_calib_mid_mops":${f"$calibMid%.0f"},"cpu_calib_end_mops":${f"$calibEnd%.0f"},"scratch_removed_bytes":$scratchRemoved,"window_degraded":$windowDegraded}""")
+      s"""{"metric":"build ${f"$buildDocsPerSec%.0f"} docs/sec; query ${f"$queriesPerSec%.1f"} q/s; total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","build_docs_per_sec":${f"$buildDocsPerSec%.1f"},"query_qps":${f"$queriesPerSec%.1f"},"ds_batch_qps":${f"$dsQps%.1f"},"ds_100k_qps":${f"$ds2Qps%.1f"},"n_pages":$nPages,"n_queries":$nQueries,"n_ds_queries":$nDsQueries,"n_ds2_queries":$nDs2,"cpu_calib_start_mops":${f"$calibStart%.0f"},"cpu_calib_mid_mops":${f"$calibMid%.0f"},"cpu_calib_end_mops":${f"$calibEnd%.0f"},"scratch_removed_bytes":$scratchRemoved,"window_degraded":$windowDegraded,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

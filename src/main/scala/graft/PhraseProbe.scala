@@ -41,11 +41,10 @@ object PhraseProbe {
     def timed(f: => Long): (Double, Long) = {
       val t = System.nanoTime(); val n = f; ((System.nanoTime() - t) / 1e9, n)
     }
-    val post = index.InvertedIndex.postings(tok)
     // warm both paths once
-    query.Phrase.topK(tok, post, phrase, 10).count()
+    query.Phrase.topK(tok, phrase, 10).count()
     query.Phrase.topKPositional(spark, dir, phrase, 10).count()
-    val (rescanSec, n1) = timed(query.Phrase.topK(tok, post, phrase, 10).count())
+    val (rescanSec, n1) = timed(query.Phrase.topK(tok, phrase, 10).count())
     val (posSec, n2) = timed(query.Phrase.topKPositional(spark, dir, phrase, 10).count())
     val (proxSec, n3) = timed(
       query.Phrase.proximityTopKPositional(spark, dir, "the", "w3", 3, 10).count())

@@ -305,8 +305,7 @@ object SparkEntry {
     // verification on the candidates only, top-10 by occurrence count.
     "q_phrase_topk" -> ((s, dir) => {
       val tok = DocsCorpus.tokenized(s, dir)
-      graft.query.Phrase.topK(tok, InvertedIndex.postings(tok),
-        Seq("table", "scan"), k = 10)
+      graft.query.Phrase.topK(tok, Seq("table", "scan"), k = 10)
     }),
 
     // Phrase search from the POSITIONAL index arm alone (no corpus rescan):
@@ -326,8 +325,7 @@ object SparkEntry {
     // with 0 < q - p <= 3 per doc, top-10.
     "q_proximity_topk" -> ((s, dir) => {
       val tok = DocsCorpus.tokenized(s, dir)
-      graft.query.Phrase.proximityTopK(tok, InvertedIndex.postings(tok),
-        "table", "scan", slop = 3, k = 10)
+      graft.query.Phrase.proximityTopK(tok, "table", "scan", slop = 3, k = 10)
     }),
     "q_proximity_positional_topk" -> ((s, dir) => {
       val idxDir = java.nio.file.Files.createTempDirectory("graft-proxq").toString
@@ -343,8 +341,8 @@ object SparkEntry {
     // positional-kernel paths against ONE exact DuckDB oracle.
     "q_near_topk" -> ((s, dir) => {
       val tok = DocsCorpus.tokenized(s, dir)
-      graft.query.Phrase.nearTopK(tok, InvertedIndex.postings(tok),
-        Seq("table", "scan", "query"), slop = 6, k = 10)
+      graft.query.Phrase.nearTopK(tok, Seq("table", "scan", "query"),
+        slop = 6, k = 10)
     }),
     "q_near_positional_topk" -> ((s, dir) => {
       val idxDir = java.nio.file.Files.createTempDirectory("graft-nearq").toString

@@ -91,7 +91,7 @@ object Ann {
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>
         val qs = bc.value
-        val heaps = qs.map(_ => new graft.query.Wand.TopKHeap(k))
+        val heaps = qs.map(_ => new graft.query.ShardServe.TopKHeap(k))
         it.foreach { case (id, vecSeq) =>
           val vec = vecSeq.toArray
           var qi = 0
@@ -209,7 +209,7 @@ object Ann {
       .mapPartitions { it =>
         val byCell = bc.value
         val heaps = scala.collection.mutable.HashMap
-          .empty[Long, graft.query.Wand.TopKHeap]
+          .empty[Long, graft.query.ShardServe.TopKHeap]
         it.foreach { case (id, vecSeq, cell) =>
           byCell.get(cell) match {
             case None => ()
@@ -218,7 +218,7 @@ object Ann {
               var i = 0
               while (i < qs.length) {
                 val (qid, qvec) = qs(i)
-                heaps.getOrElseUpdate(qid, new graft.query.Wand.TopKHeap(k))
+                heaps.getOrElseUpdate(qid, new graft.query.ShardServe.TopKHeap(k))
                   .offer(cosineArr(qvec, vec), id)
                 i += 1
               }

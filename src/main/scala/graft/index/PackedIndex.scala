@@ -84,7 +84,8 @@ object PackedIndex {
   // ---- shard sizing ----------------------------------------------------
 
   /** Shard-count ceiling for [[deriveShardBits]]: the per-query global rank
-    * window receives numShards x k candidate rows, so numShards must stay
+    * window receives up to numShards x k candidate rows (one heap per
+    * kernel task, never more tasks than shards), so numShards must stay
     * bounded as the corpus grows — a FIXED docs-per-shard width (the old
     * default 16) made shard count linear in corpus size (~150k shards at
     * 10^10 docs -> 1.5M candidate rows per query). 4096 shards keeps that

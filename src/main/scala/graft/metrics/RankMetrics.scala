@@ -135,9 +135,10 @@ object RankMetrics {
     * contribute 0) are reproduced exactly. Agreement with the five-pass
     * path is bit-exact on the golden fixture and within the final ulp in
     * general (the cross-query summation ORDER differs between plans) —
-    * MetricsSpec pins both. The contract query keeps the five-pass path
-    * (its DuckDB oracle is order-sensitive at the last ulp); use this one
-    * for bulk evaluation.
+    * MetricsSpec pins both. The contract queries q_metrics and
+    * q_metrics_fused are both served by this plan (their 6-decimal rounding
+    * absorbs the last-ulp order difference); the five-pass [[summary]]
+    * stays as the reference-shaped cross-check.
     */
   def summaryFused(ranking: DataFrame, qrels: DataFrame, k: Int): DataFrame = {
     // nq must count EVERY qrels query (including ones absent from the

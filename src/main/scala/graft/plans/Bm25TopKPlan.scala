@@ -4,19 +4,17 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.index.{PackedIndex, PackedPostings}
-import graft.query.Wand
+import graft.query.{ShardServe, Wand}
 
 /** Whole-operator Catalyst integration for BM25 WAND retrieval (SURVEY §4
   * item 6, the (c)-tier of the custom-operator ladder): a logical leaf node
   * planned by an injected [[Strategy]] into a physical operator whose
   * doExecute runs the per-shard block-max WAND kernel. The node emits
-  * per-shard candidates (query_id, doc_id, score); the global top-k rank
+  * per-task candidates (query_id, doc_id, score); the global top-k rank
   * remains declarative on top, so Catalyst still owns the final exchange.
   *
   * Semantics are identical to [[graft.query.Wand.search]]; this packaging
@@ -47,13 +45,8 @@ object Bm25TopKPlan {
   def search(spark: SparkSession, indexDir: String,
              queries: Seq[(Long, String)], k: Int): DataFrame = {
     registerOnce(spark)
-    val candidates = org.apache.spark.sql.graftbridge.ColumnBridge
-      .ofRows(spark, Bm25TopKPlan(indexDir, queries, k))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    ShardServe.globalRank(org.apache.spark.sql.graftbridge.ColumnBridge
+      .ofRows(spark, Bm25TopKPlan(indexDir, queries, k)), k)
   }
 
   def registerOnce(spark: SparkSession): Unit =
@@ -72,9 +65,10 @@ object Bm25Strategy extends SparkStrategy {
   }
 }
 
-/** Physical WAND operator: scans the matched packed postings (term filter
-  * pushed to parquet), co-locates shards with an explicit-count exchange,
-  * and runs the kernel per shard group.
+/** Physical WAND operator: the shared shard-kernel driver
+  * ([[graft.query.ShardServe]]) behind [[graft.query.Wand.search]] — term
+  * pushdown scan, shard-capped exchange, per-task heaps — emitting the
+  * pre-rank candidates; the rank above this node stays declarative.
   */
 final case class Bm25TopKExec(indexDir: String, queries: Seq[(Long, String)],
                               k: Int,
@@ -82,42 +76,7 @@ final case class Bm25TopKExec(indexDir: String, queries: Seq[(Long, String)],
     extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val spark = session
-    val (stats, prepared) = Wand.prepare(spark, indexDir, queries)
-    val terms = prepared.flatMap(_.idf.keys).distinct
-    if (terms.isEmpty) return sparkContext.emptyRDD[InternalRow]
-    val bc = sparkContext.broadcast((stats, prepared))
-    val tomb = PackedIndex.loadTombstones(indexDir)
-    val bcDenied = sparkContext.broadcast(if (tomb.isEmpty) null else tomb)
-    val parts = math.max(sparkContext.defaultParallelism * 4, 16)
-    import spark.implicits._
-    val matched = PackedIndex.loadPostings(spark, indexDir)
-      .filter(col("term").isin(terms: _*))
-      .as[PackedPostings]
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-    matched.rdd.mapPartitions { it =>
-      val (st, qs) = bc.value
-      val buf = it.buffered
-      val groups = new Iterator[Iterator[Wand.Hit]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): Iterator[Wand.Hit] = {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[PackedPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          Wand.shardSearch(rows.iterator, qs, st, k, denied = bcDenied.value)
-        }
-      }.flatten
-      // downstream operators expect UnsafeRow; project per partition
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(Bm25TopKPlan.schema.map(_.dataType).toArray)
-      val scratch = new GenericInternalRow(3)
-      groups.map { h =>
-        scratch.setLong(0, h.query_id)
-        scratch.setLong(1, h.doc_id)
-        scratch.setDouble(2, h.score)
-        proj.apply(scratch).copy().asInstanceOf[InternalRow]
-      }
-    }
+    val (stats, prepared) = Wand.prepare(session, indexDir, queries)
+    Wand.candidates(session, indexDir, stats, prepared, k).queryExecution.toRdd
   }
 }

@@ -72,21 +72,20 @@ object Phrase {
 
   /** Top-k docs by ordered proximity count (corpus-rescan verify path —
     * the positional-index sibling is [[proximityTopKPositional]]).
-    * `postings` is unused (kept for source compatibility): candidates come
-    * from an `array_contains` prefilter on the token arrays — the same
-    * conjunctive predicate the postings semi-join expressed, evaluated
-    * where the data already sits (no postings aggregation, no join, no
-    * shuffle; the count kernel is the positional arm's, shared).
+    * Candidates come from an `array_contains` prefilter on the token
+    * arrays — the conjunctive predicate evaluated where the data already
+    * sits (no postings aggregation, no join, no shuffle; the count kernel
+    * is the positional arm's, shared).
     */
-  def proximityTopK(tokenized: DataFrame, postings: DataFrame,
+  def proximityTopK(tokenized: DataFrame,
                     a: String, b: String, slop: Int, k: Int): DataFrame = {
     require(slop >= 1, "proximityTopK: slop must be >= 1")
     rescanTopK(tokenized, Array(a, b), "prox_tf", k)(proximityKernelCount(slop))
   }
 
-  /** Ordered proximity top-k from the POSITIONAL index arm alone: same
-    * shard-local kernel shape as [[topKPositional]], counting for every
-    * co-occurring doc the pairs (p in pos(a), q in pos(b)) with
+  /** Ordered proximity top-k from the POSITIONAL index arm alone: a
+    * one-query [[search]] of [[PositionalQuery.ProximityMatch]], counting
+    * for every co-occurring doc the pairs (p in pos(a), q in pos(b)) with
     * 0 < q - p <= slop via two binary searches per leader position.
     * Count-identical to [[proximityTopK]] (PhraseSpec property + shared
     * DuckDB oracle). Honors tombstones; stale arm fails loudly.
@@ -95,11 +94,9 @@ object Phrase {
                               indexDir: String, a: String, b: String,
                               slop: Int, k: Int,
                               io: graft.io.TableIO = graft.io.ParquetDirIO,
-                              meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
-    require(slop >= 1, "proximityTopKPositional: slop must be >= 1")
-    positionalKernelTopK(spark, indexDir, Seq(a, b), k, "prox_tf", io, meta)(
-      proximityKernelCount(slop))
-  }
+                              meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
+    searchOne(spark, indexDir, PositionalQuery.ProximityMatch(a, b, slop), k,
+      "prox_tf", io, meta)
 
   /** Per-doc ordered-proximity kernel over slot position arrays: count of
     * (a at p, b at q) pairs with 0 < q - p <= slop. Shared by the
@@ -152,10 +149,10 @@ object Phrase {
   }
 
   /** Top-k docs by unordered NEAR count (corpus-rescan verify path — the
-    * positional-index sibling is [[nearTopKPositional]]). `postings` is
-    * unused (kept for source compatibility) — see [[proximityTopK]].
+    * positional-index sibling is [[nearTopKPositional]]; candidates as in
+    * [[proximityTopK]]).
     */
-  def nearTopK(tokenized: DataFrame, postings: DataFrame,
+  def nearTopK(tokenized: DataFrame,
                terms: Seq[String], slop: Int, k: Int): DataFrame = {
     require(slop >= 1, "nearTopK: slop must be >= 1")
     require(terms.length >= 2 && terms.distinct == terms,
@@ -163,24 +160,20 @@ object Phrase {
     rescanTopK(tokenized, terms.toArray, "near_tf", k)(nearKernelCount(slop))
   }
 
-  /** Unordered NEAR top-k from the POSITIONAL index arm alone: same
-    * shard-local kernel shape as [[topKPositional]]; per anchor position,
-    * each follower term is probed with two binary searches for an
-    * occurrence in [p - slop, p + slop]. Count-identical to [[nearTopK]]
-    * (PhraseSpec property + shared DuckDB oracle). Honors tombstones;
-    * stale arm fails loudly.
+  /** Unordered NEAR top-k from the POSITIONAL index arm alone: a one-query
+    * [[search]] of [[PositionalQuery.NearMatch]]; per anchor position, each
+    * follower term is probed with two binary searches for an occurrence in
+    * [p - slop, p + slop]. Count-identical to [[nearTopK]] (PhraseSpec
+    * property + shared DuckDB oracle). Honors tombstones; stale arm fails
+    * loudly.
     */
   def nearTopKPositional(spark: org.apache.spark.sql.SparkSession,
                          indexDir: String, terms: Seq[String],
                          slop: Int, k: Int,
                          io: graft.io.TableIO = graft.io.ParquetDirIO,
-                         meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
-    require(slop >= 1, "nearTopKPositional: slop must be >= 1")
-    require(terms.length >= 2 && terms.distinct == terms,
-      "nearTopKPositional: need >= 2 distinct terms")
-    positionalKernelTopK(spark, indexDir, terms, k, "near_tf", io, meta)(
-      nearKernelCount(slop))
-  }
+                         meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
+    searchOne(spark, indexDir, PositionalQuery.NearMatch(terms, slop), k,
+      "near_tf", io, meta)
 
   /** Per-doc unordered-NEAR kernel over slot position arrays: anchors p of
     * slot 0 where every follower slot has an occurrence in [p-slop, p+slop].
@@ -251,14 +244,19 @@ object Phrase {
   }
 
   /** Top-k docs by sliding phrase count. `tokenized` is (doc_id, terms);
-    * `postings` is unused (kept for source compatibility) — see
-    * [[proximityTopK]] for the candidate-generation change.
+    * candidates as in [[proximityTopK]].
     */
-  def topK(tokenized: DataFrame, postings: DataFrame,
-           phrase: Seq[String], k: Int): DataFrame = {
+  def topK(tokenized: DataFrame, phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.nonEmpty, "topK: empty phrase")
     rescanTopK(tokenized, phrase.toArray, "phrase_tf", k)(phraseKernelCount)
   }
+
+  /** [[topK]] with an unused `postings` argument, kept only because the
+    * benchmark harness (`loadbench/`) calls this signature.
+    */
+  @deprecated("postings is unused; call topK(tokenized, phrase, k)", "0.1.0")
+  def topK(tokenized: DataFrame, postings: DataFrame,
+           phrase: Seq[String], k: Int): DataFrame = topK(tokenized, phrase, k)
 
   /** Shared corpus-rescan top-k: narrow `array_contains` conjunctive
     * prefilter (the same candidate set the old postings semi-join produced,
@@ -316,9 +314,10 @@ object Phrase {
 
   /** Top-k phrase search from the POSITIONAL index arm alone — no corpus
     * rescan (the production shape once [[graft.index.PositionalIndex]] is
-    * built): the phrase terms' positional rows are pulled with a pushed-down
-    * term filter, co-located per doc-shard (every term of a doc lives in
-    * the same shard by construction), and a per-shard kernel intersects the
+    * built): a one-query [[search]] of [[PositionalQuery.PhraseMatch]]. The
+    * phrase terms' positional rows are pulled with a pushed-down term
+    * filter, co-located per doc-shard (every term of a doc lives in the
+    * same shard by construction), and a per-shard kernel intersects the
     * terms' sorted doc lists and counts adjacency runs by binary-searching
     * each follower term's position array. Identical counts to the sliding
     * verify ([[topK]]) — pinned by PhraseSpec property tests and the shared
@@ -332,8 +331,19 @@ object Phrase {
                      indexDir: String, phrase: Seq[String], k: Int,
                      io: graft.io.TableIO = graft.io.ParquetDirIO,
                      meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
-    positionalKernelTopK(spark, indexDir, phrase, k, "phrase_tf", io, meta)(
-      phraseKernelCount)
+    searchOne(spark, indexDir, PositionalQuery.PhraseMatch(phrase), k,
+      "phrase_tf", io, meta)
+
+  /** One-query [[search]] in the single-query operators' schema:
+    * (doc_id, `countCol` long, rank).
+    */
+  private def searchOne(spark: org.apache.spark.sql.SparkSession,
+                        indexDir: String, q: PositionalQuery, k: Int,
+                        countCol: String, io: graft.io.TableIO,
+                        meta: graft.io.MetaIO): DataFrame =
+    search(spark, indexDir, Seq(0L -> q), k, io, meta)
+      .select(col("doc_id"), col("score").cast("long").as(countCol),
+        col("rank"))
 
   /** Per-doc exact-phrase kernel over slot position arrays: leader position
     * p matches iff slot j holds p + j for every j. Shared by the
@@ -388,7 +398,7 @@ object Phrase {
       val want = dfCounts.getOrElse(t, 0L)
       val got = posCounts.getOrElse(t, 0L)
       require(got == want,
-        s"positionalKernelTopK: positional arm is stale for term '$t' " +
+        s"Phrase: positional arm is stale for term '$t' " +
           s"($got positional postings vs df=$want) — run " +
           "PositionalIndex.append for the missed batch (or build to reset)")
     }
@@ -405,76 +415,41 @@ object Phrase {
     * Scale shape (flat in batch size, like the WAND batch kernel): the
     * UNION of the batch's terms is pulled with one pushed-down IN filter
     * and one shard repartition; per shard every term is decoded ONCE and
-    * shared by all queries touching it; per (shard, query) a k-bounded
-    * heap emits at most k rows, so the final per-query rank window sees
-    * <= shards x k rows — matched-doc counts never materialize globally.
+    * shared by all queries touching it; matches go straight into the
+    * task's heap per query ([[ShardServe.kernelHits]]), so the final
+    * per-query rank window sees <= numTasks x k rows — matched-doc counts
+    * never materialize globally.
     */
   def search(spark: org.apache.spark.sql.SparkSession, indexDir: String,
              queries: Seq[(Long, PositionalQuery)], k: Int,
              io: graft.io.TableIO = graft.io.ParquetDirIO,
              meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
-    import spark.implicits._
     require(k > 0, "Phrase.search: k must be > 0")
-    def empty = spark.emptyDataset[(Long, Long, Double)]
-      .toDF("query_id", "doc_id", "score")
-      .withColumn("rank", lit(1)).limit(0)
-    if (queries.isEmpty) return empty
+    lazy val none = ShardServe.globalRank(ShardServe.emptyHits(spark), k)
+    if (queries.isEmpty) return none
     val allTerms = queries.flatMap(_._2.slotTerms).distinct
     val (posRows, dfCounts) = loadGated(spark, indexDir, allTerms, io, meta)
     // conjunctive semantics: a query naming an unindexed term matches nothing
     val live = queries.filter(
       _._2.slotTerms.forall(t => dfCounts.getOrElse(t, 0L) > 0L)).toArray
-    if (live.isEmpty) return empty
+    if (live.isEmpty) return none
     val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
     val bcTomb = spark.sparkContext.broadcast(tomb)
     val bcQueries = spark.sparkContext.broadcast(live)
-    // capped at the shard count — see Wand.searchPrepared (r7)
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      graft.index.PackedIndex.numShardsBound(indexDir, meta)), 1)
-    val hits = posRows
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-      .mapPartitions { it =>
-        val qs = bcQueries.value
-        val tombArr = bcTomb.value
-        // ONE bounded heap per query for the whole task (all its shard
-        // groups) — the global rank receives numTasks x k rows per query
-        // instead of numShards x k, mirroring the WAND kernel's r7
-        // task-level merge; results identical (a doc in the global top-k
-        // is in every covering subset's top-k, same tie order)
-        val heaps = new Array[BoundedCountHeap](qs.length)
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[graft.index.PosPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          val decoded = decodeShard(rows.toSeq)
-          var qi = 0
-          while (qi < qs.length) {
-            val (_, pq) = qs(qi)
-            val matches = intersectCounts(decoded, pq.slotTerms.toArray,
-              tombArr, pq.kernel)
-            if (matches.hasNext) {
-              if (heaps(qi) == null) heaps(qi) = new BoundedCountHeap(k)
-              matches.foreach { case (doc, cnt) => heaps(qi).offer(doc, cnt) }
-            }
-            qi += 1
-          }
-        }
-        qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-          val h = heaps(qi)
-          if (h == null) Iterator.empty
-          else h.drain().map { case (doc, cnt) => (qid, doc, cnt) }
-        }
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, posRows, meta)
+    val hits = ShardServe.kernelHits(spark, grouped, k,
+      () => bcQueries.value.map(_._1))(_.shard) { (rows, heaps) =>
+      val qs = bcQueries.value
+      val decoded = decodeShard(rows)
+      var qi = 0
+      while (qi < qs.length) {
+        val pq = qs(qi)._2
+        intersectCounts(decoded, pq.slotTerms.toArray, bcTomb.value,
+          pq.kernel, heaps(qi))
+        qi += 1
       }
-      .toDF("query_id", "doc_id", "cnt")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cnt").desc, col("doc_id").asc)
-    hits.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"),
-        col("cnt").cast("double").as("score"), col("rank"))
+    }
+    ShardServe.globalRank(hits, k)
   }
 
   /** Dataset-typed positional query batch: (query_id, text) rows parsed by
@@ -495,93 +470,13 @@ object Phrase {
         chunk.map { case (id, text) => id -> mode.parse(text) }, k, io, meta)
     }
 
-  /** Bounded top-k accumulator by (count desc, doc_id asc) — the per-query
-    * task-level heap that keeps the batch path's global rank input at
-    * <= numTasks x k rows per query (see the r7 merge note in [[search]]).
-    */
-  private[query] final class BoundedCountHeap(k: Int) {
-    // worst-first ordering: head = smallest count, then largest doc_id
-    private val ord = Ordering.by[(Long, Long), (Long, Long)] {
-      case (doc, cnt) => (-cnt, doc)
-    }
-    private val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long)](ord)
-    def offer(doc: Long, cnt: Long): Unit = {
-      val e = (doc, cnt)
-      if (heap.size < k) heap.enqueue(e)
-      else if (ord.lt(e, heap.head)) { heap.dequeue(); heap.enqueue(e) }
-    }
-    def drain(): Iterator[(Long, Long)] = heap.iterator
-  }
-
-  /** Shared positional-kernel plumbing for phrase/proximity top-k:
-    * staleness gate, pushed-down term filter, shard-local doc-list
-    * intersection, tombstone check, then `countFn` over the per-SLOT
-    * position arrays (slot i = occurrences of `slotTerms(i)` in the doc;
-    * repeated terms share their array) — docs with count > 0 rank by
-    * (count desc, doc_id asc).
-    */
-  private def positionalKernelTopK(spark: org.apache.spark.sql.SparkSession,
-                                   indexDir: String, slotTerms: Seq[String],
-                                   k: Int, countCol: String,
-                                   io: graft.io.TableIO = graft.io.ParquetDirIO,
-                                   meta: graft.io.MetaIO = graft.io.LocalMetaIO)(
-      countFn: Array[Array[Long]] => Long): DataFrame = {
-    import spark.implicits._
-    require(slotTerms.nonEmpty, "positionalKernelTopK: no terms")
-    val distinctTerms = slotTerms.distinct
-    val (posRows, dfCounts) = loadGated(spark, indexDir, distinctTerms, io, meta)
-    if (distinctTerms.exists(t => dfCounts.getOrElse(t, 0L) == 0L))
-      return spark.emptyDataset[(Long, Long)].toDF("doc_id", countCol)
-        .withColumn("rank", lit(1)).limit(0)
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
-    val bcTomb = spark.sparkContext.broadcast(tomb)
-    val bcSlots = spark.sparkContext.broadcast(slotTerms.toArray)
-    // capped at the shard count — see Wand.searchPrepared (r7)
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      graft.index.PackedIndex.numShardsBound(indexDir, meta)), 1)
-    val counted = posRows
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[Iterator[(Long, Long)]] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[(Long, Long)] = {
-            val shard = buf.head.shard
-            val rows = scala.collection.mutable.ArrayBuffer.empty[graft.index.PosPostings]
-            while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-            shardSlotCounts(rows.toSeq, bcSlots.value, bcTomb.value, countFn)
-          }
-        }.flatten
-      }
-      .toDF("doc_id", countCol)
-      .filter(col(countCol) > 0)
-    val bounded = counted
-      .orderBy(col(countCol).desc, col("doc_id").asc).limit(k)
-    graft.index.InvertedIndex.rankBounded(bounded, col("doc_id"),
-      col(countCol).desc, col("doc_id").asc)
-  }
-
-  /** Per-shard positional kernel: decode each slot term's (docId ->
-    * positions) within the shard, intersect the DISTINCT terms' sorted doc
-    * lists with a k-way merge, and for every surviving doc apply `countFn`
-    * to the per-slot position arrays. A (shard, term) may span multiple
-    * rows (appends land in new groups) — block lists are concatenated in
-    * base order like the WAND kernel does.
-    */
-  private[query] def shardSlotCounts(rows: Seq[graft.index.PosPostings],
-                                     phrase: Array[String],
-                                     tomb: Array[Long],
-                                     countFn: Array[Array[Long]] => Long): Iterator[(Long, Long)] =
-    intersectCounts(decodeShard(rows), phrase, tomb, countFn)
-
   /** Decode one shard's positional rows ONCE per term: sorted doc ids +
     * per-doc position arrays. A (shard, term) may span multiple rows
     * (appends land in new groups) — block lists are concatenated in base
     * order like the WAND kernel does. In the batch path this decode is
     * shared by every query touching the term.
     */
-  private[query] def decodeShard(rows: Seq[graft.index.PosPostings]):
+  private[query] def decodeShard(rows: Iterator[graft.index.PosPostings]):
       collection.Map[String, (Array[Long], Array[Array[Long]])] = {
     val byTerm = scala.collection.mutable.HashMap.empty[String, Array[graft.index.PackedPosBlock]]
     rows.foreach { r =>
@@ -605,19 +500,20 @@ object Phrase {
 
   /** Intersect the DISTINCT slot terms' sorted doc lists with a k-way merge
     * and apply `countFn` to each surviving doc's per-slot position arrays,
-    * emitting (doc_id, count) for counts > 0.
+    * offering (count, doc_id) into `heap` for counts > 0.
     */
   private[query] def intersectCounts(decodedAll: collection.Map[String, (Array[Long], Array[Array[Long]])],
                                      phrase: Array[String],
                                      tomb: Array[Long],
-                                     countFn: Array[Array[Long]] => Long): Iterator[(Long, Long)] = {
+                                     countFn: Array[Array[Long]] => Long,
+                                     heap: ShardServe.TopKHeap): Unit = {
     val distinctTerms = phrase.distinct
-    if (!distinctTerms.forall(decodedAll.contains)) return Iterator.empty
-    val decoded = distinctTerms.map(t => t -> decodedAll(t)).toMap
+    if (!distinctTerms.forall(decodedAll.contains)) return
     // k-way sorted intersection over the distinct terms' doc lists
-    val lists = distinctTerms.map(decoded)
+    val lists = distinctTerms.map(decodedAll)
+    // slot -> its term's list (repeated terms share their array)
+    val slotList = phrase.map(t => distinctTerms.indexOf(t))
     val cursors = new Array[Int](lists.length)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var done = false
     while (!done) {
       // candidate = max of current heads; advance all lists to it
@@ -642,15 +538,9 @@ object Phrase {
         }
         if (aligned) {
           if (java.util.Arrays.binarySearch(tomb, cand) < 0) {
-            // positions per phrase slot (repeated terms share their array)
-            val slotPos: Array[Array[Long]] = phrase.map { t =>
-              val (docsArr, possArr) = decoded(t)
-              val idx = cursors(distinctTerms.indexOf(t))
-              // cursor of t's list is aligned at cand
-              possArr(idx)
-            }
-            val cnt = countFn(slotPos)
-            if (cnt > 0) out += ((cand, cnt))
+            // every list's cursor is aligned at cand
+            val cnt = countFn(slotList.map(li => lists(li)._2(cursors(li))))
+            if (cnt > 0) heap.offer(cnt.toDouble, cand)
           }
           // advance every list past the candidate
           i = 0
@@ -658,6 +548,5 @@ object Phrase {
         }
       }
     }
-    out.iterator
   }
 }

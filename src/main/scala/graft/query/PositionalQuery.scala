@@ -3,10 +3,10 @@ package graft.query
 /** A positional-arm query for the batched serving layer ([[Phrase.search]] /
   * [[Phrase.searchDs]] / [[PositionalRetriever]]): each variant names its
   * per-slot terms and the per-doc match-count kernel applied to the slot
-  * position arrays. The kernels are exactly the single-query operators'
-  * kernels ([[Phrase.topKPositional]] & siblings) — batch and single paths
-  * share one implementation, so their counts are identical by construction
-  * (pinned in PhraseSpec).
+  * position arrays. The single-query operators ([[Phrase.topKPositional]]
+  * & siblings) are one-query [[Phrase.search]] calls, so batch and single
+  * paths share one implementation and their counts are identical by
+  * construction (pinned in PhraseSpec).
   */
 sealed trait PositionalQuery extends Serializable {
   /** Slot i's positions feed kernel slot i; repeated terms share arrays. */

@@ -2,19 +2,20 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.index.{IndexStats, PackedBlock, PackedIndex, PackedPostings}
 
 /** Block-max WAND top-k over the packed, doc-sharded index.
   *
-  * Physical plan:
+  * Physical plan (the shared [[ShardServe]] driver, this file supplying the
+  * per-shard kernel):
   *   packed postings scan, `term IN (query terms)` pushed to parquet
-  *     -> groupByKey(shard)  (shuffle proportional to the MATCHED postings
-  *        only, guaranteeing every query term of a doc range is co-located
-  *        even if file splits would have torn a shard apart)
-  *     -> flatMapGroups: per-shard DAAT WAND with per-list and per-block
-  *        upper bounds, one bounded heap per (query, shard)
-  *     -> per-query global rank over numShards*k candidate rows (tiny).
+  *     -> shard-capped repartition on `shard`, sorted by (shard, term)
+  *        (shuffle proportional to the MATCHED postings only, guaranteeing
+  *        every query term of a doc range is co-located even if file
+  *        splits would have torn a shard apart)
+  *     -> per task: DAAT WAND over each whole shard with per-list and
+  *        per-block upper bounds, into ONE bounded heap per query
+  *     -> per-query global rank over numTasks*k candidate rows (tiny).
   *
   * Rank/score parity with the exhaustive reference semantics
   * (`/root/reference/src/retrievals/models/retrieval_auto.py:391-393`) is
@@ -58,8 +59,6 @@ object Wand {
     lazy val multiplicity: Map[String, Int] =
       tokens.groupBy(identity).map { case (t, a) => t -> a.length }
   }
-
-  final case class Hit(query_id: Long, doc_id: Long, score: Double)
 
   /** Prepare a query batch: look up global df for the union of query terms
     * (one pushdown-filtered scan of the small df table), compute eps-floored
@@ -139,8 +138,8 @@ object Wand {
     * (bounds remain valid upper bounds). Suited to selective filters (the
     * list must fit in a broadcast); a non-selective filter should instead
     * pre-restrict the corpus at index-build time.
-    */
-  /** @param minShouldMatch Elasticsearch `minimum_should_match` semantics:
+    *
+    * @param minShouldMatch Elasticsearch `minimum_should_match` semantics:
     *        only docs matching at least this many DISTINCT query terms may
     *        enter the heap (1 = plain disjunctive retrieval; |terms| =
     *        conjunctive AND). Scoring of qualifying docs is unchanged —
@@ -170,14 +169,27 @@ object Wand {
                                     prepared: Seq[PreparedQuery], k: Int,
                                     allowedDocs: Option[Array[Long]] = None,
                                     meta: graft.io.MetaIO = graft.io.LocalMetaIO,
-                                    minShouldMatch: Int = 1): DataFrame = {
+                                    minShouldMatch: Int = 1): DataFrame =
+    ShardServe.globalRank(candidates(spark, indexDir, stats, prepared, k,
+      allowedDocs, meta, minShouldMatch), k)
+
+  /** [[searchPrepared]] before the global rank: (query_id, doc_id, score),
+    * at most k rows per (task, query) — the body of the plan-integrated
+    * [[graft.plans.Bm25TopKExec]], whose plan ranks on top.
+    */
+  private[graft] def candidates(spark: SparkSession, indexDir: String,
+                                stats: IndexStats,
+                                prepared: Seq[PreparedQuery], k: Int,
+                                allowedDocs: Option[Array[Long]] = None,
+                                meta: graft.io.MetaIO = graft.io.LocalMetaIO,
+                                minShouldMatch: Int = 1): DataFrame = {
     // must_not terms join the pushed-down posting scan: their lists feed
     // per-query exclusion cursors in the shard kernel (no scoring cursors —
     // only positive terms carry idf entries)
     val terms =
       (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
     import spark.implicits._
-    if (terms.isEmpty) return emptyHits(spark)
+    if (terms.isEmpty) return ShardServe.emptyHits(spark)
     val postings = PackedIndex.loadPostings(spark, indexDir, meta = meta)
     val matched =
       (if (terms.size <= IsinThreshold)
@@ -186,77 +198,37 @@ object Wand {
         postings.join(broadcast(terms.toDF("term")), "term"))
         .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
         .as[PackedPostings]
-    val grouped = shardPartitioned(spark, indexDir, matched, meta)
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched, meta)
     val tomb = PackedIndex.loadTombstones(indexDir, meta)
-    kernelRank(spark, grouped, stats, prepared, k, allowedDocs, tomb,
+    wandHits(spark, grouped, stats, prepared, k, allowedDocs, tomb,
       minShouldMatch)
   }
 
-  private def emptyHits(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[Hit].toDF().withColumn("rank", lit(1)).limit(0)
-  }
-
-  /** Repartition matched postings so each task holds whole doc-shards.
-    * Explicit partition count: the WAND stage is compute-bound per shard
-    * group, not bytes-bound — AQE's byte-based coalescing would pack the
-    * (small, compressed) matched postings into a handful of long serial
-    * tasks. A user-specified repartition is exempt from AQE coalescing;
-    * sortWithinPartitions then lets one streaming pass group by shard.
-    * Capped at the index's shard count (hash-on-shard cannot use more
-    * partitions than distinct shards — the excess was empty tasks, r7).
+  /** The WAND kernel over an ALREADY shard-partitioned postings dataset;
+    * [[searchDs]] hands the SAME pinned partitioned dataset to every chunk
+    * so the scan+shuffle runs once per batch, not per chunk. Results are
+    * independent of any extra terms present in the rows (cursors exist
+    * only for each query's own terms).
     */
-  private def shardPartitioned(spark: SparkSession, indexDir: String,
-                               matched: Dataset[PackedPostings],
-                               meta: graft.io.MetaIO): Dataset[PackedPostings] = {
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      PackedIndex.numShardsBound(indexDir, meta)), 1)
-    matched
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-  }
-
-  /** Per-shard WAND kernel + per-query global rank over an ALREADY
-    * shard-partitioned postings dataset — the tail every serving path
-    * shares; [[searchDs]] hands the SAME cached partitioned dataset to
-    * every chunk so the scan+shuffle runs once per batch, not per chunk.
-    * Results are independent of any extra terms present in the rows
-    * (cursors exist only for each query's own terms).
-    */
-  private def kernelRank(spark: SparkSession, grouped: Dataset[PackedPostings],
-                         stats: IndexStats, prepared: Seq[PreparedQuery],
-                         k: Int, allowedDocs: Option[Array[Long]],
-                         tomb: Array[Long], minShouldMatch: Int): DataFrame = {
-    import spark.implicits._
+  private def wandHits(spark: SparkSession, grouped: Dataset[PackedPostings],
+                       stats: IndexStats, prepared: Seq[PreparedQuery],
+                       k: Int, allowedDocs: Option[Array[Long]],
+                       tomb: Array[Long], minShouldMatch: Int): DataFrame = {
     if (prepared.isEmpty || !prepared.exists(_.idf.nonEmpty))
-      return emptyHits(spark)
+      return ShardServe.emptyHits(spark)
     val bc = spark.sparkContext.broadcast((stats, prepared))
     val bcAllowed = spark.sparkContext.broadcast(
       allowedDocs.map(_.sorted).orNull)
     // tombstoned docs are invisible to every search (PackedIndex.delete)
     val bcDenied = spark.sparkContext.broadcast(
       if (tomb.isEmpty) null else tomb)
-    val hits: Dataset[Hit] = grouped
-      .mapPartitions { it =>
+    ShardServe.kernelHits(spark, grouped, k,
+      () => bc.value._2.iterator.map(_.queryId).toArray)(_.shard) {
+      (rows, heaps) =>
         val (st, qs) = bc.value
-        // ONE heap per query for the WHOLE task (all its shard groups):
-        // emissions drop from numShards x k to numTasks x k per query —
-        // see shardSearchInto
-        val heaps = new Array[TopKHeap](qs.size)
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[PackedPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          shardSearchInto(rows.iterator, qs, st, k, bcAllowed.value,
-            bcDenied.value, minShouldMatch, heaps)
-        }
-        drainHeaps(qs, heaps)
-      }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val ranked = hits.toDF().withColumn("rank", row_number().over(w))
-    if (k > 0) ranked.filter(col("rank") <= k) else ranked
+        scoreShard(rows, qs, st, bcAllowed.value, bcDenied.value,
+          minShouldMatch, heaps)
+    }
   }
 
   /** Dataset-typed query batch: the large-batch path. The query set stays
@@ -285,7 +257,6 @@ object Wand {
     // shuffle per chunk. Per-chunk results are identical (cursors exist
     // only for each query's own terms). The pin lives strictly inside this
     // call: materialized before the chunk pool starts, unpersisted after.
-    val stats = PackedIndex.readStats(indexDir, meta)
     val tomb = PackedIndex.loadTombstones(indexDir, meta)
     val batchTerms = queries
       .select(explode(graft.plans.GraftFunctions.py_ws_tokenize(
@@ -300,24 +271,21 @@ object Wand {
       .join(broadcast(allTerms), "term")
       .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
       .as[PackedPostings]
-    val grouped = shardPartitioned(spark, indexDir, matched, meta)
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched, meta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
       ChunkedServe.serve(spark, queries, chunkSize, io, stagingDir, meta,
         "searchDs") { chunk =>
         val (st, prepared) = prepare(spark, indexDir, chunk, meta, mustNot)
-        kernelRank(spark, grouped, st, prepared, k, allowedDocs, tomb,
-          minShouldMatch)
+        ShardServe.globalRank(wandHits(spark, grouped, st, prepared, k,
+          allowedDocs, tomb, minShouldMatch), k)
       }
     } finally grouped.unpersist(false)
   }
 
   // ---- per-shard kernel ------------------------------------------------
 
-  /** Cursor over one term's packed blocks within a shard. Decodes a block
-    * lazily on first positioning inside it; skips whole blocks via maxDoc.
-    */
   /** Query-independent per-(shard,term) state shared by every query in the
     * batch: the block array plus precomputed tf-norm bounds
     * (norm(maxTf, minDl) — increasing in tf, decreasing in dl, so it bounds
@@ -381,6 +349,9 @@ object Wand {
     }
   }
 
+  /** Cursor over one term's packed blocks within a shard. Decodes a block
+    * lazily on first positioning inside it; skips whole blocks via maxDoc.
+    */
   private final class Cursor(val term: String, val idf: Double,
                              val weightedIdf: Double,
                              tp: TermPostings) {
@@ -470,120 +441,19 @@ object Wand {
     }
   }
 
-  /** Bounded top-k heap keeping the k best under (score desc, docId asc);
-    * root is the WORST kept entry. Primitive parallel arrays — the kernel
-    * runs millions of offers per task, so the heap must be allocation-free.
-    * Shared with the dense brute-force kernel ([[graft.ann.Ann]]) — the
-    * faiss ResultHeap analogue (retrieval_auto.py:335-347).
+  /** WAND over one shard's matched rows for every query in the batch,
+    * offering query i's candidates into `heaps(i)` — the task-owned heaps
+    * of [[ShardServe.kernelHits]]. A (shard, term) can appear in MULTIPLE
+    * rows when the shard spans build groups (incremental appends land in
+    * new groups): their block lists cover disjoint, monotone docId ranges
+    * and are concatenated in baseDocId order to form one logical posting
+    * list.
     */
-  private[graft] final class TopKHeap(k: Int) {
-    private val cap = math.min(k, 1 << 20) // guard k=MaxValue: grow on demand
-    private var scores = new Array[Double](math.min(cap, 1024))
-    private var docs = new Array[Long](math.min(cap, 1024))
-    private var n = 0
-
-    // "less" = worse = lower score, then larger docId (root is worst kept)
-    @inline private def worse(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
-      s1 < s2 || (s1 == s2 && d1 > d2)
-
-    def size: Int = n
-    def threshold: Double = if (n < k) Double.NegativeInfinity else scores(0)
-
-    private def grow(): Unit = {
-      scores = java.util.Arrays.copyOf(scores, scores.length * 2)
-      docs = java.util.Arrays.copyOf(docs, docs.length * 2)
-    }
-
-    private def siftUp(i0: Int): Unit = {
-      var i = i0
-      while (i > 0) {
-        val par = (i - 1) >> 1
-        if (worse(scores(i), docs(i), scores(par), docs(par))) {
-          val ts = scores(i); val td = docs(i)
-          scores(i) = scores(par); docs(i) = docs(par)
-          scores(par) = ts; docs(par) = td
-          i = par
-        } else return
-      }
-    }
-
-    private def siftDown(): Unit = {
-      var i = 0
-      while (true) {
-        val l = 2 * i + 1
-        if (l >= n) return
-        val r = l + 1
-        var m = l
-        if (r < n && worse(scores(r), docs(r), scores(l), docs(l))) m = r
-        if (worse(scores(m), docs(m), scores(i), docs(i))) {
-          val ts = scores(i); val td = docs(i)
-          scores(i) = scores(m); docs(i) = docs(m)
-          scores(m) = ts; docs(m) = td
-          i = m
-        } else return
-      }
-    }
-
-    def offer(score: Double, doc: Long): Unit = {
-      if (n < k) {
-        if (n == scores.length) grow()
-        scores(n) = score; docs(n) = doc; n += 1
-        siftUp(n - 1)
-      } else if (worse(scores(0), docs(0), score, doc)) {
-        scores(0) = score; docs(0) = doc
-        siftDown()
-      }
-    }
-
-    def drain(): List[(Double, Long)] = {
-      var out = List.empty[(Double, Long)]
-      var i = 0
-      while (i < n) { out = (scores(i), docs(i)) :: out; i += 1 }
-      out
-    }
-  }
-
-  /** WAND over one shard's matched rows for every query in the batch.
-    * A (shard, term) can appear in MULTIPLE rows when the shard spans build
-    * groups (incremental appends land in new groups): their block lists
-    * cover disjoint, monotone docId ranges and are concatenated in
-    * baseDocId order to form one logical posting list.
-    */
-  def shardSearch(rows: Iterator[PackedPostings], queries: Seq[PreparedQuery],
-                  stats: IndexStats, k: Int,
-                  allowed: Array[Long] = null,
-                  denied: Array[Long] = null,
-                  minShouldMatch: Int = 1): Iterator[Hit] = {
-    val heaps = new Array[TopKHeap](queries.size)
-    shardSearchInto(rows, queries, stats, k, allowed, denied, minShouldMatch,
-      heaps)
-    drainHeaps(queries, heaps)
-  }
-
-  private def drainHeaps(queries: Seq[PreparedQuery],
-                         heaps: Array[TopKHeap]): Iterator[Hit] =
-    queries.iterator.zipWithIndex.flatMap { case (q, i) =>
-      val h = heaps(i)
-      if (h == null) Iterator.empty
-      else h.drain().iterator.map { case (s, d) => Hit(q.queryId, d, s) }
-    }
-
-  /** [[shardSearch]] accumulating into CALLER-OWNED per-query heaps: a task
-    * holding several whole doc-shards offers every shard's candidates into
-    * one heap per query and emits once at task end — the per-query global
-    * rank then receives numTasks x k rows instead of numShards x k (r7; at
-    * the 2M scale point that is 9.8M -> ~0.6M window-input rows for a
-    * 2000-query batch). Results are identical: a doc in the global top-k is
-    * in every covering subset's top-k, and the heap's (score desc, doc asc)
-    * order is exactly the rank window's.
-    */
-  private def shardSearchInto(rows: Iterator[PackedPostings],
-                              queries: Seq[PreparedQuery],
-                              stats: IndexStats, k: Int,
-                              allowed: Array[Long],
-                              denied: Array[Long],
-                              minShouldMatch: Int,
-                              heaps: Array[TopKHeap]): Unit = {
+  private def scoreShard(rows: Iterator[PackedPostings],
+                         queries: Seq[PreparedQuery], stats: IndexStats,
+                         allowed: Array[Long], denied: Array[Long],
+                         minShouldMatch: Int,
+                         heaps: Array[ShardServe.TopKHeap]): Unit = {
     val p0 = stats.params
     val rawByTerm = scala.collection.mutable.HashMap.empty[String, Array[PackedBlock]]
     rows.foreach { r =>
@@ -597,7 +467,6 @@ object Wand {
       t -> new TermPostings(blks, p0.k1, p0.b, stats.avgdl)
     }
     val p = stats.params
-    val kEff = if (k > 0) k else Int.MaxValue
     var qi = 0
     val qit = queries.iterator
     while (qit.hasNext) {
@@ -624,7 +493,6 @@ object Wand {
         val excl: Array[Cursor] = q.mustNot.collect {
           case t if byTerm.contains(t) => new Cursor(t, 0.0, 0.0, byTerm(t))
         }
-        if (heaps(qi) == null) heaps(qi) = new TopKHeap(kEff)
         wandLoop(cursors, q, heaps(qi), stats, allowed, denied,
           minShouldMatch, excl)
       }
@@ -651,12 +519,6 @@ object Wand {
     score
   }
 
-  /** Allocation-free DAAT loop: the cursor array is kept sorted in place by
-    * insertion sort (nearly-sorted between iterations), exhausted cursors
-    * are compacted in place, and no per-iteration objects are created —
-    * the earlier sortBy-per-iteration version generated enough garbage to
-    * stall 32-thread executors in GC.
-    */
   /** True iff any must_not exclusion cursor's posting list contains `doc`.
     * Cursors advance monotonically (callers evaluate docs in non-decreasing
     * order), so each list is walked at most once per query per shard.
@@ -672,8 +534,14 @@ object Wand {
     false
   }
 
+  /** Allocation-free DAAT loop: the cursor array is kept sorted in place by
+    * insertion sort (nearly-sorted between iterations), exhausted cursors
+    * are compacted in place, and no per-iteration objects are created —
+    * the earlier sortBy-per-iteration version generated enough garbage to
+    * stall 32-thread executors in GC.
+    */
   private def wandLoop(cursors: Array[Cursor], q: PreparedQuery,
-                       heap: TopKHeap, stats: IndexStats,
+                       heap: ShardServe.TopKHeap, stats: IndexStats,
                        allowed: Array[Long] = null,
                        denied: Array[Long] = null,
                        minShouldMatch: Int = 1,

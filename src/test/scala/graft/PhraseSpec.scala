@@ -38,7 +38,7 @@ class PhraseSpec extends SparkSpec {
     val post = InvertedIndex.postings(t)
     assert(Phrase.candidates(post, Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet == Set(0L, 1L, 3L))
-    val hits = Phrase.topK(t, post, Seq("table", "scan"), 10)
+    val hits = Phrase.topK(t, Seq("table", "scan"), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
       .sortBy(_._3)
     assert(hits == Seq((3L, 2L, 1), (1L, 1L, 2)))
@@ -118,12 +118,11 @@ class PhraseSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-posidx").toString
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
-    val post = InvertedIndex.postings(t)
     for (phrase <- Seq(Seq("a", "b"), Seq("a", "a"), Seq("c", "d", "a"),
         Seq("b"), Seq("a", "b", "a"))) {
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val want = rows(Phrase.topK(t, post, phrase, 500))
+      val want = rows(Phrase.topK(t, phrase, 500))
       val got = rows(Phrase.topKPositional(spark, dir, phrase, 500))
       assert(got == want, s"positional != rescan for phrase $phrase")
       assert(want.nonEmpty, s"degenerate fixture for phrase $phrase")
@@ -200,13 +199,13 @@ class PhraseSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val wantPhrase = rows(Phrase.topK(survivors,
-      InvertedIndex.postings(survivors), Seq("table", "scan"), 500))
+      Seq("table", "scan"), 500))
     val gotPhrase = rows(Phrase.topKPositional(spark, outDir,
       Seq("table", "scan"), 500))
     assert(gotPhrase == wantPhrase && wantPhrase.nonEmpty)
     assert(!gotPhrase.exists(r => dead.contains(r._1)))
     val wantProx = rows(Phrase.proximityTopK(survivors,
-      InvertedIndex.postings(survivors), "table", "scan", slop = 3, k = 500))
+      "table", "scan", slop = 3, k = 500))
     val gotProx = rows(Phrase.proximityTopKPositional(spark, outDir,
       "table", "scan", slop = 3, k = 500))
     assert(gotProx == wantProx)
@@ -270,20 +269,19 @@ class PhraseSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-proxidx").toString
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
-    val post = InvertedIndex.postings(t)
     for ((a, b, slop) <- Seq(("a", "b", 1), ("a", "b", 3), ("c", "a", 5),
         ("b", "b", 2))) {
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val want = rows(Phrase.proximityTopK(t, post, a, b, slop, 500))
+      val want = rows(Phrase.proximityTopK(t, a, b, slop, 500))
       val got = rows(Phrase.proximityTopKPositional(spark, dir, a, b, slop, 500))
       assert(got == want, s"positional != rescan for ($a,$b,slop=$slop)")
       assert(want.nonEmpty, s"degenerate fixture for ($a,$b,$slop)")
     }
     // slop=1 with distinct terms degenerates to the bigram phrase count
-    val bigram = Phrase.topK(t, post, Seq("a", "b"), 500).collect()
+    val bigram = Phrase.topK(t, Seq("a", "b"), 500).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prox1 = Phrase.proximityTopK(t, post, "a", "b", 1, 500).collect()
+    val prox1 = Phrase.proximityTopK(t, "a", "b", 1, 500).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(prox1 == bigram)
   }
@@ -320,12 +318,11 @@ class PhraseSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-nearidx").toString
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
-    val post = InvertedIndex.postings(t)
     for ((terms, slop) <- Seq((Seq("a", "b"), 1), (Seq("a", "b"), 4),
         (Seq("c", "d", "a"), 3), (Seq("e", "b", "c", "d"), 5))) {
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val want = rows(Phrase.nearTopK(t, post, terms, slop, 500))
+      val want = rows(Phrase.nearTopK(t, terms, slop, 500))
       val got = rows(Phrase.nearTopKPositional(spark, dir, terms, slop, 500))
       assert(got == want, s"NEAR positional != rescan for $terms slop=$slop")
       assert(want.nonEmpty, s"degenerate fixture for $terms slop=$slop")
@@ -334,8 +331,7 @@ class PhraseSpec extends SparkSpec {
 
   test("duplicate-term phrase uses distinct terms for candidates") {
     val t = tok(0L -> "go go go", 1L -> "go stop go")
-    val post = InvertedIndex.postings(t)
-    val hits = Phrase.topK(t, post, Seq("go", "go"), 10)
+    val hits = Phrase.topK(t, Seq("go", "go"), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hits == Map(0L -> 2L)) // "go go" twice in doc 0, zero in doc 1
   }

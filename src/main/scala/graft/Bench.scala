@@ -209,13 +209,16 @@ object Bench {
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val battery = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: $e")
-          failed += name
+        // the query's scratch dirs are deleted after its time is taken
+        name -> SparkEntry.withScratch {
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            failed += name
+          }
+          (System.nanoTime() - t0) / 1e9
         }
-        name -> (System.nanoTime() - t0) / 1e9
       }
     }
 

@@ -47,7 +47,8 @@ object BenchExtra {
           val fn = SparkEntry.queries.getOrElse(name,
             sys.error(s"unknown query $name"))
           spark.sparkContext.setJobDescription(s"probe:$name")
-          val secs = (1 to reps).map(_ => timed(fn(spark, sfDir).count()))
+          val secs = (1 to reps).map(_ =>
+            SparkEntry.withScratch(timed(fn(spark, sfDir).count())))
           println(f"""{"probe":"$name","secs":[${secs.map(s => f"$s%.3f").mkString(",")}],"min":${secs.min}%.3f}""")
         }
 
@@ -59,9 +60,8 @@ object BenchExtra {
         names.foreach { name =>
           val fn = SparkEntry.queries.getOrElse(name,
             sys.error(s"unknown query $name"))
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val plan = SparkEntry.withScratch(fn(spark, sfDir).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
           java.nio.file.Files.write(
             java.nio.file.Paths.get(outDir, s"$name$suffix.txt"),
             plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -61,6 +61,45 @@ object SparkEntry {
       .select(col("doc_id"), col("score_r"), col("rank"))
   }
 
+  // ---- scratch dirs ----------------------------------------------------
+
+  /** Scratch dirs made by contract queries since the last [[withScratch]].
+    * A query's DataFrame reads them lazily, so they must outlive the query
+    * call; the caller releases them once the output is written or counted.
+    */
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** A fresh scratch dir, deleted when the enclosing [[withScratch]] ends. */
+  private[graft] def scratchDir(prefix: String): String = {
+    val d = graft.io.MetaIO.createTempDir(prefix)
+    scratch.add(d)
+    d
+  }
+
+  /** Runs `use` — one contract query plus the action that writes or counts
+    * its output — then deletes every scratch dir the query made. Callers
+    * run queries one at a time: the registry is process-wide.
+    */
+  def withScratch[T](use: => T): T =
+    try use
+    finally Iterator.continually(scratch.poll()).takeWhile(_ != null)
+      .foreach(graft.io.MetaIO.deleteRecursively)
+
+  /** A scratch packed index over `tokenized` in the contract layout (128-doc
+    * shards, two build groups, `P`), plus the positional arm when
+    * `positional`. `stageInput = false` suits sources that are a cheap
+    * narrow re-derivation from parquet (see [[wandContractTopK]]).
+    */
+  private[graft] def contractIndex(tokenized: DataFrame,
+                                   positional: Boolean = false,
+                                   stageInput: Boolean = false): String = {
+    val dir = scratchDir("graft-contract-idx")
+    graft.index.PackedIndex.build(tokenized, dir, shardBits = 7, groups = 2,
+      p = P, stageInput = stageInput)
+    if (positional) graft.index.PositionalIndex.build(tokenized, dir)
+    dir
+  }
+
   /** The one-query batch every packed-index contract query runs. */
   private[graft] def contractQueryBatch: Seq[(Long, String)] =
     Seq(0L -> DocsCorpus.fixedQuery.mkString(" "))
@@ -96,11 +135,7 @@ object SparkEntry {
   private[graft] def wandContractTopKFrom(s: SparkSession, tokenized: DataFrame,
                                           stageInput: Boolean = true)(
       run: String => DataFrame): DataFrame = {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-wandq").toString
-    graft.index.PackedIndex.build(
-      tokenized, idxDir, shardBits = 7, groups = 2, p = P,
-      stageInput = stageInput)
-    val hits = run(idxDir)
+    val hits = run(contractIndex(tokenized, stageInput = stageInput))
     val bounded = hits.withColumn("score_r", round(col("score"), 4))
       .select(col("doc_id"), col("score_r"))
       .orderBy(col("score_r").desc, col("doc_id").asc).limit(10)
@@ -225,9 +260,7 @@ object SparkEntry {
     // language, top facet values by (count desc, value asc). The
     // aggregation half of "search + drill-down".
     "q_facets" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-fct").toString
-      graft.index.PackedIndex.build(DocsCorpus.tokenized(s, dir), idxDir,
-        shardBits = 7, groups = 2, p = P, stageInput = false)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir))
       val hits = graft.query.Wand.search(s, idxDir, contractQueryBatch, k = 0)
       graft.query.Facets.termsFacet(hits, DocsCorpus.documents(s, dir),
         "lang", topN = 10)
@@ -295,7 +328,7 @@ object SparkEntry {
     // the whole cte chain recomputed over the filtered corpus.
     "q_bm25_compacted_topk" -> ((s, dir) => wandContractTopK(s, dir) { idx =>
       graft.index.PackedIndex.delete(idx, langDocIds(s, dir, "zh").toSeq)
-      val outDir = java.nio.file.Files.createTempDirectory("graft-cptq-out").toString
+      val outDir = scratchDir("graft-cptq-out")
       graft.index.PackedIndex.compact(s, idx, outDir)
       graft.query.Wand.search(s, outDir, contractQueryBatch, k = 200)
     }),
@@ -312,10 +345,7 @@ object SparkEntry {
     // same phrase, same exact DuckDB oracle as q_phrase_topk — proves the
     // positional kernel count-identical to the sliding verify.
     "q_phrase_positional_topk" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-posq").toString
-      val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
-      graft.index.PositionalIndex.build(tok, idxDir)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir), positional = true)
       graft.query.Phrase.topKPositional(s, idxDir, Seq("table", "scan"), k = 10)
     }),
 
@@ -328,10 +358,7 @@ object SparkEntry {
       graft.query.Phrase.proximityTopK(tok, "table", "scan", slop = 3, k = 10)
     }),
     "q_proximity_positional_topk" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-proxq").toString
-      val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
-      graft.index.PositionalIndex.build(tok, idxDir)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir), positional = true)
       graft.query.Phrase.proximityTopKPositional(s, idxDir,
         "table", "scan", slop = 3, k = 10)
     }),
@@ -345,10 +372,7 @@ object SparkEntry {
         slop = 6, k = 10)
     }),
     "q_near_positional_topk" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-nearq").toString
-      val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
-      graft.index.PositionalIndex.build(tok, idxDir)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir), positional = true)
       graft.query.Phrase.nearTopKPositional(s, idxDir,
         Seq("table", "scan", "query"), slop = 6, k = 10)
     }),
@@ -361,10 +385,7 @@ object SparkEntry {
     // verbatim, tagged by query_id — so the BATCH path itself is
     // oracle-exact, not just spec-paritied against the single path.
     "q_positional_batch" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-posbatchq").toString
-      val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
-      graft.index.PositionalIndex.build(tok, idxDir)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir), positional = true)
       import graft.query.PositionalQuery._
       graft.query.Phrase.search(s, idxDir, Seq(
         1L -> PhraseMatch(Seq("table", "scan")),
@@ -383,10 +404,7 @@ object SparkEntry {
     // integer counts are exact by nature — so the WHOLE ensemble carries an
     // exact DuckDB oracle.
     "q_ensemble_phrase" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-ensph").toString
-      val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
-      graft.index.PositionalIndex.build(tok, idxDir)
+      val idxDir = contractIndex(DocsCorpus.tokenized(s, dir), positional = true)
       val bm25 = new graft.query.RoundedRankRetriever(
         new graft.query.Bm25WandRetriever(idxDir), digits = 4, overfetch = 200)
       val phrase = new graft.query.PositionalRetriever(idxDir,
@@ -429,9 +447,8 @@ object SparkEntry {
     // ensemble shape a production search box runs. Both members ride the
     // rounded-rank adapter so the fusion is SQL-replicable.
     "q_ensemble_fuzzy" -> ((s, dir) => {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-ensfz").toString
       val tok = DocsCorpus.tokenized(s, dir)
-      graft.index.PackedIndex.build(tok, idxDir, shardBits = 7, groups = 2, p = P, stageInput = false)
+      val idxDir = contractIndex(tok)
       val didx = graft.query.SpellCorrect.deletionIndex(
         graft.query.SpellCorrect.dictionary(tok))
       val bm25 = new graft.query.RoundedRankRetriever(
@@ -484,7 +501,7 @@ object SparkEntry {
     // read true; PagesSpec pins the same parity in CI at 400 docs.
     "q_pages_wand" -> ((s, _) => {
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-pages-q").toString
+      val dir = scratchDir("graft-pages-q")
       graft.corpus.PagesPipeline.buildIndex(
         graft.corpus.PagesGen.pages(s, 300, 6).toDF(), dir, shardBits = 7, groups = 2)
       val queries = Seq(1L -> "the w3 w17", 2L -> "w100 w2000")

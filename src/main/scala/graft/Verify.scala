@@ -17,8 +17,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        SparkEntry.withScratch(fn(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name"))
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

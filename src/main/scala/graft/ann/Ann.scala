@@ -275,42 +275,17 @@ object Ann {
     rows.toDF("n_probe", "recall", "scanned_fraction")
   }
 
-  /** Above this many centroids the assignment switches from column-literal
-    * folding to a broadcast-variable kernel: typedLit embeds nCells*dim
-    * doubles into the expression tree, whose codegen/serialized size grows
-    * linearly and hits Catalyst limits in the thousands of cells — and the
-    * Catalyst lambda fold evaluates far slower than the primitive-array
-    * kernel well before that (the 2M-vector probe measured a 256-cell
-    * build ~11x slower on the literal path than a 1415-cell build on the
-    * kernel). The paths are bit-identical (DedupAnnSpec).
-    *
-    * r7: set to 0 — the "codegen wins at small counts" assumption behind
-    * the old value of 16 was wrong: Catalyst higher-order functions
-    * (aggregate/zip_with) evaluate INTERPRETED, not whole-stage-codegen'd,
-    * so the literal fold loses at every cell count (q_ann_ivf_topk at 16
-    * cells measured 5.75 s -> 2.61 s min-of-3 on the kernel path). The
-    * literal form is retained only as the cross-check arm DedupAnnSpec
-    * pins the kernel against.
+  /** Assign corpus vectors to nearest centroid (cell): one narrow map-side
+    * pass over the corpus — no join, no shuffle, no window — so at 100 TB
+    * the corpus is read exactly once. The centroids go out as a BROADCAST
+    * VARIABLE consumed by a mapPartitions kernel (task-side argmax over
+    * primitive arrays), so the plan stays O(1) regardless of nCells*dim.
+    * Tie-break: lower cell_id wins (centroids scanned in id order,
+    * strictly-greater similarity replaces). [[cosineArr]] reproduces
+    * [[cosine]]'s fold order, so the kernel is bit-identical to a
+    * column-expression fold over the same centroids (DedupAnnSpec).
     */
-  private[graft] val AssignLiteralMaxCells = 0
-
-  /** Assign corpus vectors to nearest centroid (cell). Both paths are one
-    * narrow map-side pass over the corpus — no join, no shuffle, no window —
-    * so at 100 TB the corpus is read exactly once. Tie-break: lower cell_id
-    * wins (centroids scanned in id order, strictly-greater similarity
-    * replaces).
-    *
-    *  - <= [[AssignLiteralMaxCells]] cells: the centroid table is shipped as
-    *    array LITERALS and folded per row (whole-stage codegen, zero task
-    *    setup);
-    *  - above it: the centroids go out as a BROADCAST VARIABLE consumed by a
-    *    mapPartitions kernel (task-side argmax over primitive arrays) — the
-    *    expression tree stays O(1) regardless of nCells*dim.
-    * [[cosineArr]] reproduces the column expression's fold order, so the two
-    * paths are bit-identical (pinned by DedupAnnSpec).
-    */
-  def assignCells(corpus: DataFrame, centroids: DataFrame,
-                  literalMaxCells: Int = AssignLiteralMaxCells): DataFrame = {
+  def assignCells(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = centroids
       .select(col("cell_id").cast("long"), col("cvec").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -318,43 +293,27 @@ object Ann {
     require(cents.nonEmpty, "assignCells: empty centroid table")
     val c = corpus.select(col("vec_id").cast("long"),
       col("vec").cast("array<double>").as("vec"))
-    if (cents.length <= literalMaxCells) {
-      val cids = typedLit(cents.map(_._1).toSeq)
-      val cvecs = typedLit(cents.map(_._2.toSeq).toSeq)
-      val best = aggregate(
-        sequence(lit(0), lit(cents.length - 1)),
-        struct(lit(-2.0).as("c"), lit(Long.MaxValue).as("id")),
-        (acc, i) => {
-          val cc = cosine(col("vec"), element_at(cvecs, i + 1))
-          val id = element_at(cids, i + 1)
-          when(cc > acc.getField("c"),
-            struct(cc.as("c"), id.as("id"))).otherwise(acc)
-        })
-      c.withColumn("cell_id", best.getField("id"))
-        .select(col("vec_id"), col("vec"), col("cell_id"))
-    } else {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val bc = spark.sparkContext.broadcast(
-        cents.map { case (id, v) => (id, v.toArray) })
-      c.as[(Long, Seq[Double])]
-        .mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (id, vecSeq) =>
-            val vec = vecSeq.toArray
-            var best = -2.0
-            var bestId = Long.MaxValue
-            var i = 0
-            while (i < cs.length) {
-              val cc = cosineArr(vec, cs(i)._2)
-              if (cc > best) { best = cc; bestId = cs(i)._1 }
-              i += 1
-            }
-            (id, vecSeq, bestId)
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(
+      cents.map { case (id, v) => (id, v.toArray) })
+    c.as[(Long, Seq[Double])]
+      .mapPartitions { it =>
+        val cs = bc.value
+        it.map { case (id, vecSeq) =>
+          val vec = vecSeq.toArray
+          var best = -2.0
+          var bestId = Long.MaxValue
+          var i = 0
+          while (i < cs.length) {
+            val cc = cosineArr(vec, cs(i)._2)
+            if (cc > best) { best = cc; bestId = cs(i)._1 }
+            i += 1
           }
+          (id, vecSeq, bestId)
         }
-        .toDF("vec_id", "vec", "cell_id")
-    }
+      }
+      .toDF("vec_id", "vec", "cell_id")
   }
 
   /** Deterministic centroid seeding: every (N/nCells)-th vector by id. The

@@ -2,7 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
+import graft.io.{MetaIO, TableIO}
 
 /** PERSISTED IVF index — the dense sibling of the packed BM25 index:
   * build/train once, serve many query batches from storage (reference
@@ -108,11 +108,9 @@ object IvfIndex {
     * [[MaxTrainPointsPerCell]] vectors (no-op at small scale).
     */
   def build(corpus: DataFrame, dir: String, nCells: Int, iters: Int,
-            io: TableIO = ParquetDirIO,
-            meta: MetaIO = LocalMetaIO,
             segmentName: String = "cells",
             storage: String = "f64"): Unit = {
-    require(!meta.exists(s"$dir/cells.list"),
+    require(!MetaIO.exists(s"$dir/cells.list"),
       s"IvfIndex.build: $dir already holds a committed index — retrain " +
         "rebuilds into a fresh dir and the caller swaps (the compact() pattern)")
     require(storage == "f64" || storage == "f32",
@@ -141,16 +139,16 @@ object IvfIndex {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
     require(cents.nonEmpty, s"IvfIndex.build: no centroids at $dir")
-    meta.mkdirs(dir)
+    MetaIO.mkdirs(dir)
     val assigned = Ann.assignCells(c, centsDf(corpus.sparkSession, cents))
-    writeSegment(assigned, s"$dir/$segmentName", io, storage)
-    val nVecs = io.read(corpus.sparkSession, s"$dir/$segmentName").count()
-    meta.writeAtomic(s"$dir/centroids.tsv", cents.map { case (id, v) =>
+    writeSegment(assigned, s"$dir/$segmentName", storage)
+    val nVecs = TableIO.read(corpus.sparkSession, s"$dir/$segmentName").count()
+    MetaIO.writeAtomic(s"$dir/centroids.tsv", cents.map { case (id, v) =>
       s"$id\t${v.mkString(",")}"
     }.mkString("\n"))
-    meta.writeAtomic(s"$dir/ivf.json", statsJson(
+    MetaIO.writeAtomic(s"$dir/ivf.json", statsJson(
       cents.length, cents.head._2.length, nVecs, storage))
-    meta.writeAtomic(s"$dir/cells.list", s"$segmentName\t$nVecs") // marker LAST
+    MetaIO.writeAtomic(s"$dir/cells.list", s"$segmentName\t$nVecs") // marker LAST
   }
 
   /** Add vectors against the frozen centroids: a fresh segment dir, then
@@ -164,41 +162,39 @@ object IvfIndex {
     * not quadratic, in the stream's lifetime).
     */
   def append(newVecs: DataFrame, dir: String,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO,
              segmentName: Option[String] = None): Unit = {
     val spark = newVecs.sparkSession
-    val entries = segmentEntries(dir, meta)
-    require(io.committed(s"$dir/${entries.head._1}"),
+    val entries = segmentEntries(dir)
+    require(TableIO.committed(s"$dir/${entries.head._1}"),
       s"IvfIndex.append: no committed index at $dir — run build first")
     val next = segmentName.getOrElse(s"cells-a${entries.length}")
     // self-heal legacy count-less lines (one bounded per-segment count,
     // at most once — the rewrite below persists them)
     val healed = entries.map { case (nm, cnt) =>
-      nm -> cnt.getOrElse(io.read(spark, s"$dir/$nm").count())
+      nm -> cnt.getOrElse(TableIO.read(spark, s"$dir/$nm").count())
     }
-    val stats = readStats(dir, meta)
+    val stats = readStats(dir)
     val finalEntries =
       if (!healed.exists(_._1 == next)) {
-        val cents = loadCentroids(dir, meta)
+        val cents = loadCentroids(dir)
         val c = newVecs.select(col("vec_id").cast("long"),
           col("vec").cast("array<double>").as("vec"))
         writeSegment(Ann.assignCells(c, centsDf(spark, cents)), s"$dir/$next",
-          io, storageMode(stats))
-        val cnt = io.read(spark, s"$dir/$next").count()
+          storageMode(stats))
+        val cnt = TableIO.read(spark, s"$dir/$next").count()
         val all = healed :+ (next -> cnt)
-        meta.writeAtomic(s"$dir/cells.list",
+        MetaIO.writeAtomic(s"$dir/cells.list",
           all.map { case (nm, ct) => s"$nm\t$ct" }.mkString("\n"))
         all
       } else {
         if (healed != entries.map { case (nm, c) => nm -> c.getOrElse(-1L) })
-          meta.writeAtomic(s"$dir/cells.list",
+          MetaIO.writeAtomic(s"$dir/cells.list",
             healed.map { case (nm, ct) => s"$nm\t$ct" }.mkString("\n"))
         healed
       }
     // stats from the COMMITTED per-segment counts — a driver-local sum,
     // self-healing after a crash between list flip and stats write
-    meta.writeAtomic(s"$dir/ivf.json", statsJson(
+    MetaIO.writeAtomic(s"$dir/ivf.json", statsJson(
       statLong(stats, "nCells"), statLong(stats, "dim"),
       finalEntries.map(_._2).sum, storageMode(stats)))
   }
@@ -217,23 +213,21 @@ object IvfIndex {
     */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int, nProbe: Int,
-             allowedIds: Option[Array[Long]] = None,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): DataFrame = {
+             allowedIds: Option[Array[Long]] = None): DataFrame = {
     import spark.implicits._
-    val cents = loadCentroids(dir, meta)
+    val cents = loadCentroids(dir)
     val probes = Ann.probeCells(queries, centsDf(spark, cents), nProbe)
       .localCheckpoint() // pinned: reused for the pushdown filter AND the join
     val probedCells = probes.select(col("cell_id"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val tomb = loadTombstones(dir, meta)
+    val tomb = loadTombstones(dir)
     // id-set filters: small sets ride the scan as pushdown-friendly IN
     // predicates; large sets switch to broadcast joins (a 100k-element In
     // bloats the plan and evaluates per row-group slower than a hash
     // probe) — one shared threshold with the WAND term filters so the two
     // serving paths can't drift
     val isinMax = graft.query.Wand.IsinThreshold
-    var cells = loadCells(spark, dir, io, meta)
+    var cells = loadCells(spark, dir)
     cells =
       if (probedCells.length <= isinMax)
         cells.filter(col("cell_id").isin(probedCells: _*))
@@ -272,16 +266,14 @@ object IvfIndex {
     * range check exists the way it does for the dense BM25 doc ids).
     */
   def delete(spark: SparkSession, dir: String, vecIds: Seq[Long],
-             maxTombstones: Int = graft.index.PackedIndex.MaxTombstones,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): Unit = {
+             maxTombstones: Int = graft.index.PackedIndex.MaxTombstones): Unit = {
     import spark.implicits._
-    val holes = loadHoles(dir, meta)
+    val holes = loadHoles(dir)
     val live = vecIds.distinct
       .filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
     if (live.nonEmpty) {
       val unknown = live.toDF("vec_id")
-        .join(loadCells(spark, dir, io, meta).select(col("vec_id")),
+        .join(loadCells(spark, dir).select(col("vec_id")),
           Seq("vec_id"), "left_anti")
         .collect().map(_.getLong(0)).sorted
       require(unknown.isEmpty,
@@ -289,12 +281,12 @@ object IvfIndex {
           unknown.take(5).mkString(",") +
           (if (unknown.length > 5) s" (+${unknown.length - 5} more)" else ""))
     }
-    val merged = (loadTombstones(dir, meta) ++ live).distinct.sorted
+    val merged = (loadTombstones(dir) ++ live).distinct.sorted
     require(merged.length <= maxTombstones,
       s"IvfIndex.delete: tombstone set would reach ${merged.length} ids " +
         s"(bound $maxTombstones) — run compact() to apply them physically " +
         "(or rebuild over the filtered corpus for mass deletes)")
-    meta.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
+    MetaIO.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
   }
 
   /** Apply tombstones PHYSICALLY into a fresh dir — the dense sibling of
@@ -307,17 +299,15 @@ object IvfIndex {
     * Erased ids land in the holes ledger so a re-issued [[delete]] of one
     * is a no-op forever after.
     */
-  def compact(spark: SparkSession, srcDir: String, outDir: String,
-              io: TableIO = ParquetDirIO,
-              meta: MetaIO = LocalMetaIO): Unit = {
+  def compact(spark: SparkSession, srcDir: String, outDir: String): Unit = {
     import spark.implicits._
-    require(!meta.exists(s"$outDir/cells.list"),
+    require(!MetaIO.exists(s"$outDir/cells.list"),
       s"IvfIndex.compact: $outDir already holds a committed index")
-    val stats = readStats(srcDir, meta)
+    val stats = readStats(srcDir)
     val storage = storageMode(stats)
-    val tomb = loadTombstones(srcDir, meta)
+    val tomb = loadTombstones(srcDir)
     val isinMax = graft.query.Wand.IsinThreshold
-    var survivors = loadCells(spark, srcDir, io, meta)
+    var survivors = loadCells(spark, srcDir)
     if (tomb.nonEmpty) {
       survivors =
         if (tomb.length <= isinMax)
@@ -326,30 +316,29 @@ object IvfIndex {
           survivors.join(broadcast(tomb.toSeq.toDF("vec_id")),
             Seq("vec_id"), "left_anti")
     }
-    meta.mkdirs(outDir)
-    writeSegment(survivors, s"$outDir/cells", io, storage)
-    val nVecs = io.read(spark, s"$outDir/cells").count()
-    meta.writeAtomic(s"$outDir/centroids.tsv",
-      meta.readString(s"$srcDir/centroids.tsv"))
-    val holes = (loadHoles(srcDir, meta) ++ tomb).distinct.sorted
+    MetaIO.mkdirs(outDir)
+    writeSegment(survivors, s"$outDir/cells", storage)
+    val nVecs = TableIO.read(spark, s"$outDir/cells").count()
+    MetaIO.writeAtomic(s"$outDir/centroids.tsv",
+      MetaIO.readString(s"$srcDir/centroids.tsv"))
+    val holes = (loadHoles(srcDir) ++ tomb).distinct.sorted
     if (holes.nonEmpty)
-      meta.writeAtomic(s"$outDir/holes.txt", holes.mkString("\n"))
-    meta.writeAtomic(s"$outDir/ivf.json", statsJson(
+      MetaIO.writeAtomic(s"$outDir/holes.txt", holes.mkString("\n"))
+    MetaIO.writeAtomic(s"$outDir/ivf.json", statsJson(
       statLong(stats, "nCells"), statLong(stats, "dim"), nVecs, storage))
-    meta.writeAtomic(s"$outDir/cells.list", s"cells\t$nVecs") // marker LAST
+    MetaIO.writeAtomic(s"$outDir/cells.list", s"cells\t$nVecs") // marker LAST
   }
 
-  def loadTombstones(dir: String,
-                     meta: MetaIO = LocalMetaIO): Array[Long] =
-    readIds(s"$dir/tombstones.txt", meta)
+  def loadTombstones(dir: String): Array[Long] =
+    readIds(s"$dir/tombstones.txt")
 
   /** Sorted vec_ids physically removed by past compactions. */
-  def loadHoles(dir: String, meta: MetaIO = LocalMetaIO): Array[Long] =
-    readIds(s"$dir/holes.txt", meta)
+  def loadHoles(dir: String): Array[Long] =
+    readIds(s"$dir/holes.txt")
 
-  private def readIds(path: String, meta: MetaIO): Array[Long] =
-    if (!meta.exists(path)) Array.empty[Long]
-    else meta.readString(path).split("\n").iterator
+  private def readIds(path: String): Array[Long] =
+    if (!MetaIO.exists(path)) Array.empty[Long]
+    else MetaIO.readString(path).split("\n").iterator
       .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray
 
   // ---- internals -------------------------------------------------------
@@ -360,13 +349,13 @@ object IvfIndex {
     * bytes; see class doc).
     */
   private def writeSegment(assigned: DataFrame, location: String,
-                           io: TableIO, storage: String): Unit = {
+                           storage: String): Unit = {
     val spark = assigned.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism, 4)
     val vecOut =
       if (storage == "f32") col("vec").cast("array<float>").as("vec")
       else col("vec")
-    io.write(assigned
+    TableIO.write(assigned
       .repartition(parts, col("cell_id"))
       .sortWithinPartitions(col("cell_id"), col("vec_id"))
       .select(col("vec_id"), vecOut, col("cell_id")), location)
@@ -375,10 +364,9 @@ object IvfIndex {
   /** Committed (segmentName, rowCount) entries; legacy lines without a
     * count read as None and self-heal on the next [[append]].
     */
-  private def segmentEntries(dir: String,
-                             meta: MetaIO): Seq[(String, Option[Long])] =
-    if (meta.exists(s"$dir/cells.list"))
-      meta.readString(s"$dir/cells.list")
+  private def segmentEntries(dir: String): Seq[(String, Option[Long])] =
+    if (MetaIO.exists(s"$dir/cells.list"))
+      MetaIO.readString(s"$dir/cells.list")
         .split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
           line.split("\t", 2) match {
             case Array(nm, cnt) => nm -> Some(cnt.toLong)
@@ -387,31 +375,28 @@ object IvfIndex {
         }.toSeq
     else Seq("cells" -> None)
 
-  private def segmentList(dir: String, meta: MetaIO): Seq[String] =
-    segmentEntries(dir, meta).map(_._1)
+  private def segmentList(dir: String): Seq[String] =
+    segmentEntries(dir).map(_._1)
 
   /** Union of committed cell segments, vec always presented as
     * ARRAY<DOUBLE> regardless of the storage mode (f32 dequantizes here,
     * so every consumer scores in double).
     */
-  def loadCells(spark: SparkSession, dir: String,
-                io: TableIO = ParquetDirIO,
-                meta: MetaIO = LocalMetaIO): DataFrame = {
-    val segs = segmentList(dir, meta)
+  def loadCells(spark: SparkSession, dir: String): DataFrame = {
+    val segs = segmentList(dir)
     segs.foreach { s =>
-      require(io.committed(s"$dir/$s"),
+      require(TableIO.committed(s"$dir/$s"),
         s"IvfIndex.loadCells: segment $s missing/uncommitted at $dir")
     }
     segs.iterator
-      .map(s => io.read(spark, s"$dir/$s")
+      .map(s => TableIO.read(spark, s"$dir/$s")
         .select(col("vec_id"), col("vec").cast("array<double>").as("vec"),
           col("cell_id")))
       .reduce(_ unionByName _)
   }
 
-  def loadCentroids(dir: String,
-                    meta: MetaIO = LocalMetaIO): Array[(Long, Array[Double])] =
-    meta.readString(s"$dir/centroids.tsv").split("\n").iterator
+  def loadCentroids(dir: String): Array[(Long, Array[Double])] =
+    MetaIO.readString(s"$dir/centroids.tsv").split("\n").iterator
       .map(_.trim).filter(_.nonEmpty).map { line =>
         val Array(id, vs) = line.split("\t", 2)
         id.toLong -> vs.split(",").map(_.toDouble)
@@ -427,9 +412,8 @@ object IvfIndex {
                         storage: String): String =
     s"""{"nCells":$nCells,"dim":$dim,"nVecs":$nVecs,"storage":"$storage"}"""
 
-  private[graft] def readStats(dir: String,
-                               meta: MetaIO = LocalMetaIO): Map[String, String] =
-    meta.readString(s"$dir/ivf.json").trim
+  private[graft] def readStats(dir: String): Map[String, String] =
+    MetaIO.readString(s"$dir/ivf.json").trim
       .stripPrefix("{").stripSuffix("}").split(",").map { kv =>
         val Array(k, v) = kv.split(":", 2)
         k.trim.stripPrefix("\"").stripSuffix("\"") ->

@@ -139,7 +139,7 @@ object DataOpsQueries {
     "q_ann_ivf_persisted" -> ((s, dir) => {
       val emb = DocsCorpus.table(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id"), col("embedding").as("vec"))
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-ivfp").toString
+      val idxDir = graft.SparkEntry.scratchDir("graft-ivfp")
       graft.ann.IvfIndex.build(corpus, idxDir, nCells = 16, iters = 4)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))

@@ -160,7 +160,7 @@ object MiscQueries {
 
     // S1: JSON corpus source round-trip (write jsonl, schema read back)
     "q_json_source" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-json").toString + "/docs"
+      val out = graft.SparkEntry.scratchDir("graft-json") + "/docs"
       DocsCorpus.documents(s, dir).write.mode("overwrite").json(out)
       s.read.schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
         .json(out).select(col("doc_id"), col("lang"), col("n_chars"))
@@ -202,7 +202,7 @@ object MiscQueries {
     // S4: ranking TSV sink round-trip (write then read back; the fixture
     // ranking is deterministic so the read-back is DuckDB-oracle-exact)
     "q_ranking_tsv" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft-tsv").toString + "/r"
+      val out = graft.SparkEntry.scratchDir("graft-tsv") + "/r"
       val ranked = graft.query.Bm25Query.rank(
         PipelineQueriesAccess.ranking(s, dir)
           .withColumn("score", col("rank").cast("double") * -1), 10)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Bm25Params
 import graft.extract.HtmlText
 import graft.index.{DocIds, InvertedIndex, PackedIndex}
+import graft.io.{MetaIO, TableIO}
 
 /** The full north-rule pipeline over the pages table:
   * pages -> byte-identical extraction -> dense docIds -> tokenize ->
@@ -43,18 +44,16 @@ object PagesPipeline {
     * resumable checkpoint.
     */
   def buildIndex(pages: DataFrame, dir: String, shardBits: Int = 0,
-                 groups: Int = 4, p: Bm25Params = Bm25Params(),
-                 io: graft.io.TableIO = graft.io.ParquetDirIO): Seq[PackedIndex.GroupManifest] = {
+                 groups: Int = 4, p: Bm25Params = Bm25Params()): Seq[PackedIndex.GroupManifest] = {
     val spark = pages.sparkSession
-    val rawPath = java.nio.file.Paths.get(dir, "docs_raw").toString
+    val rawPath = s"$dir/docs_raw"
     // ONE staged artifact: extracted text WITH dense doc_id. Tokenization is
     // re-derived on the fly by each consumer (cheap, narrow), so the build
     // never writes/reads the much larger terms-array form, and the group
     // jobs' doc_id range predicates push straight into this parquet.
-    if (!io.committed(rawPath)) io.write(DocIds.assignDense(extracted(pages)), rawPath)
-    val raw = io.read(spark, rawPath)
-    PackedIndex.build(tokenized(raw), dir, shardBits, groups, p,
-      io = io, stageInput = false)
+    if (!TableIO.committed(rawPath)) TableIO.write(DocIds.assignDense(extracted(pages)), rawPath)
+    val raw = TableIO.read(spark, rawPath)
+    PackedIndex.build(tokenized(raw), dir, shardBits, groups, p, stageInput = false)
   }
 
   /** Incremental ingest: extract + append new pages to an existing index
@@ -67,15 +66,13 @@ object PagesPipeline {
     // between the stats and manifest commits must offset new docIds by the
     // pre-append corpus size, not the already-bumped stats value
     val existingN = PackedIndex.committedDocs(dir)
-    val grp = 1 + new java.io.File(s"$dir/manifest").listFiles()
-      .iterator.map(_.getName)
+    val grp = 1 + MetaIO.list(s"$dir/manifest").iterator
       .collect { case nm if nm.startsWith("group-") && nm.endsWith(".json") =>
         nm.stripPrefix("group-").stripSuffix(".json").toInt
       }.foldLeft(-1)(math.max)
-    val io = graft.io.ParquetDirIO
-    val rawPath = java.nio.file.Paths.get(dir, s"docs_raw_append_$grp").toString
-    if (!io.committed(rawPath)) io.write(extracted(newPages), rawPath)
-    val raw = io.read(spark, rawPath)
+    val rawPath = s"$dir/docs_raw_append_$grp"
+    if (!TableIO.committed(rawPath)) TableIO.write(extracted(newPages), rawPath)
+    val raw = TableIO.read(spark, rawPath)
     val withIds = DocIds.assignDense(raw)
       .withColumn("doc_id", org.apache.spark.sql.functions.col("doc_id") + existingN)
     PackedIndex.append(tokenized(withIds), dir)

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Bm25Params
-import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
+import graft.io.{MetaIO, TableIO}
 
 /** Persisted packed posting-list row: all blocks of one term within one
   * doc-shard. Doc-partitioned (shard = doc_id >> shardBits) so a WAND task
@@ -53,8 +53,8 @@ final case class IndexStats(
   *                                       high-water mark + dead-id ledger
   *
   * All sidecars go through [[graft.io.MetaIO]]; tables through
-  * [[graft.io.TableIO]] — no direct driver-local filesystem access, so a
-  * cluster deployment swaps the two IO implementations and nothing here
+  * [[graft.io.TableIO]] — no direct driver-local filesystem access, so
+  * `dir` may be a local path or any Hadoop FileSystem URI and nothing here
   * changes.
   *
   * Resumability (north rule): the build runs group by group; groups are
@@ -239,13 +239,11 @@ object PackedIndex {
             shardBits: Int = 0, groups: Int = 4,
             p: Bm25Params = Bm25Params(),
             blockSize: Int = Codec.DefaultBlockSize,
-            io: TableIO = ParquetDirIO,
-            stageInput: Boolean = true,
-            meta: MetaIO = LocalMetaIO): Seq[GroupManifest] = {
+            stageInput: Boolean = true): Seq[GroupManifest] = {
     val spark = tokenizedIn.sparkSession
-    meta.mkdirs(s"$dir/manifest")
+    MetaIO.mkdirs(s"$dir/manifest")
     if (!stageInput)
-      return buildFrom(tokenizedIn, dir, shardBits, groups, p, blockSize, io, meta)
+      return buildFrom(tokenizedIn, dir, shardBits, groups, p, blockSize)
     // The tokenized frame feeds stats AND every group job, and upstream it
     // usually contains the expensive extraction kernel. It is STAGED to
     // parquet once (a real checkpoint: resume skips straight past
@@ -253,9 +251,9 @@ object PackedIndex {
     // Runtime caching (persist) was measured pathological under many-core
     // local mode (MemoryStore churn) and is less resumable anyway.
     val docsPath = s"$dir/docs"
-    if (!io.committed(docsPath)) io.write(tokenizedIn, docsPath)
-    val tokenized = io.read(spark, docsPath)
-    buildFrom(tokenized, dir, shardBits, groups, p, blockSize, io, meta)
+    if (!TableIO.committed(docsPath)) TableIO.write(tokenizedIn, docsPath)
+    val tokenized = TableIO.read(spark, docsPath)
+    buildFrom(tokenized, dir, shardBits, groups, p, blockSize)
   }
 
   /** Opt-in stage timing to stderr (SPARK_GRAFT_BUILD_TIMINGS=1) — profiling
@@ -275,8 +273,7 @@ object PackedIndex {
   private def buildFrom(tokenized: DataFrame, dir: String,
                         shardBitsIn: Int, groups: Int,
                         p: Bm25Params,
-                        blockSize: Int, io: TableIO,
-                        meta: MetaIO): Seq[GroupManifest] = {
+                        blockSize: Int): Seq[GroupManifest] = {
     val spark = tokenized.sparkSession
     // auto shard sizing: one column-pruned max(doc_id) pass (ids are dense,
     // so max+1 is the corpus size) — only paid when the caller didn't pin
@@ -314,7 +311,7 @@ object PackedIndex {
     val packStats = IndexStats(0L, 0.0, 0.0, p.k1, p.b, p.epsilon, shardBits, blockSize)
     def buildGroup(g: Int): GroupManifest = {
       val manifestPath = s"$dir/manifest/group-$g.json"
-      if (meta.exists(manifestPath)) readManifest(manifestPath, meta) // resume: skip
+      if (MetaIO.exists(manifestPath)) readManifest(manifestPath) // resume: skip
       else {
         val t0 = System.nanoTime()
         val counters = new PackCounters(spark)
@@ -332,11 +329,11 @@ object PackedIndex {
         // driver-serial file commit + one scheduler task per shard dir on
         // every read — thousands of tiny files at web scale for zero pruning
         // benefit (queries prune by TERM, not shard)
-        io.write(packed.toDF(), s"$dir/postings/grp=$g") }
+        TableIO.write(packed.toDF(), s"$dir/postings/grp=$g") }
         val (gDocs, gSumDl) = groupTotals.getOrElse(g, (0L, 0L))
         val man = GroupManifest(g, counters.terms.value, counters.postings.value,
           counters.bytes.value, (System.nanoTime() - t0) / 1e6, gDocs, gSumDl)
-        writeManifest(manifestPath, man, meta) // committed LAST -> crash-safe
+        writeManifest(manifestPath, man) // committed LAST -> crash-safe
         man
       }
     }
@@ -358,18 +355,18 @@ object PackedIndex {
     // deterministic epsilon floor; stats.json is the completion marker.
     // n/avgdl come from the manifests (exact Long sums), never from a
     // possibly-stale stats.json.
-    if (!meta.exists(s"$dir/stats.json")) {
+    if (!MetaIO.exists(s"$dir/stats.json")) {
       val n = manifests.map(_.docs).sum
       // n == 0 would make avgdl 0/0 = NaN — invalid JSON that poisons every
       // downstream BM25 division silently. An empty corpus is a caller bug.
       require(n > 0, s"PackedIndex.build: empty corpus (0 docs) at $dir")
       val avgdl = manifests.map(_.sumDl).sum.toDouble / n
-      timedStage("df write") { io.write(io.read(spark, s"$dir/postings")
+      timedStage("df write") { TableIO.write(TableIO.read(spark, s"$dir/postings")
         .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/df") }
       val avgRawIdf = timedStage("avgRawIdf") {
-        InvertedIndex.avgRawIdf(io.read(spark, s"$dir/df"), n) }
+        InvertedIndex.avgRawIdf(TableIO.read(spark, s"$dir/df"), n) }
       writeStats(dir, IndexStats(n, avgdl, avgRawIdf, p.k1, p.b, p.epsilon,
-        shardBits, blockSize), dfDir = "df", meta)
+        shardBits, blockSize), dfDir = "df")
     }
     manifests
   }
@@ -397,12 +394,10 @@ object PackedIndex {
     *                     existing corpus size (see
     *                     [[graft.corpus.PagesPipeline.appendPages]]).
     */
-  def append(newTokenized: DataFrame, dir: String,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): GroupManifest = {
+  def append(newTokenized: DataFrame, dir: String): GroupManifest = {
     val spark = newTokenized.sparkSession
-    val old = readStats(dir, meta)
-    val manifests = listManifests(dir, meta)
+    val old = readStats(dir)
+    val manifests = listManifests(dir)
     // pre-append totals from committed manifests only (idempotent on retry)
     val oldN = manifests.map(_.docs).sum
     val oldSumDl = manifests.map(_.sumDl).sum
@@ -424,11 +419,11 @@ object PackedIndex {
     // GC df dirs superseded by earlier appends (the CURRENT live dir is
     // never touched; the one superseded by THIS append survives until the
     // next one, giving in-flight readers a full append-cycle of grace)
-    val live = readDfDir(dir, meta)
-    meta.list(dir).iterator
+    val live = readDfDir(dir)
+    MetaIO.list(dir).iterator
       .filter(name => name != live &&
         (name == "df" || name.startsWith("df-g")) && !name.endsWith(".tmp"))
-      .foreach(name => meta.deleteRecursively(s"$dir/$name"))
+      .foreach(name => MetaIO.deleteRecursively(s"$dir/$name"))
     val n = oldN + nNew
     require(n > 0, s"append: index at $dir would still hold 0 docs")
     val avgdl = (oldSumDl + newSumDl).toDouble / n
@@ -440,7 +435,7 @@ object PackedIndex {
       old.shardBits, old.blockSize)
     val batchShards = // new ids are dense in [oldN, oldN + nNew)
       (((oldN + nNew - 1) >> old.shardBits) - (oldN >> old.shardBits) + 1).toInt
-    io.write(packGroup(postingsWithDl(newTokenized), packStats, Some(counters),
+    TableIO.write(packGroup(postingsWithDl(newTokenized), packStats, Some(counters),
       maxShards = math.max(batchShards, 1)).toDF(),
       s"$dir/postings/grp=$nextGroup")
 
@@ -448,11 +443,11 @@ object PackedIndex {
     // fresh versioned dir; readers keep using the old dir until stats.json
     // (which names the live dir) is atomically replaced
     val newDfDir = s"df-g$nextGroup"
-    io.write(io.read(spark, s"$dir/postings")
+    TableIO.write(TableIO.read(spark, s"$dir/postings")
       .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/$newDfDir")
-    val avgRawIdf = InvertedIndex.avgRawIdf(io.read(spark, s"$dir/$newDfDir"), n)
+    val avgRawIdf = InvertedIndex.avgRawIdf(TableIO.read(spark, s"$dir/$newDfDir"), n)
     writeStats(dir, IndexStats(n, avgdl, avgRawIdf, old.k1, old.b, old.epsilon,
-      old.shardBits, old.blockSize), dfDir = newDfDir, meta)
+      old.shardBits, old.blockSize), dfDir = newDfDir)
 
     val man = GroupManifest(nextGroup, counters.terms.value,
       counters.postings.value, counters.bytes.value,
@@ -463,11 +458,11 @@ object PackedIndex {
     // HOLES (harmless: ids are already sparse after compaction) but never
     // id collisions (which would corrupt joins silently)
     val wm = s"$dir/watermark.json"
-    if (meta.exists(wm))
-      meta.writeAtomic(wm,
-        s"""{"nextDocId":${readJsonFlat(meta.readString(wm))("nextDocId").toLong + nNew}}""")
+    if (MetaIO.exists(wm))
+      MetaIO.writeAtomic(wm,
+        s"""{"nextDocId":${readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong + nNew}}""")
     // commit marker LAST: only now does a future append see these docs
-    writeManifest(s"$dir/manifest/group-$nextGroup.json", man, meta)
+    writeManifest(s"$dir/manifest/group-$nextGroup.json", man)
     man
   }
 
@@ -488,24 +483,23 @@ object PackedIndex {
     * `shard` cannot put rows in more partitions than distinct shards, so
     * anything beyond is empty scheduled tasks (r7).
     */
-  def numShardsBound(dir: String, meta: MetaIO = LocalMetaIO): Int = {
-    val bits = readStats(dir, meta).shardBits
-    val docs = committedDocs(dir, meta)
+  def numShardsBound(dir: String): Int = {
+    val bits = readStats(dir).shardBits
+    val docs = committedDocs(dir)
     (math.max(math.max(docs, 1L) - 1, 0L) >> bits).toInt + 1
   }
 
-  def committedDocs(dir: String, meta: MetaIO = LocalMetaIO): Long = {
+  def committedDocs(dir: String): Long = {
     val wm = s"$dir/watermark.json"
-    if (meta.exists(wm))
-      readJsonFlat(meta.readString(wm))("nextDocId").toLong
-    else listManifests(dir, meta).map(_.docs).sum
+    if (MetaIO.exists(wm))
+      readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong
+    else listManifests(dir).map(_.docs).sum
   }
 
-  private def listManifests(dir: String,
-                            meta: MetaIO = LocalMetaIO): Seq[GroupManifest] =
-    meta.list(s"$dir/manifest").iterator.collect {
+  private def listManifests(dir: String): Seq[GroupManifest] =
+    MetaIO.list(s"$dir/manifest").iterator.collect {
       case name if name.startsWith("group-") && name.endsWith(".json") =>
-        readManifest(s"$dir/manifest/$name", meta)
+        readManifest(s"$dir/manifest/$name")
     }.toSeq.sortBy(_.group)
 
   /** Read the packed postings of COMMITTED groups only. Groups are
@@ -516,15 +510,13 @@ object PackedIndex {
     * is its own pushdown-filtered scan; group count is small (one per
     * build/append commit unit), so the union is shallow.
     */
-  def loadPostings(spark: SparkSession, dir: String,
-                   io: TableIO = ParquetDirIO,
-                   meta: MetaIO = LocalMetaIO): Dataset[PackedPostings] = {
+  def loadPostings(spark: SparkSession, dir: String): Dataset[PackedPostings] = {
     import spark.implicits._
     val cols = Seq("shard", "term", "nPostings", "blocks")
-    val committed = listManifests(dir, meta).map(_.group)
+    val committed = listManifests(dir).map(_.group)
     require(committed.nonEmpty, s"loadPostings: no committed groups at $dir")
     committed.iterator
-      .map(g => io.read(spark, s"$dir/postings/grp=$g").selectExpr(cols: _*))
+      .map(g => TableIO.read(spark, s"$dir/postings/grp=$g").selectExpr(cols: _*))
       .reduce(_ unionByName _)
       .as[PackedPostings]
   }
@@ -532,10 +524,8 @@ object PackedIndex {
   /** The LIVE df table — the dir named by stats.json (appends write fresh
     * versioned dirs and flip the pointer atomically with the stats).
     */
-  def loadDf(spark: SparkSession, dir: String,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): DataFrame =
-    io.read(spark, s"$dir/${readDfDir(dir, meta)}")
+  def loadDf(spark: SparkSession, dir: String): DataFrame =
+    TableIO.read(spark, s"$dir/${readDfDir(dir)}")
 
   // ---- tiny JSON sidecars ---------------------------------------------
 
@@ -543,29 +533,27 @@ object PackedIndex {
                                  bytes: Long, wallMs: Double,
                                  docs: Long, sumDl: Long)
 
-  def writeStats(dir: String, s: IndexStats, dfDir: String,
-                 meta: MetaIO = LocalMetaIO): Unit =
-    meta.writeAtomic(s"$dir/stats.json",
+  def writeStats(dir: String, s: IndexStats, dfDir: String): Unit =
+    MetaIO.writeAtomic(s"$dir/stats.json",
       s"""{"n":${s.n},"avgdl":${s.avgdl},"avgRawIdf":${s.avgRawIdf},"k1":${s.k1},"b":${s.b},"epsilon":${s.epsilon},"shardBits":${s.shardBits},"blockSize":${s.blockSize},"dfDir":"$dfDir"}""")
 
-  def readStats(dir: String, meta: MetaIO = LocalMetaIO): IndexStats = {
-    val m = readJsonFlat(meta.readString(s"$dir/stats.json"))
+  def readStats(dir: String): IndexStats = {
+    val m = readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
     IndexStats(m("n").toLong, m("avgdl").toDouble, m("avgRawIdf").toDouble,
       m("k1").toDouble, m("b").toDouble, m("epsilon").toDouble,
       m("shardBits").toDouble.toInt, m("blockSize").toDouble.toInt)
   }
 
-  def readDfDir(dir: String, meta: MetaIO = LocalMetaIO): String =
-    readJsonFlat(meta.readString(s"$dir/stats.json"))
+  def readDfDir(dir: String): String =
+    readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
       .getOrElse("dfDir", "df").stripPrefix("\"").stripSuffix("\"")
 
-  private def writeManifest(path: String, m: GroupManifest,
-                            meta: MetaIO): Unit =
-    meta.writeAtomic(path,
+  private def writeManifest(path: String, m: GroupManifest): Unit =
+    MetaIO.writeAtomic(path,
       s"""{"group":${m.group},"terms":${m.terms},"postings":${m.postings},"bytes":${m.bytes},"wallMs":${m.wallMs},"docs":${m.docs},"sumDl":${m.sumDl}}""")
 
-  private def readManifest(path: String, meta: MetaIO): GroupManifest = {
-    val m = readJsonFlat(meta.readString(path))
+  private def readManifest(path: String): GroupManifest = {
+    val m = readJsonFlat(MetaIO.readString(path))
     // docs/sumDl are the authoritative corpus totals (n, avgdl, docId
     // offsets all derive from their sums). A manifest lacking them is a
     // pre-upgrade format: silently defaulting to 0 would make a resumed
@@ -604,12 +592,10 @@ object PackedIndex {
     * PagesPipeline.appendPages needs the pipeline's docs_raw staging and so
     * operates on the ORIGINAL lineage dir, not a compacted copy.
     */
-  def compact(spark: SparkSession, dir: String, outDir: String,
-              io: TableIO = ParquetDirIO,
-              meta: MetaIO = LocalMetaIO): Unit = {
+  def compact(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
-    val stats = readStats(dir, meta)
-    val committed = committedDocs(dir, meta)
+    val stats = readStats(dir)
+    val committed = committedDocs(dir)
     // LIVE tombstones only: ids of docs a PREVIOUS compaction already
     // removed (holes) must not be subtracted again — delete() filters them
     // on entry, but an externally-edited tombstones.txt (or a pre-holes-file
@@ -618,8 +604,8 @@ object PackedIndex {
     // the compacted index. Intersecting against the persisted hole set here
     // makes the stat arithmetic correct regardless of how the tombstones
     // were produced.
-    val holes = loadHoles(dir, meta)
-    val tomb = loadTombstones(dir, meta)
+    val holes = loadHoles(dir)
+    val tomb = loadTombstones(dir)
       .filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
     require(tomb.nonEmpty, s"compact: no live tombstones at $dir")
     require(tomb.forall(id => id >= 0 && id < committed),
@@ -628,7 +614,7 @@ object PackedIndex {
     // crash-safety sourcing append() uses. stats.json is written BEFORE the
     // manifest in the append protocol, so after a crashed append it counts
     // docs the postings scan below will never see.
-    val preN = listManifests(dir, meta).map(_.docs).sum
+    val preN = listManifests(dir).map(_.docs).sum
     val n2 = preN - tomb.length
     require(n2 > 0, s"compact: all $preN docs deleted — delete the index instead")
 
@@ -639,7 +625,7 @@ object PackedIndex {
     // .distinct() paid a full shuffle for the same ≤|tombstones|-bounded
     // result (r7).
     val bcTomb = spark.sparkContext.broadcast(tomb)
-    val deletedDl: Map[Long, Long] = loadPostings(spark, dir, io, meta)
+    val deletedDl: Map[Long, Long] = loadPostings(spark, dir)
       .mapPartitions { it =>
         val t = bcTomb.value
         val local = new java.util.HashMap[Long, Long]()
@@ -661,14 +647,14 @@ object PackedIndex {
         import scala.jdk.CollectionConverters._
         local.asScala.iterator.map { case (d, dl) => (d, dl) }
       }.collect().toMap
-    val sumDl2 = listManifests(dir, meta).map(_.sumDl).sum - deletedDl.values.sum
+    val sumDl2 = listManifests(dir).map(_.sumDl).sum - deletedDl.values.sum
 
     // pass 2: decode -> drop deleted -> repack with the same codec. The
     // surviving sorted doc array re-blocks exactly as a fresh build would.
     // Lists whose block [base, maxDoc] ranges touch no tombstone pass
     // through HEADER-ONLY (no varint decode) — a selective GDPR-style
     // delete costs work proportional to the affected lists, not the index.
-    meta.mkdirs(s"$outDir/manifest")
+    MetaIO.mkdirs(s"$outDir/manifest")
     val blockSize = stats.blockSize
     val t0 = System.nanoTime()
     // manifest metrics (terms/postings) accumulate on the repack write
@@ -677,7 +663,7 @@ object PackedIndex {
     // exact stats n2/sumDl2 come from the arithmetic above)
     val cTerms = spark.sparkContext.longAccumulator("compactTerms")
     val cPostings = spark.sparkContext.longAccumulator("compactPostings")
-    val repacked = loadPostings(spark, dir, io, meta).mapPartitions { it =>
+    val repacked = loadPostings(spark, dir).mapPartitions { it =>
       val t = bcTomb.value
       def touched(b: PackedBlock): Boolean = {
         val i = java.util.Arrays.binarySearch(t, b.base)
@@ -714,32 +700,32 @@ object PackedIndex {
         }
       }
     }
-    io.write(repacked.toDF(), s"$outDir/postings/grp=0")
+    TableIO.write(repacked.toDF(), s"$outDir/postings/grp=0")
 
-    io.write(io.read(spark, s"$outDir/postings")
+    TableIO.write(TableIO.read(spark, s"$outDir/postings")
       .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$outDir/df")
-    val avgRawIdf2 = InvertedIndex.avgRawIdf(io.read(spark, s"$outDir/df"), n2)
+    val avgRawIdf2 = InvertedIndex.avgRawIdf(TableIO.read(spark, s"$outDir/df"), n2)
     writeStats(outDir, IndexStats(n2, sumDl2.toDouble / n2, avgRawIdf2,
       stats.k1, stats.b, stats.epsilon, stats.shardBits, blockSize),
-      dfDir = "df", meta)
+      dfDir = "df")
     // carry the positional arm (if present): repack through the same
     // tombstone-drop kernel, so phrase/proximity search composes with the
     // delete lifecycle instead of failing loudly until a manual rebuild
-    if (PositionalIndex.exists(dir, io, meta))
-      PositionalIndex.compactInto(spark, dir, outDir, bcTomb, blockSize, io, meta)
+    if (PositionalIndex.exists(dir))
+      PositionalIndex.compactInto(spark, dir, outDir, bcTomb, blockSize)
     // the id high-water mark survives compaction: manifest docs is the
     // SURVIVOR count (feeds stats on later appends), while id allocation
     // must keep starting above the ORIGINAL range — deleted ids are dead
     // forever, never recycled (committedDocs() prefers this file)
-    meta.writeAtomic(s"$outDir/watermark.json", s"""{"nextDocId":$committed}""")
+    MetaIO.writeAtomic(s"$outDir/watermark.json", s"""{"nextDocId":$committed}""")
     // dead-id ledger: prior holes plus the ids THIS compaction removed.
     // delete()/compact() consult it so a re-issued delete of an already
     // erased doc is a no-op instead of corrupting the stat arithmetic.
-    meta.writeAtomic(s"$outDir/holes.txt",
+    MetaIO.writeAtomic(s"$outDir/holes.txt",
       (holes ++ tomb).distinct.sorted.mkString("\n"))
     writeManifest(s"$outDir/manifest/group-0.json",
       GroupManifest(0, cTerms.value, cPostings.value, 0L,
-        (System.nanoTime() - t0) / 1e6, n2, sumDl2), meta) // committed LAST
+        (System.nanoTime() - t0) / 1e6, n2, sumDl2)) // committed LAST
   }
 
   /** Visibility-only delete (Lucene-style tombstones): marks doc ids as
@@ -771,9 +757,8 @@ object PackedIndex {
   val MaxTombstones: Int = 1 << 20
 
   def delete(dir: String, docIds: Seq[Long],
-             maxTombstones: Int = MaxTombstones,
-             meta: MetaIO = LocalMetaIO): Unit = {
-    val limit = committedDocs(dir, meta)
+             maxTombstones: Int = MaxTombstones): Unit = {
+    val limit = committedDocs(dir)
     require(docIds.forall(id => id >= 0 && id < limit),
       s"delete: doc ids outside the committed [0, $limit) range: " +
         docIds.filterNot(id => id >= 0 && id < limit).take(5).mkString(","))
@@ -782,30 +767,30 @@ object PackedIndex {
     // again (a re-issued GDPR erasure) is a no-op on an already-erased doc;
     // silently letting it into the tombstone set would make the NEXT
     // compact() subtract a nonexistent doc from n/sumDl.
-    val holes = loadHoles(dir, meta)
+    val holes = loadHoles(dir)
     val liveIds =
       docIds.filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
-    val merged = (loadTombstones(dir, meta) ++ liveIds).distinct.sorted
+    val merged = (loadTombstones(dir) ++ liveIds).distinct.sorted
     require(merged.length <= maxTombstones,
       s"delete: tombstone set would reach ${merged.length} ids " +
         s"(bound $maxTombstones) — run compact() to apply them physically " +
         "(or rebuild over a filtered corpus for mass deletes)")
-    meta.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
+    MetaIO.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
   }
 
   /** Sorted tombstoned doc ids; empty when no delete has ever run. */
-  def loadTombstones(dir: String, meta: MetaIO = LocalMetaIO): Array[Long] =
-    readIdFile(s"$dir/tombstones.txt", meta)
+  def loadTombstones(dir: String): Array[Long] =
+    readIdFile(s"$dir/tombstones.txt")
 
   /** Sorted dead doc ids physically removed by past compactions (holes in
     * the dense id range); empty for a never-compacted index.
     */
-  def loadHoles(dir: String, meta: MetaIO = LocalMetaIO): Array[Long] =
-    readIdFile(s"$dir/holes.txt", meta)
+  def loadHoles(dir: String): Array[Long] =
+    readIdFile(s"$dir/holes.txt")
 
-  private def readIdFile(path: String, meta: MetaIO): Array[Long] =
-    if (!meta.exists(path)) Array.empty[Long]
-    else meta.readString(path).split("\n").iterator
+  private def readIdFile(path: String): Array[Long] =
+    if (!MetaIO.exists(path)) Array.empty[Long]
+    else MetaIO.readString(path).split("\n").iterator
       .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray
 
   /** Parse a flat one-level JSON object of numbers (no strings/nesting). */

@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
+import graft.io.{MetaIO, TableIO}
 
 /** Persisted positional posting row: all positional blocks of one term
   * within one doc-shard (see [[Codec.PosBlock]]).
@@ -116,23 +116,21 @@ object PositionalIndex {
     * readers see the old or the new complete list). Absent on pre-segment
     * arms, which consist of the single legacy `positions` dir.
     */
-  private def segmentList(dir: String, meta: MetaIO): Seq[String] =
-    if (meta.exists(s"$dir/positions.list"))
-      meta.readString(s"$dir/positions.list")
+  private def segmentList(dir: String): Seq[String] =
+    if (MetaIO.exists(s"$dir/positions.list"))
+      MetaIO.readString(s"$dir/positions.list")
         .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
     else Seq("positions")
 
   /** Build (or rebuild) the positional arm from the index's full corpus:
     * one base segment, resetting any appended segments.
     */
-  def build(tokenized: DataFrame, dir: String,
-            io: TableIO = ParquetDirIO,
-            meta: MetaIO = LocalMetaIO): Unit = {
-    val stats = PackedIndex.readStats(dir, meta)
-    io.write(pack(tokenized, stats.shardBits, stats.blockSize,
-      maxShards = PackedIndex.numShardsBound(dir, meta)),
+  def build(tokenized: DataFrame, dir: String): Unit = {
+    val stats = PackedIndex.readStats(dir)
+    TableIO.write(pack(tokenized, stats.shardBits, stats.blockSize,
+      maxShards = PackedIndex.numShardsBound(dir)),
       s"$dir/positions")
-    meta.writeAtomic(s"$dir/positions.list", "positions")
+    MetaIO.writeAtomic(s"$dir/positions.list", "positions")
   }
 
   /** Extend the positional arm with NEWLY APPENDED docs only (cost ∝ the
@@ -143,26 +141,23 @@ object PositionalIndex {
     * retry is idempotent). `newTokenized` must carry the docs' FINAL ids,
     * i.e. the same offset frame handed to PackedIndex.append.
     */
-  def append(newTokenized: DataFrame, dir: String,
-             io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): Unit = {
-    val stats = PackedIndex.readStats(dir, meta)
-    val segs = segmentList(dir, meta)
-    require(io.committed(s"$dir/${segs.head}"),
+  def append(newTokenized: DataFrame, dir: String): Unit = {
+    val stats = PackedIndex.readStats(dir)
+    val segs = segmentList(dir)
+    require(TableIO.committed(s"$dir/${segs.head}"),
       s"PositionalIndex.append: no committed positional arm at $dir — " +
         "run PositionalIndex.build first")
     val next = s"positions-a${segs.length}"
-    io.write(pack(newTokenized, stats.shardBits, stats.blockSize),
+    TableIO.write(pack(newTokenized, stats.shardBits, stats.blockSize),
       s"$dir/$next")
-    meta.writeAtomic(s"$dir/positions.list", (segs :+ next).mkString("\n"))
+    MetaIO.writeAtomic(s"$dir/positions.list", (segs :+ next).mkString("\n"))
   }
 
   /** True iff `dir` carries a positional arm (segment list or legacy
     * single `positions` dir).
     */
-  def exists(dir: String, io: TableIO = ParquetDirIO,
-             meta: MetaIO = LocalMetaIO): Boolean =
-    meta.exists(s"$dir/positions.list") || io.committed(s"$dir/positions")
+  def exists(dir: String): Boolean =
+    MetaIO.exists(s"$dir/positions.list") || TableIO.committed(s"$dir/positions")
 
   /** Repack the positional arm minus the tombstoned docs into `outDir` —
     * the positional leg of [[PackedIndex.compact]], sharing its shape:
@@ -175,10 +170,9 @@ object PositionalIndex {
   private[index] def compactInto(spark: SparkSession, dir: String,
                                  outDir: String,
                                  bcTomb: org.apache.spark.broadcast.Broadcast[Array[Long]],
-                                 blockSize: Int,
-                                 io: TableIO, meta: MetaIO): Unit = {
+                                 blockSize: Int): Unit = {
     import spark.implicits._
-    val repacked = load(spark, dir, io, meta).mapPartitions { it =>
+    val repacked = load(spark, dir).mapPartitions { it =>
       val t = bcTomb.value
       def touched(b: PackedPosBlock): Boolean = {
         val i = java.util.Arrays.binarySearch(t, b.base)
@@ -209,25 +203,23 @@ object PositionalIndex {
         }
       }
     }
-    io.write(repacked.toDF(), s"$outDir/positions")
-    meta.writeAtomic(s"$outDir/positions.list", "positions")
+    TableIO.write(repacked.toDF(), s"$outDir/positions")
+    MetaIO.writeAtomic(s"$outDir/positions.list", "positions")
   }
 
   /** Read the positional arm (union of committed segments); fails loudly
     * when absent.
     */
-  def load(spark: SparkSession, dir: String,
-           io: TableIO = ParquetDirIO,
-           meta: MetaIO = LocalMetaIO): Dataset[PosPostings] = {
+  def load(spark: SparkSession, dir: String): Dataset[PosPostings] = {
     import spark.implicits._
-    val segs = segmentList(dir, meta)
+    val segs = segmentList(dir)
     segs.foreach { s =>
-      require(io.committed(s"$dir/$s"),
+      require(TableIO.committed(s"$dir/$s"),
         s"PositionalIndex.load: segment $s missing/uncommitted at $dir " +
           "— run PositionalIndex.build over the index corpus first")
     }
     segs.iterator
-      .map(s => io.read(spark, s"$dir/$s")
+      .map(s => TableIO.read(spark, s"$dir/$s")
         .selectExpr("shard", "term", "nPostings", "blocks"))
       .reduce(_ unionByName _)
       .as[PosPostings]

@@ -2,97 +2,42 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Table-format boundary for every persistent artifact the engine writes
-  * (staged docs, packed postings groups, df tables).
+/** Table-format boundary for every persistent table the engine writes
+  * (staged docs, packed postings groups, df tables): parquet directories,
+  * the directory is the table and its `_SUCCESS` file the commit marker.
+  * Spark's parquet reader/writer speak both scheme-less paths and Hadoop
+  * URIs; the commit probe and cleanup go through [[MetaIO]], so the
+  * location's path picks the storage exactly as it does for sidecars.
   *
   * SURVEY §1.2 specifies Iceberg tables for pages/postings; this container
-  * has no Iceberg jars (verified: /opt/spark/jars, offline resolver), so the
-  * shipped implementation is parquet directories with _SUCCESS markers and
-  * JSON sidecar manifests. Everything format-specific is behind this trait:
-  * on a real cluster an `IcebergIO` maps `write` to a table commit
-  * (snapshot), `committed` to table existence, and the engine's group
-  * manifests become snapshot metadata — no call-site changes.
-  * [[HadoopTableIO]] is the cluster-portable parquet implementation (any
-  * Hadoop FileSystem URI — HDFS, S3A, ABFS) shipped today.
+  * has no Iceberg jars (verified: /opt/spark/jars, offline resolver). An
+  * Iceberg implementation would map `write` to a table commit (snapshot),
+  * `committed` to table existence, and the group manifests to snapshot
+  * metadata, behind these four methods.
+  *
+  * A class rather than a bare object only so that tests can inject
+  * storage faults into [[graft.query.ChunkedServe]]; the engine uses the
+  * [[TableIO]] object everywhere.
   */
-trait TableIO extends Serializable {
+class TableIO {
 
   /** Write a table, replacing any previous content at the location. */
-  def write(df: DataFrame, location: String, partitionBy: Seq[String] = Nil): Unit
+  def write(df: DataFrame, location: String, partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(location)
+  }
 
-  def read(spark: SparkSession, location: String): DataFrame
+  def read(spark: SparkSession, location: String): DataFrame =
+    spark.read.parquet(location)
 
   /** True iff a COMPLETE write exists at the location (atomicity marker). */
-  def committed(location: String): Boolean
+  def committed(location: String): Boolean =
+    MetaIO.exists(s"$location/_SUCCESS")
 
-  /** Remove the table at the location if present (no-op when absent) — the
-    * same storage view as `write`/`read`, so stale-output cleanup composes
-    * with any implementation (a meta-side probe would miss tables written
-    * through a different boundary).
-    */
-  def deleteIfExists(location: String): Unit
+  /** Remove the table at the location if present (no-op when absent). */
+  def deleteIfExists(location: String): Unit =
+    MetaIO.deleteRecursively(location)
 }
 
-/** Parquet-directory implementation: the directory is the table, the
-  * _SUCCESS file its commit marker.
-  */
-object ParquetDirIO extends TableIO {
-
-  override def write(df: DataFrame, location: String,
-                     partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(location)
-  }
-
-  override def read(spark: SparkSession, location: String): DataFrame =
-    spark.read.parquet(location)
-
-  override def committed(location: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(location, "_SUCCESS"))
-
-  override def deleteIfExists(location: String): Unit =
-    if (new java.io.File(location).exists())
-      LocalMetaIO.deleteRecursively(location) // one local recursive delete impl
-}
-
-/** Parquet tables addressed through the Hadoop FileSystem API (already on
-  * the Spark classpath) — the cluster-portable implementation: locations
-  * are any FileSystem URI (`hdfs://`, `s3a://`, `file://`, or scheme-less
-  * paths resolving through the session's Hadoop conf). Spark's parquet
-  * reader/writer already speak these URIs; this class routes the COMMIT
-  * PROBE and CLEANUP through the same FileSystem so no driver-local
-  * `java.io.File` assumption survives (the gap ParquetDirIO has on shared
-  * storage).
-  */
-class HadoopTableIO extends TableIO {
-  import org.apache.hadoop.fs.Path
-
-  // Hadoop Configuration is not serializable; resolve lazily per call from
-  // the default conf (FileSystem.get caches instances internally)
-  private def fs(p: Path) =
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-
-  override def write(df: DataFrame, location: String,
-                     partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(location)
-  }
-
-  override def read(spark: SparkSession, location: String): DataFrame =
-    spark.read.parquet(location)
-
-  override def committed(location: String): Boolean = {
-    val p = new Path(location, "_SUCCESS")
-    fs(p).exists(p)
-  }
-
-  override def deleteIfExists(location: String): Unit = {
-    val p = new Path(location)
-    val f = fs(p)
-    if (f.exists(p)) f.delete(p, true)
-  }
-}
-
-object HadoopTableIO extends HadoopTableIO
+object TableIO extends TableIO

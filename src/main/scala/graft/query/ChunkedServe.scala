@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.{MetaIO, TableIO}
 
 /** Chunked-batch serving machinery shared by every Dataset-typed query
   * surface ([[Wand.searchDs]], [[Phrase.searchDs]]): a (query_id, text)
@@ -39,16 +40,17 @@ import org.apache.spark.sql.functions._
   *     leftover chunk partitions would otherwise be unioned into this
   *     batch's results by the final sink scan.
   */
-private[query] object ChunkedServe {
+private[graft] object ChunkedServe {
 
   /** `searchSeq` answers one bounded chunk, returning
     * (query_id, doc_id, score, rank); `label` prefixes failure messages.
     * A batch of at most one chunk short-circuits straight to `searchSeq`
-    * (staging would only add a write+read round-trip).
+    * (staging would only add a write+read round-trip). `io` is a fault-
+    * injection seam for tests; the engine always passes the default.
     */
   def serve(spark: SparkSession, queries: DataFrame, chunkSize: Int,
-            io: graft.io.TableIO, stagingDir: Option[String],
-            meta: graft.io.MetaIO, label: String)(
+            stagingDir: Option[String], label: String,
+            io: TableIO = TableIO)(
       searchSeq: Seq[(Long, String)] => DataFrame): DataFrame = {
     val q = queries.select(col("query_id").cast("long"), col("text").cast("string"))
     val n = q.count()
@@ -59,12 +61,9 @@ private[query] object ChunkedServe {
       return searchSeq(chunk)
     }
     val ownStaging = stagingDir.isEmpty
-    val staging = stagingDir.getOrElse(meta.createTempDir("graft-searchds"))
-    // stale-hits removal rides the SAME storage boundary the hit tables are
-    // written through — with a caller-supplied non-local TableIO plus the
-    // default LocalMetaIO, a meta-side existence probe would no-op and a
-    // prior larger batch's chunk partitions would union into this batch's
-    // sink scan (the silent-superset bug class)
+    val staging = stagingDir.getOrElse(MetaIO.createTempDir("graft-searchds"))
+    // a prior larger batch's chunk partitions would otherwise union into
+    // this batch's sink scan (the silent-superset bug class)
     io.deleteIfExists(s"$staging/hits")
     io.write(
       q.withColumn("chunk", pmod(xxhash64(col("query_id")), lit(numChunks))),
@@ -107,7 +106,7 @@ private[query] object ChunkedServe {
       // results are bounded (<= n*k rows — the caller's answer either way);
       // pin them so the scratch dir can be reclaimed immediately
       val pinned = out.localCheckpoint()
-      meta.deleteRecursively(staging)
+      MetaIO.deleteRecursively(staging)
       pinned
     }
   }

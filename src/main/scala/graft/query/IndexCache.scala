@@ -2,7 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
+import graft.io.MetaIO
 import graft.index.PackedIndex
 
 /** Session-scoped (driver-side) cache of an index's query-time term->df
@@ -19,12 +19,11 @@ import graft.index.PackedIndex
   * Invalidation: append/compact write a fresh df dir and atomically flip
   * stats.json's dfDir pointer (and always change n/avgdl), so a token
   * derived from stats.json's CONTENT changes exactly when the df content
-  * may have. The token is an md5 prefix of that content — NOT mtime/size
-  * ([[MetaIO.version]]): two rewrites within one mtime tick (or on a
-  * filesystem/object store with coarse mtime granularity) producing
-  * equal-length content would alias a time-based token and silently serve
-  * a stale term->df map (appended terms would return no hits with no
-  * error). stats.json is a few hundred bytes, so the per-call read is
+  * may have. The token is an md5 prefix of that content — NOT mtime/size:
+  * two rewrites within one mtime tick (or on a filesystem/object store
+  * with coarse mtime granularity) producing equal-length content would
+  * alias a time-based token and silently serve a stale term->df map
+  * (appended terms would return no hits with no error). stats.json is a few hundred bytes, so the per-call read is
   * driver-local microseconds — no Spark job.
   * Tombstones are deliberately NOT cached here — delete() touches only
   * tombstones.txt, which this cache never serves.
@@ -37,9 +36,8 @@ object IndexCache {
   val MaxCachedTerms: Long = 1000000L
 
   // dir -> (stats.json content token, Some(term->df) | None=vocab too large).
-  // Keyed by dir alone: the io/meta arguments only matter on the loading
-  // call — mixing different TableIO implementations for one dir string is
-  // not a supported pattern (the dir names one physical index).
+  // Keyed by the dir string: a scheme-less path and a file:// URI of the
+  // same index are two entries, each validated by the same content token.
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Map[String, Long]])]()
 
@@ -51,12 +49,12 @@ object IndexCache {
   /** Content-derived invalidation token: first 8 bytes of
     * md5(stats.json bytes); -1 for a missing file.
     */
-  private def token(dir: String, meta: MetaIO): Long = {
+  private def token(dir: String): Long = {
     val p = s"$dir/stats.json"
-    if (!meta.exists(p)) -1L
+    if (!MetaIO.exists(p)) -1L
     else {
       val digest = java.security.MessageDigest.getInstance("MD5").digest(
-        meta.readString(p).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        MetaIO.readString(p).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       java.nio.ByteBuffer.wrap(digest).getLong
     }
   }
@@ -80,20 +78,18 @@ object IndexCache {
     * a newer entry (it re-reads before writing). Callers for other dirs are
     * never serialized.
     */
-  def dfMap(spark: SparkSession, dir: String,
-            io: TableIO = ParquetDirIO,
-            meta: MetaIO = LocalMetaIO): Option[Map[String, Long]] = {
-    val fastVer = token(dir, meta)
+  def dfMap(spark: SparkSession, dir: String): Option[Map[String, Long]] = {
+    val fastVer = token(dir)
     val fastHit = cache.get(dir)
     if (fastHit != null && fastHit._1 == fastVer) fastHit._2
     else {
       val lock = dirLocks.computeIfAbsent(dir, _ => new Object)
       lock.synchronized {
-        val ver = token(dir, meta)
+        val ver = token(dir)
         val hit = cache.get(dir)
         if (hit != null && hit._1 == ver) hit._2
         else {
-          val loaded = load(spark, dir, io, meta)
+          val loaded = load(spark, dir)
           cache.put(dir, (ver, loaded))
           loaded
         }
@@ -101,12 +97,11 @@ object IndexCache {
     }
   }
 
-  private def load(spark: SparkSession, dir: String, io: TableIO,
-                   meta: MetaIO): Option[Map[String, Long]] = {
+  private def load(spark: SparkSession, dir: String): Option[Map[String, Long]] = {
     loadCounter.incrementAndGet()
     // ONE job: collect up to the cap + 1 rows — an over-cap vocabulary is
     // detected from the overflow row without a separate count() pass
-    val rows = PackedIndex.loadDf(spark, dir, io, meta)
+    val rows = PackedIndex.loadDf(spark, dir)
       .select(col("term"), col("df"))
       .limit(MaxCachedTerms.toInt + 1).collect()
     if (rows.length > MaxCachedTerms) None

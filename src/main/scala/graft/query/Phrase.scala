@@ -92,11 +92,9 @@ object Phrase {
     */
   def proximityTopKPositional(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, a: String, b: String,
-                              slop: Int, k: Int,
-                              io: graft.io.TableIO = graft.io.ParquetDirIO,
-                              meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
+                              slop: Int, k: Int): DataFrame =
     searchOne(spark, indexDir, PositionalQuery.ProximityMatch(a, b, slop), k,
-      "prox_tf", io, meta)
+      "prox_tf")
 
   /** Per-doc ordered-proximity kernel over slot position arrays: count of
     * (a at p, b at q) pairs with 0 < q - p <= slop. Shared by the
@@ -169,11 +167,9 @@ object Phrase {
     */
   def nearTopKPositional(spark: org.apache.spark.sql.SparkSession,
                          indexDir: String, terms: Seq[String],
-                         slop: Int, k: Int,
-                         io: graft.io.TableIO = graft.io.ParquetDirIO,
-                         meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
+                         slop: Int, k: Int): DataFrame =
     searchOne(spark, indexDir, PositionalQuery.NearMatch(terms, slop), k,
-      "near_tf", io, meta)
+      "near_tf")
 
   /** Per-doc unordered-NEAR kernel over slot position arrays: anchors p of
     * slot 0 where every follower slot has an occurrence in [p-slop, p+slop].
@@ -222,14 +218,12 @@ object Phrase {
     * against the stored index. Honors tombstones.
     */
   def candidatesPacked(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, phrase: Seq[String],
-                       io: graft.io.TableIO = graft.io.ParquetDirIO,
-                       meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
+                       indexDir: String, phrase: Seq[String]): DataFrame = {
     import spark.implicits._
     val distinctTerms = phrase.distinct
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
+    val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
     val bcTomb = spark.sparkContext.broadcast(tomb)
-    val pairs = graft.index.PackedIndex.loadPostings(spark, indexDir, io, meta)
+    val pairs = graft.index.PackedIndex.loadPostings(spark, indexDir)
       .filter(col("term").isin(distinctTerms: _*))
       .flatMap { pp =>
         val t = bcTomb.value
@@ -328,20 +322,17 @@ object Phrase {
     * per shard the work is |rarest term's postings| binary searches.
     */
   def topKPositional(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String, phrase: Seq[String], k: Int,
-                     io: graft.io.TableIO = graft.io.ParquetDirIO,
-                     meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
+                     indexDir: String, phrase: Seq[String], k: Int): DataFrame =
     searchOne(spark, indexDir, PositionalQuery.PhraseMatch(phrase), k,
-      "phrase_tf", io, meta)
+      "phrase_tf")
 
   /** One-query [[search]] in the single-query operators' schema:
     * (doc_id, `countCol` long, rank).
     */
   private def searchOne(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String, q: PositionalQuery, k: Int,
-                        countCol: String, io: graft.io.TableIO,
-                        meta: graft.io.MetaIO): DataFrame =
-    search(spark, indexDir, Seq(0L -> q), k, io, meta)
+                        countCol: String): DataFrame =
+    search(spark, indexDir, Seq(0L -> q), k)
       .select(col("doc_id"), col("score").cast("long").as(countCol),
         col("rank"))
 
@@ -376,20 +367,19 @@ object Phrase {
     * term-filtered positional rows plus df per queried term.
     */
   private def loadGated(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, distinctTerms: Seq[String],
-                        io: graft.io.TableIO, meta: graft.io.MetaIO):
+                        indexDir: String, distinctTerms: Seq[String]):
       (org.apache.spark.sql.Dataset[graft.index.PosPostings], Map[String, Long]) = {
     val dfCounts: Map[String, Long] =
-      IndexCache.dfMap(spark, indexDir, io, meta) match {
+      IndexCache.dfMap(spark, indexDir) match {
         case Some(full) =>
           distinctTerms.iterator.flatMap(t => full.get(t).map(t -> _)).toMap
         case None =>
-          graft.index.PackedIndex.loadDf(spark, indexDir, io, meta)
+          graft.index.PackedIndex.loadDf(spark, indexDir)
             .filter(col("term").isin(distinctTerms: _*))
             .select(col("term"), col("df"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-    val posRows = graft.index.PositionalIndex.load(spark, indexDir, io, meta)
+    val posRows = graft.index.PositionalIndex.load(spark, indexDir)
       .filter(col("term").isin(distinctTerms: _*))
     val posCounts = posRows.groupBy(col("term"))
       .agg(sum(col("nPostings")).as("np"))
@@ -421,22 +411,20 @@ object Phrase {
     * never materialize globally.
     */
   def search(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-             queries: Seq[(Long, PositionalQuery)], k: Int,
-             io: graft.io.TableIO = graft.io.ParquetDirIO,
-             meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
+             queries: Seq[(Long, PositionalQuery)], k: Int): DataFrame = {
     require(k > 0, "Phrase.search: k must be > 0")
     lazy val none = ShardServe.globalRank(ShardServe.emptyHits(spark), k)
     if (queries.isEmpty) return none
     val allTerms = queries.flatMap(_._2.slotTerms).distinct
-    val (posRows, dfCounts) = loadGated(spark, indexDir, allTerms, io, meta)
+    val (posRows, dfCounts) = loadGated(spark, indexDir, allTerms)
     // conjunctive semantics: a query naming an unindexed term matches nothing
     val live = queries.filter(
       _._2.slotTerms.forall(t => dfCounts.getOrElse(t, 0L) > 0L)).toArray
     if (live.isEmpty) return none
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
+    val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
     val bcTomb = spark.sparkContext.broadcast(tomb)
     val bcQueries = spark.sparkContext.broadcast(live)
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, posRows, meta)
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, posRows)
     val hits = ShardServe.kernelHits(spark, grouped, k,
       () => bcQueries.value.map(_._1))(_.shard) { (rows, heaps) =>
       val qs = bcQueries.value
@@ -461,13 +449,11 @@ object Phrase {
   def searchDs(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                queries: DataFrame, mode: PositionalMode, k: Int,
                chunkSize: Int = 10000,
-               io: graft.io.TableIO = graft.io.ParquetDirIO,
-               stagingDir: Option[String] = None,
-               meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame =
-    ChunkedServe.serve(spark, queries, chunkSize, io, stagingDir, meta,
+               stagingDir: Option[String] = None): DataFrame =
+    ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
       "Phrase.searchDs") { chunk =>
       search(spark, indexDir,
-        chunk.map { case (id, text) => id -> mode.parse(text) }, k, io, meta)
+        chunk.map { case (id, text) => id -> mode.parse(text) }, k)
     }
 
   /** Decode one shard's positional rows ONCE per term: sorted doc ids +

@@ -38,10 +38,9 @@ object ShardServe {
     * partitions than distinct shards — the excess were empty tasks).
     */
   def shardPartitioned[T](spark: SparkSession, indexDir: String,
-                          rows: Dataset[T],
-                          meta: graft.io.MetaIO): Dataset[T] = {
+                          rows: Dataset[T]): Dataset[T] = {
     val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      PackedIndex.numShardsBound(indexDir, meta)), 1)
+      PackedIndex.numShardsBound(indexDir)), 1)
     rows
       .repartition(parts, col("shard"))
       .sortWithinPartitions(col("shard"), col("term"))

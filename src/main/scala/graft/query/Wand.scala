@@ -66,11 +66,10 @@ object Wand {
     */
   def prepare(spark: SparkSession, indexDir: String,
               queries: Seq[(Long, String)],
-              meta: graft.io.MetaIO = graft.io.LocalMetaIO,
               mustNot: Map[Long, String] = Map.empty,
               boosts: Map[Long, Map[String, Double]] = Map.empty)
       : (IndexStats, Seq[PreparedQuery]) = {
-    val stats = PackedIndex.readStats(indexDir, meta)
+    val stats = PackedIndex.readStats(indexDir)
     val tokenized = queries.map { case (id, text) =>
       id -> graft.tokenize.PyTokenize.split(text)
     }
@@ -90,14 +89,14 @@ object Wand {
       (tokenized.flatMap(_._2) ++ mustNotTok.valuesIterator.flatten).distinct
     val dfMap: Map[String, Long] =
       if (allTerms.isEmpty) Map.empty
-      else IndexCache.dfMap(spark, indexDir, meta = meta) match {
+      else IndexCache.dfMap(spark, indexDir) match {
         // bounded vocabulary: driver-local lookups, no per-batch Spark job
         // (the high-QPS serving floor; cache invalidated by stats.json
         // version, so appends/compactions are picked up)
         case Some(full) =>
           allTerms.iterator.flatMap(t => full.get(t).map(t -> _)).toMap
         case None =>
-          val dfTable = PackedIndex.loadDf(spark, indexDir, meta = meta)
+          val dfTable = PackedIndex.loadDf(spark, indexDir)
           val restricted =
             if (allTerms.size <= IsinThreshold)
               dfTable.filter(col("term").isin(allTerms: _*))
@@ -150,13 +149,12 @@ object Wand {
   def search(spark: SparkSession, indexDir: String,
              queries: Seq[(Long, String)], k: Int,
              allowedDocs: Option[Array[Long]] = None,
-             meta: graft.io.MetaIO = graft.io.LocalMetaIO,
              minShouldMatch: Int = 1,
              mustNot: Map[Long, String] = Map.empty,
              boosts: Map[Long, Map[String, Double]] = Map.empty): DataFrame = {
     val (stats, prepared) =
-      prepare(spark, indexDir, queries, meta, mustNot, boosts)
-    searchPrepared(spark, indexDir, stats, prepared, k, allowedDocs, meta,
+      prepare(spark, indexDir, queries, mustNot, boosts)
+    searchPrepared(spark, indexDir, stats, prepared, k, allowedDocs,
       minShouldMatch)
   }
 
@@ -168,10 +166,9 @@ object Wand {
                                     stats: IndexStats,
                                     prepared: Seq[PreparedQuery], k: Int,
                                     allowedDocs: Option[Array[Long]] = None,
-                                    meta: graft.io.MetaIO = graft.io.LocalMetaIO,
                                     minShouldMatch: Int = 1): DataFrame =
     ShardServe.globalRank(candidates(spark, indexDir, stats, prepared, k,
-      allowedDocs, meta, minShouldMatch), k)
+      allowedDocs, minShouldMatch), k)
 
   /** [[searchPrepared]] before the global rank: (query_id, doc_id, score),
     * at most k rows per (task, query) — the body of the plan-integrated
@@ -181,7 +178,6 @@ object Wand {
                                 stats: IndexStats,
                                 prepared: Seq[PreparedQuery], k: Int,
                                 allowedDocs: Option[Array[Long]] = None,
-                                meta: graft.io.MetaIO = graft.io.LocalMetaIO,
                                 minShouldMatch: Int = 1): DataFrame = {
     // must_not terms join the pushed-down posting scan: their lists feed
     // per-query exclusion cursors in the shard kernel (no scoring cursors —
@@ -190,7 +186,7 @@ object Wand {
       (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
     import spark.implicits._
     if (terms.isEmpty) return ShardServe.emptyHits(spark)
-    val postings = PackedIndex.loadPostings(spark, indexDir, meta = meta)
+    val postings = PackedIndex.loadPostings(spark, indexDir)
     val matched =
       (if (terms.size <= IsinThreshold)
         postings.filter(col("term").isin(terms: _*))
@@ -198,8 +194,8 @@ object Wand {
         postings.join(broadcast(terms.toDF("term")), "term"))
         .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
         .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched, meta)
-    val tomb = PackedIndex.loadTombstones(indexDir, meta)
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched)
+    val tomb = PackedIndex.loadTombstones(indexDir)
     wandHits(spark, grouped, stats, prepared, k, allowedDocs, tomb,
       minShouldMatch)
   }
@@ -242,10 +238,8 @@ object Wand {
     */
   def searchDs(spark: SparkSession, indexDir: String, queries: DataFrame,
                k: Int, chunkSize: Int = 10000,
-               io: graft.io.TableIO = graft.io.ParquetDirIO,
                stagingDir: Option[String] = None,
                allowedDocs: Option[Array[Long]] = None,
-               meta: graft.io.MetaIO = graft.io.LocalMetaIO,
                minShouldMatch: Int = 1,
                mustNot: Map[Long, String] = Map.empty): DataFrame = {
     import spark.implicits._
@@ -257,7 +251,7 @@ object Wand {
     // shuffle per chunk. Per-chunk results are identical (cursors exist
     // only for each query's own terms). The pin lives strictly inside this
     // call: materialized before the chunk pool starts, unpersisted after.
-    val tomb = PackedIndex.loadTombstones(indexDir, meta)
+    val tomb = PackedIndex.loadTombstones(indexDir)
     val batchTerms = queries
       .select(explode(graft.plans.GraftFunctions.py_ws_tokenize(
         col("text").cast("string"))).as("term"))
@@ -267,17 +261,17 @@ object Wand {
     val allTerms =
       if (mnTerms.isEmpty) batchTerms
       else batchTerms.unionByName(mnTerms.toDF("term")).distinct()
-    val matched = PackedIndex.loadPostings(spark, indexDir, meta = meta)
+    val matched = PackedIndex.loadPostings(spark, indexDir)
       .join(broadcast(allTerms), "term")
       .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
       .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched, meta)
+    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
-      ChunkedServe.serve(spark, queries, chunkSize, io, stagingDir, meta,
+      ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
         "searchDs") { chunk =>
-        val (st, prepared) = prepare(spark, indexDir, chunk, meta, mustNot)
+        val (st, prepared) = prepare(spark, indexDir, chunk, mustNot)
         ShardServe.globalRank(wandHits(spark, grouped, st, prepared, k,
           allowedDocs, tomb, minShouldMatch), k)
       }

@@ -53,7 +53,11 @@ object EventStream {
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
     try q.processAllAvailable()
-    finally q.stop()
+    finally {
+      q.stop()
+      // the memory sink holds the result; a staged single-file copy is done
+      if (srcDir != parquetPath) graft.io.MetaIO.deleteRecursively(srcDir)
+    }
     spark.table(name)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.nio.file.{Files, Paths}
 
 /** Continuous index ingestion (SURVEY §2.10): a Structured Streaming source
   * of raw pages drives the SAME build/append path as batch — each
@@ -29,7 +28,7 @@ object IndexIngest {
             maxFilesPerTrigger: Int = 1): StreamingQuery = {
     val handler: (DataFrame, Long) => Unit = (batch: DataFrame, _: Long) =>
       if (!batch.isEmpty) {
-        if (!Files.exists(Paths.get(indexDir, "stats.json")))
+        if (!graft.io.MetaIO.exists(s"$indexDir/stats.json"))
           graft.corpus.PagesPipeline.buildIndex(batch, indexDir, shardBits, groups)
         else
           graft.corpus.PagesPipeline.appendPages(batch, indexDir)

@@ -20,7 +20,6 @@ object IvfIngest {
             schema: org.apache.spark.sql.types.StructType,
             indexDir: String, nCells: Int, iters: Int = 3,
             maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val meta = graft.io.LocalMetaIO
     // Exactly-once across foreachBatch REPLAYS: every batch (including the
     // bootstrap) lands in a segment NAMED BY ITS BATCH ID. A crash between
     // the index commit and the stream's checkpoint write re-delivers the
@@ -30,7 +29,7 @@ object IvfIngest {
     val handler: (DataFrame, Long) => Unit = (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
         val seg = s"cells-b$batchId"
-        if (!meta.exists(s"$indexDir/cells.list"))
+        if (!graft.io.MetaIO.exists(s"$indexDir/cells.list"))
           graft.ann.IvfIndex.build(batch, indexDir, nCells, iters,
             segmentName = seg)
         else

@@ -155,14 +155,27 @@ class DedupAnnSpec extends SparkSpec {
     val corpus = (0 until 300).map { i =>
       (i.toLong, Seq.fill(16)(rnd.nextGaussian()))
     }.toDF("vec_id", "vec")
-    val cents = (0 until 64).map { c =>
+    val centList = (0 until 64).map { c =>
       (c.toLong, Seq.fill(16)(rnd.nextGaussian()))
-    }.toDF("cell_id", "cvec")
-    def cells(literalMax: Int) =
-      Ann.assignCells(corpus, cents, literalMaxCells = literalMax)
-        .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell_id")).toMap
-    val viaLiteral = cells(literalMax = 1024) // 64 <= 1024 -> literal fold
-    val viaKernel = cells(literalMax = 1)     // 64 > 1 -> broadcast kernel
+    }
+    val cents = centList.toDF("cell_id", "cvec")
+    // oracle: the centroid table as array LITERALS folded per row through
+    // Ann.cosine — same scan order and strictly-greater tie-break as the
+    // broadcast kernel, so the two must agree bit for bit
+    val cids = typedLit(centList.map(_._1))
+    val cvecs = typedLit(centList.map(_._2))
+    val best = aggregate(
+      sequence(lit(0), lit(centList.length - 1)),
+      struct(lit(-2.0).as("c"), lit(Long.MaxValue).as("id")),
+      (acc, i) => {
+        val cc = Ann.cosine(col("vec"), element_at(cvecs, i + 1))
+        when(cc > acc.getField("c"),
+          struct(cc.as("c"), element_at(cids, i + 1).as("id"))).otherwise(acc)
+      })
+    def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell_id")).toMap
+    val viaLiteral = cells(corpus.withColumn("cell_id", best.getField("id")))
+    val viaKernel = cells(Ann.assignCells(corpus, cents))
     assert(viaLiteral == viaKernel)
     assert(viaLiteral.values.toSet.size > 1) // sanity: not all one cell
   }
@@ -262,10 +275,8 @@ class DedupAnnSpec extends SparkSpec {
     val cents = (0 until 4096).map { c =>
       (c.toLong, Seq.fill(64)(rnd.nextGaussian()))
     }.toDF("cell_id", "cvec")
-    // 4096 > AssignLiteralMaxCells -> broadcast kernel; a typedLit plan here
-    // would embed 262k doubles into the expression tree (the Catalyst
-    // codegen hazard this threshold exists for)
-    assert(4096 > Ann.AssignLiteralMaxCells)
+    // broadcast kernel: a typedLit plan here would embed 262k doubles into
+    // the expression tree (the Catalyst codegen hazard the kernel avoids)
     val assigned = Ann.assignCells(corpus, cents)
     val plan = assigned.queryExecution.executedPlan.toString
     assert(!plan.contains("-2.0"), "literal fold leaked into the 4k-cell plan")

@@ -1,103 +1,124 @@
 package graft
 
 import java.nio.file.Files
-import graft.io.{HadoopMetaIO, HadoopTableIO, LocalMetaIO, ParquetDirIO}
+import graft.io.MetaIO
 import org.apache.spark.sql.functions._
 
-/** Cluster-portable IO pair: HadoopMetaIO/HadoopTableIO must behave
-  * identically to the Local/ParquetDir pair on local paths (the parity that
-  * makes "swap one IO pair for a cluster deployment" a tested claim, not a
-  * comment).
+/** The one storage boundary's two arms: a scheme-less path runs java.nio, a
+  * URI runs the Hadoop FileSystem API. A `file://` URI of a local dir
+  * drives the Hadoop arm against the same bytes, so every check here is a
+  * parity check: same primitives, same index artifacts, same results.
   */
 class HadoopIoSpec extends SparkSpec {
   import spark.implicits._
 
-  private val hMeta = new HadoopMetaIO()
-
-  test("HadoopMetaIO primitives round-trip and match LocalMetaIO semantics") {
-    val dir = Files.createTempDirectory("graft-hmeta").toString
-    // mkdirs + exists
-    hMeta.mkdirs(s"$dir/a/b")
-    assert(hMeta.exists(s"$dir/a/b") && LocalMetaIO.exists(s"$dir/a/b"))
-    // writeAtomic + readString, including overwrite of existing content
-    hMeta.writeAtomic(s"$dir/a/x.json", """{"v":1}""")
-    assert(hMeta.readString(s"$dir/a/x.json") == """{"v":1}""")
-    assert(LocalMetaIO.readString(s"$dir/a/x.json") == """{"v":1}""")
-    hMeta.writeAtomic(s"$dir/a/x.json", """{"v":2,"wider":true}""")
-    assert(hMeta.readString(s"$dir/a/x.json") == """{"v":2,"wider":true}""")
-    // no .tmp residue from the atomic publish
-    assert(!hMeta.exists(s"$dir/a/x.json.tmp"))
-    // list: names only, absent dir -> empty
-    hMeta.writeAtomic(s"$dir/a/y.txt", "y")
-    assert(hMeta.list(s"$dir/a").toSet == Set("b", "x.json", "y.txt"))
-    assert(hMeta.list(s"$dir/nope").isEmpty)
-    // createTempDir yields a fresh empty dir
-    val t1 = hMeta.createTempDir("graft-hio")
-    val t2 = hMeta.createTempDir("graft-hio")
-    assert(t1 != t2 && hMeta.list(t1).isEmpty)
-    // deleteRecursively removes trees and is a no-op on absent paths
-    hMeta.deleteRecursively(s"$dir/a")
-    assert(!hMeta.exists(s"$dir/a/x.json") && !hMeta.exists(s"$dir/a"))
-    hMeta.deleteRecursively(s"$dir/a") // absent: must not throw
-    hMeta.deleteRecursively(t1); hMeta.deleteRecursively(t2)
+  /** A fresh local dir, as a scheme-less path and as a file:// URI. */
+  private def freshDir(prefix: String): (String, String) = {
+    val d = Files.createTempDirectory(prefix).toString
+    (d, s"file://$d")
   }
 
-  test("index lifecycle through the Hadoop pair == Local pair bit-for-bit") {
-    def tok(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
-      rows.toDF("doc_id", "text"), "doc_id", "text")
+  test("MetaIO primitives: scheme-less and file:// paths behave the same") {
+    val (local, uri) = freshDir("graft-hmeta")
+    for (root <- Seq(s"$local/plain", s"$uri/viaUri")) {
+      // mkdirs + exists
+      MetaIO.mkdirs(s"$root/a/b")
+      assert(MetaIO.exists(s"$root/a/b"))
+      // writeAtomic + readString, including overwrite of existing content
+      MetaIO.writeAtomic(s"$root/a/x.json", """{"v":1}""")
+      assert(MetaIO.readString(s"$root/a/x.json") == """{"v":1}""")
+      MetaIO.writeAtomic(s"$root/a/x.json", """{"v":2,"wider":true}""")
+      assert(MetaIO.readString(s"$root/a/x.json") == """{"v":2,"wider":true}""")
+      // no .tmp residue from the atomic publish
+      assert(!MetaIO.exists(s"$root/a/x.json.tmp"))
+      // list: names only (no checksum files), absent dir -> empty
+      MetaIO.writeAtomic(s"$root/a/y.txt", "y")
+      assert(MetaIO.list(s"$root/a").toSet == Set("b", "x.json", "y.txt"), root)
+      assert(MetaIO.list(s"$root/nope").isEmpty)
+      // deleteRecursively removes trees and is a no-op on absent paths
+      MetaIO.deleteRecursively(s"$root/a")
+      assert(!MetaIO.exists(s"$root/a/x.json") && !MetaIO.exists(s"$root/a"))
+      MetaIO.deleteRecursively(s"$root/a") // absent: must not throw
+    }
+    // both arms address the same bytes, and the Hadoop arm's checksum
+    // sidecars exist on disk (so hiding them in list is a real check)
+    MetaIO.writeAtomic(s"$local/shared.json", "from-path")
+    assert(MetaIO.readString(s"$uri/shared.json") == "from-path")
+    MetaIO.writeAtomic(s"$uri/shared.json", "from-uri")
+    assert(MetaIO.readString(s"$local/shared.json") == "from-uri")
+    assert(MetaIO.list(local).exists(_.endsWith(".crc")))
+    assert(!MetaIO.list(uri).exists(_.endsWith(".crc")))
+    // a plain-path rewrite of a file the URI arm wrote (and checksummed)
+    // stays readable through the URI
+    MetaIO.writeAtomic(s"$local/shared.json", "rewritten through the plain path")
+    assert(MetaIO.readString(s"$uri/shared.json") == "rewritten through the plain path")
+    // createTempDir yields fresh empty dirs
+    val t1 = MetaIO.createTempDir("graft-hio")
+    val t2 = MetaIO.createTempDir("graft-hio")
+    assert(t1 != t2 && MetaIO.list(t1).isEmpty)
+    Seq(t1, t2, local).foreach(MetaIO.deleteRecursively)
+  }
+
+  private def tok(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
+    rows.toDF("doc_id", "text"), "doc_id", "text")
+
+  test("index lifecycle through a file:// URI == scheme-less path bit-for-bit") {
     val base = Seq(0L -> "alpha beta gamma", 1L -> "alpha delta epsilon",
       2L -> "beta beta zeta", 3L -> "gamma alpha beta")
     val extra = Seq(4L -> "omega alpha", 5L -> "omega beta gamma")
     val batch = Seq(0L -> "alpha beta", 1L -> "omega gamma")
 
-    def buildAndSearch(io: graft.io.TableIO, meta: graft.io.MetaIO): Set[(Long, Long, Double, Int)] = {
-      val dir = Files.createTempDirectory("graft-hio-idx").toString
-      graft.index.PackedIndex.build(tok(base: _*), dir, shardBits = 2,
-        groups = 2, io = io, meta = meta)
-      graft.index.PackedIndex.append(tok(extra: _*), dir, io = io, meta = meta)
+    def buildAndSearch(uri: Boolean): Set[(Long, Long, Double, Int)] = {
+      val (local, asUri) = freshDir("graft-hio-idx")
+      val dir = if (uri) asUri else local
+      graft.index.PackedIndex.build(tok(base: _*), dir, shardBits = 2, groups = 2)
+      graft.index.PackedIndex.append(tok(extra: _*), dir)
+      graft.index.PackedIndex.delete(dir, Seq(2L))
       graft.query.IndexCache.invalidateAll()
-      graft.query.Wand.search(spark, dir, batch, 10, meta = meta).collect()
+      val got = graft.query.Wand.search(spark, dir, batch, 10).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+      MetaIO.deleteRecursively(local)
+      got
     }
-    val viaLocal = buildAndSearch(ParquetDirIO, LocalMetaIO)
-    val viaHadoop = buildAndSearch(HadoopTableIO, hMeta)
-    assert(viaHadoop == viaLocal && viaLocal.nonEmpty)
+    val viaPath = buildAndSearch(uri = false)
+    val viaUri = buildAndSearch(uri = true)
+    assert(viaUri == viaPath && viaPath.nonEmpty)
   }
 
-  test("positional phrase/NEAR search through the Hadoop pair == local pair") {
-    def tok(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
-      rows.toDF("doc_id", "text"), "doc_id", "text")
+  test("positional phrase/NEAR search through a file:// URI == scheme-less path") {
     val docs = Seq(0L -> "x table deep scan y table scan",
       1L -> "table scan query z", 2L -> "scan table q table scan query")
-    def run(io: graft.io.TableIO, meta: graft.io.MetaIO) = {
-      val dir = Files.createTempDirectory("graft-hio-pos").toString
+    def run(uri: Boolean) = {
+      val (local, asUri) = freshDir("graft-hio-pos")
+      val dir = if (uri) asUri else local
       val t = tok(docs: _*)
-      graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1,
-        io = io, meta = meta)
-      graft.index.PositionalIndex.build(t, dir, io = io, meta = meta)
+      graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
+      graft.index.PositionalIndex.build(t, dir)
       graft.query.IndexCache.invalidateAll()
       def rows3(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      (rows3(graft.query.Phrase.topKPositional(spark, dir,
-        Seq("table", "scan"), 10, io = io, meta = meta)),
+      val got = (rows3(graft.query.Phrase.topKPositional(spark, dir,
+        Seq("table", "scan"), 10)),
         rows3(graft.query.Phrase.nearTopKPositional(spark, dir,
-          Seq("table", "scan", "query"), slop = 4, k = 10, io = io, meta = meta)))
+          Seq("table", "scan", "query"), slop = 4, k = 10)))
+      MetaIO.deleteRecursively(local)
+      got
     }
-    val viaLocal = run(ParquetDirIO, LocalMetaIO)
-    val viaHadoop = run(HadoopTableIO, hMeta)
-    assert(viaHadoop == viaLocal && viaLocal._1.nonEmpty && viaLocal._2.nonEmpty)
+    val viaPath = run(uri = false)
+    val viaUri = run(uri = true)
+    assert(viaUri == viaPath && viaPath._1.nonEmpty && viaPath._2.nonEmpty)
   }
 
   test("searchDs cleans stale hits through the TableIO boundary on a reused staging dir") {
     val dir = Files.createTempDirectory("graft-hio-ds").toString
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 200, 4).toDF(), dir, shardBits = 6, groups = 2)
-    val staging = Files.createTempDirectory("graft-hio-stage").toString
+    val (stagingLocal, staging) = freshDir("graft-hio-stage")
     // big batch: 30 queries over chunkSize 7 -> 5 chunk partitions land in hits/
     val big = Bench.queryBatch(30)
     val bigRows = graft.query.Wand.searchDs(spark, dir,
       big.toDF("query_id", "text"), 10, chunkSize = 7,
-      io = HadoopTableIO, stagingDir = Some(staging)).collect()
+      stagingDir = Some(staging)).collect()
     assert(bigRows.nonEmpty)
     // smaller reuse of the SAME staging dir: fewer chunks — any stale
     // hits/chunk=N partition from the big batch unioned into this result
@@ -105,11 +126,12 @@ class HadoopIoSpec extends SparkSpec {
     val small = Bench.queryBatch(15)
     val smallIds = graft.query.Wand.searchDs(spark, dir,
       small.toDF("query_id", "text"), 10, chunkSize = 7,
-      io = HadoopTableIO, stagingDir = Some(staging))
+      stagingDir = Some(staging))
       .select(col("query_id")).distinct().as[Long].collect().toSet
     val wantIds = small.map(_._1).toSet
     assert(smallIds.subsetOf(wantIds),
       s"stale chunk partitions leaked into the reused staging dir: ${smallIds -- wantIds}")
+    Seq(stagingLocal, dir).foreach(MetaIO.deleteRecursively)
   }
 
   test("zero-idf terms (df == N/2) stay retrievable and count toward msm") {
@@ -117,8 +139,6 @@ class HadoopIoSpec extends SparkSpec {
     // eps floor only applies to NEGATIVE raw idf, so "even" scores 0 but
     // must still match (DuckDB tf-join oracle includes its docs; ES msm
     // counts any matched term)
-    def tok(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
-      rows.toDF("doc_id", "text"), "doc_id", "text")
     val dir = Files.createTempDirectory("graft-zidf").toString
     graft.index.PackedIndex.build(
       tok(0L -> "even alpha", 1L -> "even beta", 2L -> "gamma delta",

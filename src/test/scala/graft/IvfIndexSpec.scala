@@ -56,7 +56,7 @@ class IvfIndexSpec extends SparkSpec {
     val hitIds = got.map(_._2)
     assert(hitIds.exists(_ >= 300L) || want.forall(_._2 < 300L))
     // stats track the append
-    val statsJson = graft.io.LocalMetaIO.readString(s"$dir/ivf.json")
+    val statsJson = graft.io.MetaIO.readString(s"$dir/ivf.json")
     assert(statsJson.contains("\"nVecs\":400"))
   }
 
@@ -122,7 +122,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.append(corpus, dir, segmentName = Some("cells-b0"))
     val twice = rows(IvfIndex.search(spark, dir, queries, k = 10, nProbe = 4))
     assert(twice == once && once.nonEmpty)
-    assert(graft.io.LocalMetaIO.readString(s"$dir/ivf.json")
+    assert(graft.io.MetaIO.readString(s"$dir/ivf.json")
       .contains("\"nVecs\":250"))
     // retrain-in-place is refused: rebuild targets a fresh dir + swap
     val ex = intercept[IllegalArgumentException] {
@@ -154,19 +154,24 @@ class IvfIndexSpec extends SparkSpec {
       unfiltered.filter(_._2 < 100L).map(r => (r._1, r._2, r._3)))
   }
 
-  test("index lifecycle through the Hadoop IO pair == local pair") {
+  test("IVF index lifecycle through a file:// URI == scheme-less path") {
     val corpus = randCorpus(200, 8, 13)
     val queries = randCorpus(3, 8, 107)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    def run(io: graft.io.TableIO, meta: graft.io.MetaIO) = {
-      val dir = Files.createTempDirectory("graft-ivfh").toString
-      IvfIndex.build(corpus, dir, nCells = 4, iters = 2, io = io, meta = meta)
-      rows(IvfIndex.search(spark, dir, queries, k = 5, nProbe = 2,
-        io = io, meta = meta))
+    def run(uri: Boolean) = {
+      val local = Files.createTempDirectory("graft-ivfh").toString
+      val dir = if (uri) s"file://$local" else local
+      IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
+      IvfIndex.delete(spark, dir, Seq(7L, 11L))
+      IvfIndex.append(randCorpus(20, 8, 17)
+        .withColumn("vec_id", col("vec_id") + 200L), dir)
+      val got = rows(IvfIndex.search(spark, dir, queries, k = 5, nProbe = 2))
+      graft.io.MetaIO.deleteRecursively(local)
+      got
     }
-    val viaLocal = run(graft.io.ParquetDirIO, graft.io.LocalMetaIO)
-    val viaHadoop = run(graft.io.HadoopTableIO, new graft.io.HadoopMetaIO())
-    assert(viaLocal == viaHadoop && viaLocal.nonEmpty)
+    val viaPath = run(uri = false)
+    val viaUri = run(uri = true)
+    assert(viaPath == viaUri && viaPath.nonEmpty)
   }
 
   test("compact applies tombstones physically; re-delete of a compacted id is a no-op") {
@@ -192,7 +197,7 @@ class IvfIndexSpec extends SparkSpec {
       Ann.assignCells(survivors, cents), cents, k = 10, nProbe = 8))
     assert(compacted == want)
     // stats recomputed over survivors; tombstones gone; holes carry the dead
-    val stats = graft.io.LocalMetaIO.readString(s"$out/ivf.json")
+    val stats = graft.io.MetaIO.readString(s"$out/ivf.json")
     assert(stats.contains("\"nVecs\":240"), stats)
     assert(IvfIndex.loadTombstones(out).isEmpty)
     assert(IvfIndex.loadHoles(out).toSeq == dead)
@@ -229,7 +234,7 @@ class IvfIndexSpec extends SparkSpec {
     val sch = spark.read.parquet(s"$d32/cells").schema("vec").dataType
     assert(sch.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.FloatType, sch.toString)
-    assert(graft.io.LocalMetaIO.readString(s"$d32/ivf.json").contains("\"storage\":\"f32\""))
+    assert(graft.io.MetaIO.readString(s"$d32/ivf.json").contains("\"storage\":\"f32\""))
     // ranks (query_id, vec_id, rank) identical on this corpus; scores may
     // differ in last ulps from the quantization — that is the documented
     // contract (rank parity, not score hashes)
@@ -272,19 +277,19 @@ class IvfIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-ivfcnt").toString
     IvfIndex.build(base, dir, nCells = 4, iters = 2)
     IvfIndex.append(extra, dir)
-    val lines = graft.io.LocalMetaIO.readString(s"$dir/cells.list").split("\n")
+    val lines = graft.io.MetaIO.readString(s"$dir/cells.list").split("\n")
     assert(lines.length == 2 && lines.forall(_.contains("\t")), lines.mkString("|"))
     assert(lines.map(_.split("\t")(1).toLong).sum == 240L)
     // strip the counts (a round-5 index) — the next append must heal the
     // lines back to counted form and still land on the right nVecs
-    graft.io.LocalMetaIO.writeAtomic(s"$dir/cells.list",
+    graft.io.MetaIO.writeAtomic(s"$dir/cells.list",
       lines.map(_.split("\t")(0)).mkString("\n"))
     val extra2 = randCorpus(10, 8, 45)
       .select((col("vec_id") + 240L).as("vec_id"), col("vec"))
     IvfIndex.append(extra2, dir)
-    val healed = graft.io.LocalMetaIO.readString(s"$dir/cells.list").split("\n")
+    val healed = graft.io.MetaIO.readString(s"$dir/cells.list").split("\n")
     assert(healed.length == 3 && healed.forall(_.contains("\t")))
-    assert(graft.io.LocalMetaIO.readString(s"$dir/ivf.json")
+    assert(graft.io.MetaIO.readString(s"$dir/ivf.json")
       .contains("\"nVecs\":250"))
   }
 }

@@ -229,7 +229,6 @@ class PhraseSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     // simulate a crash AFTER the segment write, BEFORE the list flip:
     // fabricate an orphan segment dir (copy of the base) with no list entry
-    val meta = graft.io.LocalMetaIO
     def copyRec(s: java.io.File, d: java.io.File): Unit =
       if (s.isDirectory) { d.mkdirs(); s.listFiles.foreach(c => copyRec(c, new java.io.File(d, c.getName))) }
       else java.nio.file.Files.copy(s.toPath, d.toPath)
@@ -238,7 +237,7 @@ class PhraseSpec extends SparkSpec {
     val after = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
       .collect().map(_.getLong(0)).toSet
     assert(after == before, "orphan positional segment leaked into results")
-    assert(meta.readString(s"$dir/positions.list").trim == "positions")
+    assert(graft.io.MetaIO.readString(s"$dir/positions.list").trim == "positions")
   }
 
   test("proximityCount: ordered window pairs, hand-computed goldens") {

@@ -150,24 +150,20 @@ class RetrieverSpec extends SparkSpec {
     object DropOneChunkIO extends graft.io.TableIO {
       override def write(df: org.apache.spark.sql.DataFrame, location: String,
                          partitionBy: Seq[String] = Nil): Unit = {
-        graft.io.ParquetDirIO.write(df, location, partitionBy)
+        super.write(df, location, partitionBy)
         if (location.endsWith("/queries")) {
-          val victim = graft.io.LocalMetaIO.list(location)
+          val victim = graft.io.MetaIO.list(location)
             .filter(_.startsWith("chunk=")).sorted.head
-          graft.io.LocalMetaIO.deleteRecursively(s"$location/$victim")
+          graft.io.MetaIO.deleteRecursively(s"$location/$victim")
         }
       }
-      override def read(s: org.apache.spark.sql.SparkSession, location: String) =
-        graft.io.ParquetDirIO.read(s, location)
-      override def committed(location: String) =
-        graft.io.ParquetDirIO.committed(location)
-      override def deleteIfExists(location: String): Unit =
-        graft.io.ParquetDirIO.deleteIfExists(location)
     }
     val ex = intercept[IllegalArgumentException] {
-      graft.query.Wand.searchDs(spark, dir,
-        Bench.queryBatch(40).toDF("query_id", "text"), 10, chunkSize = 7,
-        io = DropOneChunkIO).count()
+      graft.query.ChunkedServe.serve(spark,
+        Bench.queryBatch(40).toDF("query_id", "text"), chunkSize = 7,
+        stagingDir = None, label = "searchDs", io = DropOneChunkIO) { chunk =>
+        graft.query.Wand.search(spark, dir, chunk, 10)
+      }.count()
     }
     assert(ex.getMessage.contains("incomplete"))
   }

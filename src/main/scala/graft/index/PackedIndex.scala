@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.core.Bm25Params
 import graft.io.{MetaIO, TableIO}
 
@@ -98,6 +99,12 @@ object PackedIndex {
     * shatter into per-doc shards with per-group overhead dominating.
     */
   val MinShardBits: Int = 13
+
+  /** Schema of every `postings/grp=G` table: a [[PackedPostings]] `toDF()`. */
+  val PostingsSchema: StructType = Encoders.product[PackedPostings].schema
+
+  /** Schema of every df table: `groupBy(term).agg(sum(nPostings) as df)`. */
+  val DfSchema: StructType = new StructType().add("term", StringType).add("df", LongType)
 
   /** Auto-derived shardBits for a corpus with dense doc ids in
     * [0, nextDocId): the smallest width keeping numShards <=
@@ -364,7 +371,7 @@ object PackedIndex {
       timedStage("df write") { TableIO.write(TableIO.read(spark, s"$dir/postings")
         .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/df") }
       val avgRawIdf = timedStage("avgRawIdf") {
-        InvertedIndex.avgRawIdf(TableIO.read(spark, s"$dir/df"), n) }
+        InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$dir/df"), n) }
       writeStats(dir, IndexStats(n, avgdl, avgRawIdf, p.k1, p.b, p.epsilon,
         shardBits, blockSize), dfDir = "df")
     }
@@ -445,7 +452,7 @@ object PackedIndex {
     val newDfDir = s"df-g$nextGroup"
     TableIO.write(TableIO.read(spark, s"$dir/postings")
       .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/$newDfDir")
-    val avgRawIdf = InvertedIndex.avgRawIdf(TableIO.read(spark, s"$dir/$newDfDir"), n)
+    val avgRawIdf = InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$dir/$newDfDir"), n)
     writeStats(dir, IndexStats(n, avgdl, avgRawIdf, old.k1, old.b, old.epsilon,
       old.shardBits, old.blockSize), dfDir = newDfDir)
 
@@ -506,26 +513,22 @@ object PackedIndex {
     * enumerated from the manifests (the commit markers), not by listing
     * postings/: a crash between a group's parquet write and its manifest
     * commit leaves an orphan grp=N dir, and serving it would expose
-    * uncommitted docs with stale df/stats until the append retry. Each leg
-    * is its own pushdown-filtered scan; group count is small (one per
-    * build/append commit unit), so the union is shallow.
+    * uncommitted docs with stale df/stats until the append retry. The
+    * groups are ONE relation of the known [[PostingsSchema]], so no read
+    * infers a schema. Past 32 groups (Spark's parallel partition discovery
+    * threshold) listing them is a Spark job; [[compact]] folds them to one.
     */
   def loadPostings(spark: SparkSession, dir: String): Dataset[PackedPostings] = {
-    import spark.implicits._
-    val cols = Seq("shard", "term", "nPostings", "blocks")
-    val committed = listManifests(dir).map(_.group)
+    val committed = listManifests(dir).map(m => s"$dir/postings/grp=${m.group}")
     require(committed.nonEmpty, s"loadPostings: no committed groups at $dir")
-    committed.iterator
-      .map(g => TableIO.read(spark, s"$dir/postings/grp=$g").selectExpr(cols: _*))
-      .reduce(_ unionByName _)
-      .as[PackedPostings]
+    TableIO.read(spark, PostingsSchema, committed: _*).as(Encoders.product[PackedPostings])
   }
 
-  /** The LIVE df table — the dir named by stats.json (appends write fresh
-    * versioned dirs and flip the pointer atomically with the stats).
+  /** The LIVE df table as (term, df) — the dir named by stats.json (appends
+    * write fresh versioned dirs and flip the pointer atomically with the stats).
     */
   def loadDf(spark: SparkSession, dir: String): DataFrame =
-    TableIO.read(spark, s"$dir/${readDfDir(dir)}")
+    TableIO.read(spark, DfSchema, s"$dir/${readDfDir(dir)}")
 
   // ---- tiny JSON sidecars ---------------------------------------------
 
@@ -704,7 +707,7 @@ object PackedIndex {
 
     TableIO.write(TableIO.read(spark, s"$outDir/postings")
       .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$outDir/df")
-    val avgRawIdf2 = InvertedIndex.avgRawIdf(TableIO.read(spark, s"$outDir/df"), n2)
+    val avgRawIdf2 = InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$outDir/df"), n2)
     writeStats(outDir, IndexStats(n2, sumDl2.toDouble / n2, avgRawIdf2,
       stats.k1, stats.b, stats.epsilon, stats.shardBits, blockSize),
       dfDir = "df")

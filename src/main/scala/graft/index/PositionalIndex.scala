@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.io.{MetaIO, TableIO}
 
 /** Persisted positional posting row: all positional blocks of one term
@@ -41,6 +42,9 @@ final case class PosPostings(shard: Int, term: String, nPostings: Long,
   * silently missing phrase hits.
   */
 object PositionalIndex {
+
+  /** Schema of every positional segment: a [[PosPostings]] `toDF()`. */
+  val PostingsSchema: StructType = Encoders.product[PosPostings].schema
 
   /** (doc_id, term, positions) with NO shuffle: a doc's term-occurrence
     * offsets are a pure function of its own token array (the positional
@@ -207,21 +211,13 @@ object PositionalIndex {
     MetaIO.writeAtomic(s"$outDir/positions.list", "positions")
   }
 
-  /** Read the positional arm (union of committed segments); fails loudly
-    * when absent.
+  /** Read the positional arm: its committed segments as one relation
+    * with the known [[PostingsSchema]]; fails loudly when absent.
     */
   def load(spark: SparkSession, dir: String): Dataset[PosPostings] = {
-    import spark.implicits._
-    val segs = segmentList(dir)
-    segs.foreach { s =>
-      require(TableIO.committed(s"$dir/$s"),
-        s"PositionalIndex.load: segment $s missing/uncommitted at $dir " +
-          "— run PositionalIndex.build over the index corpus first")
-    }
-    segs.iterator
-      .map(s => TableIO.read(spark, s"$dir/$s")
-        .selectExpr("shard", "term", "nPostings", "blocks"))
-      .reduce(_ unionByName _)
-      .as[PosPostings]
+    val segs = segmentList(dir).map(s => s"$dir/$s")
+    segs.foreach(s => require(TableIO.committed(s), s"PositionalIndex.load: segment " +
+      s"$s missing/uncommitted — run PositionalIndex.build over the index corpus first"))
+    TableIO.read(spark, PostingsSchema, segs: _*).as(Encoders.product[PosPostings])
   }
 }

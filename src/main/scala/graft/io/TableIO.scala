@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table-format boundary for every persistent table the engine writes
   * (staged docs, packed postings groups, df tables): parquet directories,
@@ -8,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark's parquet reader/writer speak both scheme-less paths and Hadoop
   * URIs; the commit probe and cleanup go through [[MetaIO]], so the
   * location's path picks the storage exactly as it does for sidecars.
+  * Serving tables are read with their constant schema (no inference job);
+  * the schema-less read is for tables shaped by the caller's frame.
   *
   * SURVEY §1.2 specifies Iceberg tables for pages/postings; this container
   * has no Iceberg jars (verified: /opt/spark/jars, offline resolver). An
@@ -30,6 +33,13 @@ class TableIO {
 
   def read(spark: SparkSession, location: String): DataFrame =
     spark.read.parquet(location)
+
+  /** Locations of a known-schema table as ONE relation, columns in
+    * `schema`'s order; listing them is a Spark job only past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32).
+    */
+  def read(spark: SparkSession, schema: StructType, locations: String*): DataFrame =
+    spark.read.schema(schema).parquet(locations: _*)
 
   /** True iff a COMPLETE write exists at the location (atomicity marker). */
   def committed(location: String): Boolean =

@@ -33,12 +33,12 @@ import graft.io.{MetaIO, TableIO}
   *  4. The result is ONE scan of the sink — no N-leg union lineage, no
   *     driver-side result accumulation. With the default (engine-created)
   *     staging dir the result is materialized via localCheckpoint and the
-  *     staging dir deleted; a caller-supplied `stagingDir` is left intact
-  *     (the caller owns its lifecycle, e.g. for resume/debugging) and the
-  *     returned frame scans it lazily. Any stale `hits/` content in a
-  *     reused staging dir is removed up front — a larger prior batch's
-  *     leftover chunk partitions would otherwise be unioned into this
-  *     batch's results by the final sink scan.
+  *     staging dir deleted (also when the call fails); a caller-supplied
+  *     `stagingDir` is left intact (the caller owns its lifecycle, e.g.
+  *     for resume/debugging) and the returned frame scans it lazily. Any
+  *     stale `hits/` content in a reused staging dir is removed up front —
+  *     a larger prior batch's leftover chunk partitions would otherwise be
+  *     unioned into this batch's results by the final sink scan.
   */
 private[graft] object ChunkedServe {
 
@@ -62,52 +62,49 @@ private[graft] object ChunkedServe {
     }
     val ownStaging = stagingDir.isEmpty
     val staging = stagingDir.getOrElse(MetaIO.createTempDir("graft-searchds"))
-    // a prior larger batch's chunk partitions would otherwise union into
-    // this batch's sink scan (the silent-superset bug class)
-    io.deleteIfExists(s"$staging/hits")
-    io.write(
-      q.withColumn("chunk", pmod(xxhash64(col("query_id")), lit(numChunks))),
-      s"$staging/queries", partitionBy = Seq("chunk"))
-    // accounting read-back (step 2 above): same TableIO the chunk jobs use
-    val staged = io.read(spark, s"$staging/queries")
-    val perChunk: Map[Long, Long] = staged
-      .groupBy(col("chunk").cast("long").as("chunk")).count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val stagedTotal = perChunk.values.sum
-    require(stagedTotal == n,
-      s"$label: staged query batch incomplete — wrote $n queries but " +
-        s"$stagedTotal are readable at $staging/queries (staging storage " +
-        "not shared with the readers, or partitions vanished)")
-    def runChunk(c: Long): Unit = {
-      val chunk = io.read(spark, s"$staging/queries")
-        .filter(col("chunk").cast("long") === c) // partition-pruned
-        .select(col("query_id"), col("text"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
-      require(chunk.length.toLong == perChunk(c),
-        s"$label: staged chunk $c holds ${chunk.length} of the " +
-          s"${perChunk(c)} accounted queries — partition vanished mid-run")
-      io.write(searchSeq(chunk), s"$staging/hits/chunk=$c")
-    }
-    {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val chunks = perChunk.keys.toSeq.sorted
-      val width = math.min(chunks.size, 4)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(
-        Future.sequence(chunks.map(c => Future(runChunk(c)))), Duration.Inf)
-      finally pool.shutdown()
-    }
-    val out = io.read(spark, s"$staging/hits")
-      .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
-    if (!ownStaging) out
-    else {
+    try {
+      // a prior larger batch's chunk partitions would otherwise union into
+      // this batch's sink scan (the silent-superset bug class)
+      io.deleteIfExists(s"$staging/hits")
+      io.write(
+        q.withColumn("chunk", pmod(xxhash64(col("query_id")), lit(numChunks))),
+        s"$staging/queries", partitionBy = Seq("chunk"))
+      // accounting read-back (step 2 above): same TableIO the chunk jobs use
+      val staged = io.read(spark, s"$staging/queries")
+      val perChunk: Map[Long, Long] = staged
+        .groupBy(col("chunk").cast("long").as("chunk")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val stagedTotal = perChunk.values.sum
+      require(stagedTotal == n,
+        s"$label: staged query batch incomplete — wrote $n queries but " +
+          s"$stagedTotal are readable at $staging/queries (staging storage " +
+          "not shared with the readers, or partitions vanished)")
+      def runChunk(c: Long): Unit = {
+        val chunk = io.read(spark, s"$staging/queries")
+          .filter(col("chunk").cast("long") === c) // partition-pruned
+          .select(col("query_id"), col("text"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+        require(chunk.length.toLong == perChunk(c),
+          s"$label: staged chunk $c holds ${chunk.length} of the " +
+            s"${perChunk(c)} accounted queries — partition vanished mid-run")
+        io.write(searchSeq(chunk), s"$staging/hits/chunk=$c")
+      }
+      {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val chunks = perChunk.keys.toSeq.sorted
+        val width = math.min(chunks.size, 4)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+        try Await.result(
+          Future.sequence(chunks.map(c => Future(runChunk(c)))), Duration.Inf)
+        finally pool.shutdown()
+      }
+      val out = io.read(spark, s"$staging/hits")
+        .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
       // results are bounded (<= n*k rows — the caller's answer either way);
       // pin them so the scratch dir can be reclaimed immediately
-      val pinned = out.localCheckpoint()
-      MetaIO.deleteRecursively(staging)
-      pinned
-    }
+      if (ownStaging) out.localCheckpoint() else out
+    } finally if (ownStaging) MetaIO.deleteRecursively(staging) // failed runs too
   }
 }

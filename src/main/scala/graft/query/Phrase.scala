@@ -376,7 +376,6 @@ object Phrase {
         case None =>
           graft.index.PackedIndex.loadDf(spark, indexDir)
             .filter(col("term").isin(distinctTerms: _*))
-            .select(col("term"), col("df"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
     val posRows = graft.index.PositionalIndex.load(spark, indexDir)

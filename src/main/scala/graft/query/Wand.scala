@@ -104,8 +104,7 @@ object Wand {
               import spark.implicits._
               dfTable.join(broadcast(allTerms.toDF("term")), "term")
             }
-          restricted.select(col("term"), col("df"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          restricted.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
     val prepared = tokenized.map { case (id, toks) =>
       // Query-time term boost (ES `term^boost` / Lucene boost semantics):

@@ -4,7 +4,6 @@ import graft.corpus.{PagesGen, PagesPipeline}
 import graft.index.Salting
 import graft.query.Wand
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Incremental append == full rebuild (bit-identical), plus salting
   * primitives.
@@ -16,8 +15,8 @@ class AppendSpec extends SparkSpec {
     val all = PagesGen.pages(spark, 300, partitions = 4).toDF()
     // docs_raw staging uses the same generator layout, so splitting by the
     // generation order reproduces the same per-doc content in both paths
-    val dirIncr = Files.createTempDirectory("graft-incr").toString
-    val dirFull = Files.createTempDirectory("graft-full").toString
+    val dirIncr = scratchDir("incr")
+    val dirFull = scratchDir("full")
 
     // full build over everything
     PagesPipeline.buildIndex(all, dirFull, shardBits = 6, groups = 2)
@@ -90,7 +89,7 @@ class AppendSpec extends SparkSpec {
       var tombstoned = Set.empty[Long]
       var holes = Set.empty[Long]
       var nextId = 0L
-      var dir = Files.createTempDirectory(s"graft-lifeprop$trial").toString
+      var dir = scratchDir(s"lifeprop$trial")
       def newDocs(k: Int): Seq[(Long, String)] =
         (0 until k).map { _ => val id = nextId; nextId += 1; id -> mkText() }
       val init = newDocs(40)
@@ -136,7 +135,7 @@ class AppendSpec extends SparkSpec {
             }
           }
         } else if (tombstoned.nonEmpty) {
-          val out = Files.createTempDirectory(s"graft-lifeprop-c$trial").toString
+          val out = scratchDir(s"lifeprop-c$trial")
           graft.index.PackedIndex.compact(spark, dir, out)
           physical --= tombstoned; holes ++= tombstoned; tombstoned = Set.empty
           dir = out
@@ -147,14 +146,14 @@ class AppendSpec extends SparkSpec {
       // end state: apply pending tombstones physically, then the whole
       // index must be bit-identical to a fresh build over the survivors
       if (tombstoned.nonEmpty) {
-        val out = Files.createTempDirectory(s"graft-lifeprop-f$trial").toString
+        val out = scratchDir(s"lifeprop-f$trial")
         graft.index.PackedIndex.compact(spark, dir, out)
         physical --= tombstoned; holes ++= tombstoned; tombstoned = Set.empty
         dir = out
         checkStats("final compact")
       }
       val stats = graft.index.PackedIndex.readStats(dir)
-      val freshDir = Files.createTempDirectory(s"graft-lifeprop-fresh$trial").toString
+      val freshDir = scratchDir(s"lifeprop-fresh$trial")
       graft.index.PackedIndex.build(tok(physical.toSeq), freshDir,
         shardBits = stats.shardBits, groups = 2, blockSize = stats.blockSize)
       graft.query.IndexCache.invalidateAll()
@@ -171,7 +170,7 @@ class AppendSpec extends SparkSpec {
   test("append retried after a crash between stats and manifest is idempotent") {
     // crash point: new stats.json committed, group manifest NOT — the worst
     // ordering (a stats-derived retry would double-count the new docs)
-    val dir = Files.createTempDirectory("graft-crash").toString
+    val dir = scratchDir("crash")
     val first = PagesGen.pages(spark, 200, partitions = 4).toDF()
     PagesPipeline.buildIndex(first, dir, shardBits = 6, groups = 2)
     val extra = PagesGen.pages(spark, 300, partitions = 4)
@@ -206,7 +205,7 @@ class AppendSpec extends SparkSpec {
     // committed — loadPostings must serve committed groups only (the
     // manifest is the read-side commit marker), or uncommitted docs would be
     // scored against stale df/stats until the retry
-    val dir = Files.createTempDirectory("graft-orphan").toString
+    val dir = scratchDir("orphan")
     PagesPipeline.buildIndex(PagesGen.pages(spark, 200, partitions = 4).toDF(),
       dir, shardBits = 6, groups = 2)
     val before = graft.index.PackedIndex.loadPostings(spark, dir).count()
@@ -227,7 +226,7 @@ class AppendSpec extends SparkSpec {
   }
 
   test("tombstone delete: deleted docs vanish, survivors keep exact scores") {
-    val dir = Files.createTempDirectory("graft-del").toString
+    val dir = scratchDir("del")
     PagesPipeline.buildIndex(
       PagesGen.pages(spark, 300, partitions = 4).toDF(), dir,
       shardBits = 6, groups = 2)
@@ -267,7 +266,7 @@ class AppendSpec extends SparkSpec {
   }
 
   test("allowlist and tombstones compose: hits = allowed AND live") {
-    val dir = Files.createTempDirectory("graft-del-allow").toString
+    val dir = scratchDir("del-allow")
     PagesPipeline.buildIndex(
       PagesGen.pages(spark, 300, partitions = 4).toDF(), dir,
       shardBits = 6, groups = 2)

@@ -3,7 +3,6 @@ package graft
 import graft.index.PackedIndex
 import graft.plans.{Bm25TopKExec, Bm25TopKPlan}
 import graft.query.Wand
-import java.nio.file.Files
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** The strategy-planned WAND operator must be plan-visible and
@@ -16,7 +15,7 @@ class Bm25PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toMap
 
   test("Bm25TopKPlan.search == Wand.search, and the exec shows in the plan") {
-    val dir = Files.createTempDirectory("graft-planop").toString
+    val dir = scratchDir("planop")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 7, groups = 2)
     val queries = Seq(1L -> "the w3 w17", 2L -> "w100 w2000", 3L -> "absent_only")
@@ -34,7 +33,7 @@ class Bm25PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("Bm25TopKExec serves through the shard driver: <= numShards partitions") {
     // shardBits = 2 over 16 pages: at most 4 doc-shards, so a shard-keyed
     // repartition has no use for more than 4 kernel tasks
-    val dir = Files.createTempDirectory("graft-planop-shards").toString
+    val dir = scratchDir("planop-shards")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 16, 2).toDF(), dir, shardBits = 2, groups = 2)
     val shards = PackedIndex.numShardsBound(dir)

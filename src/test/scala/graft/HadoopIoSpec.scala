@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.io.MetaIO
 import org.apache.spark.sql.functions._
 
@@ -13,13 +12,13 @@ class HadoopIoSpec extends SparkSpec {
   import spark.implicits._
 
   /** A fresh local dir, as a scheme-less path and as a file:// URI. */
-  private def freshDir(prefix: String): (String, String) = {
-    val d = Files.createTempDirectory(prefix).toString
+  private def freshDir(name: String): (String, String) = {
+    val d = scratchDir(name)
     (d, s"file://$d")
   }
 
   test("MetaIO primitives: scheme-less and file:// paths behave the same") {
-    val (local, uri) = freshDir("graft-hmeta")
+    val (local, uri) = freshDir("hmeta")
     for (root <- Seq(s"$local/plain", s"$uri/viaUri")) {
       // mkdirs + exists
       MetaIO.mkdirs(s"$root/a/b")
@@ -56,7 +55,7 @@ class HadoopIoSpec extends SparkSpec {
     val t1 = MetaIO.createTempDir("graft-hio")
     val t2 = MetaIO.createTempDir("graft-hio")
     assert(t1 != t2 && MetaIO.list(t1).isEmpty)
-    Seq(t1, t2, local).foreach(MetaIO.deleteRecursively)
+    Seq(t1, t2).foreach(MetaIO.deleteRecursively)
   }
 
   private def tok(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
@@ -69,7 +68,7 @@ class HadoopIoSpec extends SparkSpec {
     val batch = Seq(0L -> "alpha beta", 1L -> "omega gamma")
 
     def buildAndSearch(uri: Boolean): Set[(Long, Long, Double, Int)] = {
-      val (local, asUri) = freshDir("graft-hio-idx")
+      val (local, asUri) = freshDir("hio-idx")
       val dir = if (uri) asUri else local
       graft.index.PackedIndex.build(tok(base: _*), dir, shardBits = 2, groups = 2)
       graft.index.PackedIndex.append(tok(extra: _*), dir)
@@ -77,7 +76,6 @@ class HadoopIoSpec extends SparkSpec {
       graft.query.IndexCache.invalidateAll()
       val got = graft.query.Wand.search(spark, dir, batch, 10).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      MetaIO.deleteRecursively(local)
       got
     }
     val viaPath = buildAndSearch(uri = false)
@@ -89,7 +87,7 @@ class HadoopIoSpec extends SparkSpec {
     val docs = Seq(0L -> "x table deep scan y table scan",
       1L -> "table scan query z", 2L -> "scan table q table scan query")
     def run(uri: Boolean) = {
-      val (local, asUri) = freshDir("graft-hio-pos")
+      val (local, asUri) = freshDir("hio-pos")
       val dir = if (uri) asUri else local
       val t = tok(docs: _*)
       graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
@@ -101,7 +99,6 @@ class HadoopIoSpec extends SparkSpec {
         Seq("table", "scan"), 10)),
         rows3(graft.query.Phrase.nearTopKPositional(spark, dir,
           Seq("table", "scan", "query"), slop = 4, k = 10)))
-      MetaIO.deleteRecursively(local)
       got
     }
     val viaPath = run(uri = false)
@@ -110,10 +107,10 @@ class HadoopIoSpec extends SparkSpec {
   }
 
   test("searchDs cleans stale hits through the TableIO boundary on a reused staging dir") {
-    val dir = Files.createTempDirectory("graft-hio-ds").toString
+    val dir = scratchDir("hio-ds")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 200, 4).toDF(), dir, shardBits = 6, groups = 2)
-    val (stagingLocal, staging) = freshDir("graft-hio-stage")
+    val (_, staging) = freshDir("hio-stage")
     // big batch: 30 queries over chunkSize 7 -> 5 chunk partitions land in hits/
     val big = Bench.queryBatch(30)
     val bigRows = graft.query.Wand.searchDs(spark, dir,
@@ -131,7 +128,6 @@ class HadoopIoSpec extends SparkSpec {
     val wantIds = small.map(_._1).toSet
     assert(smallIds.subsetOf(wantIds),
       s"stale chunk partitions leaked into the reused staging dir: ${smallIds -- wantIds}")
-    Seq(stagingLocal, dir).foreach(MetaIO.deleteRecursively)
   }
 
   test("zero-idf terms (df == N/2) stay retrievable and count toward msm") {
@@ -139,7 +135,7 @@ class HadoopIoSpec extends SparkSpec {
     // eps floor only applies to NEGATIVE raw idf, so "even" scores 0 but
     // must still match (DuckDB tf-join oracle includes its docs; ES msm
     // counts any matched term)
-    val dir = Files.createTempDirectory("graft-zidf").toString
+    val dir = scratchDir("zidf")
     graft.index.PackedIndex.build(
       tok(0L -> "even alpha", 1L -> "even beta", 2L -> "gamma delta",
         3L -> "epsilon zeta"),

@@ -2,7 +2,6 @@ package graft
 
 import graft.ann.{Ann, IvfIndex}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Persisted IVF index: parity with the in-memory kernel, frozen-centroid
   * appends, and the cell-pruning pushdown.
@@ -24,7 +23,7 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(400, 16, 5)
     val queries = randCorpus(5, 16, 99)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfidx").toString
+    val dir = scratchDir("ivfidx")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 3)
     val cents = IvfIndex.loadCentroids(dir)
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
@@ -40,7 +39,7 @@ class IvfIndexSpec extends SparkSpec {
     val extra = extraRaw.select((col("vec_id") + 300L).as("vec_id"), col("vec"))
     val queries = randCorpus(4, 16, 101)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfapp").toString
+    val dir = scratchDir("ivfapp")
     IvfIndex.build(base, dir, nCells = 8, iters = 3)
     IvfIndex.append(extra, dir)
     // equivalence: persisted(base + appended) == in-memory over the FULL
@@ -64,7 +63,7 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(500, 8, 11)
     val queries = randCorpus(2, 8, 103)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfplan").toString
+    val dir = scratchDir("ivfplan")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 2)
     val cents = IvfIndex.loadCentroids(dir)
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
@@ -83,7 +82,7 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(300, 16, 17)
     val queries = randCorpus(3, 16, 109)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfdel").toString
+    val dir = scratchDir("ivfdel")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 2)
     val before = rows(IvfIndex.search(spark, dir, queries, k = 10, nProbe = 8))
     assert(before.nonEmpty)
@@ -111,7 +110,7 @@ class IvfIndexSpec extends SparkSpec {
       .select((col("vec_id") + 200L).as("vec_id"), col("vec"))
     val queries = randCorpus(3, 8, 111)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfreplay").toString
+    val dir = scratchDir("ivfreplay")
     IvfIndex.build(corpus, dir, nCells = 4, iters = 2, segmentName = "cells-b0")
     IvfIndex.append(extra, dir, segmentName = Some("cells-b1"))
     val once = rows(IvfIndex.search(spark, dir, queries, k = 10, nProbe = 4))
@@ -136,7 +135,7 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(700, 8, 23)
     val queries = randCorpus(3, 8, 113)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfbig").toString
+    val dir = scratchDir("ivfbig")
     IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
     // allowlist of 600 ids (> threshold -> broadcast semi-join) must equal
     // brute restriction computed from the unfiltered result
@@ -159,14 +158,13 @@ class IvfIndexSpec extends SparkSpec {
     val queries = randCorpus(3, 8, 107)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
     def run(uri: Boolean) = {
-      val local = Files.createTempDirectory("graft-ivfh").toString
+      val local = scratchDir("ivfh")
       val dir = if (uri) s"file://$local" else local
       IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
       IvfIndex.delete(spark, dir, Seq(7L, 11L))
       IvfIndex.append(randCorpus(20, 8, 17)
         .withColumn("vec_id", col("vec_id") + 200L), dir)
       val got = rows(IvfIndex.search(spark, dir, queries, k = 5, nProbe = 2))
-      graft.io.MetaIO.deleteRecursively(local)
       got
     }
     val viaPath = run(uri = false)
@@ -178,8 +176,8 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(300, 16, 29)
     val queries = randCorpus(4, 16, 115)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val dir = Files.createTempDirectory("graft-ivfcpt-src").toString
-    val out = Files.createTempDirectory("graft-ivfcpt-out").toString
+    val dir = scratchDir("ivfcpt-src")
+    val out = scratchDir("ivfcpt-out")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 3)
     val dead = (0L until 60L).toSeq
     IvfIndex.delete(spark, dir, dead)
@@ -210,7 +208,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("delete fails loudly on ids that never named a committed vector") {
     val corpus = randCorpus(100, 8, 31)
-    val dir = Files.createTempDirectory("graft-ivfdel-unk").toString
+    val dir = scratchDir("ivfdel-unk")
     IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
     val ex = intercept[IllegalArgumentException] {
       IvfIndex.delete(spark, dir, Seq(5L, 9999L))
@@ -223,8 +221,8 @@ class IvfIndexSpec extends SparkSpec {
     val corpus = randCorpus(400, 32, 37)
     val queries = randCorpus(5, 32, 117)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val d64 = Files.createTempDirectory("graft-ivf64").toString
-    val d32 = Files.createTempDirectory("graft-ivf32").toString
+    val d64 = scratchDir("ivf64")
+    val d32 = scratchDir("ivf32")
     IvfIndex.build(corpus, d64, nCells = 8, iters = 3)
     IvfIndex.build(corpus, d32, nCells = 8, iters = 3, storage = "f32")
     // training happens BEFORE quantization -> identical centroids
@@ -258,7 +256,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(IvfIndex.autoCells(1000000000L) == 31623)
     assert(IvfIndex.autoCells(4000000000L) == 32768) // upper clamp
     val corpus = randCorpus(400, 8, 41)
-    val dir = Files.createTempDirectory("graft-ivfauto").toString
+    val dir = scratchDir("ivfauto")
     IvfIndex.build(corpus, dir, nCells = 0, iters = 2)
     // 400 vecs -> 20 derived cells; Lloyd may drop empty cells, so pin
     // nCells == surviving centroid count and within (2, 20]
@@ -274,7 +272,7 @@ class IvfIndexSpec extends SparkSpec {
     val base = randCorpus(200, 8, 43)
     val extra = randCorpus(40, 8, 44)
       .select((col("vec_id") + 200L).as("vec_id"), col("vec"))
-    val dir = Files.createTempDirectory("graft-ivfcnt").toString
+    val dir = scratchDir("ivfcnt")
     IvfIndex.build(base, dir, nCells = 4, iters = 2)
     IvfIndex.append(extra, dir)
     val lines = graft.io.MetaIO.readString(s"$dir/cells.list").split("\n")

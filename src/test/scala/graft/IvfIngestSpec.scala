@@ -20,9 +20,9 @@ class IvfIngestSpec extends SparkSpec {
   }
 
   test("streamed IVF ingest == batch build + appends, identical search") {
-    val srcDir = Files.createTempDirectory("graft-ivfing-src").toString
-    val idxStream = Files.createTempDirectory("graft-ivfing-idx").toString
-    val idxBatch = Files.createTempDirectory("graft-ivfing-ref").toString
+    val srcDir = scratchDir("ivfing-src")
+    val idxStream = scratchDir("ivfing-idx")
+    val idxBatch = scratchDir("ivfing-ref")
 
     // reference: batch build over the FIRST slice (it trains the
     // centroids), then batch appends of the later slices — the exact
@@ -36,7 +36,7 @@ class IvfIngestSpec extends SparkSpec {
     try {
       Seq((0L, 100L), (100L, 200L), (200L, 300L)).zipWithIndex.foreach {
         case ((lo, hi), i) =>
-          val tmp = Files.createTempDirectory(s"graft-ivfing-b$i").toString
+          val tmp = scratchDir(s"ivfing-b$i")
           vecs(lo, hi).coalesce(1).write.parquet(tmp + "/w")
           new java.io.File(tmp + "/w").listFiles()
             .filter(_.getName.endsWith(".parquet")).zipWithIndex

@@ -66,11 +66,11 @@ class PackedIndexSpec extends SparkSpec {
     }
     def tok(rows: Seq[(Long, String)]) = InvertedIndex.tokenize(
       rows.toDF("doc_id", "text"), "doc_id", "text")
-    val autoDir = Files.createTempDirectory("graft-autobits").toString
+    val autoDir = scratchDir("autobits")
     PackedIndex.build(tok(docs), autoDir, groups = 2) // shardBits defaulted
     val stats = PackedIndex.readStats(autoDir)
     assert(stats.shardBits == PackedIndex.deriveShardBits(120L))
-    val pinDir = Files.createTempDirectory("graft-pinbits").toString
+    val pinDir = scratchDir("pinbits")
     PackedIndex.build(tok(docs), pinDir, shardBits = stats.shardBits, groups = 2)
     graft.query.IndexCache.invalidateAll()
     val batch = Seq(0L -> "w1 w2 w3")
@@ -112,7 +112,7 @@ class PackedIndexSpec extends SparkSpec {
   test("WAND top-k is rank- and score-identical to the exhaustive oracle") {
     val docs = randomCorpus(nDocs = 1000, vocab = 200, seed = 7)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-idx").toString
+    val dir = scratchDir("idx")
     buildIndex(docs, dir, shardBits = 8, groups = 3) // 4 shards, 3 groups
 
     val queries: Seq[(Long, String)] = Seq(
@@ -143,7 +143,7 @@ class PackedIndexSpec extends SparkSpec {
   test("filtered WAND == exhaustive oracle restricted to the allowlist") {
     val docs = randomCorpus(nDocs = 800, vocab = 150, seed = 11)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-idx-filt").toString
+    val dir = scratchDir("idx-filt")
     buildIndex(docs, dir, shardBits = 8, groups = 2)
 
     val queries: Seq[(Long, String)] = Seq(
@@ -203,7 +203,7 @@ class PackedIndexSpec extends SparkSpec {
   test("minimum_should_match == exhaustive oracle filtered by distinct-match count") {
     val docs = randomCorpus(nDocs = 700, vocab = 150, seed = 71)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-msm").toString
+    val dir = scratchDir("msm")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val queries: Seq[(Long, String)] = Seq(
       1L -> "t0 t1 t5 t20", 2L -> "t100 t140 t7", 3L -> "t0 t0 t42")
@@ -244,7 +244,7 @@ class PackedIndexSpec extends SparkSpec {
   test("must_not == exhaustive oracle minus docs holding any excluded term") {
     val docs = randomCorpus(nDocs = 700, vocab = 150, seed = 101)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-mn").toString
+    val dir = scratchDir("mn")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val queries: Seq[(Long, String)] = Seq(
       1L -> "t0 t1 t5 t20", 2L -> "t100 t140 t7", 3L -> "t0 t0 t42")
@@ -288,7 +288,7 @@ class PackedIndexSpec extends SparkSpec {
   test("per-term boosts == token-order scoring with boost-scaled idf") {
     val docs = randomCorpus(nDocs = 600, vocab = 120, seed = 131)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-boost").toString
+    val dir = scratchDir("boost")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val queries: Seq[(Long, String)] = Seq(
       1L -> "t0 t1 t5", 2L -> "t100 t7 t3", 3L -> "t0 t0 t42")
@@ -338,7 +338,7 @@ class PackedIndexSpec extends SparkSpec {
   test("more_like_this == WAND on the doc's top rounded-tf-idf terms") {
     val docs = randomCorpus(nDocs = 400, vocab = 80, seed = 151)
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-mlt").toString
+    val dir = scratchDir("mlt")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val src = 7
     val text = docs(src).mkString(" ")
@@ -373,7 +373,7 @@ class PackedIndexSpec extends SparkSpec {
       }
     }
     val oracle = new Bm25.Oracle(docs, P)
-    val dir = Files.createTempDirectory("graft-idx-skew").toString
+    val dir = scratchDir("idx-skew")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val queries = Seq(1L -> "the w5", 2L -> "the of and", 3L -> "w1 w2 the")
     val got = Wand.search(spark, dir, queries, 15).collect()
@@ -388,11 +388,11 @@ class PackedIndexSpec extends SparkSpec {
 
   test("compaction == fresh build over survivors (ids kept, stats exact)") {
     val docs = randomCorpus(nDocs = 600, vocab = 120, seed = 21)
-    val dir = Files.createTempDirectory("graft-cpt").toString
+    val dir = scratchDir("cpt")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val dead = (Seq(0L, 3L, 17L, 255L, 256L, 599L) ++ (100L until 120L)).distinct
     PackedIndex.delete(dir, dead)
-    val out = Files.createTempDirectory("graft-cpt-out").toString
+    val out = scratchDir("cpt-out")
     PackedIndex.compact(spark, dir, out)
     assert(PackedIndex.loadTombstones(out).isEmpty)
 
@@ -400,7 +400,7 @@ class PackedIndexSpec extends SparkSpec {
     val deadSet = dead.toSet
     val survivors = docs.indices.map(_.toLong).filterNot(deadSet)
     val freshDocs: IndexedSeq[Array[String]] = survivors.map(i => docs(i.toInt))
-    val dirF = Files.createTempDirectory("graft-cpt-fresh").toString
+    val dirF = scratchDir("cpt-fresh")
     buildIndex(freshDocs, dirF, shardBits = 7, groups = 2)
     val sC = PackedIndex.readStats(out)
     val sF = PackedIndex.readStats(dirF)
@@ -455,17 +455,17 @@ class PackedIndexSpec extends SparkSpec {
 
   test("compaction is crash-safe: no manifest -> invisible; retry == clean run") {
     val docs = randomCorpus(nDocs = 300, vocab = 80, seed = 31)
-    val dir = Files.createTempDirectory("graft-cptc").toString
+    val dir = scratchDir("cptc")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     PackedIndex.delete(dir, Seq(1L, 7L, 100L))
-    val out = Files.createTempDirectory("graft-cptc-out").toString
+    val out = scratchDir("cptc-out")
     PackedIndex.compact(spark, dir, out)
     val clean = Wand.search(spark, out, Seq(1L -> "t0 t1"), 0).collect()
       .map(r => (r.getLong(1), r.getDouble(2))).sorted.toSeq
 
     // simulate a crash BEFORE the manifest commit: readers must fail
     // loudly (no committed groups), not serve a half-written index
-    val out2 = Files.createTempDirectory("graft-cptc-out2").toString
+    val out2 = scratchDir("cptc-out2")
     PackedIndex.compact(spark, dir, out2)
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(out2, "manifest", "group-0.json"))
@@ -482,11 +482,11 @@ class PackedIndexSpec extends SparkSpec {
 
   test("delete lifecycle across compactions: holes are no-ops, stats stay exact") {
     val docs = randomCorpus(nDocs = 400, vocab = 90, seed = 41)
-    val dir = Files.createTempDirectory("graft-holes").toString
+    val dir = scratchDir("holes")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     val dead1 = Seq(2L, 5L, 9L, 100L, 150L)
     PackedIndex.delete(dir, dead1)
-    val out1 = Files.createTempDirectory("graft-holes-out1").toString
+    val out1 = scratchDir("holes-out1")
     PackedIndex.compact(spark, dir, out1)
     assert(PackedIndex.loadHoles(out1).toSeq == dead1.sorted)
 
@@ -500,11 +500,11 @@ class PackedIndexSpec extends SparkSpec {
     assert(PackedIndex.loadTombstones(out1).sameElements(Array(33L, 44L)))
 
     // second compaction: stats == fresh rebuild over the TRUE survivors
-    val out2 = Files.createTempDirectory("graft-holes-out2").toString
+    val out2 = scratchDir("holes-out2")
     PackedIndex.compact(spark, out1, out2)
     val deadAll = (dead1 ++ Seq(33L, 44L)).toSet
     val survivors = docs.indices.map(_.toLong).filterNot(deadAll)
-    val dirF = Files.createTempDirectory("graft-holes-fresh").toString
+    val dirF = scratchDir("holes-fresh")
     buildIndex(survivors.map(i => docs(i.toInt)), dirF, shardBits = 7, groups = 2)
     val sC = PackedIndex.readStats(out2)
     val sF = PackedIndex.readStats(dirF)
@@ -526,14 +526,14 @@ class PackedIndexSpec extends SparkSpec {
 
   test("compact ignores a crashed append's stats.json (manifests are truth)") {
     val docs = randomCorpus(nDocs = 200, vocab = 60, seed = 51)
-    val dir = Files.createTempDirectory("graft-cstats").toString
+    val dir = scratchDir("cstats")
     buildIndex(docs, dir, shardBits = 7, groups = 2)
     PackedIndex.delete(dir, Seq(3L, 4L))
     // crash window: append's stats.json committed (counts the new batch),
     // manifest not — compact's doc arithmetic must use the manifests
     val s = PackedIndex.readStats(dir)
     PackedIndex.writeStats(dir, s.copy(n = s.n + 37), PackedIndex.readDfDir(dir))
-    val out = Files.createTempDirectory("graft-cstats-out").toString
+    val out = scratchDir("cstats-out")
     PackedIndex.compact(spark, dir, out)
     assert(PackedIndex.readStats(out).n == 198L,
       "crashed-append stats.n leaked into the compacted doc count")
@@ -541,7 +541,7 @@ class PackedIndexSpec extends SparkSpec {
 
   test("tombstone set is bounded: overflow fails with the compact remedy") {
     val docs = randomCorpus(nDocs = 100, vocab = 30, seed = 61)
-    val dir = Files.createTempDirectory("graft-tbound").toString
+    val dir = scratchDir("tbound")
     buildIndex(docs, dir, shardBits = 7, groups = 1)
     PackedIndex.delete(dir, (0L until 5L).toSeq, maxTombstones = 8)
     val ex = intercept[IllegalArgumentException] {
@@ -554,7 +554,7 @@ class PackedIndexSpec extends SparkSpec {
 
   test("build is resumable: completed groups are skipped, result identical") {
     val docs = randomCorpus(nDocs = 300, vocab = 80, seed = 3)
-    val dir = Files.createTempDirectory("graft-idx-resume").toString
+    val dir = scratchDir("idx-resume")
     val first = buildIndex(docs, dir, shardBits = 7, groups = 3)
     // simulate a crash that lost group 1's manifest AND data
     val g1 = new java.io.File(s"$dir/postings/grp=1")

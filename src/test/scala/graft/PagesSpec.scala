@@ -5,7 +5,6 @@ import graft.corpus.{PagesGen, PagesPipeline}
 import graft.query.Wand
 import graft.tokenize.PyTokenize
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end north-rule pipeline: pages -> extract -> docIds -> packed
   * index -> WAND, rank/score-identical to the in-JVM oracle over the same
@@ -27,7 +26,7 @@ class PagesSpec extends SparkSpec {
 
   test("pages pipeline: WAND over built index is bit-identical to oracle") {
     val pages = PagesGen.pages(spark, 400, partitions = 6)
-    val dir = Files.createTempDirectory("graft-pages-idx").toString
+    val dir = scratchDir("pages-idx")
     val manifests = PagesPipeline.buildIndex(pages.toDF(), dir,
       shardBits = 7, groups = 2)
     assert(manifests.map(_.postings).sum > 0)

@@ -50,7 +50,7 @@ class PhraseSpec extends SparkSpec {
       1L -> "x table scan y",
       2L -> "table only here",
       3L -> "scan table scan table scan")
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase-idx").toString
+    val dir = scratchDir("phrase-idx")
     graft.index.PackedIndex.build(t, dir, shardBits = 1, groups = 2)
     val flat = Phrase.candidates(InvertedIndex.postings(t), Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet
@@ -115,7 +115,7 @@ class PhraseSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
     val t = tok(docs: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-posidx").toString
+    val dir = scratchDir("posidx")
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     for (phrase <- Seq(Seq("a", "b"), Seq("a", "a"), Seq("c", "d", "a"),
@@ -134,7 +134,7 @@ class PhraseSpec extends SparkSpec {
       0L -> "x table deep scan y",
       1L -> "x table scan y",
       2L -> "scan table scan table scan")
-    val dir = java.nio.file.Files.createTempDirectory("graft-postomb").toString
+    val dir = scratchDir("postomb")
     graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
     graft.index.PositionalIndex.build(t, dir)
     val before = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
@@ -148,7 +148,7 @@ class PhraseSpec extends SparkSpec {
 
   test("stale positional arm after append fails loudly") {
     val t = tok(0L -> "table scan x", 1L -> "y table scan")
-    val dir = java.nio.file.Files.createTempDirectory("graft-posstale").toString
+    val dir = scratchDir("posstale")
     graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
     graft.index.PositionalIndex.build(t, dir)
     // append docs containing the phrase terms WITHOUT rebuilding the arm
@@ -180,7 +180,7 @@ class PhraseSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
     val t = tok(docs: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-poscpt").toString
+    val dir = scratchDir("poscpt")
     graft.index.PackedIndex.build(t, dir, shardBits = 4, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     // append a batch so the arm has >1 segment before compacting
@@ -189,7 +189,7 @@ class PhraseSpec extends SparkSpec {
     graft.index.PositionalIndex.append(extra, dir)
     val dead = Seq(3L, 17L, 80L)
     graft.index.PackedIndex.delete(dir, dead)
-    val outDir = java.nio.file.Files.createTempDirectory("graft-poscpt-out").toString
+    val outDir = scratchDir("poscpt-out")
     graft.index.PackedIndex.compact(spark, dir, outDir)
     // the compacted arm answers from the index alone, ids preserved, and
     // matches the sliding rescan over the SURVIVING corpus exactly
@@ -222,7 +222,7 @@ class PhraseSpec extends SparkSpec {
 
   test("positional append: orphan segment dirs are invisible until the list flips") {
     val t = tok(0L -> "table scan a", 1L -> "b table scan")
-    val dir = java.nio.file.Files.createTempDirectory("graft-posorphan").toString
+    val dir = scratchDir("posorphan")
     graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
     graft.index.PositionalIndex.build(t, dir)
     val before = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
@@ -265,7 +265,7 @@ class PhraseSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
     val t = tok(docs: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-proxidx").toString
+    val dir = scratchDir("proxidx")
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     for ((a, b, slop) <- Seq(("a", "b", 1), ("a", "b", 3), ("c", "a", 5),
@@ -314,7 +314,7 @@ class PhraseSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
     val t = tok(docs: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-nearidx").toString
+    val dir = scratchDir("nearidx")
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     for ((terms, slop) <- Seq((Seq("a", "b"), 1), (Seq("a", "b"), 4),
@@ -344,7 +344,7 @@ class PhraseSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
     val t = tok(docs: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-posbatch").toString
+    val dir = scratchDir("posbatch")
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     val batch: Seq[(Long, graft.query.PositionalQuery)] = Seq(
@@ -385,7 +385,7 @@ class PhraseSpec extends SparkSpec {
       0L -> "x table deep scan y",
       1L -> "x table scan y",
       2L -> "scan table scan table scan")
-    val dir = java.nio.file.Files.createTempDirectory("graft-batchtomb").toString
+    val dir = scratchDir("batchtomb")
     graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
     graft.index.PositionalIndex.build(t, dir)
     graft.index.PackedIndex.delete(dir, Seq(2L))

@@ -3,7 +3,6 @@ package graft
 import graft.index.{InvertedIndex, PackedIndex}
 import graft.query.Bm25Query
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Physical-plan regression tests: pushdown, pruning, broadcast selection.
   * These pin the plan shapes the 100TB design depends on — a regression
@@ -13,7 +12,7 @@ import java.nio.file.Files
 class PlanHygieneSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-plan-idx").toString
+    val d = scratchDir("plan-idx")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 500, 4).toDF(), d, shardBits = 7, groups = 2)
     d
@@ -121,7 +120,7 @@ class PlanHygieneSpec extends SparkSpec {
   test("persisted dictionary: prefix suggest pushes StartsWith; small-batch " +
        "spell suggest pushes the variant IN list") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-plan-dict").toString
+    val d = scratchDir("plan-dict")
     Seq(("spark", 10L), ("scan", 9L), ("table", 8L))
       .toDF("term", "df").write.parquet(s"$d/dict")
     val dict = spark.read.parquet(s"$d/dict")

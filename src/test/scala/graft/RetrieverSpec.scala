@@ -3,7 +3,6 @@ package graft
 import graft.functions.TextFunctions
 import graft.query.{Bm25WandRetriever, CosineRetriever, EnsembleRetriever}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Retriever trait surface + MaxSim/pooling semantics. */
 class RetrieverSpec extends SparkSpec {
@@ -46,7 +45,7 @@ class RetrieverSpec extends SparkSpec {
   test("wide-vocabulary batch (semi-join term path) equals split batches") {
     // >512 distinct terms flips the postings restriction from IN-pushdown
     // to a broadcast semi-join; results must be identical either way
-    val dir = Files.createTempDirectory("graft-widebatch").toString
+    val dir = scratchDir("widebatch")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
     val rnd = new scala.util.Random(11)
@@ -63,7 +62,7 @@ class RetrieverSpec extends SparkSpec {
   }
 
   test("Dataset-typed query batch equals the Seq path") {
-    val dir = Files.createTempDirectory("graft-dsq").toString
+    val dir = scratchDir("dsq")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
     val batch = Bench.queryBatch(40)
@@ -81,7 +80,7 @@ class RetrieverSpec extends SparkSpec {
       (0L, "spark table fast"), (1L, "table scan here"),
       (2L, "scan the spark"), (3L, "nothing relevant")).toDF("doc_id", "text")
     val tok = graft.index.InvertedIndex.tokenize(docs, "doc_id", "text")
-    val dir = Files.createTempDirectory("graft-fzr").toString
+    val dir = scratchDir("fzr")
     graft.index.PackedIndex.build(tok, dir, shardBits = 7, groups = 1,
       p = graft.core.Bm25Params())
     val didx = graft.query.SpellCorrect.deletionIndex(
@@ -104,7 +103,7 @@ class RetrieverSpec extends SparkSpec {
   }
 
   test("filtered Dataset batch equals the filtered Seq path (staged chunks)") {
-    val dir = Files.createTempDirectory("graft-dsqf").toString
+    val dir = scratchDir("dsqf")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
     val batch = Bench.queryBatch(40)
@@ -121,10 +120,10 @@ class RetrieverSpec extends SparkSpec {
   }
 
   test("searchDs: stale hits in a reused staging dir don't leak into results") {
-    val dir = Files.createTempDirectory("graft-dsq-stale").toString
+    val dir = scratchDir("dsq-stale")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
-    val staging = Files.createTempDirectory("graft-dsq-staging").toString
+    val staging = scratchDir("dsq-staging")
     val big = Bench.queryBatch(40)
     graft.query.Wand.searchDs(spark, dir, big.toDF("query_id", "text"), 10,
       chunkSize = 7, stagingDir = Some(staging)).count()
@@ -141,7 +140,7 @@ class RetrieverSpec extends SparkSpec {
   }
 
   test("searchDs raises when staged chunks are not visible (no silent subset)") {
-    val dir = Files.createTempDirectory("graft-dsq-vanish").toString
+    val dir = scratchDir("dsq-vanish")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
     // a TableIO whose staged-query write "loses" one chunk partition — the
@@ -169,7 +168,7 @@ class RetrieverSpec extends SparkSpec {
   }
 
   test("minimum_should_match plumbs through searchDs and the retriever") {
-    val dir = Files.createTempDirectory("graft-dsq-msm").toString
+    val dir = scratchDir("dsq-msm")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
     val batch = Bench.queryBatch(40)
@@ -190,7 +189,7 @@ class RetrieverSpec extends SparkSpec {
   test("df cache: one load per index version; append invalidates it") {
     def tokDf(rows: (Long, String)*) = graft.index.InvertedIndex.tokenize(
       rows.toDF("doc_id", "text"), "doc_id", "text")
-    val dir = Files.createTempDirectory("graft-dfcache").toString
+    val dir = scratchDir("dfcache")
     graft.index.PackedIndex.build(
       tokDf(0L -> "alpha beta gamma", 1L -> "alpha delta", 2L -> "beta beta",
         3L -> "pad0 pad1", 4L -> "pad2 pad3", 5L -> "pad4 pad5"),
@@ -215,7 +214,7 @@ class RetrieverSpec extends SparkSpec {
 
   test("ensemble retriever fuses wand + cosine with RRF semantics") {
     // tiny pages index
-    val dir = Files.createTempDirectory("graft-retr").toString
+    val dir = scratchDir("retr")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 200, 4).toDF(), dir, shardBits = 6, groups = 2)
     val wand = new Bm25WandRetriever(dir)
@@ -250,7 +249,7 @@ class RetrieverSpec extends SparkSpec {
     }
     val t = graft.index.InvertedIndex.tokenize(
       docs.toDF("doc_id", "text"), "doc_id", "text")
-    val dir = Files.createTempDirectory("graft-posds").toString
+    val dir = scratchDir("posds")
     graft.index.PackedIndex.build(t, dir, shardBits = 5, groups = 2)
     graft.index.PositionalIndex.build(t, dir)
     val mode = graft.query.PositionalMode.PhraseMode
@@ -274,7 +273,7 @@ class RetrieverSpec extends SparkSpec {
         1L -> "x table scan y",
         2L -> "scan table scan table scan",
         3L -> "table w1 w2 w3").toDF("doc_id", "text"), "doc_id", "text")
-    val dir = Files.createTempDirectory("graft-ensphr").toString
+    val dir = scratchDir("ensphr")
     graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
     graft.index.PositionalIndex.build(t, dir)
     val bm25 = new graft.query.RoundedRankRetriever(new Bm25WandRetriever(dir), 4)

@@ -95,7 +95,7 @@ class SpellCorrectSpec extends SparkSpec {
       (2L, "stark contrast here"), (3L, "query the table"),
       (4L, "nothing relevant at all")).toDF("doc_id", "text")
     val tok = graft.index.InvertedIndex.tokenize(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fz").toString
+    val dir = scratchDir("fz")
     graft.index.PackedIndex.build(tok, dir, shardBits = 7, groups = 1,
       p = graft.core.Bm25Params())
     val didx = SpellCorrect.deletionIndex(SpellCorrect.dictionary(tok))
@@ -116,7 +116,7 @@ class SpellCorrectSpec extends SparkSpec {
       (0L, "spark table fast"), (1L, "flame engine here"),
       (2L, "query the table"), (3L, "nothing relevant")).toDF("doc_id", "text")
     val tok = graft.index.InvertedIndex.tokenize(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-syn").toString
+    val dir = scratchDir("syn")
     graft.index.PackedIndex.build(tok, dir, shardBits = 7, groups = 1,
       p = graft.core.Bm25Params())
     val syn = Seq("spark" -> "flame", "absent" -> "engine")
@@ -171,7 +171,7 @@ class SpellCorrectSpec extends SparkSpec {
     val rnd = new scala.util.Random(77)
     val vocab = (0 until 400).map(i => s"w${rnd.nextInt(90)}x$i" -> rnd.nextInt(50).toLong)
     val d = dict(vocab: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft-didx").toString
+    val dir = scratchDir("didx")
     SpellCorrect.buildDeletionIndex(d, s"$dir/fused", maxTermsPerVariant = 3)
     SpellCorrect.persistDeletionIndex(
       SpellCorrect.deletionIndex(d, maxTermsPerVariant = 3), s"$dir/window")

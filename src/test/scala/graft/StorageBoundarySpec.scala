@@ -19,7 +19,7 @@ class StorageBoundarySpec extends SparkSpec {
     df.collect().map(_.toSeq).toSet
 
   test("an index served through a file:// URI of its dir == the plain path, bit for bit") {
-    val dir = Files.createTempDirectory("graft-uri-serve").toString
+    val dir = scratchDir("uri-serve")
     val uri = s"file://$dir"
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 200, 4).toDF(), dir, shardBits = 5, groups = 2)
@@ -45,7 +45,6 @@ class StorageBoundarySpec extends SparkSpec {
         assert(viaPath(i).nonEmpty, s"$name: empty fixture result")
         assert(viaUri(i) == viaPath(i), s"$name diverged through the file:// URI")
       }
-    MetaIO.deleteRecursively(dir)
   }
 
   test("pages appended through a file:// URI == appended through the plain path") {
@@ -53,7 +52,7 @@ class StorageBoundarySpec extends SparkSpec {
     val more = corpus.PagesGen.pages(spark, 120, 2).toDF()
       .join(base.select($"url"), Seq("url"), "left_anti")
     def grow(uri: Boolean) = {
-      val local = Files.createTempDirectory("graft-uri-append").toString
+      val local = scratchDir("uri-append")
       val dir = if (uri) s"file://$local" else local
       corpus.PagesPipeline.buildIndex(base, dir, shardBits = 4, groups = 2)
       corpus.PagesPipeline.appendPages(more, dir)
@@ -62,7 +61,6 @@ class StorageBoundarySpec extends SparkSpec {
       val n = graft.index.PackedIndex.readStats(dir).n
       // the URI names the same dir: its sidecars are where the path says
       assert(MetaIO.list(s"$local/manifest").count(_.startsWith("group-")) == 3)
-      MetaIO.deleteRecursively(local)
       (got, n)
     }
     val viaPath = grow(uri = false)
@@ -71,13 +69,7 @@ class StorageBoundarySpec extends SparkSpec {
   }
 
   test("a contract query run through withScratch leaves no graft-* dir behind") {
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    def graftDirs(): Set[String] = {
-      val s = Files.list(tmp)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft-")).toSet
-      finally s.close()
-    }
+    import SparkSpec.graftDirs
     val before = graftDirs()
     // the compacted query makes two scratch indexes (source + compacted)
     val n = SparkEntry.withScratch(SparkEntry.queries("q_bm25_compacted_topk")(

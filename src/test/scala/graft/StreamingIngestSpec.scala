@@ -15,9 +15,9 @@ class StreamingIngestSpec extends SparkSpec {
     spark.range(lo, hi, 1L, 4).map(i => PagesGen.gen(i, seed = 42)).toDF()
 
   test("foreachBatch ingest == batch rebuild, bit-identical") {
-    val srcDir = Files.createTempDirectory("graft-ingest-src").toString
-    val idxStream = Files.createTempDirectory("graft-ingest-idx").toString
-    val idxBatch = Files.createTempDirectory("graft-ingest-ref").toString
+    val srcDir = scratchDir("ingest-src")
+    val idxStream = scratchDir("ingest-idx")
+    val idxBatch = scratchDir("ingest-ref")
 
     // reference: one batch build over all 300 pages
     PagesPipeline.buildIndex(pagesRange(0, 300), idxBatch, shardBits = 6, groups = 1)
@@ -32,7 +32,7 @@ class StreamingIngestSpec extends SparkSpec {
         case ((lo, hi), i) =>
           // the file source lists FLAT files under srcDir: stage the batch
           // then move its part files in as uniquely-named leaves
-          val tmp = Files.createTempDirectory(s"graft-ingest-b$i").toString
+          val tmp = scratchDir(s"ingest-b$i")
           pagesRange(lo, hi).coalesce(1).write.parquet(tmp + "/w")
           new java.io.File(tmp + "/w").listFiles()
             .filter(_.getName.endsWith(".parquet")).zipWithIndex

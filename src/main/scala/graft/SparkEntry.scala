@@ -552,7 +552,7 @@ object SparkEntry {
 
   /** Ordered proximity: pairs of ('table' at p, 'scan' at q), 0 < q-p <= 3.
     * DuckDB lists are 1-based; nested lambdas compute per-leader window
-    * counts exactly like Phrase.proximityCount's fold.
+    * counts exactly like Phrase.proximityKernelCount.
     */
   private def proximityOracle(ctes: String): String =
     ctes +

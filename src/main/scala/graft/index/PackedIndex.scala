@@ -503,11 +503,17 @@ object PackedIndex {
     else listManifests(dir).map(_.docs).sum
   }
 
-  private def listManifests(dir: String): Seq[GroupManifest] =
+  /** Ids of the committed groups, ascending, from the manifest file names
+    * alone: a manifest appears atomically as its group's last commit step.
+    */
+  def committedGroups(dir: String): Seq[Int] =
     MetaIO.list(s"$dir/manifest").iterator.collect {
       case name if name.startsWith("group-") && name.endsWith(".json") =>
-        readManifest(s"$dir/manifest/$name")
-    }.toSeq.sortBy(_.group)
+        name.stripPrefix("group-").stripSuffix(".json").toInt
+    }.toSeq.sorted
+
+  private def listManifests(dir: String): Seq[GroupManifest] =
+    committedGroups(dir).map(g => readManifest(s"$dir/manifest/group-$g.json"))
 
   /** Read the packed postings of COMMITTED groups only. Groups are
     * enumerated from the manifests (the commit markers), not by listing
@@ -593,12 +599,17 @@ object PackedIndex {
     * id watermark is persisted (watermark.json) so later PackedIndex.append
     * calls on the compacted dir keep allocating above the old range; note
     * PagesPipeline.appendPages needs the pipeline's docs_raw staging and so
-    * operates on the ORIGINAL lineage dir, not a compacted copy.
+    * operates on the ORIGINAL lineage dir, not a compacted copy. A
+    * positional arm is carried along; one whose lineage stamp is not
+    * current fails the compaction before anything is written.
     */
   def compact(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
     val stats = readStats(dir)
     val committed = committedDocs(dir)
+    // compactInto stamps the carried arm current: a stale one must fail here
+    val positional = PositionalIndex.exists(dir)
+    if (positional) PositionalIndex.requireCurrent(dir)
     // LIVE tombstones only: ids of docs a PREVIOUS compaction already
     // removed (holes) must not be subtracted again — delete() filters them
     // on entry, but an externally-edited tombstones.txt (or a pre-holes-file
@@ -714,7 +725,7 @@ object PackedIndex {
     // carry the positional arm (if present): repack through the same
     // tombstone-drop kernel, so phrase/proximity search composes with the
     // delete lifecycle instead of failing loudly until a manual rebuild
-    if (PositionalIndex.exists(dir))
+    if (positional)
       PositionalIndex.compactInto(spark, dir, outDir, bcTomb, blockSize)
     // the id high-water mark survives compaction: manifest docs is the
     // SURVIVOR count (feeds stats on later appends), while id allocation

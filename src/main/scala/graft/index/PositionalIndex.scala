@@ -35,11 +35,13 @@ final case class PosPostings(shard: Int, term: String, nPostings: Long,
   * tokenized frame (one base segment); [[append]] after each
   * PackedIndex.append with the same offset batch (one segment per append,
   * cost ∝ the batch, atomic segment-list flip). The scoring index remains
-  * the source of truth for corpus stats and commit lineage — a positional
-  * arm that missed an append fails loudly
-  * ([[graft.query.Phrase.topKPositional]] cross-checks each queried term's
-  * positional posting count against the scoring df table) instead of
-  * silently missing phrase hits.
+  * the source of truth for corpus stats and commit lineage: the segment
+  * list carries a lineage stamp, the set of committed scoring groups the
+  * arm covers, written in the same atomic flip as the segments. A query
+  * ([[requireCurrent]]) compares it with the committed manifests on the
+  * driver, so an arm that missed an append fails loudly instead of
+  * silently missing phrase hits. The stamp checks lineage, not content:
+  * an arm built from another corpus than its scoring groups is not caught.
   */
 object PositionalIndex {
 
@@ -116,45 +118,93 @@ object PositionalIndex {
     }.toDF()
   }
 
-  /** Sidecar naming the arm's segment dirs, one per line (MetaIO-atomic —
-    * readers see the old or the new complete list). Absent on pre-segment
-    * arms, which consist of the single legacy `positions` dir.
+  private val Stamp = "covers="
+
+  /** Sidecar `positions.list`: the stamp line `covers=<group ids>` and the
+    * arm's segment dirs, one per line (MetaIO-atomic — readers see the old
+    * or the new complete list). Absent on pre-segment arms, which consist
+    * of the single legacy `positions` dir; those and lists written before
+    * the stamp carry none (`covers` None).
     */
-  private def segmentList(dir: String): Seq[String] =
-    if (MetaIO.exists(s"$dir/positions.list"))
-      MetaIO.readString(s"$dir/positions.list")
+  private final case class SegmentList(segments: Seq[String], covers: Option[Set[Int]])
+
+  private def segmentList(dir: String): SegmentList =
+    if (!MetaIO.exists(s"$dir/positions.list")) SegmentList(Seq("positions"), None)
+    else {
+      val (stamp, segs) = MetaIO.readString(s"$dir/positions.list")
         .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-    else Seq("positions")
+        .partition(_.startsWith(Stamp))
+      SegmentList(segs, stamp.headOption.map(
+        _.stripPrefix(Stamp).split(",").filter(_.nonEmpty).map(_.toInt).toSet))
+    }
+
+  private def commitList(dir: String, segments: Seq[String], covers: Set[Int]): Unit =
+    MetaIO.writeAtomic(s"$dir/positions.list",
+      (s"$Stamp${covers.toSeq.sorted.mkString(",")}" +: segments).mkString("\n"))
+
+  /** The arm's committed segment dirs, in list order. */
+  private[graft] def segments(dir: String): Seq[String] = segmentList(dir).segments
+
+  private def stampOf(dir: String, list: SegmentList): Set[Int] =
+    list.covers.getOrElse(throw new IllegalArgumentException(
+      s"positional arm at $dir carries no lineage stamp — rebuild it with " +
+        "PositionalIndex.build over the index corpus"))
+
+  /** Fails loudly unless the arm covers exactly the committed scoring
+    * groups. Driver-side: one listing and one small read, no Spark job.
+    */
+  def requireCurrent(dir: String): Unit = {
+    val covered = stampOf(dir, segmentList(dir))
+    val committed = PackedIndex.committedGroups(dir).toSet
+    require(covered == committed,
+      s"positional arm at $dir is stale: it covers scoring groups " +
+        s"${covered.toSeq.sorted.mkString("[", ",", "]")} of the committed " +
+        s"${committed.toSeq.sorted.mkString("[", ",", "]")} — run " +
+        "PositionalIndex.append for the missed batch (or build to reset)")
+  }
 
   /** Build (or rebuild) the positional arm from the index's full corpus:
-    * one base segment, resetting any appended segments.
+    * one base segment, resetting any appended segments, stamped with every
+    * scoring group committed when the build starts.
     */
   def build(tokenized: DataFrame, dir: String): Unit = {
     val stats = PackedIndex.readStats(dir)
+    val groups = PackedIndex.committedGroups(dir).toSet
     TableIO.write(pack(tokenized, stats.shardBits, stats.blockSize,
       maxShards = PackedIndex.numShardsBound(dir)),
       s"$dir/positions")
-    MetaIO.writeAtomic(s"$dir/positions.list", "positions")
+    commitList(dir, Seq("positions"), groups)
   }
 
   /** Extend the positional arm with NEWLY APPENDED docs only (cost ∝ the
     * batch, like PackedIndex.append): the batch packs into a fresh segment
-    * dir, then the segment list flips atomically — a crash in between
-    * leaves an orphan dir that readers never see and that an append retry
-    * overwrites (the segment id derives from the committed list, so the
-    * retry is idempotent). `newTokenized` must carry the docs' FINAL ids,
-    * i.e. the same offset frame handed to PackedIndex.append.
+    * dir, then the segment list flips atomically, stamping the newest
+    * scoring group covered — a crash in between leaves an orphan dir that
+    * readers never see and that an append retry overwrites (the segment id
+    * derives from the committed list). `newTokenized` must carry the docs'
+    * FINAL ids, i.e. the same offset frame handed to PackedIndex.append,
+    * so the batch is the newest scoring group: the append is refused
+    * unless exactly that group is uncovered, and does nothing once it is
+    * covered (a retry after the flip).
     */
   def append(newTokenized: DataFrame, dir: String): Unit = {
     val stats = PackedIndex.readStats(dir)
-    val segs = segmentList(dir)
-    require(TableIO.committed(s"$dir/${segs.head}"),
+    val list = segmentList(dir)
+    require(TableIO.committed(s"$dir/${list.segments.head}"),
       s"PositionalIndex.append: no committed positional arm at $dir — " +
         "run PositionalIndex.build first")
-    val next = s"positions-a${segs.length}"
+    val covered = stampOf(dir, list)
+    val groups = PackedIndex.committedGroups(dir)
+    val uncovered = groups.filterNot(covered)
+    if (uncovered.isEmpty) return
+    require(uncovered == Seq(groups.last),
+      s"PositionalIndex.append: the arm at $dir misses scoring groups " +
+        s"${uncovered.mkString("[", ",", "]")} and one batch is only the newest " +
+        s"(${groups.last}) — rebuild it with PositionalIndex.build")
+    val next = s"positions-a${list.segments.length}"
     TableIO.write(pack(newTokenized, stats.shardBits, stats.blockSize),
       s"$dir/$next")
-    MetaIO.writeAtomic(s"$dir/positions.list", (segs :+ next).mkString("\n"))
+    commitList(dir, list.segments :+ next, covered + groups.last)
   }
 
   /** True iff `dir` carries a positional arm (segment list or legacy
@@ -168,8 +218,9 @@ object PositionalIndex {
     * rows whose block [base, maxDoc] ranges touch no tombstone pass
     * through HEADER-ONLY; touched rows decode, drop deleted postings, and
     * re-block with the same codec. Ids are preserved, segments collapse to
-    * one, and the arm's per-term posting counts land exactly on the
-    * compacted df table (the staleness gate the query kernel enforces).
+    * one, and the list is stamped with the compacted index's single group
+    * 0, whose manifest [[PackedIndex.compact]] commits after this write
+    * (the caller has checked that the source arm is current).
     */
   private[index] def compactInto(spark: SparkSession, dir: String,
                                  outDir: String,
@@ -208,14 +259,14 @@ object PositionalIndex {
       }
     }
     TableIO.write(repacked.toDF(), s"$outDir/positions")
-    MetaIO.writeAtomic(s"$outDir/positions.list", "positions")
+    commitList(outDir, Seq("positions"), Set(0))
   }
 
   /** Read the positional arm: its committed segments as one relation
     * with the known [[PostingsSchema]]; fails loudly when absent.
     */
   def load(spark: SparkSession, dir: String): Dataset[PosPostings] = {
-    val segs = segmentList(dir).map(s => s"$dir/$s")
+    val segs = segments(dir).map(s => s"$dir/$s")
     segs.foreach(s => require(TableIO.committed(s), s"PositionalIndex.load: segment " +
       s"$s missing/uncommitted — run PositionalIndex.build over the index corpus first"))
     TableIO.read(spark, PostingsSchema, segs: _*).as(Encoders.product[PosPostings])

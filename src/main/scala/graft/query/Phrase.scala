@@ -1,74 +1,21 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Phrase search WITHOUT a positional index — the candidate-then-verify
-  * shape engines use when positions aren't stored (reference analogue:
-  * none; the reference has no phrase operator — this extends the engine's
-  * fulltext surface): conjunctive candidate generation from the inverted
-  * postings (docs containing ALL distinct phrase terms — an aggregation
-  * that kills most of the corpus before any text is touched), then exact
-  * sliding-window adjacency verification over ONLY the candidates' token
-  * arrays (left-semi join; the corpus text is never shuffled).
+/** Phrase, ordered-proximity and NEAR search (reference analogue: none;
+  * the reference has no phrase operator — this extends the engine's
+  * fulltext surface), two ways: WITHOUT a positional index, a conjunctive
+  * `array_contains` prefilter over the tokenized corpus then exact
+  * per-doc verification of the candidates' token arrays (the corpus text
+  * is never shuffled); and from the POSITIONAL index arm alone
+  * ([[search]] and the `*Positional` operators), with identical counts.
   *
   * tf = number of sliding phrase matches (overlaps counted); top-k by
   * (phrase_tf desc, doc_id asc) — deterministic, SQL-expressible, so the
   * whole operator carries an exact DuckDB oracle (q_phrase_topk).
   */
 object Phrase {
-
-  /** Sliding-window occurrence count of `phrase` in a token-array column
-    * (overlapping matches count). Pure declarative Catalyst — the phrase is
-    * a literal, so the whole predicate folds into one codegen'd aggregate
-    * over a per-row sequence.
-    */
-  def phraseCount(terms: Column, phrase: Seq[String]): Column = {
-    require(phrase.nonEmpty, "phraseCount: empty phrase")
-    val L = phrase.length
-    when(size(terms) < L, lit(0L)).otherwise(
-      aggregate(
-        sequence(lit(0), size(terms) - L),
-        lit(0L),
-        (acc, i) => acc + when(
-          phrase.zipWithIndex.map { case (p, j) =>
-            get(terms, i + lit(j)) === lit(p)
-          }.reduce(_ && _), lit(1L)).otherwise(lit(0L))))
-  }
-
-  /** Let-binding for per-term position arrays: each term's sorted position
-    * array is computed ONCE per row and handed to `body`. Catalyst has no
-    * let — a Column spliced into a higher-order-function lambda is
-    * re-evaluated on EVERY lambda invocation, so the window-count folds
-    * below would otherwise re-filter the whole token array per anchor
-    * position (O(len^2 x terms) per doc, measured as the dominant cost of
-    * the proximity/NEAR rescan paths). A transform over a singleton struct
-    * array evaluates the captured arrays exactly once.
-    */
-  private def withPositions(termsCol: Column, terms: Seq[String])(
-      body: Seq[Column] => Column): Column = {
-    val idx = sequence(lit(1), size(termsCol))
-    val arrays = struct(terms.zipWithIndex.map { case (t, i) =>
-      filter(idx, j => get(termsCol, j - 1) === lit(t)).as(s"p$i")
-    }: _*)
-    element_at(transform(array(arrays), s =>
-      body(terms.indices.map(i => s.getField(s"p$i")))), 1)
-  }
-
-  /** Ordered proximity count: number of (p, q) occurrence pairs with
-    * `a` at p, `b` at q, and 0 < q - p <= slop (an ordered within-window
-    * co-occurrence count; slop = 1 degenerates to the bigram phrase count).
-    * Declarative Catalyst like [[phraseCount]] — SQL-expressible, so the
-    * operator carries an exact DuckDB oracle (nested list lambdas).
-    */
-  def proximityCount(terms: Column, a: String, b: String, slop: Int): Column = {
-    require(slop >= 1, "proximityCount: slop must be >= 1")
-    when(size(terms) < 1, lit(0L)).otherwise(
-      withPositions(terms, Seq(a, b)) { case Seq(posA, posB) =>
-        aggregate(posA, lit(0L), (acc, p) =>
-          acc + size(filter(posB, q => q > p && q <= p + lit(slop))).cast("long"))
-      })
-  }
 
   /** Top-k docs by ordered proximity count (corpus-rescan verify path —
     * the positional-index sibling is [[proximityTopKPositional]]).
@@ -123,29 +70,6 @@ object Phrase {
       cnt
   }
 
-  /** Unordered multi-term proximity (the standard NEAR/n operator): count
-    * of occurrences p of `terms.head` (the anchor term) such that EVERY
-    * other term has an occurrence within `slop` tokens of p in EITHER
-    * direction (|q - p| <= slop). slop >= 1; terms must be distinct and
-    * >= 2 (positions of distinct terms can never coincide, so q != p is
-    * automatic). Declarative Catalyst like [[phraseCount]]/[[proximityCount]]
-    * — SQL-expressible, so the operator carries an exact DuckDB oracle.
-    */
-  def nearCount(termsCol: Column, terms: Seq[String], slop: Int): Column = {
-    require(slop >= 1, "nearCount: slop must be >= 1")
-    require(terms.length >= 2 && terms.distinct == terms,
-      "nearCount: need >= 2 distinct terms")
-    when(size(termsCol) < 1, lit(0L)).otherwise(
-      withPositions(termsCol, terms) { ps =>
-        aggregate(ps.head, lit(0L), (acc, p) =>
-          acc + when(
-            ps.tail.map(pt =>
-              exists(pt, q => q >= p - slop && q <= p + slop))
-              .reduce(_ && _),
-            lit(1L)).otherwise(lit(0L)))
-      })
-  }
-
   /** Top-k docs by unordered NEAR count (corpus-rescan verify path — the
     * positional-index sibling is [[nearTopKPositional]]; candidates as in
     * [[proximityTopK]]).
@@ -196,45 +120,6 @@ object Phrase {
         i += 1
       }
       cnt
-  }
-
-  /** Docs whose postings contain EVERY distinct phrase term (conjunctive
-    * candidate set). The term IN-filter pushes to the postings source; the
-    * aggregation emits doc ids only.
-    */
-  def candidates(postings: DataFrame, phrase: Seq[String]): DataFrame = {
-    val distinctTerms = phrase.distinct
-    postings.filter(col("term").isin(distinctTerms: _*))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("term")).as("nt"))
-      .filter(col("nt") === distinctTerms.size)
-      .select(col("doc_id"))
-  }
-
-  /** Conjunctive candidates straight from a PACKED index dir: the term
-    * IN-filter pushes to the postings parquet, block headers prune nothing
-    * here (all blocks of a matching term decode), but only the phrase
-    * terms' lists are ever read — the production shape for phrase search
-    * against the stored index. Honors tombstones.
-    */
-  def candidatesPacked(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, phrase: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val distinctTerms = phrase.distinct
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
-    val bcTomb = spark.sparkContext.broadcast(tomb)
-    val pairs = graft.index.PackedIndex.loadPostings(spark, indexDir)
-      .filter(col("term").isin(distinctTerms: _*))
-      .flatMap { pp =>
-        val t = bcTomb.value
-        pp.blocks.iterator.flatMap(_.toCodec.decodeDocIds.iterator)
-          .filter(d => java.util.Arrays.binarySearch(t, d) < 0)
-          .map(d => (d, pp.term))
-      }.toDF("doc_id", "term")
-    pairs.groupBy(col("doc_id"))
-      .agg(countDistinct(col("term")).as("nt"))
-      .filter(col("nt") === distinctTerms.size)
-      .select(col("doc_id"))
   }
 
   /** Top-k docs by sliding phrase count. `tokenized` is (doc_id, terms);
@@ -359,41 +244,6 @@ object Phrase {
       cnt
   }
 
-  /** Positional rows for `distinctTerms` behind the staleness gate: a
-    * queried term whose positional posting count no longer matches the
-    * scoring df table means the arm missed an append — fail loudly. df
-    * lookups ride the same version-invalidated cache the WAND serving path
-    * uses (no per-query df scan for bounded vocabularies). Returns the
-    * term-filtered positional rows plus df per queried term.
-    */
-  private def loadGated(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, distinctTerms: Seq[String]):
-      (org.apache.spark.sql.Dataset[graft.index.PosPostings], Map[String, Long]) = {
-    val dfCounts: Map[String, Long] =
-      IndexCache.dfMap(spark, indexDir) match {
-        case Some(full) =>
-          distinctTerms.iterator.flatMap(t => full.get(t).map(t -> _)).toMap
-        case None =>
-          graft.index.PackedIndex.loadDf(spark, indexDir)
-            .filter(col("term").isin(distinctTerms: _*))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-    val posRows = graft.index.PositionalIndex.load(spark, indexDir)
-      .filter(col("term").isin(distinctTerms: _*))
-    val posCounts = posRows.groupBy(col("term"))
-      .agg(sum(col("nPostings")).as("np"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    distinctTerms.foreach { t =>
-      val want = dfCounts.getOrElse(t, 0L)
-      val got = posCounts.getOrElse(t, 0L)
-      require(got == want,
-        s"Phrase: positional arm is stale for term '$t' " +
-          s"($got positional postings vs df=$want) — run " +
-          "PositionalIndex.append for the missed batch (or build to reset)")
-    }
-    (posRows, dfCounts)
-  }
-
   /** Batched positional serving — the Retriever-shaped entry point: many
     * [[PositionalQuery]] specs answered in ONE pass over the positional
     * arm. Returns (query_id, doc_id, score, rank), score = the query's
@@ -407,22 +257,26 @@ object Phrase {
     * shared by all queries touching it; matches go straight into the
     * task's heap per query ([[ShardServe.kernelHits]]), so the final
     * per-query rank window sees <= numTasks x k rows — matched-doc counts
-    * never materialize globally.
+    * never materialize globally. A query naming a term the arm lacks
+    * matches nothing (the shard kernel skips it).
+    *
+    * An arm that missed an append fails loudly on its lineage stamp
+    * ([[graft.index.PositionalIndex.requireCurrent]], checked on the
+    * driver), so a warm call runs only its two query jobs: the shard
+    * shuffle and the result (plus the rank window's shuffle on a
+    * multi-shard index).
     */
   def search(spark: org.apache.spark.sql.SparkSession, indexDir: String,
              queries: Seq[(Long, PositionalQuery)], k: Int): DataFrame = {
     require(k > 0, "Phrase.search: k must be > 0")
-    lazy val none = ShardServe.globalRank(ShardServe.emptyHits(spark), k)
-    if (queries.isEmpty) return none
+    if (queries.isEmpty) return ShardServe.globalRank(ShardServe.emptyHits(spark), k)
+    graft.index.PositionalIndex.requireCurrent(indexDir)
     val allTerms = queries.flatMap(_._2.slotTerms).distinct
-    val (posRows, dfCounts) = loadGated(spark, indexDir, allTerms)
-    // conjunctive semantics: a query naming an unindexed term matches nothing
-    val live = queries.filter(
-      _._2.slotTerms.forall(t => dfCounts.getOrElse(t, 0L) > 0L)).toArray
-    if (live.isEmpty) return none
+    val posRows = graft.index.PositionalIndex.load(spark, indexDir)
+      .filter(col("term").isin(allTerms: _*))
     val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
     val bcTomb = spark.sparkContext.broadcast(tomb)
-    val bcQueries = spark.sparkContext.broadcast(live)
+    val bcQueries = spark.sparkContext.broadcast(queries.toArray)
     val grouped = ShardServe.shardPartitioned(spark, indexDir, posRows)
     val hits = ShardServe.kernelHits(spark, grouped, k,
       () => bcQueries.value.map(_._1))(_.shard) { (rows, heaps) =>

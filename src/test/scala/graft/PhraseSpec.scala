@@ -20,8 +20,8 @@ class PhraseSpec extends SparkSpec {
       2L -> "b a",          // "a b" -> 0, "a a" -> 0
       3L -> "a")            // shorter than any 2-gram
     val counts = t.select(col("doc_id"),
-        Phrase.phraseCount(col("terms"), Seq("a", "a")).as("aa"),
-        Phrase.phraseCount(col("terms"), Seq("a", "b")).as("ab"))
+        PhraseOracle.phraseCount(col("terms"), Seq("a", "a")).as("aa"),
+        PhraseOracle.phraseCount(col("terms"), Seq("a", "b")).as("ab"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(counts(0L) == ((2L, 0L)))
     assert(counts(1L) == ((0L, 2L)))
@@ -36,7 +36,7 @@ class PhraseSpec extends SparkSpec {
       2L -> "table only here",      // missing 'scan' -> pruned pre-verify
       3L -> "scan table scan table scan") // 'table scan' x2
     val post = InvertedIndex.postings(t)
-    assert(Phrase.candidates(post, Seq("table", "scan"))
+    assert(PhraseOracle.candidates(post, Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet == Set(0L, 1L, 3L))
     val hits = Phrase.topK(t, Seq("table", "scan"), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -52,13 +52,13 @@ class PhraseSpec extends SparkSpec {
       3L -> "scan table scan table scan")
     val dir = scratchDir("phrase-idx")
     graft.index.PackedIndex.build(t, dir, shardBits = 1, groups = 2)
-    val flat = Phrase.candidates(InvertedIndex.postings(t), Seq("table", "scan"))
+    val flat = PhraseOracle.candidates(InvertedIndex.postings(t), Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet
-    val packed = Phrase.candidatesPacked(spark, dir, Seq("table", "scan"))
+    val packed = PhraseOracle.candidatesPacked(spark, dir, Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet
     assert(packed == flat)
     graft.index.PackedIndex.delete(dir, Seq(3L))
-    val afterDel = Phrase.candidatesPacked(spark, dir, Seq("table", "scan"))
+    val afterDel = PhraseOracle.candidatesPacked(spark, dir, Seq("table", "scan"))
       .collect().map(_.getLong(0)).toSet
     assert(afterDel == flat - 3L)
   }
@@ -72,7 +72,7 @@ class PhraseSpec extends SparkSpec {
     val t = tok(docs: _*)
     for (phrase <- Seq(Seq("a"), Seq("a", "b"), Seq("b", "b"), Seq("a", "b", "a"))) {
       val got = t.select(col("doc_id"),
-          Phrase.phraseCount(col("terms"), phrase).as("c"))
+          PhraseOracle.phraseCount(col("terms"), phrase).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       docs.foreach { case (id, text) =>
         val toks = text.split(" ").filter(_.nonEmpty)
@@ -210,6 +210,7 @@ class PhraseSpec extends SparkSpec {
       "table", "scan", slop = 3, k = 500))
     assert(gotProx == wantProx)
     // lifecycle still composes AFTER compaction: append above the watermark
+    // to both arms (the compacted arm is stamped with its single group 0)
     val next = graft.index.PackedIndex.committedDocs(outDir)
     val late = tok(next -> "table scan z")
     graft.index.PackedIndex.append(late, outDir)
@@ -218,6 +219,8 @@ class PhraseSpec extends SparkSpec {
     val afterAppend = rows(Phrase.topKPositional(spark, outDir,
       Seq("table", "scan"), 500))
     assert(afterAppend.exists(_._1 == next), s"appended doc missing: $afterAppend")
+    assert(afterAppend.map(r => r._1 -> r._2) ==
+      wantPhrase.map(r => r._1 -> r._2) + (next -> 1L))
   }
 
   test("positional append: orphan segment dirs are invisible until the list flips") {
@@ -237,7 +240,56 @@ class PhraseSpec extends SparkSpec {
     val after = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
       .collect().map(_.getLong(0)).toSet
     assert(after == before, "orphan positional segment leaked into results")
-    assert(graft.io.MetaIO.readString(s"$dir/positions.list").trim == "positions")
+    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions"))
+  }
+
+  test("positional append behind two missed scoring appends fails loudly") {
+    val dir = scratchDir("posmissed")
+    graft.index.PackedIndex.build(tok(0L -> "table scan a"), dir, shardBits = 2, groups = 1)
+    graft.index.PositionalIndex.build(tok(0L -> "table scan a"), dir)
+    val first = tok(1L -> "b table scan")
+    val second = tok(2L -> "table scan c")
+    graft.index.PackedIndex.append(first, dir)
+    graft.index.PackedIndex.append(second, dir)
+    // catching up with only the latest batch would stamp group 1 covered
+    val ex = intercept[IllegalArgumentException] {
+      graft.index.PositionalIndex.append(second, dir)
+    }
+    assert(ex.getMessage.contains("misses scoring groups [1,2]"), ex.getMessage)
+    assert(ex.getMessage.contains("PositionalIndex.build"), ex.getMessage)
+    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions"))
+    assert(intercept[IllegalArgumentException] {
+      Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10).collect()
+    }.getMessage.contains("stale"))
+  }
+
+  test("a retried positional append leaves one segment, not two") {
+    val dir = scratchDir("posretry")
+    graft.index.PackedIndex.build(tok(0L -> "table scan a"), dir, shardBits = 2, groups = 1)
+    graft.index.PositionalIndex.build(tok(0L -> "table scan a"), dir)
+    val extra = tok(1L -> "table scan table scan")
+    graft.index.PackedIndex.append(extra, dir)
+    graft.index.PositionalIndex.append(extra, dir)
+    graft.index.PositionalIndex.append(extra, dir) // the batch is already covered
+    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions", "positions-a1"))
+    val hits = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(hits == Map(0L -> 1L, 1L -> 2L))
+  }
+
+  test("an arm whose segment list carries no lineage stamp fails loudly and names the rebuild") {
+    val t = tok(0L -> "table scan a", 1L -> "b table scan")
+    val dir = scratchDir("posnostamp")
+    graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
+    graft.index.PositionalIndex.build(t, dir)
+    graft.io.MetaIO.writeAtomic(s"$dir/positions.list", "positions") // written before stamps
+    for (run <- Seq[() => Unit](
+        () => Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10).collect(),
+        () => graft.index.PositionalIndex.append(tok(2L -> "c"), dir))) {
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.contains("no lineage stamp") &&
+        ex.getMessage.contains("PositionalIndex.build"), ex.getMessage)
+    }
   }
 
   test("proximityCount: ordered window pairs, hand-computed goldens") {
@@ -247,12 +299,12 @@ class PhraseSpec extends SparkSpec {
       2L -> "a x x x b",     // gap 4 > slop 3 -> 0
       3L -> "a b b b")       // a@1, b@2,3,4: gaps 1,2,3 -> 3
     val got = t.select(col("doc_id"),
-        Phrase.proximityCount(col("terms"), "a", "b", slop = 3).as("c"))
+        PhraseOracle.proximityCount(col("terms"), "a", "b", slop = 3).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 2L, 1L -> 0L, 2L -> 0L, 3L -> 3L))
     // same-term proximity: pairs of occurrences within the window
     val same = t.select(col("doc_id"),
-        Phrase.proximityCount(col("terms"), "b", "b", slop = 3).as("c"))
+        PhraseOracle.proximityCount(col("terms"), "b", "b", slop = 3).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(same(0L) == 1L && same(3L) == 3L) // b@3,6 gap3 -> 1; b@2,3,4 -> 3
   }
@@ -296,12 +348,12 @@ class PhraseSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val t = graft.index.InvertedIndex.tokenize(docs, "doc_id", "text")
     val got = t.select(col("doc_id"),
-      Phrase.nearCount(col("terms"), Seq("table", "scan", "query"), slop = 3).as("c"))
+      PhraseOracle.nearCount(col("terms"), Seq("table", "scan", "query"), slop = 3).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 1L, 1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 0L), s"got $got")
     // direction-insensitivity: slop 5 brings doc 1's scan into range
     val wide = t.select(col("doc_id"),
-      Phrase.nearCount(col("terms"), Seq("table", "scan"), slop = 5).as("c"))
+      PhraseOracle.nearCount(col("terms"), Seq("table", "scan"), slop = 5).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wide(1L) == 1L)
   }

@@ -2,7 +2,7 @@ package graft
 
 import graft.index.{InvertedIndex, PackedIndex, PositionalIndex}
 import graft.io.MetaIO
-import graft.query.{IndexCache, Phrase, PositionalQuery, Wand}
+import graft.query.{IndexCache, Phrase, PositionalMode, PositionalQuery, Wand}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -52,28 +52,40 @@ object MultiGroupIndex {
   * committed group: a `Wand.search` at a warm df cache costs its query
   * jobs only, the same at 4 and at 6 committed groups. Those are the shard
   * shuffle and the result on a one-shard index; a multi-shard index adds
-  * the rank window's shuffle.
+  * the rank window's shuffle. A phrase batch costs the same query jobs:
+  * the positional arm's currency is a driver-side stamp check, not a job.
   */
 class ReadJobsSpec extends SparkSpec {
 
-  /** Records each job's group and stage names. The bus delivers events in
-    * order, so once a fence job's start is seen every earlier start is.
+  /** Stage names of one job, and whether it ran inside a SQL execution
+    * (staging writes do; a schema-inference job is a bare RDD job).
+    */
+  private final case class Job(stages: Seq[String], sql: Boolean)
+
+  /** Records each job's group, stage names and SQL execution. The bus
+    * delivers events in order, so once a fence job's start is seen every
+    * earlier start is.
     */
   private object Jobs extends SparkListener {
-    private val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
+    private val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Job)]
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val group = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
-      seen += group -> e.stageInfos.map(_.name)
+      def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+      seen += prop("spark.jobGroup.id").orNull ->
+        Job(e.stageInfos.map(_.name), prop("spark.sql.execution.id").isDefined)
     }
-    def of(group: String): Seq[Seq[String]] = synchronized {
-      seen.collect { case (g, stages) if g == group => stages }.toSeq
+    def of(group: String): Seq[Job] = synchronized {
+      seen.collect { case (g, job) if g == group => job }.toSeq
     }
   }
   private var probes = 0
 
-  /** Stage names of every job `body` runs, one entry per job. */
-  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
+  private def listening(body: => Unit): Unit = {
+    spark.sparkContext.addSparkListener(Jobs)
+    try body finally spark.sparkContext.removeSparkListener(Jobs)
+  }
+
+  /** Every job `body` runs, in start order. */
+  private def jobsOf(body: => Unit): Seq[Job] = {
     val sc = spark.sparkContext
     probes += 1
     val group = s"probe-$probes"
@@ -88,27 +100,35 @@ class ReadJobsSpec extends SparkSpec {
     Jobs.of(group)
   }
 
-  private def schemaJobs(jobs: Seq[Seq[String]]): Seq[String] =
-    jobs.flatten.filter(_.startsWith("parquet at"))
+  private def schemaJobs(jobs: Seq[Job]): Seq[String] =
+    jobs.flatMap(_.stages).filter(_.startsWith("parquet at"))
 
-  /** Jobs of one warm `Wand.search` at 4 groups and after two appends. */
-  private def searchJobs(shardBits: Int): (Seq[Seq[String]], Seq[Seq[String]]) = {
+  /** Jobs of each of `runs` once warm, on a fresh index at 4 groups and
+    * again after two appends to both arms: (at 4, at 6) per run.
+    */
+  private def jobsAt4And6(shardBits: Int)(runs: (String => Unit)*): Seq[(Seq[Job], Seq[Job])] = {
     val dir = scratchDir("readjobs")
     MultiGroupIndex.build(spark, dir, shardBits)
     IndexCache.invalidateAll()
-    def search(): Unit = { Wand.search(spark, dir, MultiGroupIndex.Queries, 10).collect(); () }
-    search() // warms the df cache
-    val at4 = jobsOf(search())
+    def warmJobs(): Seq[Seq[Job]] = {
+      runs.foreach(_(dir)) // warms the df cache
+      runs.map(run => jobsOf(run(dir)))
+    }
+    val at4 = warmJobs()
     MultiGroupIndex.append(spark, dir, 200)
     MultiGroupIndex.append(spark, dir, 220)
     assert(MetaIO.list(s"$dir/manifest").count(_.startsWith("group-")) == 6)
-    search()
-    (at4, jobsOf(search()))
+    at4.zip(warmJobs())
   }
 
+  /** Jobs of one warm `Wand.search` at 4 groups and after two appends. */
+  private def searchJobs(shardBits: Int): (Seq[Job], Seq[Job]) =
+    jobsAt4And6(shardBits) { dir =>
+      Wand.search(spark, dir, MultiGroupIndex.Queries, 10).collect(); ()
+    }.head
+
   test("a warm small read runs the same jobs at 4 and 6 groups, and no parquet schema job") {
-    spark.sparkContext.addSparkListener(Jobs)
-    try {
+    listening {
       for ((shardBits, bound) <- Seq(0 -> 2, 4 -> 3)) {
         val (at4, at6) = searchJobs(shardBits)
         assert(schemaJobs(at4 ++ at6).isEmpty, s"schema jobs in Wand.search: $at4 / $at6")
@@ -128,6 +148,43 @@ class ReadJobsSpec extends SparkSpec {
       val batch = spark.createDataFrame(MultiGroupIndex.Queries).toDF("query_id", "text")
       val chunk = jobsOf(Wand.searchDs(spark, dir, batch, 10, chunkSize = 100).collect())
       assert(schemaJobs(chunk).isEmpty, s"schema jobs in one searchDs chunk: $chunk")
-    } finally spark.sparkContext.removeSparkListener(Jobs)
+    }
+  }
+
+  test("a warm phrase batch runs only its query jobs, in Phrase.search and a one-chunk searchDs") {
+    val phrases = Seq(MultiGroupIndex.PhraseTerms, Seq("the", "w3"), Seq("w7", "of", "w8"))
+    val batch = spark.createDataFrame(phrases.zipWithIndex.map { case (p, i) =>
+      i.toLong -> p.mkString(" ") }).toDF("query_id", "text")
+    listening {
+      for ((shardBits, bound) <- Seq(0 -> 2, 4 -> 3)) {
+        val Seq((search4, search6), (ds4, ds6)) = jobsAt4And6(shardBits)(
+          dir => {
+            Phrase.search(spark, dir, phrases.zipWithIndex.map { case (p, i) =>
+              i.toLong -> PositionalQuery.PhraseMatch(p) }, 10).collect(); ()
+          },
+          dir => {
+            Phrase.searchDs(spark, dir, batch, PositionalMode.PhraseMode, 10).collect(); ()
+          })
+        for ((name, jobs) <- Seq("search at 4" -> search4, "search at 6" -> search6,
+            "searchDs at 4" -> ds4, "searchDs at 6" -> ds6))
+          assert(jobs.size <= bound, s"Phrase.$name groups ran ${jobs.size} jobs: $jobs")
+        assert(Seq(search6, ds4, ds6).forall(_.size == search4.size),
+          s"phrase job counts differ: $search4 / $search6 / $ds4 / $ds6")
+      }
+    }
+  }
+
+  test("a 2-chunk searchDs reads its staged tables without a schema-inference job") {
+    val dir = scratchDir("readjobs-chunks")
+    MultiGroupIndex.build(spark, dir)
+    val batch = spark.createDataFrame((1L to 40L).map(i =>
+      i -> s"w$i w${(i * 7) % 200} the")).toDF("query_id", "text")
+    listening {
+      val jobs = jobsOf(Wand.searchDs(spark, dir, batch, 10, chunkSize = 20).collect())
+      assert(jobs.exists(_.stages.exists(_.startsWith("parquet at"))),
+        s"no staging write seen: the batch did not stage: $jobs")
+      val bare = schemaJobs(jobs.filterNot(_.sql))
+      assert(bare.isEmpty, s"schema-inference jobs in a 2-chunk searchDs: $bare")
+    }
   }
 }

@@ -30,7 +30,7 @@ class TableSchemaSpec extends SparkSpec {
     PackedIndex.compact(spark, dir, out)
     for (d <- Seq(dir, out)) {
       val groups = MetaIO.list(s"$d/postings").filter(_.startsWith("grp="))
-      val segments = MetaIO.readString(s"$d/positions.list").split("\n").toSeq
+      val segments = PositionalIndex.segments(d)
       assert(groups.nonEmpty && segments.nonEmpty)
       groups.foreach(g => assert(shape(inferred(s"$d/postings/$g")) ==
         shape(PackedIndex.PostingsSchema), s"$d/postings/$g"))
@@ -75,7 +75,7 @@ class TableSchemaSpec extends SparkSpec {
     MultiGroupIndex.append(spark, dir, 200)
     MultiGroupIndex.append(spark, dir, 220)
     val groups = MetaIO.list(s"$dir/postings").filter(_.startsWith("grp=")).sorted
-    val segments = MetaIO.readString(s"$dir/positions.list").split("\n").toSeq
+    val segments = PositionalIndex.segments(dir)
     assert(groups.size == 6 && segments.size == 3)
 
     // the reference index holds the union read's rows as its only
@@ -91,7 +91,8 @@ class TableSchemaSpec extends SparkSpec {
     val positionsUnion = unionRead(segments.map(s => s"$dir/$s")).as[PosPostings]
     assert(canonPos(PositionalIndex.load(spark, dir)) == canonPos(positionsUnion))
     TableIO.write(positionsUnion.toDF(), s"$ref/positions")
-    MetaIO.writeAtomic(s"$ref/positions.list", "positions")
+    MetaIO.writeAtomic(s"$ref/positions.list",
+      s"covers=${PackedIndex.committedGroups(ref).mkString(",")}\npositions")
 
     def answers(d: String): Seq[Seq[Seq[Any]]] = {
       IndexCache.invalidateAll()

@@ -247,7 +247,7 @@ object Bench {
     // filtered query-only on the same index (every 10th doc allowed):
     // evidences the allowlist-advance path — selective filters should be
     // at or below the unfiltered wall, never above
-    val wandDocN = index.PackedIndex.readStats(wandDir).n
+    val wandDocN = index.PackedIndex.snapshot(wandDir).stats.n
     val allowTenth = (0L until wandDocN by 10L).toArray
     val wandFilteredSec = timed(query.Wand.search(spark, wandDir,
       Seq(0L -> DocsCorpus.fixedQuery.mkString(" ")), k = 200,

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.{MetaIO, TableIO}
+import graft.index.PackedIndex
 
 /** PERSISTED IVF index — the dense sibling of the packed BM25 index:
   * build/train once, serve many query batches from storage (reference
@@ -266,7 +267,7 @@ object IvfIndex {
     * range check exists the way it does for the dense BM25 doc ids).
     */
   def delete(spark: SparkSession, dir: String, vecIds: Seq[Long],
-             maxTombstones: Int = graft.index.PackedIndex.MaxTombstones): Unit = {
+             maxTombstones: Int = PackedIndex.MaxTombstones): Unit = {
     import spark.implicits._
     val holes = loadHoles(dir)
     val live = vecIds.distinct
@@ -330,16 +331,11 @@ object IvfIndex {
   }
 
   def loadTombstones(dir: String): Array[Long] =
-    readIds(s"$dir/tombstones.txt")
+    PackedIndex.readIdFile(s"$dir/tombstones.txt")
 
   /** Sorted vec_ids physically removed by past compactions. */
   def loadHoles(dir: String): Array[Long] =
-    readIds(s"$dir/holes.txt")
-
-  private def readIds(path: String): Array[Long] =
-    if (!MetaIO.exists(path)) Array.empty[Long]
-    else MetaIO.readString(path).split("\n").iterator
-      .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray
+    PackedIndex.readIdFile(s"$dir/holes.txt")
 
   // ---- internals -------------------------------------------------------
 
@@ -413,12 +409,7 @@ object IvfIndex {
     s"""{"nCells":$nCells,"dim":$dim,"nVecs":$nVecs,"storage":"$storage"}"""
 
   private[graft] def readStats(dir: String): Map[String, String] =
-    MetaIO.readString(s"$dir/ivf.json").trim
-      .stripPrefix("{").stripSuffix("}").split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        k.trim.stripPrefix("\"").stripSuffix("\"") ->
-          v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
+    PackedIndex.readJsonFlat(MetaIO.readString(s"$dir/ivf.json"))
 
   private def statLong(stats: Map[String, String], key: String): Long =
     stats(key).toLong

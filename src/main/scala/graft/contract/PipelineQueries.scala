@@ -67,8 +67,8 @@ object PipelineQueries {
     // plan (summaryFused) — the five-pass summary() ran ~10 driver-blocking
     // jobs for the same five values; both plans round identically at the
     // oracle's 6 decimals on every contract SF (verified bitwise vs DuckDB),
-    // and the five-pass reference-shaped path stays covered by
-    // RankMetrics.summary + MetricsSpec.
+    // and the five-pass reference-shaped path stays covered as MetricsSpec's
+    // oracle.
     "q_metrics" -> ((s, dir) => {
       val r = rankingFixture(s, dir)
       val q = qrels(s, dir)

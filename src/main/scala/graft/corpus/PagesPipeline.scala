@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Bm25Params
 import graft.extract.HtmlText
 import graft.index.{DocIds, InvertedIndex, PackedIndex}
-import graft.io.{MetaIO, TableIO}
+import graft.io.TableIO
 
 /** The full north-rule pipeline over the pages table:
   * pages -> byte-identical extraction -> dense docIds -> tokenize ->
@@ -62,19 +62,17 @@ object PagesPipeline {
     */
   def appendPages(newPages: DataFrame, dir: String): PackedIndex.GroupManifest = {
     val spark = newPages.sparkSession
-    // manifest-derived (NOT stats.json): a retried append after a crash
-    // between the stats and manifest commits must offset new docIds by the
-    // pre-append corpus size, not the already-bumped stats value
-    val existingN = PackedIndex.committedDocs(dir)
-    val grp = 1 + MetaIO.list(s"$dir/manifest").iterator
-      .collect { case nm if nm.startsWith("group-") && nm.endsWith(".json") =>
-        nm.stripPrefix("group-").stripSuffix(".json").toInt
-      }.foldLeft(-1)(math.max)
-    val rawPath = s"$dir/docs_raw_append_$grp"
+    // one snapshot names the staging group and offsets the ids, and the
+    // append commits onto it. Ids come from the manifests (NOT stats.json):
+    // a retried append after a crash between the stats and manifest
+    // commits must offset new docIds by the pre-append corpus size, not
+    // the already-bumped stats value
+    val snap = PackedIndex.snapshot(dir)
+    val rawPath = s"$dir/docs_raw_append_${snap.nextGroup}"
     if (!TableIO.committed(rawPath)) TableIO.write(extracted(newPages), rawPath)
     val raw = TableIO.read(spark, rawPath)
     val withIds = DocIds.assignDense(raw)
-      .withColumn("doc_id", org.apache.spark.sql.functions.col("doc_id") + existingN)
-    PackedIndex.append(tokenized(withIds), dir)
+      .withColumn("doc_id", col("doc_id") + snap.nextDocId)
+    PackedIndex.append(tokenized(withIds), snap)
   }
 }

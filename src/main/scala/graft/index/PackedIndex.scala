@@ -37,6 +37,68 @@ final case class IndexStats(
   }
 }
 
+/** One committed version of a packed index, as [[PackedIndex.snapshot]]
+  * read it. Every field comes from that one read, so a call that takes one
+  * snapshot scores, filters and shards against a single version.
+  *
+  * How long a version stays readable: committed groups and their postings
+  * are never rewritten, and an append keeps the df dir it supersedes
+  * until the append after it. So a snapshot serves correctly across one
+  * later append and any number of deletes; tombstones are the snapshot's
+  * own. A positional arm stamped past the snapshot's groups fails loudly
+  * ([[PositionalIndex.load]]).
+  *
+  * @param manifests the committed groups' manifests, ascending by group
+  * @param watermark a compacted index's id high-water mark (watermark.json)
+  * @param tombstones sorted deleted-but-unpurged doc ids
+  * @param holes sorted ids a past compaction removed (compacted dirs only)
+  */
+final class IndexSnapshot private[index] (
+    val dir: String, val stats: IndexStats, val dfDir: String,
+    val manifests: Seq[PackedIndex.GroupManifest], val watermark: Option[Long],
+    val tombstones: Array[Long], val holes: Array[Long]) {
+
+  /** Ids of the committed groups, ascending. */
+  def groups: Seq[Int] = manifests.map(_.group)
+
+  /** The group id the next append commits. */
+  def nextGroup: Int = groups.lastOption.fold(0)(_ + 1)
+
+  /** The dense doc-id high-water mark (next free doc id): the sum of the
+    * manifest docs (stats.json may be mid-commit after a crash; manifests
+    * are the commit markers) — except on a COMPACTED index, which holds
+    * fewer docs than its highest surviving id + 1, so its persisted
+    * watermark wins: ids are never reused (a reused id would resurrect
+    * under stale external references).
+    */
+  def nextDocId: Long = watermark.getOrElse(manifests.map(_.docs).sum)
+
+  /** Upper bound on the distinct shard count: ids lie in [0, nextDocId), so
+    * shard = doc_id >> shardBits never exceeds it. Stages keyed on `shard`
+    * cap their partition counts here — a hash partitioner on `shard`
+    * cannot fill more partitions than distinct shards (r7).
+    */
+  def numShards: Int =
+    (math.max(math.max(nextDocId, 1L) - 1, 0L) >> stats.shardBits).toInt + 1
+
+  /** The committed groups' packed postings as ONE relation of the known
+    * [[PackedIndex.PostingsSchema]], so no read infers a schema. Groups
+    * come from the manifests (the commit markers), not a listing of
+    * postings/: a crashed append's orphan grp=N dir is never served. Past
+    * 32 groups (Spark's parallel partition discovery threshold) listing
+    * them is a Spark job; [[PackedIndex.compact]] folds them to one.
+    */
+  def postings(spark: SparkSession): Dataset[PackedPostings] = {
+    require(manifests.nonEmpty, s"IndexSnapshot: no committed groups at $dir")
+    TableIO.read(spark, PackedIndex.PostingsSchema,
+      groups.map(g => s"$dir/postings/grp=$g"): _*).as(Encoders.product[PackedPostings])
+  }
+
+  /** The snapshot's df table as (term, df). */
+  def df(spark: SparkSession): DataFrame =
+    TableIO.read(spark, PackedIndex.DfSchema, s"$dir/$dfDir")
+}
+
 /** Build + store of the packed inverted index.
   *
   * Layout under `dir/`:
@@ -52,6 +114,11 @@ final case class IndexStats(
   *   tombstones.txt                      sorted deleted-but-unpurged ids
   *   watermark.json / holes.txt          (compacted dirs) original id
   *                                       high-water mark + dead-id ledger
+  *
+  * Every reader of that committed state — queries, the positional arm,
+  * append/compact/delete — goes through [[snapshot]], which reads each of
+  * these sidecars once and serves one version from the result
+  * ([[IndexSnapshot]]).
   *
   * All sidecars go through [[graft.io.MetaIO]]; tables through
   * [[graft.io.TableIO]] — no direct driver-local filesystem access, so
@@ -401,10 +468,15 @@ object PackedIndex {
     *                     existing corpus size (see
     *                     [[graft.corpus.PagesPipeline.appendPages]]).
     */
-  def append(newTokenized: DataFrame, dir: String): GroupManifest = {
+  def append(newTokenized: DataFrame, dir: String): GroupManifest =
+    append(newTokenized, snapshot(dir))
+
+  /** [[append]] onto the committed version `snap` (the caller's own read). */
+  private[graft] def append(newTokenized: DataFrame, snap: IndexSnapshot): GroupManifest = {
     val spark = newTokenized.sparkSession
-    val old = readStats(dir)
-    val manifests = listManifests(dir)
+    val dir = snap.dir
+    val old = snap.stats
+    val manifests = snap.manifests
     // pre-append totals from committed manifests only (idempotent on retry)
     val oldN = manifests.map(_.docs).sum
     val oldSumDl = manifests.map(_.sumDl).sum
@@ -426,15 +498,14 @@ object PackedIndex {
     // GC df dirs superseded by earlier appends (the CURRENT live dir is
     // never touched; the one superseded by THIS append survives until the
     // next one, giving in-flight readers a full append-cycle of grace)
-    val live = readDfDir(dir)
     MetaIO.list(dir).iterator
-      .filter(name => name != live &&
+      .filter(name => name != snap.dfDir &&
         (name == "df" || name.startsWith("df-g")) && !name.endsWith(".tmp"))
       .foreach(name => MetaIO.deleteRecursively(s"$dir/$name"))
     val n = oldN + nNew
     require(n > 0, s"append: index at $dir would still hold 0 docs")
     val avgdl = (oldSumDl + newSumDl).toDouble / n
-    val nextGroup = 1 + manifests.map(_.group).foldLeft(-1)(math.max)
+    val nextGroup = snap.nextGroup
 
     val t0 = System.nanoTime()
     val counters = new PackCounters(spark)
@@ -459,82 +530,51 @@ object PackedIndex {
     val man = GroupManifest(nextGroup, counters.terms.value,
       counters.postings.value, counters.bytes.value,
       (System.nanoTime() - t0) / 1e6, nNew, newSumDl)
-    // a compacted index carries an id watermark (see committedDocs):
-    // advance it BEFORE the manifest commit — a crash in between makes a
-    // retried append re-offset from the bumped value, costing unused id
-    // HOLES (harmless: ids are already sparse after compaction) but never
-    // id collisions (which would corrupt joins silently)
-    val wm = s"$dir/watermark.json"
-    if (MetaIO.exists(wm))
-      MetaIO.writeAtomic(wm,
-        s"""{"nextDocId":${readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong + nNew}}""")
+    // a compacted index carries an id watermark (see nextDocId): advance
+    // it BEFORE the manifest commit — a crash in between makes a retried
+    // append re-offset from the bumped value, costing unused id HOLES
+    // (harmless: ids are already sparse after compaction) but never id
+    // collisions (which would corrupt joins silently)
+    snap.watermark.foreach(wm =>
+      MetaIO.writeAtomic(s"$dir/watermark.json", s"""{"nextDocId":${wm + nNew}}"""))
     // commit marker LAST: only now does a future append see these docs
     writeManifest(s"$dir/manifest/group-$nextGroup.json", man)
     man
   }
 
-  /** The dense doc-id high-water mark (next free doc id) — the authoritative
-    * value for docId offsetting and append retries. Normally the sum of
-    * manifest docs (stats.json may be mid-commit after a crash; manifests
-    * are the commit markers), but a COMPACTED index carries fewer docs than
-    * its highest surviving id + 1, so compact() persists the original
-    * watermark in watermark.json and it takes precedence: appends after a
-    * compaction must keep allocating ABOVE the old ids (deleted ids are
-    * never reused — a reused id would resurrect under stale external
-    * references).
+  /** The committed state of the index at `dir`, each sidecar read once:
+    * the manifest listing and every manifest, `stats.json` (stats and the
+    * live df dir), `watermark.json`, `tombstones.txt` and `holes.txt`.
+    * A call that serves or changes the index takes one snapshot and reads
+    * everything from it, so it sees one version even while writers commit
+    * (see [[IndexSnapshot]] for how long a version stays readable).
     */
-  /** Upper bound on the index's distinct shard count, from the id
-    * watermark: ids are dense in [0, committedDocs), so shard =
-    * doc_id >> shardBits never exceeds this. Query/pack stages keyed on
-    * `shard` cap their partition counts here — a hash partitioner on
-    * `shard` cannot put rows in more partitions than distinct shards, so
-    * anything beyond is empty scheduled tasks (r7).
-    */
-  def numShardsBound(dir: String): Int = {
-    val bits = readStats(dir).shardBits
-    val docs = committedDocs(dir)
-    (math.max(math.max(docs, 1L) - 1, 0L) >> bits).toInt + 1
-  }
-
-  def committedDocs(dir: String): Long = {
-    val wm = s"$dir/watermark.json"
-    if (MetaIO.exists(wm))
-      readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong
-    else listManifests(dir).map(_.docs).sum
-  }
-
-  /** Ids of the committed groups, ascending, from the manifest file names
-    * alone: a manifest appears atomically as its group's last commit step.
-    */
-  def committedGroups(dir: String): Seq[Int] =
-    MetaIO.list(s"$dir/manifest").iterator.collect {
+  def snapshot(dir: String): IndexSnapshot = {
+    // groups from the manifest file names (a manifest appears atomically
+    // as its group's last commit step), listed BEFORE stats.json is read:
+    // an append flips stats.json before its manifest, so a listed group's
+    // stats are always in the read below. The converse window — stats of
+    // an append whose manifest is not yet listed — is the commit
+    // protocol's own until one log record commits both.
+    val manifests = MetaIO.list(s"$dir/manifest").collect {
       case name if name.startsWith("group-") && name.endsWith(".json") =>
         name.stripPrefix("group-").stripSuffix(".json").toInt
-    }.toSeq.sorted
-
-  private def listManifests(dir: String): Seq[GroupManifest] =
-    committedGroups(dir).map(g => readManifest(s"$dir/manifest/group-$g.json"))
-
-  /** Read the packed postings of COMMITTED groups only. Groups are
-    * enumerated from the manifests (the commit markers), not by listing
-    * postings/: a crash between a group's parquet write and its manifest
-    * commit leaves an orphan grp=N dir, and serving it would expose
-    * uncommitted docs with stale df/stats until the append retry. The
-    * groups are ONE relation of the known [[PostingsSchema]], so no read
-    * infers a schema. Past 32 groups (Spark's parallel partition discovery
-    * threshold) listing them is a Spark job; [[compact]] folds them to one.
-    */
-  def loadPostings(spark: SparkSession, dir: String): Dataset[PackedPostings] = {
-    val committed = listManifests(dir).map(m => s"$dir/postings/grp=${m.group}")
-    require(committed.nonEmpty, s"loadPostings: no committed groups at $dir")
-    TableIO.read(spark, PostingsSchema, committed: _*).as(Encoders.product[PackedPostings])
+    }.sorted.map(g => readManifest(s"$dir/manifest/group-$g.json"))
+    val m = readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
+    val stats = IndexStats(m("n").toLong, m("avgdl").toDouble, m("avgRawIdf").toDouble,
+      m("k1").toDouble, m("b").toDouble, m("epsilon").toDouble,
+      m("shardBits").toDouble.toInt, m("blockSize").toDouble.toInt)
+    val wm = s"$dir/watermark.json"
+    new IndexSnapshot(dir, stats, m.getOrElse("dfDir", "df"), manifests,
+      if (MetaIO.exists(wm)) Some(readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong)
+      else None,
+      readIdFile(s"$dir/tombstones.txt"), readIdFile(s"$dir/holes.txt"))
   }
 
   /** The LIVE df table as (term, df) — the dir named by stats.json (appends
     * write fresh versioned dirs and flip the pointer atomically with the stats).
     */
-  def loadDf(spark: SparkSession, dir: String): DataFrame =
-    TableIO.read(spark, DfSchema, s"$dir/${readDfDir(dir)}")
+  def loadDf(spark: SparkSession, dir: String): DataFrame = snapshot(dir).df(spark)
 
   // ---- tiny JSON sidecars ---------------------------------------------
 
@@ -545,17 +585,6 @@ object PackedIndex {
   def writeStats(dir: String, s: IndexStats, dfDir: String): Unit =
     MetaIO.writeAtomic(s"$dir/stats.json",
       s"""{"n":${s.n},"avgdl":${s.avgdl},"avgRawIdf":${s.avgRawIdf},"k1":${s.k1},"b":${s.b},"epsilon":${s.epsilon},"shardBits":${s.shardBits},"blockSize":${s.blockSize},"dfDir":"$dfDir"}""")
-
-  def readStats(dir: String): IndexStats = {
-    val m = readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
-    IndexStats(m("n").toLong, m("avgdl").toDouble, m("avgRawIdf").toDouble,
-      m("k1").toDouble, m("b").toDouble, m("epsilon").toDouble,
-      m("shardBits").toDouble.toInt, m("blockSize").toDouble.toInt)
-  }
-
-  def readDfDir(dir: String): String =
-    readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
-      .getOrElse("dfDir", "df").stripPrefix("\"").stripSuffix("\"")
 
   private def writeManifest(path: String, m: GroupManifest): Unit =
     MetaIO.writeAtomic(path,
@@ -605,11 +634,13 @@ object PackedIndex {
     */
   def compact(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
-    val stats = readStats(dir)
-    val committed = committedDocs(dir)
-    // compactInto stamps the carried arm current: a stale one must fail here
-    val positional = PositionalIndex.exists(dir)
-    if (positional) PositionalIndex.requireCurrent(dir)
+    val snap = snapshot(dir)
+    val stats = snap.stats
+    val committed = snap.nextDocId
+    // compactInto stamps the carried arm current: a stale one must fail
+    // here, before anything is written (load checks the stamp)
+    val positional =
+      if (PositionalIndex.exists(dir)) Some(PositionalIndex.load(spark, snap)) else None
     // LIVE tombstones only: ids of docs a PREVIOUS compaction already
     // removed (holes) must not be subtracted again — delete() filters them
     // on entry, but an externally-edited tombstones.txt (or a pre-holes-file
@@ -618,8 +649,8 @@ object PackedIndex {
     // the compacted index. Intersecting against the persisted hole set here
     // makes the stat arithmetic correct regardless of how the tombstones
     // were produced.
-    val holes = loadHoles(dir)
-    val tomb = loadTombstones(dir)
+    val holes = snap.holes
+    val tomb = snap.tombstones
       .filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
     require(tomb.nonEmpty, s"compact: no live tombstones at $dir")
     require(tomb.forall(id => id >= 0 && id < committed),
@@ -628,7 +659,7 @@ object PackedIndex {
     // crash-safety sourcing append() uses. stats.json is written BEFORE the
     // manifest in the append protocol, so after a crashed append it counts
     // docs the postings scan below will never see.
-    val preN = listManifests(dir).map(_.docs).sum
+    val preN = snap.manifests.map(_.docs).sum
     val n2 = preN - tomb.length
     require(n2 > 0, s"compact: all $preN docs deleted — delete the index instead")
 
@@ -639,7 +670,8 @@ object PackedIndex {
     // .distinct() paid a full shuffle for the same ≤|tombstones|-bounded
     // result (r7).
     val bcTomb = spark.sparkContext.broadcast(tomb)
-    val deletedDl: Map[Long, Long] = loadPostings(spark, dir)
+    val postings = snap.postings(spark)
+    val deletedDl: Map[Long, Long] = postings
       .mapPartitions { it =>
         val t = bcTomb.value
         val local = new java.util.HashMap[Long, Long]()
@@ -661,7 +693,7 @@ object PackedIndex {
         import scala.jdk.CollectionConverters._
         local.asScala.iterator.map { case (d, dl) => (d, dl) }
       }.collect().toMap
-    val sumDl2 = listManifests(dir).map(_.sumDl).sum - deletedDl.values.sum
+    val sumDl2 = snap.manifests.map(_.sumDl).sum - deletedDl.values.sum
 
     // pass 2: decode -> drop deleted -> repack with the same codec. The
     // surviving sorted doc array re-blocks exactly as a fresh build would.
@@ -677,7 +709,7 @@ object PackedIndex {
     // exact stats n2/sumDl2 come from the arithmetic above)
     val cTerms = spark.sparkContext.longAccumulator("compactTerms")
     val cPostings = spark.sparkContext.longAccumulator("compactPostings")
-    val repacked = loadPostings(spark, dir).mapPartitions { it =>
+    val repacked = postings.mapPartitions { it =>
       val t = bcTomb.value
       def touched(b: PackedBlock): Boolean = {
         val i = java.util.Arrays.binarySearch(t, b.base)
@@ -725,12 +757,11 @@ object PackedIndex {
     // carry the positional arm (if present): repack through the same
     // tombstone-drop kernel, so phrase/proximity search composes with the
     // delete lifecycle instead of failing loudly until a manual rebuild
-    if (positional)
-      PositionalIndex.compactInto(spark, dir, outDir, bcTomb, blockSize)
+    positional.foreach(PositionalIndex.compactInto(_, outDir, bcTomb, blockSize))
     // the id high-water mark survives compaction: manifest docs is the
     // SURVIVOR count (feeds stats on later appends), while id allocation
     // must keep starting above the ORIGINAL range — deleted ids are dead
-    // forever, never recycled (committedDocs() prefers this file)
+    // forever, never recycled (IndexSnapshot.nextDocId prefers this file)
     MetaIO.writeAtomic(s"$outDir/watermark.json", s"""{"nextDocId":$committed}""")
     // dead-id ledger: prior holes plus the ids THIS compaction removed.
     // delete()/compact() consult it so a re-issued delete of an already
@@ -751,7 +782,7 @@ object PackedIndex {
     * merged sorted set is written to a tmp file and atomically moved over
     * tombstones.txt (readers see either the old or the new complete set).
     * Deleted ids are NOT reusable — append() keeps offsetting from
-    * committedDocs, which tombstones never change. Ids must name docs the
+    * nextDocId, which tombstones never change. Ids must name docs the
     * index has actually committed (fail-loudly, matching append's
     * consistency requires): a tombstone above the watermark would silently
     * suppress a FUTURE doc born later under that id. Ids of docs a past
@@ -772,7 +803,8 @@ object PackedIndex {
 
   def delete(dir: String, docIds: Seq[Long],
              maxTombstones: Int = MaxTombstones): Unit = {
-    val limit = committedDocs(dir)
+    val snap = snapshot(dir)
+    val limit = snap.nextDocId
     require(docIds.forall(id => id >= 0 && id < limit),
       s"delete: doc ids outside the committed [0, $limit) range: " +
         docIds.filterNot(id => id >= 0 && id < limit).take(5).mkString(","))
@@ -781,10 +813,9 @@ object PackedIndex {
     // again (a re-issued GDPR erasure) is a no-op on an already-erased doc;
     // silently letting it into the tombstone set would make the NEXT
     // compact() subtract a nonexistent doc from n/sumDl.
-    val holes = loadHoles(dir)
     val liveIds =
-      docIds.filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
-    val merged = (loadTombstones(dir) ++ liveIds).distinct.sorted
+      docIds.filter(id => java.util.Arrays.binarySearch(snap.holes, id) < 0)
+    val merged = (snap.tombstones ++ liveIds).distinct.sorted
     require(merged.length <= maxTombstones,
       s"delete: tombstone set would reach ${merged.length} ids " +
         s"(bound $maxTombstones) — run compact() to apply them physically " +
@@ -792,25 +823,21 @@ object PackedIndex {
     MetaIO.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
   }
 
-  /** Sorted tombstoned doc ids; empty when no delete has ever run. */
-  def loadTombstones(dir: String): Array[Long] =
-    readIdFile(s"$dir/tombstones.txt")
-
-  /** Sorted dead doc ids physically removed by past compactions (holes in
-    * the dense id range); empty for a never-compacted index.
+  /** Ids of a one-id-per-line sidecar (tombstones, holes — of this index
+    * and of [[graft.ann.IvfIndex]]); empty when the file is absent.
     */
-  def loadHoles(dir: String): Array[Long] =
-    readIdFile(s"$dir/holes.txt")
-
-  private def readIdFile(path: String): Array[Long] =
+  private[graft] def readIdFile(path: String): Array[Long] =
     if (!MetaIO.exists(path)) Array.empty[Long]
     else MetaIO.readString(path).split("\n").iterator
       .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray
 
-  /** Parse a flat one-level JSON object of numbers (no strings/nesting). */
-  private def readJsonFlat(s: String): Map[String, String] =
+  /** Parse a flat one-level JSON object (no nesting, no commas inside
+    * values); string values come back unquoted.
+    */
+  private[graft] def readJsonFlat(s: String): Map[String, String] =
     s.trim.stripPrefix("{").stripSuffix("}").split(",").map { kv =>
       val Array(k, v) = kv.split(":", 2)
-      k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim
+      k.trim.stripPrefix("\"").stripSuffix("\"") ->
+        v.trim.stripPrefix("\"").stripSuffix("\"")
     }.toMap
 }

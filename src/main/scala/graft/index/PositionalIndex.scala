@@ -37,11 +37,12 @@ final case class PosPostings(shard: Int, term: String, nPostings: Long,
   * cost ∝ the batch, atomic segment-list flip). The scoring index remains
   * the source of truth for corpus stats and commit lineage: the segment
   * list carries a lineage stamp, the set of committed scoring groups the
-  * arm covers, written in the same atomic flip as the segments. A query
-  * ([[requireCurrent]]) compares it with the committed manifests on the
-  * driver, so an arm that missed an append fails loudly instead of
-  * silently missing phrase hits. The stamp checks lineage, not content:
-  * an arm built from another corpus than its scoring groups is not caught.
+  * arm covers, written in the same atomic flip as the segments. [[load]]
+  * compares it with the groups of the caller's [[IndexSnapshot]] in the
+  * same read that names the segments, so an arm that missed an append
+  * (or moved past the snapshot) fails loudly instead of silently serving
+  * another version. The stamp checks lineage, not content: an arm built
+  * from another corpus than its scoring groups is not caught.
   */
 object PositionalIndex {
 
@@ -150,30 +151,16 @@ object PositionalIndex {
       s"positional arm at $dir carries no lineage stamp — rebuild it with " +
         "PositionalIndex.build over the index corpus"))
 
-  /** Fails loudly unless the arm covers exactly the committed scoring
-    * groups. Driver-side: one listing and one small read, no Spark job.
-    */
-  def requireCurrent(dir: String): Unit = {
-    val covered = stampOf(dir, segmentList(dir))
-    val committed = PackedIndex.committedGroups(dir).toSet
-    require(covered == committed,
-      s"positional arm at $dir is stale: it covers scoring groups " +
-        s"${covered.toSeq.sorted.mkString("[", ",", "]")} of the committed " +
-        s"${committed.toSeq.sorted.mkString("[", ",", "]")} — run " +
-        "PositionalIndex.append for the missed batch (or build to reset)")
-  }
-
   /** Build (or rebuild) the positional arm from the index's full corpus:
     * one base segment, resetting any appended segments, stamped with every
     * scoring group committed when the build starts.
     */
   def build(tokenized: DataFrame, dir: String): Unit = {
-    val stats = PackedIndex.readStats(dir)
-    val groups = PackedIndex.committedGroups(dir).toSet
-    TableIO.write(pack(tokenized, stats.shardBits, stats.blockSize,
-      maxShards = PackedIndex.numShardsBound(dir)),
+    val snap = PackedIndex.snapshot(dir)
+    TableIO.write(pack(tokenized, snap.stats.shardBits, snap.stats.blockSize,
+      maxShards = snap.numShards),
       s"$dir/positions")
-    commitList(dir, Seq("positions"), groups)
+    commitList(dir, Seq("positions"), snap.groups.toSet)
   }
 
   /** Extend the positional arm with NEWLY APPENDED docs only (cost ∝ the
@@ -188,13 +175,14 @@ object PositionalIndex {
     * covered (a retry after the flip).
     */
   def append(newTokenized: DataFrame, dir: String): Unit = {
-    val stats = PackedIndex.readStats(dir)
+    val snap = PackedIndex.snapshot(dir)
+    val stats = snap.stats
     val list = segmentList(dir)
     require(TableIO.committed(s"$dir/${list.segments.head}"),
       s"PositionalIndex.append: no committed positional arm at $dir — " +
         "run PositionalIndex.build first")
     val covered = stampOf(dir, list)
-    val groups = PackedIndex.committedGroups(dir)
+    val groups = snap.groups
     val uncovered = groups.filterNot(covered)
     if (uncovered.isEmpty) return
     require(uncovered == Seq(groups.last),
@@ -220,14 +208,14 @@ object PositionalIndex {
     * re-block with the same codec. Ids are preserved, segments collapse to
     * one, and the list is stamped with the compacted index's single group
     * 0, whose manifest [[PackedIndex.compact]] commits after this write
-    * (the caller has checked that the source arm is current).
+    * (`arm` is the source arm as [[load]] read it, so it is current).
     */
-  private[index] def compactInto(spark: SparkSession, dir: String,
-                                 outDir: String,
+  private[index] def compactInto(arm: Dataset[PosPostings], outDir: String,
                                  bcTomb: org.apache.spark.broadcast.Broadcast[Array[Long]],
                                  blockSize: Int): Unit = {
+    val spark = arm.sparkSession
     import spark.implicits._
-    val repacked = load(spark, dir).mapPartitions { it =>
+    val repacked = arm.mapPartitions { it =>
       val t = bcTomb.value
       def touched(b: PackedPosBlock): Boolean = {
         val i = java.util.Arrays.binarySearch(t, b.base)
@@ -262,11 +250,27 @@ object PositionalIndex {
     commitList(outDir, Seq("positions"), Set(0))
   }
 
-  /** Read the positional arm: its committed segments as one relation
-    * with the known [[PostingsSchema]]; fails loudly when absent.
+  /** [[load]] against the index's current committed version. */
+  def load(spark: SparkSession, dir: String): Dataset[PosPostings] =
+    load(spark, PackedIndex.snapshot(dir))
+
+  /** Read the positional arm serving `snap`: its committed segments as one
+    * relation with the known [[PostingsSchema]]. The one read of the
+    * segment list also checks its stamp against `snap.groups` — no Spark
+    * job — and fails loudly when the arm is absent, unstamped, or covers
+    * other groups (it missed an append, or moved past the snapshot).
     */
-  def load(spark: SparkSession, dir: String): Dataset[PosPostings] = {
-    val segs = segments(dir).map(s => s"$dir/$s")
+  def load(spark: SparkSession, snap: IndexSnapshot): Dataset[PosPostings] = {
+    val dir = snap.dir
+    val list = segmentList(dir)
+    val covered = stampOf(dir, list)
+    val committed = snap.groups.toSet
+    require(covered == committed,
+      s"positional arm at $dir is stale: it covers scoring groups " +
+        s"${covered.toSeq.sorted.mkString("[", ",", "]")} of the committed " +
+        s"${committed.toSeq.sorted.mkString("[", ",", "]")} — run " +
+        "PositionalIndex.append for the missed batch (or build to reset)")
+    val segs = list.segments.map(s => s"$dir/$s")
     segs.foreach(s => require(TableIO.committed(s), s"PositionalIndex.load: segment " +
       s"$s missing/uncommitted — run PositionalIndex.build over the index corpus first"))
     TableIO.read(spark, PostingsSchema, segs: _*).as(Encoders.product[PosPostings])

@@ -24,8 +24,8 @@ package graft.io
   *    target — atomic on POSIX and HDFS; object stores whose committers
   *    emulate rename do not give this guarantee.
   *  - cache-invalidation tokens are deliberately NOT part of this boundary:
-  *    query-side caches derive them from file CONTENT (see
-  *    graft.query.IndexCache) because mtime/size-style tokens alias
+  *    query-side caches key on sidecar CONTENT, as a snapshot read it (see
+  *    graft.query.IndexCache), because mtime/size-style tokens alias
   *    same-millisecond equal-length rewrites and silently serve stale data.
   */
 object MetaIO {

@@ -127,9 +127,8 @@ object RankMetrics {
       .agg(coalesce(sum(col("ndcg")), lit(0.0))).first().getDouble(0) / nRanked(ranking)
 
   /** All five metrics in ONE pass: one labeled join, one running-hits
-    * window, one per-query aggregation, one final mean row — versus
-    * [[summary]]'s five independent jobs that each re-scan and re-join the
-    * ranking. At 100 TB the ranking is read once and shuffled once (on
+    * window, one per-query aggregation, one final mean row — versus five
+    * `*At` jobs that each re-scan and re-join the ranking. At 100 TB the ranking is read once and shuffled once (on
     * query_id); the per-metric reference semantics (including the
     * hit_rate-over-qrels denominator asymmetry and inner-join drops that
     * contribute 0) are reproduced exactly. Agreement with the five-pass
@@ -137,8 +136,8 @@ object RankMetrics {
     * general (the cross-query summation ORDER differs between plans) —
     * MetricsSpec pins both. The contract queries q_metrics and
     * q_metrics_fused are both served by this plan (their 6-decimal rounding
-    * absorbs the last-ulp order difference); the five-pass [[summary]]
-    * stays as the reference-shaped cross-check.
+    * absorbs the last-ulp order difference); the five-pass path
+    * (`recallAt` … `ndcgAt`) is MetricsSpec's reference-shaped oracle.
     */
   def summaryFused(ranking: DataFrame, qrels: DataFrame, k: Int): DataFrame = {
     // nq must count EVERY qrels query (including ones absent from the
@@ -185,13 +184,4 @@ object RankMetrics {
         (col("ndcg_sum") / col("nr")).as("ndcg"))
   }
 
-  /** All five metrics in one row (column per metric). */
-  def summary(ranking: DataFrame, qrels: DataFrame, k: Int): DataFrame = {
-    val spark = ranking.sparkSession
-    import spark.implicits._
-    Seq((recallAt(ranking, qrels, k), hitRateAt(ranking, qrels, k),
-      mrrAt(ranking, qrels, k), mapAt(ranking, qrels, k),
-      ndcgAt(ranking, qrels, k)))
-      .toDF("recall", "hit_rate", "mrr", "map", "ndcg")
-  }
 }

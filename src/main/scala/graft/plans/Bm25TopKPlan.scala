@@ -76,7 +76,8 @@ final case class Bm25TopKExec(indexDir: String, queries: Seq[(Long, String)],
     extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (stats, prepared) = Wand.prepare(session, indexDir, queries)
-    Wand.candidates(session, indexDir, stats, prepared, k).queryExecution.toRdd
+    val snap = graft.index.PackedIndex.snapshot(indexDir)
+    Wand.candidates(session, snap, Wand.prepare(session, snap, queries), k)
+      .queryExecution.toRdd
   }
 }

@@ -21,12 +21,13 @@ object MoreLikeThis {
   def search(spark: SparkSession, indexDir: String,
              docs: Seq[(Long, String)], maxTerms: Int, k: Int): DataFrame = {
     require(maxTerms > 0, s"MoreLikeThis: maxTerms must be positive (got $maxTerms)")
-    // ONE prepare: its idf maps drive the term selection, and the reduced
-    // queries reuse the same stats/idf through searchPrepared (no second
-    // stats read or df lookup). The reduced PreparedQuery is exactly what
+    // ONE snapshot and ONE prepare: its idf maps drive the term selection,
+    // and the reduced queries reuse the same idf over the same version (no
+    // second df lookup). The reduced PreparedQuery is exactly what
     // re-tokenizing "selected.sorted.mkString(' ')" would produce: sorted
     // distinct terms, each with its already-prepared idf.
-    val (stats, prepared) = Wand.prepare(spark, indexDir, docs)
+    val snap = graft.index.PackedIndex.snapshot(indexDir)
+    val prepared = Wand.prepare(spark, snap, docs)
     val reduced = prepared.flatMap { pq =>
       if (pq.idf.isEmpty) None
       else {
@@ -42,6 +43,6 @@ object MoreLikeThis {
           pq.idf.filter { case (t, _) => selected.contains(t) }))
       }
     }
-    Wand.searchPrepared(spark, indexDir, stats, reduced, k)
+    ShardServe.globalRank(Wand.candidates(spark, snap, reduced, k), k)
   }
 }

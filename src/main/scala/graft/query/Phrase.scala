@@ -260,24 +260,30 @@ object Phrase {
     * never materialize globally. A query naming a term the arm lacks
     * matches nothing (the shard kernel skips it).
     *
-    * An arm that missed an append fails loudly on its lineage stamp
-    * ([[graft.index.PositionalIndex.requireCurrent]], checked on the
-    * driver), so a warm call runs only its two query jobs: the shard
-    * shuffle and the result (plus the rank window's shuffle on a
-    * multi-shard index).
+    * The call takes one [[graft.index.IndexSnapshot]]. An arm whose
+    * lineage stamp does not cover exactly the snapshot's groups fails
+    * loudly ([[graft.index.PositionalIndex.load]], checked on the driver),
+    * so a warm call runs only its two query jobs: the shard shuffle and
+    * the result (plus the rank window's shuffle on a multi-shard index).
     */
   def search(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-             queries: Seq[(Long, PositionalQuery)], k: Int): DataFrame = {
+             queries: Seq[(Long, PositionalQuery)], k: Int): DataFrame =
+    search(spark, graft.index.PackedIndex.snapshot(indexDir), queries, k)
+
+  /** [[search]] served from `snap`: its positional arm, shard count and
+    * tombstones.
+    */
+  private[graft] def search(spark: org.apache.spark.sql.SparkSession,
+                            snap: graft.index.IndexSnapshot,
+                            queries: Seq[(Long, PositionalQuery)], k: Int): DataFrame = {
     require(k > 0, "Phrase.search: k must be > 0")
     if (queries.isEmpty) return ShardServe.globalRank(ShardServe.emptyHits(spark), k)
-    graft.index.PositionalIndex.requireCurrent(indexDir)
     val allTerms = queries.flatMap(_._2.slotTerms).distinct
-    val posRows = graft.index.PositionalIndex.load(spark, indexDir)
+    val posRows = graft.index.PositionalIndex.load(spark, snap)
       .filter(col("term").isin(allTerms: _*))
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
-    val bcTomb = spark.sparkContext.broadcast(tomb)
+    val bcTomb = spark.sparkContext.broadcast(snap.tombstones)
     val bcQueries = spark.sparkContext.broadcast(queries.toArray)
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, posRows)
+    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, posRows)
     val hits = ShardServe.kernelHits(spark, grouped, k,
       () => bcQueries.value.map(_._1))(_.shard) { (rows, heaps) =>
       val qs = bcQueries.value
@@ -296,18 +302,21 @@ object Phrase {
   /** Dataset-typed positional query batch: (query_id, text) rows parsed by
     * `mode`, served in deterministic staged chunks through the same
     * chunked-batch machinery as [[Wand.searchDs]] (one staging pass, loud
-    * accounting, per-chunk sinks). Parity with [[search]] on the same batch
-    * is pinned in RetrieverSpec.
+    * accounting, per-chunk sinks), every chunk from one
+    * [[graft.index.IndexSnapshot]] taken at the start of the call. Parity
+    * with [[search]] on the same batch is pinned in RetrieverSpec.
     */
   def searchDs(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                queries: DataFrame, mode: PositionalMode, k: Int,
                chunkSize: Int = 10000,
-               stagingDir: Option[String] = None): DataFrame =
+               stagingDir: Option[String] = None): DataFrame = {
+    val snap = graft.index.PackedIndex.snapshot(indexDir)
     ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
       "Phrase.searchDs") { chunk =>
-      search(spark, indexDir,
+      search(spark, snap,
         chunk.map { case (id, text) => id -> mode.parse(text) }, k)
     }
+  }
 
   /** Decode one shard's positional rows ONCE per term: sorted doc ids +
     * per-doc position arrays. A (shard, term) may span multiple rows

@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.index.PackedIndex
 
 /** The one serving driver behind every shard-kernel path — WAND scoring
   * ([[Wand.search]], [[Wand.searchDs]], the plan-integrated
@@ -34,13 +33,14 @@ object ShardServe {
     * compressed) matched postings into a handful of long serial tasks. A
     * user-specified repartition is exempt from AQE coalescing;
     * sortWithinPartitions then lets one streaming pass group by shard.
-    * Capped at the index's shard count (hash-on-shard cannot use more
-    * partitions than distinct shards — the excess were empty tasks).
+    * Capped at `numShards`, the index's shard count
+    * ([[graft.index.IndexSnapshot.numShards]]): hash-on-shard cannot use
+    * more partitions than distinct shards — the excess were empty tasks.
     */
-  def shardPartitioned[T](spark: SparkSession, indexDir: String,
+  def shardPartitioned[T](spark: SparkSession, numShards: Int,
                           rows: Dataset[T]): Dataset[T] = {
     val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      PackedIndex.numShardsBound(indexDir)), 1)
+      numShards), 1)
     rows
       .repartition(parts, col("shard"))
       .sortWithinPartitions(col("shard"), col("term"))

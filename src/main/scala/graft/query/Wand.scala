@@ -2,7 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{IndexStats, PackedBlock, PackedIndex, PackedPostings}
+import graft.index.{IndexSnapshot, IndexStats, PackedBlock, PackedIndex, PackedPostings}
 
 /** Block-max WAND top-k over the packed, doc-sharded index.
   *
@@ -60,16 +60,16 @@ object Wand {
       tokens.groupBy(identity).map { case (t, a) => t -> a.length }
   }
 
-  /** Prepare a query batch: look up global df for the union of query terms
-    * (one pushdown-filtered scan of the small df table), compute eps-floored
-    * idf from IndexStats. Driver-side work is O(|distinct query terms|).
+  /** Prepare a query batch against `snap`: look up global df for the union
+    * of query terms (the cached map, or one pushdown-filtered scan of the
+    * small df table), compute eps-floored idf from the snapshot's stats.
+    * Driver-side work is O(|distinct query terms|).
     */
-  def prepare(spark: SparkSession, indexDir: String,
+  def prepare(spark: SparkSession, snap: IndexSnapshot,
               queries: Seq[(Long, String)],
               mustNot: Map[Long, String] = Map.empty,
               boosts: Map[Long, Map[String, Double]] = Map.empty)
-      : (IndexStats, Seq[PreparedQuery]) = {
-    val stats = PackedIndex.readStats(indexDir)
+      : Seq[PreparedQuery] = {
     val tokenized = queries.map { case (id, text) =>
       id -> graft.tokenize.PyTokenize.split(text)
     }
@@ -89,14 +89,14 @@ object Wand {
       (tokenized.flatMap(_._2) ++ mustNotTok.valuesIterator.flatten).distinct
     val dfMap: Map[String, Long] =
       if (allTerms.isEmpty) Map.empty
-      else IndexCache.dfMap(spark, indexDir) match {
+      else IndexCache.dfMap(spark, snap) match {
         // bounded vocabulary: driver-local lookups, no per-batch Spark job
-        // (the high-QPS serving floor; cache invalidated by stats.json
-        // version, so appends/compactions are picked up)
+        // (the high-QPS serving floor; keyed by the snapshot's version, so
+        // appends/compactions are picked up)
         case Some(full) =>
           allTerms.iterator.flatMap(t => full.get(t).map(t -> _)).toMap
         case None =>
-          val dfTable = PackedIndex.loadDf(spark, indexDir)
+          val dfTable = snap.df(spark)
           val restricted =
             if (allTerms.size <= IsinThreshold)
               dfTable.filter(col("term").isin(allTerms: _*))
@@ -106,7 +106,7 @@ object Wand {
             }
           restricted.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-    val prepared = tokenized.map { case (id, toks) =>
+    tokenized.map { case (id, toks) =>
       // Query-time term boost (ES `term^boost` / Lucene boost semantics):
       // the boost scales the term's whole BM25 contribution, which is
       // linear in idf — so folding it into the per-term idf up front keeps
@@ -114,12 +114,11 @@ object Wand {
       // without kernel changes, exactly like occurrence multiplicity.
       val qBoosts = boosts.getOrElse(id, Map.empty)
       val idf = toks.distinct.flatMap { t =>
-        dfMap.get(t).map(df => t -> stats.idf(df) * qBoosts.getOrElse(t, 1.0))
+        dfMap.get(t).map(df => t -> snap.stats.idf(df) * qBoosts.getOrElse(t, 1.0))
       }.toMap
       PreparedQuery(id, toks, idf,
         mustNotTok.getOrElse(id, Array.empty).filter(dfMap.contains))
     }
-    (stats, prepared)
   }
 
   /** Distributed search: per-shard WAND + global rank. Returns
@@ -150,31 +149,30 @@ object Wand {
              allowedDocs: Option[Array[Long]] = None,
              minShouldMatch: Int = 1,
              mustNot: Map[Long, String] = Map.empty,
-             boosts: Map[Long, Map[String, Double]] = Map.empty): DataFrame = {
-    val (stats, prepared) =
-      prepare(spark, indexDir, queries, mustNot, boosts)
-    searchPrepared(spark, indexDir, stats, prepared, k, allowedDocs,
-      minShouldMatch)
-  }
+             boosts: Map[Long, Map[String, Double]] = Map.empty): DataFrame =
+    search(spark, PackedIndex.snapshot(indexDir), queries, k, allowedDocs,
+      minShouldMatch, mustNot, boosts)
 
-  /** [[search]] given an already-prepared batch — for callers that needed
-    * the prepared idf maps themselves (e.g. MoreLikeThis's tf·idf term
-    * selection) so the stats read and df lookup run once, not twice.
+  /** [[search]] served entirely from `snap`: its stats, df, postings,
+    * shard count and tombstones.
     */
-  private[query] def searchPrepared(spark: SparkSession, indexDir: String,
-                                    stats: IndexStats,
-                                    prepared: Seq[PreparedQuery], k: Int,
-                                    allowedDocs: Option[Array[Long]] = None,
-                                    minShouldMatch: Int = 1): DataFrame =
-    ShardServe.globalRank(candidates(spark, indexDir, stats, prepared, k,
-      allowedDocs, minShouldMatch), k)
+  private[graft] def search(spark: SparkSession, snap: IndexSnapshot,
+                            queries: Seq[(Long, String)], k: Int,
+                            allowedDocs: Option[Array[Long]],
+                            minShouldMatch: Int,
+                            mustNot: Map[Long, String],
+                            boosts: Map[Long, Map[String, Double]]): DataFrame =
+    ShardServe.globalRank(candidates(spark, snap,
+      prepare(spark, snap, queries, mustNot, boosts), k, allowedDocs,
+      minShouldMatch), k)
 
-  /** [[searchPrepared]] before the global rank: (query_id, doc_id, score),
-    * at most k rows per (task, query) — the body of the plan-integrated
-    * [[graft.plans.Bm25TopKExec]], whose plan ranks on top.
+  /** [[search]] of an already-prepared batch before the global rank:
+    * (query_id, doc_id, score), at most k rows per (task, query) — the body
+    * of the plan-integrated [[graft.plans.Bm25TopKExec]], whose plan ranks
+    * on top, and of [[MoreLikeThis]], which selects terms from the
+    * prepared idf maps first.
     */
-  private[graft] def candidates(spark: SparkSession, indexDir: String,
-                                stats: IndexStats,
+  private[graft] def candidates(spark: SparkSession, snap: IndexSnapshot,
                                 prepared: Seq[PreparedQuery], k: Int,
                                 allowedDocs: Option[Array[Long]] = None,
                                 minShouldMatch: Int = 1): DataFrame = {
@@ -185,7 +183,7 @@ object Wand {
       (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
     import spark.implicits._
     if (terms.isEmpty) return ShardServe.emptyHits(spark)
-    val postings = PackedIndex.loadPostings(spark, indexDir)
+    val postings = snap.postings(spark)
     val matched =
       (if (terms.size <= IsinThreshold)
         postings.filter(col("term").isin(terms: _*))
@@ -193,10 +191,9 @@ object Wand {
         postings.join(broadcast(terms.toDF("term")), "term"))
         .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
         .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched)
-    val tomb = PackedIndex.loadTombstones(indexDir)
-    wandHits(spark, grouped, stats, prepared, k, allowedDocs, tomb,
-      minShouldMatch)
+    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, matched)
+    wandHits(spark, grouped, snap.stats, prepared, k, allowedDocs,
+      snap.tombstones, minShouldMatch)
   }
 
   /** The WAND kernel over an ALREADY shard-partitioned postings dataset;
@@ -231,7 +228,9 @@ object Wand {
     * chunks through [[ChunkedServe.serve]] (one staging pass, loud
     * accounting, partition-pruned per-chunk reads, per-chunk sinks, bounded
     * concurrent chunk jobs), each chunk riding the broadcast kernel path
-    * while the index-side scan plan is identical per chunk.
+    * while the index-side scan plan is identical per chunk. The call takes
+    * one [[IndexSnapshot]] and every chunk is served from it, so a commit
+    * that lands mid-call changes no chunk's answer.
     *
     * Parity: identical to [[search]] on the same batch (RetrieverSpec).
     */
@@ -240,17 +239,30 @@ object Wand {
                stagingDir: Option[String] = None,
                allowedDocs: Option[Array[Long]] = None,
                minShouldMatch: Int = 1,
-               mustNot: Map[Long, String] = Map.empty): DataFrame = {
+               mustNot: Map[Long, String] = Map.empty): DataFrame =
+    searchDs(spark, PackedIndex.snapshot(indexDir), queries, k, chunkSize,
+      stagingDir, allowedDocs, minShouldMatch, mustNot)
+
+  /** [[searchDs]] served entirely from `snap`: every chunk scores with the
+    * snapshot's stats and df over its postings, minus its tombstones.
+    */
+  private[graft] def searchDs(spark: SparkSession, snap: IndexSnapshot,
+                              queries: DataFrame, k: Int, chunkSize: Int,
+                              stagingDir: Option[String],
+                              allowedDocs: Option[Array[Long]],
+                              minShouldMatch: Int,
+                              mustNot: Map[Long, String]): DataFrame = {
     import spark.implicits._
-    // r7: the index side is prepared ONCE for the whole batch — the union
-    // of the batch's tokens (one narrow pass over the query table, same
-    // CPython-parity tokenizer as prepare()) semi-joins the postings scan,
-    // and the shard-partitioned result is pinned so every chunk's kernel
-    // job reads the cached partitions instead of re-running the scan +
-    // shuffle per chunk. Per-chunk results are identical (cursors exist
-    // only for each query's own terms). The pin lives strictly inside this
-    // call: materialized before the chunk pool starts, unpersisted after.
-    val tomb = PackedIndex.loadTombstones(indexDir)
+    // The index side is prepared ONCE for the whole batch, from the one
+    // snapshot every chunk shares (so all chunks score one version): the
+    // union of the batch's tokens (one narrow pass over the query table,
+    // same CPython-parity tokenizer as prepare()) semi-joins the postings
+    // scan, and the shard-partitioned result is pinned so every chunk's
+    // kernel job reads the cached partitions instead of re-running the
+    // scan + shuffle per chunk. Per-chunk results are identical (cursors
+    // exist only for each query's own terms). The pin lives strictly
+    // inside this call: materialized before the chunk pool starts,
+    // unpersisted after.
     val batchTerms = queries
       .select(explode(graft.plans.GraftFunctions.py_ws_tokenize(
         col("text").cast("string"))).as("term"))
@@ -260,19 +272,19 @@ object Wand {
     val allTerms =
       if (mnTerms.isEmpty) batchTerms
       else batchTerms.unionByName(mnTerms.toDF("term")).distinct()
-    val matched = PackedIndex.loadPostings(spark, indexDir)
+    val matched = snap.postings(spark)
       .join(broadcast(allTerms), "term")
       .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
       .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, indexDir, matched)
+    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, matched)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
       ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
         "searchDs") { chunk =>
-        val (st, prepared) = prepare(spark, indexDir, chunk, mustNot)
-        ShardServe.globalRank(wandHits(spark, grouped, st, prepared, k,
-          allowedDocs, tomb, minShouldMatch), k)
+        ShardServe.globalRank(wandHits(spark, grouped, snap.stats,
+          prepare(spark, snap, chunk, mustNot), k, allowedDocs,
+          snap.tombstones, minShouldMatch), k)
       }
     } finally grouped.unpersist(false)
   }

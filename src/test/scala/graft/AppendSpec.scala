@@ -31,8 +31,8 @@ class AppendSpec extends SparkSpec {
     val man = PagesPipeline.appendPages(extra, dirIncr)
     assert(man.postings > 0)
 
-    val statsI = graft.index.PackedIndex.readStats(dirIncr)
-    val statsF = graft.index.PackedIndex.readStats(dirFull)
+    val statsI = graft.index.PackedIndex.snapshot(dirIncr).stats
+    val statsF = graft.index.PackedIndex.snapshot(dirFull).stats
     assert(statsI.n == statsF.n)
     assert(statsI.avgdl == statsF.avgdl) // exact-sum reconstruction
     assert(statsI.avgRawIdf == statsF.avgRawIdf)
@@ -97,7 +97,7 @@ class AppendSpec extends SparkSpec {
       graft.index.PackedIndex.build(tok(init), dir, shardBits = 3, groups = 2)
 
       def checkStats(where: String): Unit = {
-        val stats = graft.index.PackedIndex.readStats(dir)
+        val stats = graft.index.PackedIndex.snapshot(dir).stats
         assert(stats.n == physical.size, s"$where: n")
         val sumDl = physical.values.iterator
           .map(t => graft.tokenize.PyTokenize.split(t).length.toLong).sum
@@ -108,7 +108,7 @@ class AppendSpec extends SparkSpec {
         val gotDf = graft.index.PackedIndex.loadDf(spark, dir).collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(gotDf == wantDf, s"$where: df diverged")
-        assert(graft.index.PackedIndex.committedDocs(dir) == nextId,
+        assert(graft.index.PackedIndex.snapshot(dir).nextDocId == nextId,
           s"$where: watermark")
       }
       checkStats("init")
@@ -152,7 +152,7 @@ class AppendSpec extends SparkSpec {
         dir = out
         checkStats("final compact")
       }
-      val stats = graft.index.PackedIndex.readStats(dir)
+      val stats = graft.index.PackedIndex.snapshot(dir).stats
       val freshDir = scratchDir(s"lifeprop-fresh$trial")
       graft.index.PackedIndex.build(tok(physical.toSeq), freshDir,
         shardBits = stats.shardBits, groups = 2, blockSize = stats.blockSize)
@@ -178,7 +178,7 @@ class AppendSpec extends SparkSpec {
         spark.read.parquet(s"$dir/docs_raw").select(col("url")),
         Seq("url"), "left_anti")
     val man = PagesPipeline.appendPages(extra, dir)
-    val statsAfter = graft.index.PackedIndex.readStats(dir)
+    val statsAfter = graft.index.PackedIndex.snapshot(dir).stats
 
     // simulate the crash: delete the append's manifest (committed last), so
     // everything else — packed group, df-gN, stats.json — is already the
@@ -187,7 +187,7 @@ class AppendSpec extends SparkSpec {
     assert(manifestFile.exists())
     assert(manifestFile.delete())
     val man2 = PagesPipeline.appendPages(extra, dir)
-    val statsRetry = graft.index.PackedIndex.readStats(dir)
+    val statsRetry = graft.index.PackedIndex.snapshot(dir).stats
 
     assert(man2.group == man.group) // same group re-used, not a duplicate
     assert(man2.docs == man.docs && man2.sumDl == man.sumDl)
@@ -202,13 +202,13 @@ class AppendSpec extends SparkSpec {
 
   test("orphan (uncommitted) postings groups are invisible to readers") {
     // crash point: a group's parquet fully written but its manifest never
-    // committed — loadPostings must serve committed groups only (the
+    // committed — a snapshot's postings must serve committed groups only (the
     // manifest is the read-side commit marker), or uncommitted docs would be
     // scored against stale df/stats until the retry
     val dir = scratchDir("orphan")
     PagesPipeline.buildIndex(PagesGen.pages(spark, 200, partitions = 4).toDF(),
       dir, shardBits = 6, groups = 2)
-    val before = graft.index.PackedIndex.loadPostings(spark, dir).count()
+    val before = graft.index.PackedIndex.snapshot(dir).postings(spark).count()
 
     // fabricate the orphan: copy a committed group dir to grp=99, no manifest
     val src = new java.io.File(s"$dir/postings/grp=0")
@@ -218,7 +218,7 @@ class AppendSpec extends SparkSpec {
       else java.nio.file.Files.copy(s.toPath, d.toPath)
     copyRec(src, dst)
 
-    assert(graft.index.PackedIndex.loadPostings(spark, dir).count() == before,
+    assert(graft.index.PackedIndex.snapshot(dir).postings(spark).count() == before,
       "orphan grp=99 leaked into the postings read")
     val hits = Wand.search(spark, dir, Seq(1L -> "the w3 w17"), 1000)
       .select(col("doc_id")).collect().map(_.getLong(0))

@@ -36,7 +36,7 @@ class Bm25PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val dir = scratchDir("planop-shards")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 16, 2).toDF(), dir, shardBits = 2, groups = 2)
-    val shards = PackedIndex.numShardsBound(dir)
+    val shards = PackedIndex.snapshot(dir).numShards
     assert(shards >= 2 && shards <= 4, s"fixture has $shards shards")
     val queries = Seq(1L -> "the w3 w17", 2L -> "w1 w2 w5 w8", 3L -> "absent_only")
 

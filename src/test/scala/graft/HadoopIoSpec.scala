@@ -140,7 +140,7 @@ class HadoopIoSpec extends SparkSpec {
       tok(0L -> "even alpha", 1L -> "even beta", 2L -> "gamma delta",
         3L -> "epsilon zeta"),
       dir, shardBits = 2, groups = 1)
-    val stats = graft.index.PackedIndex.readStats(dir)
+    val stats = graft.index.PackedIndex.snapshot(dir).stats
     assert(stats.idf(2L) == 0.0, "fixture: df=N/2 must give idf exactly 0")
     graft.query.IndexCache.invalidateAll()
     // msm=2: doc 0 matches BOTH query terms (even counts despite idf 0)

@@ -58,10 +58,20 @@ class MetricsSpec extends SparkSpec {
     assert(math.abs(RankMetrics.hitRateAt(ranking, qrels, 3) - expected) < 1e-4)
   }
 
+  /** The five-pass oracle of `summaryFused`: each metric its own job over
+    * the reference-shaped per-metric plan, in one row.
+    */
+  private def summary(ranking: org.apache.spark.sql.DataFrame,
+                      qrels: org.apache.spark.sql.DataFrame, k: Int) =
+    Seq((RankMetrics.recallAt(ranking, qrels, k), RankMetrics.hitRateAt(ranking, qrels, k),
+      RankMetrics.mrrAt(ranking, qrels, k), RankMetrics.mapAt(ranking, qrels, k),
+      RankMetrics.ndcgAt(ranking, qrels, k)))
+      .toDF("recall", "hit_rate", "mrr", "map", "ndcg")
+
   test("summaryFused == five-pass summary (golden fixture + random fixture)") {
     def check(r: org.apache.spark.sql.DataFrame,
               q: org.apache.spark.sql.DataFrame, k: Int, ulps: Int): Unit = {
-      val slow = RankMetrics.summary(r, q, k).collect()(0)
+      val slow = summary(r, q, k).collect()(0)
       val fast = RankMetrics.summaryFused(r, q, k).collect()(0)
       // monotone bits mapping makes the long distance a true ulp count
       // across signs (raw doubleToLongBits differences are meaningless —

@@ -68,7 +68,7 @@ class PackedIndexSpec extends SparkSpec {
       rows.toDF("doc_id", "text"), "doc_id", "text")
     val autoDir = scratchDir("autobits")
     PackedIndex.build(tok(docs), autoDir, groups = 2) // shardBits defaulted
-    val stats = PackedIndex.readStats(autoDir)
+    val stats = PackedIndex.snapshot(autoDir).stats
     assert(stats.shardBits == PackedIndex.deriveShardBits(120L))
     val pinDir = scratchDir("pinbits")
     PackedIndex.build(tok(docs), pinDir, shardBits = stats.shardBits, groups = 2)
@@ -331,7 +331,7 @@ class PackedIndexSpec extends SparkSpec {
     assert(unit == plain)
     // invalid boosts fail loudly
     intercept[IllegalArgumentException] {
-      Wand.prepare(spark, dir, queries, boosts = Map(1L -> Map("t0" -> 0.0)))
+      Wand.prepare(spark, PackedIndex.snapshot(dir), queries, boosts = Map(1L -> Map("t0" -> 0.0)))
     }
   }
 
@@ -394,7 +394,7 @@ class PackedIndexSpec extends SparkSpec {
     PackedIndex.delete(dir, dead)
     val out = scratchDir("cpt-out")
     PackedIndex.compact(spark, dir, out)
-    assert(PackedIndex.loadTombstones(out).isEmpty)
+    assert(PackedIndex.snapshot(out).tombstones.isEmpty)
 
     // stats equal a fresh build over the survivors bit-for-bit
     val deadSet = dead.toSet
@@ -402,8 +402,8 @@ class PackedIndexSpec extends SparkSpec {
     val freshDocs: IndexedSeq[Array[String]] = survivors.map(i => docs(i.toInt))
     val dirF = scratchDir("cpt-fresh")
     buildIndex(freshDocs, dirF, shardBits = 7, groups = 2)
-    val sC = PackedIndex.readStats(out)
-    val sF = PackedIndex.readStats(dirF)
+    val sC = PackedIndex.snapshot(out).stats
+    val sF = PackedIndex.snapshot(dirF).stats
     assert(sC.n == sF.n)
     assert(sC.avgdl == sF.avgdl, s"avgdl ${sC.avgdl} vs fresh ${sF.avgdl}")
     assert(sC.avgRawIdf == sF.avgRawIdf)
@@ -427,13 +427,13 @@ class PackedIndexSpec extends SparkSpec {
     // docs than its highest id + 1, yet id allocation must stay above the
     // ORIGINAL range (watermark.json; a manifest-sum watermark would hand
     // out id 599-shifted ids that collide with surviving docs)
-    assert(PackedIndex.committedDocs(out) == 600L)
+    assert(PackedIndex.snapshot(out).nextDocId == 600L)
     PackedIndex.delete(out, Seq(598L)) // highest SURVIVING id is deletable
-    assert(PackedIndex.loadTombstones(out).sameElements(Array(598L)))
+    assert(PackedIndex.snapshot(out).tombstones.sameElements(Array(598L)))
     // 599 was compacted away: re-deleting it is a no-op on the dead-id
     // ledger, not a fresh tombstone
     PackedIndex.delete(out, Seq(599L))
-    assert(PackedIndex.loadTombstones(out).sameElements(Array(598L)))
+    assert(PackedIndex.snapshot(out).tombstones.sameElements(Array(598L)))
 
     // deleting an id the index never committed fails loudly
     intercept[IllegalArgumentException] {
@@ -447,7 +447,7 @@ class PackedIndexSpec extends SparkSpec {
     val extraDf = extra.zipWithIndex
       .map { case (t, i) => (600L + i, t.mkString(" ")) }.toDF("doc_id", "text")
     PackedIndex.append(InvertedIndex.tokenize(extraDf, "doc_id", "text"), out)
-    assert(PackedIndex.committedDocs(out) == 602L)
+    assert(PackedIndex.snapshot(out).nextDocId == 602L)
     val zzHits = Wand.search(spark, out, Seq(9L -> "zz1"), 0).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     assert(zzHits == Set(600L, 601L), s"appended docs not searchable: $zzHits")
@@ -470,7 +470,7 @@ class PackedIndexSpec extends SparkSpec {
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(out2, "manifest", "group-0.json"))
     intercept[IllegalArgumentException] {
-      PackedIndex.loadPostings(spark, out2).count()
+      PackedIndex.snapshot(out2).postings(spark).count()
     }
     // retried compaction overwrites every partial artifact with identical
     // content; the result equals the clean run
@@ -488,16 +488,16 @@ class PackedIndexSpec extends SparkSpec {
     PackedIndex.delete(dir, dead1)
     val out1 = scratchDir("holes-out1")
     PackedIndex.compact(spark, dir, out1)
-    assert(PackedIndex.loadHoles(out1).toSeq == dead1.sorted)
+    assert(PackedIndex.snapshot(out1).holes.toSeq == dead1.sorted)
 
     // re-issued GDPR delete of an already-erased doc: a no-op, not a new
     // tombstone (it would make the next compact subtract a nonexistent doc)
     PackedIndex.delete(out1, Seq(5L, 9L))
-    assert(PackedIndex.loadTombstones(out1).isEmpty)
+    assert(PackedIndex.snapshot(out1).tombstones.isEmpty)
 
     // mixed batch: hole ids filtered, live ids tombstoned
     PackedIndex.delete(out1, Seq(5L, 33L, 44L))
-    assert(PackedIndex.loadTombstones(out1).sameElements(Array(33L, 44L)))
+    assert(PackedIndex.snapshot(out1).tombstones.sameElements(Array(33L, 44L)))
 
     // second compaction: stats == fresh rebuild over the TRUE survivors
     val out2 = scratchDir("holes-out2")
@@ -506,13 +506,13 @@ class PackedIndexSpec extends SparkSpec {
     val survivors = docs.indices.map(_.toLong).filterNot(deadAll)
     val dirF = scratchDir("holes-fresh")
     buildIndex(survivors.map(i => docs(i.toInt)), dirF, shardBits = 7, groups = 2)
-    val sC = PackedIndex.readStats(out2)
-    val sF = PackedIndex.readStats(dirF)
+    val sC = PackedIndex.snapshot(out2).stats
+    val sF = PackedIndex.snapshot(dirF).stats
     assert(sC.n == sF.n, s"n ${sC.n} vs fresh ${sF.n}")
     assert(sC.avgdl == sF.avgdl)
     assert(sC.avgRawIdf == sF.avgRawIdf)
     // the dead-id ledger carries forward across compactions
-    assert(PackedIndex.loadHoles(out2).toSeq == deadAll.toSeq.sorted)
+    assert(PackedIndex.snapshot(out2).holes.toSeq == deadAll.toSeq.sorted)
 
     // query parity over survivors with ORIGINAL ids
     val oracle = new Bm25.Oracle(survivors.map(i => docs(i.toInt)), P)
@@ -531,11 +531,11 @@ class PackedIndexSpec extends SparkSpec {
     PackedIndex.delete(dir, Seq(3L, 4L))
     // crash window: append's stats.json committed (counts the new batch),
     // manifest not — compact's doc arithmetic must use the manifests
-    val s = PackedIndex.readStats(dir)
-    PackedIndex.writeStats(dir, s.copy(n = s.n + 37), PackedIndex.readDfDir(dir))
+    val snap = PackedIndex.snapshot(dir)
+    PackedIndex.writeStats(dir, snap.stats.copy(n = snap.stats.n + 37), snap.dfDir)
     val out = scratchDir("cstats-out")
     PackedIndex.compact(spark, dir, out)
-    assert(PackedIndex.readStats(out).n == 198L,
+    assert(PackedIndex.snapshot(out).stats.n == 198L,
       "crashed-append stats.n leaked into the compacted doc count")
   }
 
@@ -549,7 +549,7 @@ class PackedIndexSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("compact"))
     // the failed call must not have grown the committed set
-    assert(PackedIndex.loadTombstones(dir).length == 5)
+    assert(PackedIndex.snapshot(dir).tombstones.length == 5)
   }
 
   test("build is resumable: completed groups are skipped, result identical") {

@@ -107,9 +107,9 @@ object PhraseOracle {
                        indexDir: String, phrase: Seq[String]): DataFrame = {
     import spark.implicits._
     val distinctTerms = phrase.distinct
-    val tomb = graft.index.PackedIndex.loadTombstones(indexDir)
-    val bcTomb = spark.sparkContext.broadcast(tomb)
-    val pairs = graft.index.PackedIndex.loadPostings(spark, indexDir)
+    val snap = graft.index.PackedIndex.snapshot(indexDir)
+    val bcTomb = spark.sparkContext.broadcast(snap.tombstones)
+    val pairs = snap.postings(spark)
       .filter(col("term").isin(distinctTerms: _*))
       .flatMap { pp =>
         val t = bcTomb.value

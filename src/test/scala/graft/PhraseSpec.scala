@@ -146,6 +146,38 @@ class PhraseSpec extends SparkSpec {
     assert(after == Seq((1L, 1L, 1)))
   }
 
+  test("stopword-led phrases from the positional arm == rescan topK across groups, before and after a delete") {
+    // shardBits 4 plus two appends: the stopword leader's positional rows
+    // of the boundary shards span a build group and an appended one
+    val dir = scratchDir("stopword-phrase")
+    MultiGroupIndex.build(spark, dir, shardBits = 4)
+    MultiGroupIndex.append(spark, dir, 200)
+    MultiGroupIndex.append(spark, dir, 220)
+    // per stopword leader, its most frequent bigram in the corpus
+    val bigrams = MultiGroupIndex.Docs.flatMap(_._2.split(" ").sliding(2).map(_.toSeq))
+    val phrases = Seq("the", "of").map { lead =>
+      bigrams.filter(_.head == lead).groupBy(identity).toSeq
+        .maxBy { case (p, occ) => (occ.size, p.last) }._1
+    }
+    def viaArm(p: Seq[String]) =
+      Phrase.search(spark, dir, Seq(0L -> graft.query.PositionalQuery.PhraseMatch(p)), 1000)
+        .collect().map(r => (r.getLong(1), r.getDouble(2).toLong, r.getInt(3))).toSeq
+        .sortBy(_._3)
+    def viaRescan(t: org.apache.spark.sql.DataFrame, p: Seq[String]) =
+      Phrase.topK(t, p, 1000)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sortBy(_._3)
+    val corpus = MultiGroupIndex.tok(spark, 0, 240)
+    val before = phrases.map(viaArm)
+    phrases.zip(before).foreach { case (p, got) =>
+      assert(got.size > 1 && got.exists(_._1 >= 200L), s"fixture degenerate for $p: $got")
+      assert(got == viaRescan(corpus, p), s"phrase $p")
+    }
+    val victims = before.flatMap(_.take(2).map(_._1)).distinct
+    graft.index.PackedIndex.delete(dir, victims)
+    val live = corpus.filter(!col("doc_id").isin(victims: _*))
+    phrases.foreach(p => assert(viaArm(p) == viaRescan(live, p), s"phrase $p after delete"))
+  }
+
   test("stale positional arm after append fails loudly") {
     val t = tok(0L -> "table scan x", 1L -> "y table scan")
     val dir = scratchDir("posstale")
@@ -211,7 +243,7 @@ class PhraseSpec extends SparkSpec {
     assert(gotProx == wantProx)
     // lifecycle still composes AFTER compaction: append above the watermark
     // to both arms (the compacted arm is stamped with its single group 0)
-    val next = graft.index.PackedIndex.committedDocs(outDir)
+    val next = graft.index.PackedIndex.snapshot(outDir).nextDocId
     val late = tok(next -> "table scan z")
     graft.index.PackedIndex.append(late, outDir)
     graft.index.PositionalIndex.append(late, outDir)

@@ -19,7 +19,7 @@ class PlanHygieneSpec extends SparkSpec {
   }
 
   test("packed postings scan pushes the term IN filter to parquet") {
-    val plan = PackedIndex.loadPostings(spark, dir)
+    val plan = PackedIndex.snapshot(dir).postings(spark)
       .filter(col("term").isin("the", "w5"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term, [the,w5])]"), plan.take(800))

@@ -1,0 +1,87 @@
+package graft
+
+import graft.index.{PackedIndex, PositionalIndex}
+import graft.query.{IndexCache, Phrase, PositionalQuery, Wand}
+import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** One committed version per call: a reader holding an [[graft.index.IndexSnapshot]]
+  * keeps serving exactly that version while an append and a delete commit,
+  * and a fresh snapshot sees both commits.
+  */
+class SnapshotSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** (query_id, doc_id, score, rank), sorted. */
+  private def hits(df: DataFrame): Seq[(Long, Long, Double, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq.sorted
+
+  test("a pinned snapshot serves its version while an append (v+1) and a delete (v+2) commit") {
+    val dir = scratchDir("snap-pinned")
+    MultiGroupIndex.build(spark, dir)
+    IndexCache.invalidateAll()
+    // k = 0 ranks every matched doc, so an appended or deleted doc shows
+    val queries = MultiGroupIndex.Queries :+ (5L -> "the")
+    val batch = queries.toDF("query_id", "text")
+    val phrase = Seq(0L -> PositionalQuery.PhraseMatch(MultiGroupIndex.PhraseTerms))
+
+    val pinned = PackedIndex.snapshot(dir)
+    def pinnedSearch() = hits(Wand.search(spark, pinned, queries, 0, None, 1, Map.empty, Map.empty))
+    // chunks of 2 over 5 queries: three chunks share the one snapshot
+    def pinnedDs() = hits(Wand.searchDs(spark, pinned, batch, 0, 2, None, None, 1, Map.empty))
+    def pinnedPhrase() = hits(Phrase.search(spark, pinned, phrase, 100))
+
+    val pre = hits(Wand.search(spark, dir, queries, 0))
+    val prePhrase = hits(Phrase.search(spark, dir, phrase, 100))
+    assert(pre.nonEmpty && prePhrase.nonEmpty)
+    assert(pinnedSearch() == pre && pinnedDs() == pre && pinnedPhrase() == prePhrase)
+
+    val batchTok = MultiGroupIndex.tok(spark, 200, 220)
+    PackedIndex.append(batchTok, dir)
+    val victims = (prePhrase.map(_._2).take(1) ++ pre.map(_._2).distinct.take(3)).distinct
+    PackedIndex.delete(dir, victims)
+
+    assert(pinnedSearch() == pre, "pinned Wand.search saw a later commit")
+    assert(pinnedDs() == pre, "pinned Wand.searchDs saw a later commit")
+    assert(pinnedPhrase() == prePhrase, "pinned Phrase.search saw the later delete")
+
+    val fresh = hits(Wand.search(spark, dir, queries, 0))
+    assert(fresh.exists(_._2 >= 200L), "a fresh snapshot misses the append")
+    assert(!fresh.exists(h => victims.contains(h._2)), "a fresh snapshot misses the delete")
+    assert(hits(Wand.searchDs(spark, dir, batch, 0, chunkSize = 2)) == fresh)
+
+    // the positional arm moves past the pinned snapshot's groups: stale
+    PositionalIndex.append(batchTok, dir)
+    val stale = intercept[IllegalArgumentException](pinnedPhrase())
+    assert(stale.getMessage.contains("stale"), stale.getMessage)
+    val freshPhrase = hits(Phrase.search(spark, dir, phrase, 100))
+    assert(freshPhrase != prePhrase && !freshPhrase.exists(h => victims.contains(h._2)))
+  }
+
+  test("query, plans, corpus and the positional arm read index state only through the snapshot") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"source tree not found from ${Paths.get("").toAbsolutePath}")
+    def scalaFiles(pkg: String): List[Path] = {
+      val s = Files.walk(root.resolve(pkg))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    def codeLines(f: Path): Seq[(String, Int)] =
+      Files.readAllLines(f).asScala.toSeq.zipWithIndex
+        .filterNot { case (line, _) => line.trim.startsWith("*") || line.trim.startsWith("//") ||
+          line.trim.startsWith("/**") }
+    val sidecar = """/(stats\.json|manifest\b|watermark\.json|tombstones\.txt|holes\.txt)""".r
+    val readers = Seq("query", "plans", "corpus").flatMap(scalaFiles) :+
+      root.resolve("index/PositionalIndex.scala")
+    val offenders = readers.flatMap(f => codeLines(f).collect {
+      case (line, i) if sidecar.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+    })
+    assert(offenders.isEmpty, s"index state read around PackedIndex.snapshot:\n${offenders.mkString("\n")}")
+    val cache = root.resolve("query/IndexCache.scala")
+    val io = codeLines(cache).collect {
+      case (line, i) if line.contains("MetaIO") || line.contains("TableIO") => s"$cache:${i + 1}"
+    }
+    assert(io.isEmpty, s"IndexCache reads files itself: $io")
+  }
+}

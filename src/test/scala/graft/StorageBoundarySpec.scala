@@ -58,7 +58,7 @@ class StorageBoundarySpec extends SparkSpec {
       corpus.PagesPipeline.appendPages(more, dir)
       IndexCache.invalidateAll()
       val got = rows(Wand.search(spark, dir, Seq(1L -> "the w3 w17"), 20))
-      val n = graft.index.PackedIndex.readStats(dir).n
+      val n = graft.index.PackedIndex.snapshot(dir).stats.n
       // the URI names the same dir: its sidecars are where the path says
       assert(MetaIO.list(s"$local/manifest").count(_.startsWith("group-")) == 3)
       (got, n)

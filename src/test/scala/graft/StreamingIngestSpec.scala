@@ -44,8 +44,8 @@ class StreamingIngestSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    val sS = graft.index.PackedIndex.readStats(idxStream)
-    val sB = graft.index.PackedIndex.readStats(idxBatch)
+    val sS = graft.index.PackedIndex.snapshot(idxStream).stats
+    val sB = graft.index.PackedIndex.snapshot(idxBatch).stats
     assert(sS.n == sB.n && sS.n == 300L)
     assert(sS.avgdl == sB.avgdl)       // exact Long-sum reconstruction
     assert(sS.avgRawIdf == sB.avgRawIdf)
@@ -64,6 +64,6 @@ class StreamingIngestSpec extends SparkSpec {
     val q2 = IndexIngest.start(spark, srcDir,
       pagesRange(0, 1).schema, idxStream, shardBits = 6, groups = 1)
     try q2.processAllAvailable() finally q2.stop()
-    assert(graft.index.PackedIndex.readStats(idxStream).n == 300L)
+    assert(graft.index.PackedIndex.snapshot(idxStream).stats.n == 300L)
   }
 }

@@ -36,7 +36,7 @@ class TableSchemaSpec extends SparkSpec {
         shape(PackedIndex.PostingsSchema), s"$d/postings/$g"))
       segments.foreach(s => assert(shape(inferred(s"$d/$s")) ==
         shape(PositionalIndex.PostingsSchema), s"$d/$s"))
-      val df = s"$d/${PackedIndex.readDfDir(d)}"
+      val df = s"$d/${PackedIndex.snapshot(d).dfDir}"
       assert(shape(inferred(df)) == shape(PackedIndex.DfSchema), df)
     }
   }
@@ -84,7 +84,7 @@ class TableSchemaSpec extends SparkSpec {
     MetaIO.deleteRecursively(ref)
     copyTree(dir, ref)
     val postingsUnion = unionRead(groups.map(g => s"$dir/postings/$g")).as[PackedPostings]
-    assert(canon(PackedIndex.loadPostings(spark, dir)) == canon(postingsUnion))
+    assert(canon(PackedIndex.snapshot(dir).postings(spark)) == canon(postingsUnion))
     TableIO.write(postingsUnion.toDF(), s"$ref/postings/${groups.head}")
     groups.tail.foreach(g =>
       TableIO.write(spark.emptyDataset[PackedPostings].toDF(), s"$ref/postings/$g"))
@@ -92,7 +92,7 @@ class TableSchemaSpec extends SparkSpec {
     assert(canonPos(PositionalIndex.load(spark, dir)) == canonPos(positionsUnion))
     TableIO.write(positionsUnion.toDF(), s"$ref/positions")
     MetaIO.writeAtomic(s"$ref/positions.list",
-      s"covers=${PackedIndex.committedGroups(ref).mkString(",")}\npositions")
+      s"covers=${PackedIndex.snapshot(ref).groups.mkString(",")}\npositions")
 
     def answers(d: String): Seq[Seq[Seq[Any]]] = {
       IndexCache.invalidateAll()

@@ -173,9 +173,9 @@ object Bench {
     val dsSec = (System.nanoTime() - t2) / 1e9
     val dsQps = nDsQueries / dsSec
 
-    // 100k-query batch through the staged-chunk path (scale evidence for
-    // searchDs: one query-table pass, per-chunk sink writes, driver memory
-    // flat in batch size)
+    // 100k-query batch through the chunked path (scale evidence for
+    // searchDs: ten chunks cut on the driver, each chunk's hits pinned in
+    // the block manager, at most four chunks on the driver at once)
     val nDs2 = sys.env.getOrElse("SPARK_GRAFT_BENCH_DS2_QUERIES", "100000").toInt
     val ds2Df = {
       import spark.implicits._

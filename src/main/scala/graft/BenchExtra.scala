@@ -13,8 +13,13 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.BenchExtra battery q_a,q_b,... [reps]
   *   runMain graft.BenchExtra plans q_a,q_b,... <outDir> [suffix]
   *   runMain graft.BenchExtra pages [reps]
-  *   runMain graft.BenchExtra ds <nQueries> <chunkSize> [reps]
+  *   runMain graft.BenchExtra ds [nQueries] [chunkSize] [reps] [nPages]
+  *   runMain graft.BenchExtra dsparity [nQueries] [chunkSize]
+  *   runMain graft.BenchExtra batch [nQueries] [reps]
+  *   runMain graft.BenchExtra wandbuild [reps]
   *
+  * Every index a mode builds lives in a `graft-bx*` temp dir that is
+  * deleted when the mode ends, failed runs included.
   * Session config mirrors [[Bench]] exactly (same master, shuffle
   * partitions, AQE, split size) so numbers are comparable to the frozen
   * battery's per-line seconds.
@@ -37,6 +42,10 @@ object BenchExtra {
 
     def timed(f: => Unit): Double = {
       val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
+    }
+    def withTmp[T](prefix: String)(use: String => T): T = {
+      val tmp = graft.io.MetaIO.createTempDir(prefix)
+      try use(tmp) finally graft.io.MetaIO.deleteRecursively(tmp)
     }
 
     args.headOption.getOrElse("battery") match {
@@ -71,32 +80,40 @@ object BenchExtra {
       case "pages" =>
         val reps = args.lift(1).map(_.toInt).getOrElse(2)
         val nPages = 100000L
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bx").toString
-        corpus.PagesGen.pages(spark, nPages, cpus.toInt * 2).toDF()
-          .write.mode("overwrite").parquet(s"$tmp/pages")
-        val pages = spark.read.parquet(s"$tmp/pages")
-        (1 to reps).foreach { r =>
-          val dir = s"$tmp/idx$r"
-          val sec = timed(
-            corpus.PagesPipeline.buildIndex(pages, dir, shardBits = 12, groups = 2))
-          println(f"""{"probe":"pages_build","rep":$r,"sec":$sec%.2f,"docs_per_sec":${nPages / sec}%.0f}""")
+        withTmp("graft-bx") { tmp =>
+          corpus.PagesGen.pages(spark, nPages, cpus.toInt * 2).toDF()
+            .write.mode("overwrite").parquet(s"$tmp/pages")
+          val pages = spark.read.parquet(s"$tmp/pages")
+          (1 to reps).foreach { r =>
+            val dir = s"$tmp/idx$r"
+            val sec = timed(
+              corpus.PagesPipeline.buildIndex(pages, dir, shardBits = 12, groups = 2))
+            println(f"""{"probe":"pages_build","rep":$r,"sec":$sec%.2f,"docs_per_sec":${nPages / sec}%.0f}""")
+          }
         }
 
       case "ds" =>
+        // the Dataset-batch path alone: build the standard index, then
+        // `reps` runs of one searchDs batch — the in-battery
+        // wand_query_ds_10k line shares its JVM with heavier queries
         val nQ = args.lift(1).map(_.toInt).getOrElse(10000)
         val chunk = args.lift(2).map(_.toInt).getOrElse(2500)
         val reps = args.lift(3).map(_.toInt).getOrElse(3)
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bx").toString
-        corpus.PagesPipeline.buildIndex(
-          corpus.PagesGen.pages(spark, 100000L, cpus.toInt * 2).toDF(),
-          s"$tmp/idx", shardBits = 12, groups = 2)
-        import spark.implicits._
-        val batch = Bench.queryBatch(nQ).toDF("query_id", "text")
-        (1 to reps).foreach { r =>
-          val sec = timed(
-            query.Wand.searchDs(spark, s"$tmp/idx", batch, k = 10,
-              chunkSize = chunk).count())
-          println(f"""{"probe":"ds_$nQ","rep":$r,"sec":$sec%.2f,"qps":${nQ / sec}%.0f}""")
+        val nPages = args.lift(4).map(_.toLong).getOrElse(100000L)
+        withTmp("graft-bx") { tmp =>
+          corpus.PagesPipeline.buildIndex(
+            corpus.PagesGen.pages(spark, nPages, cpus.toInt * 2).toDF(),
+            s"$tmp/idx", shardBits = 12, groups = 2)
+          import spark.implicits._
+          val batch = Bench.queryBatch(nQ).toDF("query_id", "text")
+          (1 to reps).foreach { r =>
+            var hits = 0L
+            val sec = timed {
+              hits = query.Wand.searchDs(spark, s"$tmp/idx", batch, k = 10,
+                chunkSize = chunk).count()
+            }
+            println(f"""{"probe":"ds_$nQ","rep":$r,"sec":$sec%.2f,"qps":${nQ / sec}%.0f,"hits":$hits,"n_pages":$nPages}""")
+          }
         }
 
       case "dsparity" =>
@@ -105,35 +122,37 @@ object BenchExtra {
         // sets must be identical
         val nQ = args.lift(1).map(_.toInt).getOrElse(10000)
         val chunk = args.lift(2).map(_.toInt).getOrElse(2500)
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bx").toString
-        corpus.PagesPipeline.buildIndex(
-          corpus.PagesGen.pages(spark, 100000L, cpus.toInt * 2).toDF(),
-          s"$tmp/idx", shardBits = 12, groups = 2)
-        val qs = Bench.queryBatch(nQ)
-        import spark.implicits._
-        val a = query.Wand.searchDs(spark, s"$tmp/idx",
-            qs.toDF("query_id", "text"), k = 10, chunkSize = chunk)
-          .select("query_id", "doc_id", "score", "rank")
-        val b = query.Wand.search(spark, s"$tmp/idx", qs, k = 10)
-          .select("query_id", "doc_id", "score", "rank")
-        val onlyA = a.exceptAll(b).count()
-        val onlyB = b.exceptAll(a).count()
-        val nA = a.count()
-        println(s"""{"probe":"dsparity","rows":$nA,"only_ds":$onlyA,"only_seq":$onlyB,"identical":${onlyA == 0 && onlyB == 0}}""")
+        withTmp("graft-bx") { tmp =>
+          corpus.PagesPipeline.buildIndex(
+            corpus.PagesGen.pages(spark, 100000L, cpus.toInt * 2).toDF(),
+            s"$tmp/idx", shardBits = 12, groups = 2)
+          val qs = Bench.queryBatch(nQ)
+          import spark.implicits._
+          val a = query.Wand.searchDs(spark, s"$tmp/idx",
+              qs.toDF("query_id", "text"), k = 10, chunkSize = chunk)
+            .select("query_id", "doc_id", "score", "rank")
+          val b = query.Wand.search(spark, s"$tmp/idx", qs, k = 10)
+            .select("query_id", "doc_id", "score", "rank")
+          val onlyA = a.exceptAll(b).count()
+          val onlyB = b.exceptAll(a).count()
+          val nA = a.count()
+          println(s"""{"probe":"dsparity","rows":$nA,"only_ds":$onlyA,"only_seq":$onlyB,"identical":${onlyA == 0 && onlyB == 0}}""")
+        }
 
       case "batch" =>
         // direct Seq-batch Wand.search on the 100k-page index (one job, no
-        // chunk staging) — isolates the kernel+rank cost per batch size
+        // chunking) — isolates the kernel+rank cost per batch size
         val nQ = args.lift(1).map(_.toInt).getOrElse(2500)
         val reps = args.lift(2).map(_.toInt).getOrElse(4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bx").toString
-        corpus.PagesPipeline.buildIndex(
-          corpus.PagesGen.pages(spark, 100000L, cpus.toInt * 2).toDF(),
-          s"$tmp/idx", shardBits = 12, groups = 2)
-        val qs = Bench.queryBatch(nQ)
-        (1 to reps).foreach { r =>
-          val sec = timed(query.Wand.search(spark, s"$tmp/idx", qs, k = 10).count())
-          println(f"""{"probe":"batch_$nQ","rep":$r,"sec":$sec%.2f,"qps":${nQ / sec}%.0f}""")
+        withTmp("graft-bx") { tmp =>
+          corpus.PagesPipeline.buildIndex(
+            corpus.PagesGen.pages(spark, 100000L, cpus.toInt * 2).toDF(),
+            s"$tmp/idx", shardBits = 12, groups = 2)
+          val qs = Bench.queryBatch(nQ)
+          (1 to reps).foreach { r =>
+            val sec = timed(query.Wand.search(spark, s"$tmp/idx", qs, k = 10).count())
+            println(f"""{"probe":"batch_$nQ","rep":$r,"sec":$sec%.2f,"qps":${nQ / sec}%.0f}""")
+          }
         }
 
       case "wandbuild" =>
@@ -142,16 +161,17 @@ object BenchExtra {
         val reps = args.lift(1).map(_.toInt).getOrElse(3)
         (1 to reps).foreach { r =>
           val tok = DocsCorpus.tokenized(spark, sfDir)
-          val dir = java.nio.file.Files.createTempDirectory("graft-bxwb").toString
-          val t0 = System.nanoTime()
-          graft.index.PackedIndex.build(tok, dir, shardBits = 7, groups = 2,
-            stageInput = false)
-          val buildSec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val hits = query.Wand.search(spark, dir,
-            Seq(0L -> DocsCorpus.fixedQuery.mkString(" ")), k = 200).count()
-          val qSec = (System.nanoTime() - t1) / 1e9
-          println(f"""{"probe":"wandbuild","rep":$r,"build_sec":$buildSec%.3f,"query_sec":$qSec%.3f,"hits":$hits}""")
+          withTmp("graft-bxwb") { dir =>
+            val t0 = System.nanoTime()
+            graft.index.PackedIndex.build(tok, dir, shardBits = 7, groups = 2,
+              stageInput = false)
+            val buildSec = (System.nanoTime() - t0) / 1e9
+            val t1 = System.nanoTime()
+            val hits = query.Wand.search(spark, dir,
+              Seq(0L -> DocsCorpus.fixedQuery.mkString(" ")), k = 200).count()
+            val qSec = (System.nanoTime() - t1) / 1e9
+            println(f"""{"probe":"wandbuild","rep":$r,"build_sec":$buildSec%.3f,"query_sec":$qSec%.3f,"hits":$hits}""")
+          }
         }
 
       case other => sys.error(s"unknown mode $other")

@@ -4,7 +4,7 @@ package graft.io
   * outside a Spark table: the SMALL metadata sidecars (stats.json, group
   * manifests, tombstones, watermark, segment lists), commit probes and
   * scratch cleanup. Table-shaped artifacts (postings, df, staged docs) go
-  * through [[TableIO]], whose commit probe and cleanup come back here.
+  * through [[TableIO]], whose commit probe comes back here.
   *
   * The PATH picks the storage:
   *  - a scheme-less path (`/data/idx`) runs driver-local `java.nio` — the

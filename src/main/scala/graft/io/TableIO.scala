@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
   * (staged docs, packed postings groups, df tables): parquet directories,
   * the directory is the table and its `_SUCCESS` file the commit marker.
   * Spark's parquet reader/writer speak both scheme-less paths and Hadoop
-  * URIs; the commit probe and cleanup go through [[MetaIO]], so the
+  * URIs; the commit probe goes through [[MetaIO]], so the
   * location's path picks the storage exactly as it does for sidecars.
   * Serving tables are read with their constant schema (no inference job);
   * the schema-less read is for tables shaped by the caller's frame.
@@ -17,19 +17,12 @@ import org.apache.spark.sql.types.StructType
   * Iceberg implementation would map `write` to a table commit (snapshot),
   * `committed` to table existence, and the group manifests to snapshot
   * metadata, behind these four methods.
-  *
-  * A class rather than a bare object only so that tests can inject
-  * storage faults into [[graft.query.ChunkedServe]]; the engine uses the
-  * [[TableIO]] object everywhere.
   */
-class TableIO {
+object TableIO {
 
   /** Write a table, replacing any previous content at the location. */
-  def write(df: DataFrame, location: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(location)
-  }
+  def write(df: DataFrame, location: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(location)
 
   def read(spark: SparkSession, location: String): DataFrame =
     spark.read.parquet(location)
@@ -44,10 +37,4 @@ class TableIO {
   /** True iff a COMPLETE write exists at the location (atomicity marker). */
   def committed(location: String): Boolean =
     MetaIO.exists(s"$location/_SUCCESS")
-
-  /** Remove the table at the location if present (no-op when absent). */
-  def deleteIfExists(location: String): Unit =
-    MetaIO.deleteRecursively(location)
 }
-
-object TableIO extends TableIO

@@ -300,19 +300,17 @@ object Phrase {
   }
 
   /** Dataset-typed positional query batch: (query_id, text) rows parsed by
-    * `mode`, served in deterministic staged chunks through the same
-    * chunked-batch machinery as [[Wand.searchDs]] (one staging pass, loud
-    * accounting, per-chunk sinks), every chunk from one
+    * `mode`, served in deterministic chunks through the same chunked-batch
+    * machinery as [[Wand.searchDs]] (chunks cut on the driver, hits pinned
+    * in the block manager, loud accounting), every chunk from one
     * [[graft.index.IndexSnapshot]] taken at the start of the call. Parity
     * with [[search]] on the same batch is pinned in RetrieverSpec.
     */
   def searchDs(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                queries: DataFrame, mode: PositionalMode, k: Int,
-               chunkSize: Int = 10000,
-               stagingDir: Option[String] = None): DataFrame = {
+               chunkSize: Int = 10000): DataFrame = {
     val snap = graft.index.PackedIndex.snapshot(indexDir)
-    ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
-      "Phrase.searchDs") { chunk =>
+    ChunkedServe.serve(queries, chunkSize, "Phrase.searchDs") { chunk =>
       search(spark, snap,
         chunk.map { case (id, text) => id -> mode.parse(text) }, k)
     }

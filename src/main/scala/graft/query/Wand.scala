@@ -224,11 +224,12 @@ object Wand {
   }
 
   /** Dataset-typed query batch: the large-batch path. The query set stays
-    * a DataFrame (query_id, text) and is served in deterministic staged
-    * chunks through [[ChunkedServe.serve]] (one staging pass, loud
-    * accounting, partition-pruned per-chunk reads, per-chunk sinks, bounded
-    * concurrent chunk jobs), each chunk riding the broadcast kernel path
-    * while the index-side scan plan is identical per chunk. The call takes
+    * a DataFrame (query_id, text) and is served in deterministic chunks
+    * through [[ChunkedServe.serve]]: each chunk is cut on the driver (no
+    * job on a local batch, one scan per chunk on a scanned query table),
+    * runs the broadcast kernel path over the batch's pinned postings, and
+    * its hits are pinned in the block manager; at most four chunks run at
+    * once, and the chunk sizes must sum to the batch count. The call takes
     * one [[IndexSnapshot]] and every chunk is served from it, so a commit
     * that lands mid-call changes no chunk's answer.
     *
@@ -236,19 +237,17 @@ object Wand {
     */
   def searchDs(spark: SparkSession, indexDir: String, queries: DataFrame,
                k: Int, chunkSize: Int = 10000,
-               stagingDir: Option[String] = None,
                allowedDocs: Option[Array[Long]] = None,
                minShouldMatch: Int = 1,
                mustNot: Map[Long, String] = Map.empty): DataFrame =
     searchDs(spark, PackedIndex.snapshot(indexDir), queries, k, chunkSize,
-      stagingDir, allowedDocs, minShouldMatch, mustNot)
+      allowedDocs, minShouldMatch, mustNot)
 
   /** [[searchDs]] served entirely from `snap`: every chunk scores with the
     * snapshot's stats and df over its postings, minus its tombstones.
     */
   private[graft] def searchDs(spark: SparkSession, snap: IndexSnapshot,
                               queries: DataFrame, k: Int, chunkSize: Int,
-                              stagingDir: Option[String],
                               allowedDocs: Option[Array[Long]],
                               minShouldMatch: Int,
                               mustNot: Map[Long, String]): DataFrame = {
@@ -280,8 +279,7 @@ object Wand {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
-      ChunkedServe.serve(spark, queries, chunkSize, stagingDir,
-        "searchDs") { chunk =>
+      ChunkedServe.serve(queries, chunkSize, "searchDs") { chunk =>
         ShardServe.globalRank(wandHits(spark, grouped, snap.stats,
           prepare(spark, snap, chunk, mustNot), k, allowedDocs,
           snap.tombstones, minShouldMatch), k)

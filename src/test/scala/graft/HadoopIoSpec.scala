@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.MetaIO
-import org.apache.spark.sql.functions._
 
 /** The one storage boundary's two arms: a scheme-less path runs java.nio, a
   * URI runs the Hadoop FileSystem API. A `file://` URI of a local dir
@@ -106,28 +105,22 @@ class HadoopIoSpec extends SparkSpec {
     assert(viaUri == viaPath && viaPath._1.nonEmpty && viaPath._2.nonEmpty)
   }
 
-  test("searchDs cleans stale hits through the TableIO boundary on a reused staging dir") {
-    val dir = scratchDir("hio-ds")
+  test("searchDs via a file:// index: a small batch after a big one equals Wand.search") {
+    val (_, dir) = freshDir("hio-ds")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 200, 4).toDF(), dir, shardBits = 6, groups = 2)
-    val (_, staging) = freshDir("hio-stage")
-    // big batch: 30 queries over chunkSize 7 -> 5 chunk partitions land in hits/
+    def hits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    // big batch: 30 queries over chunkSize 7 -> 5 chunks
     val big = Bench.queryBatch(30)
-    val bigRows = graft.query.Wand.searchDs(spark, dir,
-      big.toDF("query_id", "text"), 10, chunkSize = 7,
-      stagingDir = Some(staging)).collect()
-    assert(bigRows.nonEmpty)
-    // smaller reuse of the SAME staging dir: fewer chunks — any stale
-    // hits/chunk=N partition from the big batch unioned into this result
-    // would surface extra query_ids
+    assert(hits(graft.query.Wand.searchDs(spark, dir,
+      big.toDF("query_id", "text"), 10, chunkSize = 7)).nonEmpty)
+    // the smaller batch's 3 chunks answer exactly what Wand.search does
     val small = Bench.queryBatch(15)
-    val smallIds = graft.query.Wand.searchDs(spark, dir,
-      small.toDF("query_id", "text"), 10, chunkSize = 7,
-      stagingDir = Some(staging))
-      .select(col("query_id")).distinct().as[Long].collect().toSet
-    val wantIds = small.map(_._1).toSet
-    assert(smallIds.subsetOf(wantIds),
-      s"stale chunk partitions leaked into the reused staging dir: ${smallIds -- wantIds}")
+    val got = hits(graft.query.Wand.searchDs(spark, dir,
+      small.toDF("query_id", "text"), 10, chunkSize = 7))
+    assert(got.nonEmpty && got == hits(graft.query.Wand.search(spark, dir, small, 10)),
+      s"query ids outside the batch: ${got.map(_._1) -- small.map(_._1)}")
   }
 
   test("zero-idf terms (df == N/2) stay retrievable and count toward msm") {

@@ -57,6 +57,14 @@ object MultiGroupIndex {
   */
 class ReadJobsSpec extends SparkSpec {
 
+  /** Jobs of a warm 2-chunk local-batch `Wand.searchDs` on [[MultiGroupIndex]]
+    * (13 shards) and the collect of its result: five pin the batch's
+    * postings, two count the batch, each chunk's kernel runs its rank
+    * shuffle and its eager checkpoint, and the collect reads the pinned
+    * hits.
+    */
+  private val ChunkedJobs = 5 + 2 + 2 * 2 + 1
+
   /** Stage names of one job, and whether it ran inside a SQL execution
     * (staging writes do; a schema-inference job is a bare RDD job).
     */
@@ -174,17 +182,18 @@ class ReadJobsSpec extends SparkSpec {
     }
   }
 
-  test("a 2-chunk searchDs reads its staged tables without a schema-inference job") {
+  test("a 2-chunk local-batch searchDs runs no parquet job: pin, count and chunk jobs") {
     val dir = scratchDir("readjobs-chunks")
     MultiGroupIndex.build(spark, dir)
     val batch = spark.createDataFrame((1L to 40L).map(i =>
       i -> s"w$i w${(i * 7) % 200} the")).toDF("query_id", "text")
     listening {
+      Wand.searchDs(spark, dir, batch, 10, chunkSize = 20).collect() // warms the df cache
       val jobs = jobsOf(Wand.searchDs(spark, dir, batch, 10, chunkSize = 20).collect())
-      assert(jobs.exists(_.stages.exists(_.startsWith("parquet at"))),
-        s"no staging write seen: the batch did not stage: $jobs")
-      val bare = schemaJobs(jobs.filterNot(_.sql))
-      assert(bare.isEmpty, s"schema-inference jobs in a 2-chunk searchDs: $bare")
+      val parquet = schemaJobs(jobs)
+      assert(parquet.isEmpty, s"parquet jobs in a 2-chunk local-batch searchDs: $parquet")
+      // cutting a chunk from a local batch runs no job
+      assert(jobs.size == ChunkedJobs, s"a 2-chunk searchDs ran ${jobs.size} jobs: $jobs")
     }
   }
 }

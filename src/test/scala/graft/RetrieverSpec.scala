@@ -4,6 +4,9 @@ import graft.functions.TextFunctions
 import graft.query.{Bm25WandRetriever, CosineRetriever, EnsembleRetriever}
 import org.apache.spark.sql.functions._
 
+/** Flipped by the first served chunk of a query frame that filters on it. */
+object ShrinkingSource { @volatile var served = false }
+
 /** Retriever trait surface + MaxSim/pooling semantics. */
 class RetrieverSpec extends SparkSpec {
   import spark.implicits._
@@ -119,52 +122,59 @@ class RetrieverSpec extends SparkSpec {
     assert(seqHits.forall(_._2 % 2 == 0), "odd doc leaked past the filter")
   }
 
-  test("searchDs: stale hits in a reused staging dir don't leak into results") {
+  private def hitSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  test("searchDs: a smaller batch after a larger one returns only its own hits") {
     val dir = scratchDir("dsq-stale")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
-    val staging = scratchDir("dsq-staging")
     val big = Bench.queryBatch(40)
     graft.query.Wand.searchDs(spark, dir, big.toDF("query_id", "text"), 10,
-      chunkSize = 7, stagingDir = Some(staging)).count()
-    // smaller second batch, SAME staging dir: the first run's extra
-    // hits/chunk=N partitions must not be unioned into this result
+      chunkSize = 7).count()
+    // smaller second batch: nothing of the first call's six chunks may
+    // surface in this call's two
     val small = big.take(14)
-    val got = graft.query.Wand.searchDs(spark, dir,
-      small.toDF("query_id", "text"), 10, chunkSize = 7,
-      stagingDir = Some(staging)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val want = graft.query.Wand.search(spark, dir, small, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == want, "stale chunk partitions leaked from the reused staging")
+    val got = hitSet(graft.query.Wand.searchDs(spark, dir,
+      small.toDF("query_id", "text"), 10, chunkSize = 7))
+    val want = hitSet(graft.query.Wand.search(spark, dir, small, 10))
+    assert(got == want, "the larger batch's hits leaked into the smaller one")
   }
 
-  test("searchDs raises when staged chunks are not visible (no silent subset)") {
+  test("searchDs: duplicate query ids over several chunks equal Wand.search") {
+    val dir = scratchDir("dsq-dup")
+    corpus.PagesPipeline.buildIndex(
+      corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
+    // 12 ids, each carrying two or three different texts: an id's rows must
+    // land in one chunk, or each chunk would rank its own share of the
+    // id's hits and the batch would return more than k per id
+    val texts = Bench.queryBatch(30).map(_._2)
+    val batch = texts.zipWithIndex.map { case (t, i) => (i % 12).toLong -> t }
+    val want = hitSet(graft.query.Wand.search(spark, dir, batch, 10))
+    val got = hitSet(graft.query.Wand.searchDs(spark, dir,
+      batch.toDF("query_id", "text"), 10, chunkSize = 5))
+    assert(got == want)
+    assert(want.groupBy(_._1).values.exists(_.size == 10))
+  }
+
+  test("searchDs raises when the query frame returns different rows per execution") {
     val dir = scratchDir("dsq-vanish")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
-    // a TableIO whose staged-query write "loses" one chunk partition — the
-    // observable shape of staging on storage the readers can't fully see
-    // (the bug class: staging probed via a driver-local filesystem check)
-    object DropOneChunkIO extends graft.io.TableIO {
-      override def write(df: org.apache.spark.sql.DataFrame, location: String,
-                         partitionBy: Seq[String] = Nil): Unit = {
-        super.write(df, location, partitionBy)
-        if (location.endsWith("/queries")) {
-          val victim = graft.io.MetaIO.list(location)
-            .filter(_.startsWith("chunk=")).sorted.head
-          graft.io.MetaIO.deleteRecursively(s"$location/$victim")
-        }
-      }
-    }
+    // every row is kept until the first chunk is served, none after: the
+    // counted batch is 40 queries, the chunks cut later hold fewer (the
+    // observable shape of a source that changes while it is served)
+    ShrinkingSource.served = false
+    val keep = udf((_: Long) => !ShrinkingSource.served).asNondeterministic()
+    val queries = Bench.queryBatch(40).toDF("query_id", "text")
+      .filter(keep(col("query_id")))
     val ex = intercept[IllegalArgumentException] {
-      graft.query.ChunkedServe.serve(spark,
-        Bench.queryBatch(40).toDF("query_id", "text"), chunkSize = 7,
-        stagingDir = None, label = "searchDs", io = DropOneChunkIO) { chunk =>
+      graft.query.ChunkedServe.serve(queries, chunkSize = 7, label = "searchDs") { chunk =>
+        ShrinkingSource.served = true
         graft.query.Wand.search(spark, dir, chunk, 10)
       }.count()
     }
-    assert(ex.getMessage.contains("incomplete"))
+    assert(ex.getMessage.contains("changed while it was served"))
   }
 
   test("minimum_should_match plumbs through searchDs and the retriever") {

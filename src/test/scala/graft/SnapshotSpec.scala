@@ -29,7 +29,7 @@ class SnapshotSpec extends SparkSpec {
     val pinned = PackedIndex.snapshot(dir)
     def pinnedSearch() = hits(Wand.search(spark, pinned, queries, 0, None, 1, Map.empty, Map.empty))
     // chunks of 2 over 5 queries: three chunks share the one snapshot
-    def pinnedDs() = hits(Wand.searchDs(spark, pinned, batch, 0, 2, None, None, 1, Map.empty))
+    def pinnedDs() = hits(Wand.searchDs(spark, pinned, batch, 0, 2, None, 1, Map.empty))
     def pinnedPhrase() = hits(Phrase.search(spark, pinned, phrase, 100))
 
     val pre = hits(Wand.search(spark, dir, queries, 0))

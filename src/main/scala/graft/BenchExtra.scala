@@ -40,14 +40,10 @@ object BenchExtra {
     spark.sparkContext.setLogLevel("WARN")
     val calib0 = Bench.calibMops()
 
+    import Bench.withTmp
     def timed(f: => Unit): Double = {
       val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
     }
-    def withTmp[T](prefix: String)(use: String => T): T = {
-      val tmp = graft.io.MetaIO.createTempDir(prefix)
-      try use(tmp) finally graft.io.MetaIO.deleteRecursively(tmp)
-    }
-
     args.headOption.getOrElse("battery") match {
       case "battery" =>
         val names = args(1).split(",").toSeq

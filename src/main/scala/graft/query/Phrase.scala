@@ -301,8 +301,8 @@ object Phrase {
 
   /** Dataset-typed positional query batch: (query_id, text) rows parsed by
     * `mode`, served in deterministic chunks through the same chunked-batch
-    * machinery as [[Wand.searchDs]] (chunks cut on the driver, hits pinned
-    * in the block manager, loud accounting), every chunk from one
+    * machinery as [[Wand.searchDs]] (the batch collected once, chunks cut
+    * on the driver, hits pinned in the block manager), every chunk from one
     * [[graft.index.IndexSnapshot]] taken at the start of the call. Parity
     * with [[search]] on the same batch is pinned in RetrieverSpec.
     */
@@ -310,7 +310,8 @@ object Phrase {
                queries: DataFrame, mode: PositionalMode, k: Int,
                chunkSize: Int = 10000): DataFrame = {
     val snap = graft.index.PackedIndex.snapshot(indexDir)
-    ChunkedServe.serve(queries, chunkSize, "Phrase.searchDs") { chunk =>
+    val batch = ChunkedServe.collect(queries, chunkSize, "Phrase.searchDs")
+    ChunkedServe.serve(batch, chunkSize) { chunk =>
       search(spark, snap,
         chunk.map { case (id, text) => id -> mode.parse(text) }, k)
     }

@@ -34,9 +34,10 @@ object Wand {
   private val BoundPad: Double = 1.0 + 4 * math.ulp(1.0)
 
   /** Above this many distinct query terms, `term IN (...)` predicates are
-    * replaced by a broadcast semi-join: a 50k-element In pushed into the
-    * parquet scan is slower to evaluate per row-group than a hash probe,
-    * and bloats the plan string. Below it, pushdown prunes row groups.
+    * replaced by a probe of a broadcast term set: a 50k-element In pushed
+    * into the parquet scan is slower to evaluate per row-group than a hash
+    * probe, and bloats the plan string. Below it, pushdown prunes row
+    * groups.
     */
   private[graft] val IsinThreshold = 512
 
@@ -181,19 +182,31 @@ object Wand {
     // only positive terms carry idf entries)
     val terms =
       (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
-    import spark.implicits._
     if (terms.isEmpty) return ShardServe.emptyHits(spark)
+    wandHits(spark, matchedGrouped(spark, snap, terms), snap.stats, prepared,
+      k, allowedDocs, snap.tombstones, minShouldMatch)
+  }
+
+  /** `snap`'s postings of the driver-side term list `terms`, shard-
+    * partitioned: `term IN (...)` pushed into the scan at or below
+    * [[IsinThreshold]] terms, above it a filter probing the list as a
+    * broadcast set (a broadcast variable, so unlike a broadcast join it
+    * runs no job of its own).
+    */
+  private def matchedGrouped(spark: SparkSession, snap: IndexSnapshot,
+                             terms: Seq[String]): Dataset[PackedPostings] = {
+    import spark.implicits._
     val postings = snap.postings(spark)
     val matched =
       (if (terms.size <= IsinThreshold)
         postings.filter(col("term").isin(terms: _*))
-      else
-        postings.join(broadcast(terms.toDF("term")), "term"))
+      else {
+        val bcTerms = spark.sparkContext.broadcast(terms.toSet)
+        postings.filter(udf((t: String) => bcTerms.value.contains(t)).apply(col("term")))
+      })
         .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
         .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, matched)
-    wandHits(spark, grouped, snap.stats, prepared, k, allowedDocs,
-      snap.tombstones, minShouldMatch)
+    ShardServe.shardPartitioned(spark, snap.numShards, matched)
   }
 
   /** The WAND kernel over an ALREADY shard-partitioned postings dataset;
@@ -223,15 +236,16 @@ object Wand {
     }
   }
 
-  /** Dataset-typed query batch: the large-batch path. The query set stays
-    * a DataFrame (query_id, text) and is served in deterministic chunks
-    * through [[ChunkedServe.serve]]: each chunk is cut on the driver (no
-    * job on a local batch, one scan per chunk on a scanned query table),
-    * runs the broadcast kernel path over the batch's pinned postings, and
-    * its hits are pinned in the block manager; at most four chunks run at
-    * once, and the chunk sizes must sum to the batch count. The call takes
-    * one [[IndexSnapshot]] and every chunk is served from it, so a commit
-    * that lands mid-call changes no chunk's answer.
+  /** Dataset-typed query batch: the large-batch path. The query frame is
+    * collected to the driver once ([[ChunkedServe.collect]]; the driver
+    * holds the whole batch, bounded by `spark.driver.maxResultSize` for a
+    * scanned query table). A batch of at most `chunkSize` queries is
+    * exactly [[search]]. A larger one is served in deterministic chunks
+    * through [[ChunkedServe.serve]]: each chunk runs the broadcast kernel
+    * path over the batch's pinned postings, and its hits are pinned in the
+    * block manager; at most four chunks run at once. The call takes one
+    * [[IndexSnapshot]] and every chunk is served from it, so a commit that
+    * lands mid-call changes no chunk's answer.
     *
     * Parity: identical to [[search]] on the same batch (RetrieverSpec).
     */
@@ -251,35 +265,25 @@ object Wand {
                               allowedDocs: Option[Array[Long]],
                               minShouldMatch: Int,
                               mustNot: Map[Long, String]): DataFrame = {
-    import spark.implicits._
-    // The index side is prepared ONCE for the whole batch, from the one
-    // snapshot every chunk shares (so all chunks score one version): the
-    // union of the batch's tokens (one narrow pass over the query table,
-    // same CPython-parity tokenizer as prepare()) semi-joins the postings
-    // scan, and the shard-partitioned result is pinned so every chunk's
-    // kernel job reads the cached partitions instead of re-running the
-    // scan + shuffle per chunk. Per-chunk results are identical (cursors
-    // exist only for each query's own terms). The pin lives strictly
-    // inside this call: materialized before the chunk pool starts,
-    // unpersisted after.
-    val batchTerms = queries
-      .select(explode(graft.plans.GraftFunctions.py_ws_tokenize(
-        col("text").cast("string"))).as("term"))
-      .distinct()
-    val mnTerms = mustNot.valuesIterator
-      .flatMap(graft.tokenize.PyTokenize.split).toSeq.distinct
-    val allTerms =
-      if (mnTerms.isEmpty) batchTerms
-      else batchTerms.unionByName(mnTerms.toDF("term")).distinct()
-    val matched = snap.postings(spark)
-      .join(broadcast(allTerms), "term")
-      .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
-      .as[PackedPostings]
-    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, matched)
+    val batch = ChunkedServe.collect(queries, chunkSize, "searchDs")
+    if (batch.length <= chunkSize)
+      return search(spark, snap, batch.toSeq, k, allowedDocs, minShouldMatch,
+        mustNot, Map.empty)
+    // Above one chunk the index side is prepared ONCE for the whole batch:
+    // the union of the batch's tokens (built on the driver with the same
+    // CPython-parity tokenizer as prepare()) restricts the postings scan,
+    // and the shard-partitioned result is pinned so every chunk's kernel
+    // job reads the cached partitions instead of re-running the scan +
+    // shuffle per chunk. Per-chunk results are identical (cursors exist
+    // only for each query's own terms). The pin lives strictly inside this
+    // call: materialized before the chunk pool starts, unpersisted after.
+    val terms = (batch.iterator.map(_._2) ++ mustNot.valuesIterator)
+      .flatMap(graft.tokenize.PyTokenize.split(_)).toSeq.distinct
+    val grouped = matchedGrouped(spark, snap, terms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
-      ChunkedServe.serve(queries, chunkSize, "searchDs") { chunk =>
+      ChunkedServe.serve(batch, chunkSize) { chunk =>
         ShardServe.globalRank(wandHits(spark, grouped, snap.stats,
           prepare(spark, snap, chunk, mustNot), k, allowedDocs,
           snap.tombstones, minShouldMatch), k)

@@ -58,12 +58,14 @@ object MultiGroupIndex {
 class ReadJobsSpec extends SparkSpec {
 
   /** Jobs of a warm 2-chunk local-batch `Wand.searchDs` on [[MultiGroupIndex]]
-    * (13 shards) and the collect of its result: five pin the batch's
-    * postings, two count the batch, each chunk's kernel runs its rank
+    * (13 shards) and the collect of its result: three pin the batch's
+    * postings (the scan into the shard shuffle, the build of the cache,
+    * then the materializing pass), each chunk's kernel runs its rank
     * shuffle and its eager checkpoint, and the collect reads the pinned
-    * hits.
+    * hits. Collecting the local batch and cutting its chunks run no job,
+    * and nothing counts it.
     */
-  private val ChunkedJobs = 5 + 2 + 2 * 2 + 1
+  private val ChunkedJobs = 3 + 2 * 2 + 1
 
   /** Stage names of one job, and whether it ran inside a SQL execution
     * (staging writes do; a schema-inference job is a bare RDD job).
@@ -182,7 +184,22 @@ class ReadJobsSpec extends SparkSpec {
     }
   }
 
-  test("a 2-chunk local-batch searchDs runs no parquet job: pin, count and chunk jobs") {
+  test("a warm one-chunk searchDs runs exactly the jobs of Wand.search on the same queries") {
+    val dir = scratchDir("readjobs-onechunk")
+    MultiGroupIndex.build(spark, dir)
+    val batch = spark.createDataFrame(MultiGroupIndex.Queries).toDF("query_id", "text")
+    listening {
+      def ds(): Unit = { Wand.searchDs(spark, dir, batch, 10, chunkSize = 100).collect(); () }
+      def seq(): Unit = { Wand.search(spark, dir, MultiGroupIndex.Queries, 10).collect(); () }
+      ds(); seq() // warm the df cache
+      val dsJobs = jobsOf(ds())
+      val seqJobs = jobsOf(seq())
+      assert(dsJobs.size == seqJobs.size,
+        s"one-chunk searchDs ran ${dsJobs.size} jobs, Wand.search ${seqJobs.size}: $dsJobs / $seqJobs")
+    }
+  }
+
+  test("a 2-chunk local-batch searchDs runs no parquet job: pin and chunk jobs, no count") {
     val dir = scratchDir("readjobs-chunks")
     MultiGroupIndex.build(spark, dir)
     val batch = spark.createDataFrame((1L to 40L).map(i =>
@@ -192,7 +209,6 @@ class ReadJobsSpec extends SparkSpec {
       val jobs = jobsOf(Wand.searchDs(spark, dir, batch, 10, chunkSize = 20).collect())
       val parquet = schemaJobs(jobs)
       assert(parquet.isEmpty, s"parquet jobs in a 2-chunk local-batch searchDs: $parquet")
-      // cutting a chunk from a local batch runs no job
       assert(jobs.size == ChunkedJobs, s"a 2-chunk searchDs ran ${jobs.size} jobs: $jobs")
     }
   }

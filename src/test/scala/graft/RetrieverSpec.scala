@@ -4,8 +4,20 @@ import graft.functions.TextFunctions
 import graft.query.{Bm25WandRetriever, CosineRetriever, EnsembleRetriever}
 import org.apache.spark.sql.functions._
 
-/** Flipped by the first served chunk of a query frame that filters on it. */
-object ShrinkingSource { @volatile var served = false }
+/** Every call of a query frame's nondeterministic row filter, and the ids
+  * it kept: one call per row means the frame ran once.
+  */
+object QueryFrameRuns {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
+  val kept = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+  private val rnd = new scala.util.Random(5)
+  def keep(id: Long): Boolean = {
+    calls.incrementAndGet()
+    val k = synchronized(rnd.nextInt(3)) != 0
+    if (k) kept.add(id)
+    k
+  }
+}
 
 /** Retriever trait surface + MaxSim/pooling semantics. */
 class RetrieverSpec extends SparkSpec {
@@ -157,24 +169,24 @@ class RetrieverSpec extends SparkSpec {
     assert(want.groupBy(_._1).values.exists(_.size == 10))
   }
 
-  test("searchDs raises when the query frame returns different rows per execution") {
-    val dir = scratchDir("dsq-vanish")
+  test("searchDs runs a nondeterministic query frame once and serves exactly its rows") {
+    val dir = scratchDir("dsq-once")
     corpus.PagesPipeline.buildIndex(
       corpus.PagesGen.pages(spark, 300, 4).toDF(), dir, shardBits = 6, groups = 2)
-    // every row is kept until the first chunk is served, none after: the
-    // counted batch is 40 queries, the chunks cut later hold fewer (the
-    // observable shape of a source that changes while it is served)
-    ShrinkingSource.served = false
-    val keep = udf((_: Long) => !ShrinkingSource.served).asNondeterministic()
-    val queries = Bench.queryBatch(40).toDF("query_id", "text")
-      .filter(keep(col("query_id")))
-    val ex = intercept[IllegalArgumentException] {
-      graft.query.ChunkedServe.serve(queries, chunkSize = 7, label = "searchDs") { chunk =>
-        ShrinkingSource.served = true
-        graft.query.Wand.search(spark, dir, chunk, 10)
-      }.count()
-    }
-    assert(ex.getMessage.contains("changed while it was served"))
+    // each execution keeps a different random two thirds of the 40 rows
+    QueryFrameRuns.calls.set(0)
+    QueryFrameRuns.kept.clear()
+    val keep = udf((id: Long) => QueryFrameRuns.keep(id)).asNondeterministic()
+    val batch = Bench.queryBatch(40)
+    val got = hitSet(graft.query.Wand.searchDs(spark, dir,
+      batch.toDF("query_id", "text").filter(keep(col("query_id"))), 10,
+      chunkSize = 7)) // force multi-chunk
+    assert(QueryFrameRuns.calls.get == batch.size,
+      s"the query frame's filter ran ${QueryFrameRuns.calls.get} times over ${batch.size} rows")
+    val served = batch.filter { case (id, _) => QueryFrameRuns.kept.contains(id) }
+    assert(served.size > 7 && served.size < batch.size, s"fixture degenerate: kept ${served.size}")
+    assert(got == hitSet(graft.query.Wand.search(spark, dir, served, 10)))
+    assert(got.map(_._1).subsetOf(served.map(_._1).toSet))
   }
 
   test("minimum_should_match plumbs through searchDs and the retriever") {

@@ -152,7 +152,7 @@ object ScalingBench {
            |caches) over the same materialized parquet corpus with the same
            |splits — the sandbox stand-in for spark-submit at N vs 4N
            |executors. Throughput = rows / wall seconds of the full
-           |checkpointed build including parquet writes and manifest commits.
+           |checkpointed build including parquet writes and the index commit.
            |""".stripMargin
       // Hand-maintained methodology/baseline sections live in
       // BENCH/METHODOLOGY.md so regenerating the table can't lose them.

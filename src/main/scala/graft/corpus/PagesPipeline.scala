@@ -37,7 +37,7 @@ object PagesPipeline {
   def tokenized(docsDf: DataFrame): DataFrame =
     InvertedIndex.tokenize(docsDf, "doc_id", "text")
 
-  /** End-to-end index build from raw pages; returns per-group manifests.
+  /** End-to-end index build from raw pages; returns the committed groups.
     * The extraction output is staged to parquet under the index dir (one
     * extraction pass ever — docId counting and the tokenize consumers scan
     * the staged artifact), making the most expensive stage itself a
@@ -63,10 +63,9 @@ object PagesPipeline {
   def appendPages(newPages: DataFrame, dir: String): PackedIndex.GroupManifest = {
     val spark = newPages.sparkSession
     // one snapshot names the staging group and offsets the ids, and the
-    // append commits onto it. Ids come from the manifests (NOT stats.json):
-    // a retried append after a crash between the stats and manifest
-    // commits must offset new docIds by the pre-append corpus size, not
-    // the already-bumped stats value
+    // append commits onto it: a retry after a crash before the commit sees
+    // the same committed version, so it reuses the staging dir and offsets
+    // the ids exactly as the crashed attempt did
     val snap = PackedIndex.snapshot(dir)
     val rawPath = s"$dir/docs_raw_append_${snap.nextGroup}"
     if (!TableIO.committed(rawPath)) TableIO.write(extracted(newPages), rawPath)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.core.Bm25Params
 import graft.io.{MetaIO, TableIO}
+import org.json4s.{JArray, JDouble, JLong, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Persisted packed posting-list row: all blocks of one term within one
   * doc-shard. Doc-partitioned (shard = doc_id >> shardBits) so a WAND task
@@ -24,7 +26,9 @@ final case class PackedBlock(
 final case class PackedPostings(shard: Int, term: String, nPostings: Long,
                                 blocks: Array[PackedBlock])
 
-/** Corpus-level stats persisted with the index (tiny JSON sidecar). */
+/** Corpus-level stats of one index version. n and avgdl are the sums over
+  * the committed groups; the rest is stored in the commit record.
+  */
 final case class IndexStats(
     n: Long, avgdl: Double, avgRawIdf: Double,
     k1: Double, b: Double, epsilon: Double,
@@ -37,41 +41,39 @@ final case class IndexStats(
   }
 }
 
-/** One committed version of a packed index, as [[PackedIndex.snapshot]]
-  * read it. Every field comes from that one read, so a call that takes one
-  * snapshot scores, filters and shards against a single version.
+/** One committed version of a packed index: the commit record `index.json`
+  * as [[PackedIndex.snapshot]] read it, in one file read. A call that takes
+  * one snapshot scores, filters and shards against a single version; a
+  * write builds the next version as a copy of its snapshot and commits it
+  * ([[PackedIndex.commit]]).
   *
   * How long a version stays readable: committed groups and their postings
   * are never rewritten, and an append keeps the df dir it supersedes
   * until the append after it. So a snapshot serves correctly across one
   * later append and any number of deletes; tombstones are the snapshot's
-  * own. A positional arm stamped past the snapshot's groups fails loudly
-  * ([[PositionalIndex.load]]).
+  * own. A positional arm that covers other groups than the snapshot fails
+  * loudly ([[PositionalIndex.load]]).
   *
-  * @param manifests the committed groups' manifests, ascending by group
-  * @param watermark a compacted index's id high-water mark (watermark.json)
+  * @param manifests the committed groups, ascending by group
+  * @param nextDocId the next free doc id: above every id the index ever
+  *                  committed, also after a compaction removed docs, so an
+  *                  id is never reused (a reused id would resurrect under
+  *                  stale external references)
   * @param tombstones sorted deleted-but-unpurged doc ids
-  * @param holes sorted ids a past compaction removed (compacted dirs only)
+  * @param holes sorted ids a past compaction removed
+  * @param positional the positional arm's segments and lineage stamp
   */
-final class IndexSnapshot private[index] (
-    val dir: String, val stats: IndexStats, val dfDir: String,
-    val manifests: Seq[PackedIndex.GroupManifest], val watermark: Option[Long],
-    val tombstones: Array[Long], val holes: Array[Long]) {
+final case class IndexSnapshot private[graft] (
+    dir: String, stats: IndexStats, dfDir: String,
+    manifests: Seq[PackedIndex.GroupManifest], nextDocId: Long,
+    tombstones: Array[Long], holes: Array[Long],
+    positional: Option[PositionalArm]) {
 
   /** Ids of the committed groups, ascending. */
   def groups: Seq[Int] = manifests.map(_.group)
 
   /** The group id the next append commits. */
   def nextGroup: Int = groups.lastOption.fold(0)(_ + 1)
-
-  /** The dense doc-id high-water mark (next free doc id): the sum of the
-    * manifest docs (stats.json may be mid-commit after a crash; manifests
-    * are the commit markers) — except on a COMPACTED index, which holds
-    * fewer docs than its highest surviving id + 1, so its persisted
-    * watermark wins: ids are never reused (a reused id would resurrect
-    * under stale external references).
-    */
-  def nextDocId: Long = watermark.getOrElse(manifests.map(_.docs).sum)
 
   /** Upper bound on the distinct shard count: ids lie in [0, nextDocId), so
     * shard = doc_id >> shardBits never exceeds it. Stages keyed on `shard`
@@ -83,10 +85,10 @@ final class IndexSnapshot private[index] (
 
   /** The committed groups' packed postings as ONE relation of the known
     * [[PackedIndex.PostingsSchema]], so no read infers a schema. Groups
-    * come from the manifests (the commit markers), not a listing of
-    * postings/: a crashed append's orphan grp=N dir is never served. Past
-    * 32 groups (Spark's parallel partition discovery threshold) listing
-    * them is a Spark job; [[PackedIndex.compact]] folds them to one.
+    * come from the record, not a listing of postings/: a crashed append's
+    * orphan grp=N dir is never served. Past 32 groups (Spark's parallel
+    * partition discovery threshold) listing them is a Spark job;
+    * [[PackedIndex.compact]] folds them to one.
     */
   def postings(spark: SparkSession): Dataset[PackedPostings] = {
     require(manifests.nonEmpty, s"IndexSnapshot: no committed groups at $dir")
@@ -107,40 +109,38 @@ final class IndexSnapshot private[index] (
   *                            sorted pack shuffle — a dir per shard would
   *                            mean thousands of driver-committed files and
   *                            one scheduler task per dir on every read)
-  *   df/ (or df-gN/)          (parquet) (term, df) global document frequency;
-  *                            the LIVE dir is named by stats.json's `dfDir`
-  *   stats.json                          IndexStats + dfDir pointer
-  *   manifest/group-G.json               per-group build checkpoint + metrics
-  *   tombstones.txt                      sorted deleted-but-unpurged ids
-  *   watermark.json / holes.txt          (compacted dirs) original id
-  *                                       high-water mark + dead-id ledger
+  *   df/ (or df-gN/)          (parquet) (term, df) global document frequency
+  *   positions, positions-*   (parquet) the positional arm's segments
+  *   index.json               the commit record: stats parameters and
+  *                            avgRawIdf, the live df dir, nextDocId, every
+  *                            committed group (docs, sumDl, terms, postings,
+  *                            bytes), tombstones, holes and the positional
+  *                            arm's segments and lineage stamp
   *
-  * Every reader of that committed state — queries, the positional arm,
-  * append/compact/delete — goes through [[snapshot]], which reads each of
-  * these sidecars once and serves one version from the result
-  * ([[IndexSnapshot]]).
+  * Commit protocol: the record is the index's only metadata and the only
+  * commit marker. [[commit]] is its only writer, through the all-or-nothing
+  * [[graft.io.MetaIO.writeAtomic]]; [[snapshot]] is its only reader. Every
+  * write does its data writes first (each into a dir no committed version
+  * names) and then commits the whole next version once, as its last step.
+  * A crash before that step leaves the previous version intact, and a
+  * retry recomputes the same dirs and overwrites every partial artifact.
+  * n and avgdl are not stored: the snapshot derives them as Σdocs and
+  * ΣsumDl / Σdocs over the groups, the same sums every write computes.
   *
-  * All sidecars go through [[graft.io.MetaIO]]; tables through
-  * [[graft.io.TableIO]] — no direct driver-local filesystem access, so
-  * `dir` may be a local path or any Hadoop FileSystem URI and nothing here
-  * changes.
+  * Writers: one at a time per index. Two concurrent appenders would both
+  * write grp=N before either commits; exactly-once commits need
+  * per-attempt data names, which this layout does not have.
+  *
+  * Tables go through [[graft.io.TableIO]] and the record through
+  * [[graft.io.MetaIO]] — no direct driver-local filesystem access, so `dir`
+  * may be a local path or any Hadoop FileSystem URI.
   *
   * Resumability (north rule): the build runs group by group; groups are
   * CONTIGUOUS shard ranges (shard = doc_id >> shardBits), so each group's
   * input is a doc_id range predicate that parquet row-group stats prune —
   * the staged corpus is scanned ~once per build in total, not once per
-  * group (doc ids are dense and files hold contiguous ranges). Each group's
-  * parquet is fully written BEFORE its manifest file is created, so a crash
-  * leaves either a complete group+manifest or a group that will be rebuilt.
-  * `build` skips groups whose manifest exists. Manifests double as lineage +
-  * build metrics AND as the authoritative per-group (docs, sumDl) record:
-  * global n/avgdl are derived by summing manifests, never read back from a
-  * possibly-mid-commit stats.json.
-  *
-  * Append commit order (crash-safe, idempotent): pack grp=N → write df-gN →
-  * atomic stats.json (points dfDir at df-gN) → atomic manifest (the commit
-  * marker, LAST). A retry after any crash recomputes pre-append totals from
-  * manifests and overwrites every partial artifact with identical content.
+  * group (doc ids are dense and files hold contiguous ranges). A resumed
+  * build skips every group whose postings write committed (`_SUCCESS`).
   *
   * Skew: shuffle key for the pack stage is (shard, term) — stopword-heavy
   * terms are split across every doc-shard, so no single reducer sees a full
@@ -177,7 +177,7 @@ object PackedIndex {
     * [0, nextDocId): the smallest width keeping numShards <=
     * [[TargetMaxShards]], floored at [[MinShardBits]]. Used by [[build]]
     * when the caller doesn't pin shardBits; appends inherit the built
-    * index's value from stats.json (shard assignment is immutable).
+    * index's value from the commit record (shard assignment is immutable).
     */
   def deriveShardBits(nextDocId: Long): Int = {
     val maxId = math.max(0L, nextDocId - 1)
@@ -224,7 +224,7 @@ object PackedIndex {
     */
   /** Per-build counters filled by the pack tasks (terms, postings,
     * compressed bytes) — avoids a second read of the committed output just
-    * to produce manifest metrics.
+    * to count a group for the commit record.
     */
   final class PackCounters(spark: SparkSession) extends Serializable {
     val terms = spark.sparkContext.longAccumulator("packedTerms")
@@ -237,8 +237,6 @@ object PackedIndex {
                 maxShards: Int = Int.MaxValue): Dataset[PackedPostings] = {
     val spark = postingsDl.sparkSession
     import spark.implicits._
-    val p = stats.params
-    val avgdl = stats.avgdl
     val blockSize = stats.blockSize
     // explicit partition count: pack work is CPU-bound per shard run; AQE's
     // byte-based coalescing would serialize it into a few long tasks. x4
@@ -291,7 +289,9 @@ object PackedIndex {
     *
     * @param groups number of sequential commit units (shard ranges); each is
     *               an independent Spark job whose output is checkpointed.
-    * @return per-group metrics (including skipped/resumed groups).
+    * @return the committed groups (including resumed ones). A build retried
+    *         after its commit changes nothing and returns the committed
+    *         groups.
     */
   /** @param stageInput stage `tokenizedIn` to parquet under the index dir
     *                    before building (resume checkpoint; pays one
@@ -307,7 +307,7 @@ object PackedIndex {
     *                   the corpus's max doc id, keeping the shard count
     *                   bounded at any scale. Pin it only to reproduce a
     *                   fixed layout (tests, appends join an existing
-    *                   layout automatically through stats.json).
+    *                   layout automatically through the commit record).
     */
   def build(tokenizedIn: DataFrame, dir: String,
             shardBits: Int = 0, groups: Int = 4,
@@ -315,7 +315,7 @@ object PackedIndex {
             blockSize: Int = Codec.DefaultBlockSize,
             stageInput: Boolean = true): Seq[GroupManifest] = {
     val spark = tokenizedIn.sparkSession
-    MetaIO.mkdirs(s"$dir/manifest")
+    if (exists(dir)) return snapshot(dir).manifests
     if (!stageInput)
       return buildFrom(tokenizedIn, dir, shardBits, groups, p, blockSize)
     // The tokenized frame feeds stats AND every group job, and upstream it
@@ -329,20 +329,6 @@ object PackedIndex {
     val tokenized = TableIO.read(spark, docsPath)
     buildFrom(tokenized, dir, shardBits, groups, p, blockSize)
   }
-
-  /** Opt-in stage timing to stderr (SPARK_GRAFT_BUILD_TIMINGS=1) — profiling
-    * aid only, no effect on the build.
-    */
-  private val logTimings: Boolean =
-    sys.env.get("SPARK_GRAFT_BUILD_TIMINGS").contains("1")
-  @inline private def timedStage[T](label: String)(f: => T): T =
-    if (!logTimings) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[build-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
 
   private def buildFrom(tokenized: DataFrame, dir: String,
                         shardBitsIn: Int, groups: Int,
@@ -358,13 +344,13 @@ object PackedIndex {
 
     // stage 1: ONE column-pruned pass computing per-shard (docs, sumDl) —
     // this both fixes the contiguous group split and yields exact per-group
-    // corpus stats for the manifests (one row per shard; shard count is
+    // corpus stats for the record (one row per shard; shard count is
     // bounded by design, so the collect is vocabulary-scale, not corpus-scale)
-    val perShard = timedStage("perShard") { tokenized
+    val perShard = tokenized
       .groupBy(shiftright(col("doc_id"), shardBits).cast("int").as("shard"))
       .agg(count(lit(1)).as("docs"), sum(size(col("terms")).cast("long")).as("sum_dl"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1) }
+      .sortBy(_._1)
     val maxShard = if (perShard.isEmpty) -1 else perShard.last._1
     val shardsPerGroup = math.max(1, (maxShard + groups) / groups) // ceil
     def groupOf(shard: Int): Int = math.min(shard / shardsPerGroup, groups - 1)
@@ -377,17 +363,23 @@ object PackedIndex {
     // bounds — pushed to parquet row-group stats, so the corpus is scanned
     // once per build in total) -> narrow per-doc tf kernel -> ONE (shard)
     // shuffle -> pack. Group jobs are INDEPENDENT (disjoint inputs, disjoint
-    // output dirs, own counters/manifests), so they are submitted
-    // concurrently — Spark schedules their stages over the shared executor
-    // pool, overlapping one job's straggler tail with the next job's work.
-    // Each group still commits its manifest the moment ITS output completes,
-    // so crash/resume granularity is unchanged.
+    // output dirs, own counters), so they are submitted concurrently — Spark
+    // schedules their stages over the shared executor pool, overlapping one
+    // job's straggler tail with the next job's work. A group whose postings
+    // write committed before a crash is not rebuilt.
     val packStats = IndexStats(0L, 0.0, 0.0, p.k1, p.b, p.epsilon, shardBits, blockSize)
     def buildGroup(g: Int): GroupManifest = {
-      val manifestPath = s"$dir/manifest/group-$g.json"
-      if (MetaIO.exists(manifestPath)) readManifest(manifestPath) // resume: skip
-      else {
-        val t0 = System.nanoTime()
+      val path = s"$dir/postings/grp=$g"
+      val (gDocs, gSumDl) = groupTotals.getOrElse(g, (0L, 0L))
+      if (TableIO.committed(path)) { // resume: count what the committed write holds
+        val blockBytes = aggregate(col("blocks"), lit(0L), (acc, b) =>
+          acc + length(b("docs")) + length(b("tfs")) + length(b("dls")))
+        val r = TableIO.read(spark, PostingsSchema, path)
+          .agg(count(lit(1)), coalesce(sum(col("nPostings")), lit(0L)),
+            coalesce(sum(blockBytes), lit(0L)))
+          .first()
+        GroupManifest(g, r.getLong(0), r.getLong(1), r.getLong(2), gDocs, gSumDl)
+      } else {
         val counters = new PackCounters(spark)
         val lo = g.toLong * shardsPerGroup << shardBits
         val hi =
@@ -397,18 +389,14 @@ object PackedIndex {
         val nShardsInGroup = perShard.count { case (sh, _, _) => groupOf(sh) == g }
         val packed = packGroup(postingsWithDl(groupDocs), packStats, Some(counters),
           maxShards = math.max(nShardsInGroup, 1))
-        timedStage(s"group-$g pack+write") {
         // shard stays a DATA column (files are already clustered by shard via
         // the sorted shuffle): a dir-per-shard partitionBy layout added one
         // driver-serial file commit + one scheduler task per shard dir on
         // every read — thousands of tiny files at web scale for zero pruning
         // benefit (queries prune by TERM, not shard)
-        TableIO.write(packed.toDF(), s"$dir/postings/grp=$g") }
-        val (gDocs, gSumDl) = groupTotals.getOrElse(g, (0L, 0L))
-        val man = GroupManifest(g, counters.terms.value, counters.postings.value,
-          counters.bytes.value, (System.nanoTime() - t0) / 1e6, gDocs, gSumDl)
-        writeManifest(manifestPath, man) // committed LAST -> crash-safe
-        man
+        TableIO.write(packed.toDF(), path)
+        GroupManifest(g, counters.terms.value, counters.postings.value,
+          counters.bytes.value, gDocs, gSumDl)
       }
     }
     val manifests: Seq[GroupManifest] =
@@ -426,23 +414,28 @@ object PackedIndex {
 
     // stage 3: global df table from the packed rows (column-pruned scan of
     // (term, nPostings) only — the blocks column is never read) + the
-    // deterministic epsilon floor; stats.json is the completion marker.
-    // n/avgdl come from the manifests (exact Long sums), never from a
-    // possibly-stale stats.json.
-    if (!MetaIO.exists(s"$dir/stats.json")) {
-      val n = manifests.map(_.docs).sum
-      // n == 0 would make avgdl 0/0 = NaN — invalid JSON that poisons every
-      // downstream BM25 division silently. An empty corpus is a caller bug.
-      require(n > 0, s"PackedIndex.build: empty corpus (0 docs) at $dir")
-      val avgdl = manifests.map(_.sumDl).sum.toDouble / n
-      timedStage("df write") { TableIO.write(TableIO.read(spark, s"$dir/postings")
-        .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/df") }
-      val avgRawIdf = timedStage("avgRawIdf") {
-        InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$dir/df"), n) }
-      writeStats(dir, IndexStats(n, avgdl, avgRawIdf, p.k1, p.b, p.epsilon,
-        shardBits, blockSize), dfDir = "df")
-    }
+    // deterministic epsilon floor, then the commit
+    val n = manifests.map(_.docs).sum
+    // n == 0 would make avgdl 0/0 = NaN and poison every downstream BM25
+    // division silently. An empty corpus is a caller bug.
+    require(n > 0, s"PackedIndex.build: empty corpus (0 docs) at $dir")
+    commit(withDf(spark, IndexSnapshot(dir,
+      IndexStats(n, manifests.map(_.sumDl).sum.toDouble / n, 0.0,
+        p.k1, p.b, p.epsilon, shardBits, blockSize),
+      "df", manifests, n, Array.empty, Array.empty, None)))
     manifests
+  }
+
+  /** `snap` with its df table written and its avgRawIdf set: df over
+    * exactly the groups `snap` names, so an uncommitted group dir under
+    * postings/ never counts, into `snap.dfDir`. Build, append and compact
+    * share it; the result is what they commit.
+    */
+  private def withDf(spark: SparkSession, snap: IndexSnapshot): IndexSnapshot = {
+    TableIO.write(snap.postings(spark)
+      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"${snap.dir}/${snap.dfDir}")
+    snap.copy(stats = snap.stats.copy(
+      avgRawIdf = InvertedIndex.avgRawIdf(snap.df(spark), snap.stats.n)))
   }
 
   // ---- incremental append ----------------------------------------------
@@ -455,14 +448,11 @@ object PackedIndex {
     * BIT-IDENTICAL to a full rebuild over old+new (block bounds are
     * avgdl-independent, so existing groups stay valid under the new stats).
     *
-    * Crash-safe + idempotent: the pre-append corpus totals come from group
-    * MANIFESTS (exact Long sums), never stats.json — so a crash after the
-    * new stats.json but before the manifest cannot double-count on retry;
-    * the new df is written to a fresh versioned dir (`df-gN`) that the new
-    * stats.json points at (single atomic file move flips both), and the
-    * group manifest is the LAST commit step. A retried append after any
-    * crash point recomputes the same nextGroup and overwrites every partial
-    * artifact with identical content.
+    * Crash-safe + idempotent: the group and its df go to dirs the committed
+    * version does not name (`postings/grp=N`, `df-gN`), and the record
+    * naming them is committed last. A retried append after any crash point
+    * sees the same committed version, so it recomputes the same group id
+    * and overwrites every partial artifact with identical content.
     *
     * @param newTokenized (doc_id, terms) where doc_id starts at the
     *                     existing corpus size (see
@@ -476,25 +466,11 @@ object PackedIndex {
     val spark = newTokenized.sparkSession
     val dir = snap.dir
     val old = snap.stats
-    val manifests = snap.manifests
-    // pre-append totals from committed manifests only (idempotent on retry)
-    val oldN = manifests.map(_.docs).sum
-    val oldSumDl = manifests.map(_.sumDl).sum
     val row = newTokenized
       .agg(count(lit(1)).as("n"), sum(size(col("terms")).cast("long")).as("sum_dl"))
       .first()
     val nNew = row.getLong(0)
     val newSumDl = row.getLong(1)
-    // fail LOUDLY on manifests that predate the docs/sumDl fields — a
-    // silent oldN=0 would assign colliding doc_ids and corrupt stats.
-    // Legitimate states: clean index (manifest total == stats.n), or a
-    // crash-retry where stats.json already includes THIS batch
-    // (manifest total + nNew == stats.n).
-    require(oldN == old.n || oldN + nNew == old.n,
-      s"append: manifest doc total ($oldN) inconsistent with stats.n " +
-        s"(${old.n}) for a batch of $nNew — manifests lack docs/sumDl " +
-        "(pre-upgrade index) or a DIFFERENT append is in flight; rebuild " +
-        "or let it complete")
     // GC df dirs superseded by earlier appends (the CURRENT live dir is
     // never touched; the one superseded by THIS append survives until the
     // next one, giving in-flight readers a full append-cycle of grace)
@@ -502,108 +478,101 @@ object PackedIndex {
       .filter(name => name != snap.dfDir &&
         (name == "df" || name.startsWith("df-g")) && !name.endsWith(".tmp"))
       .foreach(name => MetaIO.deleteRecursively(s"$dir/$name"))
-    val n = oldN + nNew
+    val n = old.n + nNew
     require(n > 0, s"append: index at $dir would still hold 0 docs")
-    val avgdl = (oldSumDl + newSumDl).toDouble / n
     val nextGroup = snap.nextGroup
 
-    val t0 = System.nanoTime()
     val counters = new PackCounters(spark)
-    val packStats = IndexStats(n, avgdl, 0.0, old.k1, old.b, old.epsilon,
-      old.shardBits, old.blockSize)
-    val batchShards = // new ids are dense in [oldN, oldN + nNew)
-      (((oldN + nNew - 1) >> old.shardBits) - (oldN >> old.shardBits) + 1).toInt
-    TableIO.write(packGroup(postingsWithDl(newTokenized), packStats, Some(counters),
+    val batchShards = // new ids are dense in [nextDocId, nextDocId + nNew)
+      (((snap.nextDocId + nNew - 1) >> old.shardBits) - (snap.nextDocId >> old.shardBits) + 1).toInt
+    TableIO.write(packGroup(postingsWithDl(newTokenized), old, Some(counters),
       maxShards = math.max(batchShards, 1)).toDF(),
       s"$dir/postings/grp=$nextGroup")
 
-    // recompute global df from the packed rows (column-pruned scan) into a
-    // fresh versioned dir; readers keep using the old dir until stats.json
-    // (which names the live dir) is atomically replaced
-    val newDfDir = s"df-g$nextGroup"
-    TableIO.write(TableIO.read(spark, s"$dir/postings")
-      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/$newDfDir")
-    val avgRawIdf = InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$dir/$newDfDir"), n)
-    writeStats(dir, IndexStats(n, avgdl, avgRawIdf, old.k1, old.b, old.epsilon,
-      old.shardBits, old.blockSize), dfDir = newDfDir)
-
     val man = GroupManifest(nextGroup, counters.terms.value,
-      counters.postings.value, counters.bytes.value,
-      (System.nanoTime() - t0) / 1e6, nNew, newSumDl)
-    // a compacted index carries an id watermark (see nextDocId): advance
-    // it BEFORE the manifest commit — a crash in between makes a retried
-    // append re-offset from the bumped value, costing unused id HOLES
-    // (harmless: ids are already sparse after compaction) but never id
-    // collisions (which would corrupt joins silently)
-    snap.watermark.foreach(wm =>
-      MetaIO.writeAtomic(s"$dir/watermark.json", s"""{"nextDocId":${wm + nNew}}"""))
-    // commit marker LAST: only now does a future append see these docs
-    writeManifest(s"$dir/manifest/group-$nextGroup.json", man)
+      counters.postings.value, counters.bytes.value, nNew, newSumDl)
+    val manifests = snap.manifests :+ man
+    commit(withDf(spark, snap.copy(
+      stats = old.copy(n = n, avgdl = manifests.map(_.sumDl).sum.toDouble / n),
+      dfDir = s"df-g$nextGroup", manifests = manifests,
+      nextDocId = snap.nextDocId + nNew)))
     man
   }
 
-  /** The committed state of the index at `dir`, each sidecar read once:
-    * the manifest listing and every manifest, `stats.json` (stats and the
-    * live df dir), `watermark.json`, `tombstones.txt` and `holes.txt`.
-    * A call that serves or changes the index takes one snapshot and reads
-    * everything from it, so it sees one version even while writers commit
-    * (see [[IndexSnapshot]] for how long a version stays readable).
+  // ---- the commit record ------------------------------------------------
+
+  /** One committed group: its counters and its exact corpus totals (n,
+    * avgdl and doc-id offsets derive from the docs/sumDl sums).
+    */
+  final case class GroupManifest(group: Int, terms: Long, postings: Long,
+                                 bytes: Long, docs: Long, sumDl: Long)
+
+  private def recordPath(dir: String): String = s"$dir/index.json"
+
+  /** True iff `dir` holds a committed index. */
+  def exists(dir: String): Boolean = MetaIO.exists(recordPath(dir))
+
+  /** Publish `snap` as the index's commit record, replacing the previous
+    * one all-or-nothing: the last step of every write. n and avgdl are not
+    * stored ([[snapshot]] derives them from the groups), so `snap.stats`
+    * must hold exactly those sums.
+    */
+  private[graft] def commit(snap: IndexSnapshot): Unit = {
+    val s = snap.stats
+    require(s.n == snap.manifests.map(_.docs).sum &&
+      s.avgdl == snap.manifests.map(_.sumDl).sum.toDouble / s.n,
+      s"commit: stats n=${s.n} avgdl=${s.avgdl} are not the sums of the groups at ${snap.dir}")
+    def ids(a: Array[Long]): JValue = JArray(a.toList.map(JLong(_)))
+    val groups = snap.manifests.map(g => JObject("group" -> JLong(g.group),
+      "docs" -> JLong(g.docs), "sumDl" -> JLong(g.sumDl), "terms" -> JLong(g.terms),
+      "postings" -> JLong(g.postings), "bytes" -> JLong(g.bytes)))
+    val arm = snap.positional.toList.map(a => "positional" -> JObject(
+      "segments" -> JArray(a.segments.map(JString(_)).toList),
+      "covers" -> JArray(a.covers.toList.sorted.map(JLong(_)))))
+    MetaIO.writeAtomic(recordPath(snap.dir), JsonMethods.compact(JObject(List(
+      "k1" -> JDouble(s.k1), "b" -> JDouble(s.b), "epsilon" -> JDouble(s.epsilon),
+      "shardBits" -> JLong(s.shardBits), "blockSize" -> JLong(s.blockSize),
+      "avgRawIdf" -> JDouble(s.avgRawIdf), "dfDir" -> JString(snap.dfDir),
+      "nextDocId" -> JLong(snap.nextDocId), "groups" -> JArray(groups.toList),
+      "tombstones" -> ids(snap.tombstones), "holes" -> ids(snap.holes)) ++ arm)))
+  }
+
+  /** The committed version of the index at `dir`: one read of its commit
+    * record. A call that serves or changes the index takes one snapshot and
+    * reads everything from it, so it sees one version even while a writer
+    * commits (see [[IndexSnapshot]] for how long a version stays readable).
     */
   def snapshot(dir: String): IndexSnapshot = {
-    // groups from the manifest file names (a manifest appears atomically
-    // as its group's last commit step), listed BEFORE stats.json is read:
-    // an append flips stats.json before its manifest, so a listed group's
-    // stats are always in the read below. The converse window — stats of
-    // an append whose manifest is not yet listed — is the commit
-    // protocol's own until one log record commits both.
-    val manifests = MetaIO.list(s"$dir/manifest").collect {
-      case name if name.startsWith("group-") && name.endsWith(".json") =>
-        name.stripPrefix("group-").stripSuffix(".json").toInt
-    }.sorted.map(g => readManifest(s"$dir/manifest/group-$g.json"))
-    val m = readJsonFlat(MetaIO.readString(s"$dir/stats.json"))
-    val stats = IndexStats(m("n").toLong, m("avgdl").toDouble, m("avgRawIdf").toDouble,
-      m("k1").toDouble, m("b").toDouble, m("epsilon").toDouble,
-      m("shardBits").toDouble.toInt, m("blockSize").toDouble.toInt)
-    val wm = s"$dir/watermark.json"
-    new IndexSnapshot(dir, stats, m.getOrElse("dfDir", "df"), manifests,
-      if (MetaIO.exists(wm)) Some(readJsonFlat(MetaIO.readString(wm))("nextDocId").toLong)
-      else None,
-      readIdFile(s"$dir/tombstones.txt"), readIdFile(s"$dir/holes.txt"))
+    val path = recordPath(dir)
+    val text = try MetaIO.readString(path) catch {
+      case e: java.io.IOException => throw new IllegalArgumentException(
+        s"PackedIndex.snapshot: no committed index at $dir ($path is unreadable)", e)
+    }
+    def bad(v: JValue) = throw new IllegalArgumentException(s"$path: unexpected value $v")
+    def obj(v: JValue): Map[String, JValue] = v match {
+      case JObject(fields) => fields.toMap
+      case other => bad(other)
+    }
+    def arr(v: JValue): List[JValue] = v match { case JArray(xs) => xs; case other => bad(other) }
+    def str(v: JValue): String = v match { case JString(x) => x; case other => bad(other) }
+    def long(v: JValue): Long = v match { case JLong(x) => x; case other => bad(other) }
+    def dbl(v: JValue): Double = v match { case JDouble(x) => x; case other => bad(other) }
+    val r = obj(JsonMethods.parse(text, useBigIntForLong = false))
+    val manifests = arr(r("groups")).map(obj).map(g => GroupManifest(long(g("group")).toInt,
+      long(g("terms")), long(g("postings")), long(g("bytes")), long(g("docs")), long(g("sumDl"))))
+    val n = manifests.map(_.docs).sum
+    IndexSnapshot(dir,
+      IndexStats(n, manifests.map(_.sumDl).sum.toDouble / n, dbl(r("avgRawIdf")),
+        dbl(r("k1")), dbl(r("b")), dbl(r("epsilon")),
+        long(r("shardBits")).toInt, long(r("blockSize")).toInt),
+      str(r("dfDir")), manifests, long(r("nextDocId")),
+      arr(r("tombstones")).map(long).toArray, arr(r("holes")).map(long).toArray,
+      r.get("positional").map(obj).map(a => PositionalArm(arr(a("segments")).map(str),
+        arr(a("covers")).map(long(_).toInt).toSet)))
   }
 
-  /** The LIVE df table as (term, df) — the dir named by stats.json (appends
-    * write fresh versioned dirs and flip the pointer atomically with the stats).
-    */
+  /** The LIVE df table as (term, df): the dir the commit record names. */
   def loadDf(spark: SparkSession, dir: String): DataFrame = snapshot(dir).df(spark)
-
-  // ---- tiny JSON sidecars ---------------------------------------------
-
-  final case class GroupManifest(group: Int, terms: Long, postings: Long,
-                                 bytes: Long, wallMs: Double,
-                                 docs: Long, sumDl: Long)
-
-  def writeStats(dir: String, s: IndexStats, dfDir: String): Unit =
-    MetaIO.writeAtomic(s"$dir/stats.json",
-      s"""{"n":${s.n},"avgdl":${s.avgdl},"avgRawIdf":${s.avgRawIdf},"k1":${s.k1},"b":${s.b},"epsilon":${s.epsilon},"shardBits":${s.shardBits},"blockSize":${s.blockSize},"dfDir":"$dfDir"}""")
-
-  private def writeManifest(path: String, m: GroupManifest): Unit =
-    MetaIO.writeAtomic(path,
-      s"""{"group":${m.group},"terms":${m.terms},"postings":${m.postings},"bytes":${m.bytes},"wallMs":${m.wallMs},"docs":${m.docs},"sumDl":${m.sumDl}}""")
-
-  private def readManifest(path: String): GroupManifest = {
-    val m = readJsonFlat(MetaIO.readString(path))
-    // docs/sumDl are the authoritative corpus totals (n, avgdl, docId
-    // offsets all derive from their sums). A manifest lacking them is a
-    // pre-upgrade format: silently defaulting to 0 would make a resumed
-    // build write zeroed stats and a later append offset new docIds from 0,
-    // colliding with existing docs — fail loudly instead (everywhere, not
-    // just in append's consistency check).
-    require(m.contains("docs") && m.contains("sumDl"),
-      s"manifest $path lacks docs/sumDl (pre-upgrade format) — rebuild the index")
-    GroupManifest(m("group").toDouble.toInt, m("terms").toLong,
-      m("postings").toLong, m("bytes").toLong, m("wallMs").toDouble,
-      m("docs").toLong, m("sumDl").toLong)
-  }
 
   /** Physically apply tombstones (the Lucene segment-merge analogue):
     * rewrite every posting list minus the deleted docs, recompute df and
@@ -614,23 +583,22 @@ object PackedIndex {
     * are bit-identical to a fresh build over the surviving corpus. The old
     * index is untouched; the caller swaps dirs when ready.
     *
-    * Stats are exact: n' = Σ manifest.docs - |live tombstones| (manifests are
-    * the commit markers, so a crashed append's stats.json can't skew the
-    * count; tombstones naming docs a previous compaction already removed —
-    * holes — are excluded from the arithmetic), sumDl' = sumDl - Σ
-    * dl(deleted) with the deleted dls read from the postings themselves
-    * (block-range pruned; a deleted doc with no postings is an empty doc
-    * whose dl is 0).
+    * Stats are exact: n' = Σ group docs - |live tombstones| (tombstones
+    * naming docs a previous compaction already removed — holes — are
+    * excluded from the arithmetic), sumDl' = sumDl - Σ dl(deleted) with the
+    * deleted dls read from the postings themselves (block-range pruned; a
+    * deleted doc with no postings is an empty doc whose dl is 0).
     *
     * One decode+repack pass over the postings — the same per-(shard,term)
     * kernel shape as the original pack stage, so the compaction scales
-    * exactly like a build (narrow per-row work, no shuffle). The original
-    * id watermark is persisted (watermark.json) so later PackedIndex.append
-    * calls on the compacted dir keep allocating above the old range; note
+    * exactly like a build (narrow per-row work, no shuffle). The compacted
+    * record keeps the original nextDocId, so later PackedIndex.append calls
+    * on the compacted dir keep allocating above the old range; note
     * PagesPipeline.appendPages needs the pipeline's docs_raw staging and so
     * operates on the ORIGINAL lineage dir, not a compacted copy. A
     * positional arm is carried along; one whose lineage stamp is not
-    * current fails the compaction before anything is written.
+    * current fails the compaction before anything is written. The record is
+    * committed last, so a crashed compaction leaves `outDir` unreadable.
     */
   def compact(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
@@ -639,27 +607,20 @@ object PackedIndex {
     val committed = snap.nextDocId
     // compactInto stamps the carried arm current: a stale one must fail
     // here, before anything is written (load checks the stamp)
-    val positional =
-      if (PositionalIndex.exists(dir)) Some(PositionalIndex.load(spark, snap)) else None
+    val positional = snap.positional.map(_ => PositionalIndex.load(spark, snap))
     // LIVE tombstones only: ids of docs a PREVIOUS compaction already
     // removed (holes) must not be subtracted again — delete() filters them
-    // on entry, but an externally-edited tombstones.txt (or a pre-holes-file
-    // tombstone set) could still name dead docs, and subtracting a
-    // nonexistent doc would silently skew n/avgdl/idf for every query on
-    // the compacted index. Intersecting against the persisted hole set here
-    // makes the stat arithmetic correct regardless of how the tombstones
-    // were produced.
+    // on entry, and intersecting against the committed hole set here keeps
+    // the stat arithmetic correct regardless of how the tombstones were
+    // produced (subtracting a nonexistent doc would silently skew
+    // n/avgdl/idf for every query on the compacted index).
     val holes = snap.holes
     val tomb = snap.tombstones
       .filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
     require(tomb.nonEmpty, s"compact: no live tombstones at $dir")
     require(tomb.forall(id => id >= 0 && id < committed),
       s"compact: tombstoned ids outside the dense [0, $committed) doc range")
-    // pre-compaction doc count from the group manifests — the same
-    // crash-safety sourcing append() uses. stats.json is written BEFORE the
-    // manifest in the append protocol, so after a crashed append it counts
-    // docs the postings scan below will never see.
-    val preN = snap.manifests.map(_.docs).sum
+    val preN = stats.n
     val n2 = preN - tomb.length
     require(n2 > 0, s"compact: all $preN docs deleted — delete the index instead")
 
@@ -700,13 +661,11 @@ object PackedIndex {
     // Lists whose block [base, maxDoc] ranges touch no tombstone pass
     // through HEADER-ONLY (no varint decode) — a selective GDPR-style
     // delete costs work proportional to the affected lists, not the index.
-    MetaIO.mkdirs(s"$outDir/manifest")
     val blockSize = stats.blockSize
-    val t0 = System.nanoTime()
-    // manifest metrics (terms/postings) accumulate on the repack write
-    // itself — the extra read-back aggregation job is gone (r7; same
-    // accumulator role as the build's PackCounters: metrics only, the
-    // exact stats n2/sumDl2 come from the arithmetic above)
+    // the group's counters (terms/postings) accumulate on the repack write
+    // itself — no read-back aggregation job (r7; same accumulator role as
+    // the build's PackCounters: counters only, the exact stats n2/sumDl2
+    // come from the arithmetic above)
     val cTerms = spark.sparkContext.longAccumulator("compactTerms")
     val cPostings = spark.sparkContext.longAccumulator("compactPostings")
     val repacked = postings.mapPartitions { it =>
@@ -747,30 +706,20 @@ object PackedIndex {
       }
     }
     TableIO.write(repacked.toDF(), s"$outDir/postings/grp=0")
-
-    TableIO.write(TableIO.read(spark, s"$outDir/postings")
-      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$outDir/df")
-    val avgRawIdf2 = InvertedIndex.avgRawIdf(TableIO.read(spark, DfSchema, s"$outDir/df"), n2)
-    writeStats(outDir, IndexStats(n2, sumDl2.toDouble / n2, avgRawIdf2,
-      stats.k1, stats.b, stats.epsilon, stats.shardBits, blockSize),
-      dfDir = "df")
+    val group = GroupManifest(0, cTerms.value, cPostings.value, 0L, n2, sumDl2)
     // carry the positional arm (if present): repack through the same
     // tombstone-drop kernel, so phrase/proximity search composes with the
     // delete lifecycle instead of failing loudly until a manual rebuild
-    positional.foreach(PositionalIndex.compactInto(_, outDir, bcTomb, blockSize))
-    // the id high-water mark survives compaction: manifest docs is the
+    val arm = positional.map(PositionalIndex.compactInto(_, outDir, bcTomb, blockSize))
+    // the id high-water mark survives compaction: group docs is the
     // SURVIVOR count (feeds stats on later appends), while id allocation
-    // must keep starting above the ORIGINAL range — deleted ids are dead
-    // forever, never recycled (IndexSnapshot.nextDocId prefers this file)
-    MetaIO.writeAtomic(s"$outDir/watermark.json", s"""{"nextDocId":$committed}""")
-    // dead-id ledger: prior holes plus the ids THIS compaction removed.
-    // delete()/compact() consult it so a re-issued delete of an already
-    // erased doc is a no-op instead of corrupting the stat arithmetic.
-    MetaIO.writeAtomic(s"$outDir/holes.txt",
-      (holes ++ tomb).distinct.sorted.mkString("\n"))
-    writeManifest(s"$outDir/manifest/group-0.json",
-      GroupManifest(0, cTerms.value, cPostings.value, 0L,
-        (System.nanoTime() - t0) / 1e6, n2, sumDl2)) // committed LAST
+    // keeps starting above the ORIGINAL range — deleted ids are dead
+    // forever, never recycled. The holes (dead-id ledger) gain the ids
+    // THIS compaction removed, so a re-issued delete of an already erased
+    // doc is a no-op instead of corrupting the stat arithmetic.
+    commit(withDf(spark, IndexSnapshot(outDir,
+      stats.copy(n = n2, avgdl = sumDl2.toDouble / n2), "df", Seq(group), committed,
+      Array.empty, (holes ++ tomb).distinct.sorted, arm)))
   }
 
   /** Visibility-only delete (Lucene-style tombstones): marks doc ids as
@@ -779,12 +728,11 @@ object PackedIndex {
     * same contract as Lucene's deleted docs before a segment merge. At
     * 100 TB this is the only viable per-document delete (a GDPR erasure
     * must not force an index rebuild). Idempotent and crash-safe: the
-    * merged sorted set is written to a tmp file and atomically moved over
-    * tombstones.txt (readers see either the old or the new complete set).
-    * Deleted ids are NOT reusable — append() keeps offsetting from
-    * nextDocId, which tombstones never change. Ids must name docs the
-    * index has actually committed (fail-loudly, matching append's
-    * consistency requires): a tombstone above the watermark would silently
+    * merged sorted set is committed with the rest of the record (readers
+    * see either the old or the new complete set). Deleted ids are NOT
+    * reusable — append() keeps offsetting from nextDocId, which tombstones
+    * never change. Ids must name docs the index has actually committed
+    * (fail-loudly): a tombstone at or above nextDocId would silently
     * suppress a FUTURE doc born later under that id. Ids of docs a past
     * compaction already removed (holes) are dropped as no-ops — the doc is
     * already physically erased. The merged set is bounded by
@@ -808,7 +756,7 @@ object PackedIndex {
     require(docIds.forall(id => id >= 0 && id < limit),
       s"delete: doc ids outside the committed [0, $limit) range: " +
         docIds.filterNot(id => id >= 0 && id < limit).take(5).mkString(","))
-    // liveness, not just range: after a compaction the [0, watermark) range
+    // liveness, not just range: after a compaction the [0, nextDocId) range
     // contains HOLES — ids of docs already physically removed. Deleting one
     // again (a re-issued GDPR erasure) is a no-op on an already-erased doc;
     // silently letting it into the tombstone set would make the NEXT
@@ -820,11 +768,11 @@ object PackedIndex {
       s"delete: tombstone set would reach ${merged.length} ids " +
         s"(bound $maxTombstones) — run compact() to apply them physically " +
         "(or rebuild over a filtered corpus for mass deletes)")
-    MetaIO.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
+    commit(snap.copy(tombstones = merged))
   }
 
-  /** Ids of a one-id-per-line sidecar (tombstones, holes — of this index
-    * and of [[graft.ann.IvfIndex]]); empty when the file is absent.
+  /** Ids of a one-id-per-line sidecar file (tombstones and holes of
+    * [[graft.ann.IvfIndex]]); empty when the file is absent.
     */
   private[graft] def readIdFile(path: String): Array[Long] =
     if (!MetaIO.exists(path)) Array.empty[Long]

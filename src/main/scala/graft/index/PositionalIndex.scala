@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.io.{MetaIO, TableIO}
+import graft.io.TableIO
 
 /** Persisted positional posting row: all positional blocks of one term
   * within one doc-shard (see [[Codec.PosBlock]]).
@@ -18,12 +18,17 @@ final case class PackedPosBlock(
 final case class PosPostings(shard: Int, term: String, nPostings: Long,
                              blocks: Array[PackedPosBlock])
 
+/** The positional arm as the commit record names it: its segment dirs
+  * under the index dir, and its lineage stamp, the scoring groups it covers.
+  */
+final case class PositionalArm(segments: Seq[String], covers: Set[Int])
+
 /** Optional POSITIONAL arm of the packed index: per-posting term-occurrence
-  * offsets, stored as a parallel `positions/` table under the index dir and
-  * sharded identically to the scoring postings (shard = doc_id >>
-  * shardBits from stats.json), so every term of a doc lands in the same
-  * shard and phrase verification is shard-local — no per-doc shuffle, the
-  * same co-location argument as the WAND kernel.
+  * offsets, stored as parallel `positions*` segment tables under the index
+  * dir and sharded identically to the scoring postings (shard = doc_id >>
+  * shardBits from the commit record), so every term of a doc lands in the
+  * same shard and phrase verification is shard-local — no per-doc shuffle,
+  * the same co-location argument as the WAND kernel.
   *
   * This removes phrase search's dependence on retaining the tokenized
   * corpus next to the index ([[graft.query.Phrase.topK]] re-reads candidate
@@ -34,15 +39,14 @@ final case class PosPostings(shard: Int, term: String, nPostings: Long,
   * Build contract: [[build]] after the scoring build with the SAME
   * tokenized frame (one base segment); [[append]] after each
   * PackedIndex.append with the same offset batch (one segment per append,
-  * cost ∝ the batch, atomic segment-list flip). The scoring index remains
-  * the source of truth for corpus stats and commit lineage: the segment
-  * list carries a lineage stamp, the set of committed scoring groups the
-  * arm covers, written in the same atomic flip as the segments. [[load]]
-  * compares it with the groups of the caller's [[IndexSnapshot]] in the
-  * same read that names the segments, so an arm that missed an append
-  * (or moved past the snapshot) fails loudly instead of silently serving
-  * another version. The stamp checks lineage, not content: an arm built
-  * from another corpus than its scoring groups is not caught.
+  * cost ∝ the batch). The scoring index remains the source of truth for
+  * corpus stats and commit lineage: the arm ([[PositionalArm]]) is a field
+  * of the index's commit record, so each write of a segment is followed by
+  * one commit of the whole record, and [[load]] compares the arm's stamp
+  * with the groups of the same [[IndexSnapshot]]. An arm that missed an
+  * append (or moved past the snapshot) fails loudly instead of silently
+  * serving another version. The stamp checks lineage, not content: an arm
+  * built from another corpus than its scoring groups is not caught.
   */
 object PositionalIndex {
 
@@ -119,100 +123,62 @@ object PositionalIndex {
     }.toDF()
   }
 
-  private val Stamp = "covers="
-
-  /** Sidecar `positions.list`: the stamp line `covers=<group ids>` and the
-    * arm's segment dirs, one per line (MetaIO-atomic — readers see the old
-    * or the new complete list). Absent on pre-segment arms, which consist
-    * of the single legacy `positions` dir; those and lists written before
-    * the stamp carry none (`covers` None).
-    */
-  private final case class SegmentList(segments: Seq[String], covers: Option[Set[Int]])
-
-  private def segmentList(dir: String): SegmentList =
-    if (!MetaIO.exists(s"$dir/positions.list")) SegmentList(Seq("positions"), None)
-    else {
-      val (stamp, segs) = MetaIO.readString(s"$dir/positions.list")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-        .partition(_.startsWith(Stamp))
-      SegmentList(segs, stamp.headOption.map(
-        _.stripPrefix(Stamp).split(",").filter(_.nonEmpty).map(_.toInt).toSet))
-    }
-
-  private def commitList(dir: String, segments: Seq[String], covers: Set[Int]): Unit =
-    MetaIO.writeAtomic(s"$dir/positions.list",
-      (s"$Stamp${covers.toSeq.sorted.mkString(",")}" +: segments).mkString("\n"))
-
-  /** The arm's committed segment dirs, in list order. */
-  private[graft] def segments(dir: String): Seq[String] = segmentList(dir).segments
-
-  private def stampOf(dir: String, list: SegmentList): Set[Int] =
-    list.covers.getOrElse(throw new IllegalArgumentException(
-      s"positional arm at $dir carries no lineage stamp — rebuild it with " +
-        "PositionalIndex.build over the index corpus"))
-
   /** Build (or rebuild) the positional arm from the index's full corpus:
-    * one base segment, resetting any appended segments, stamped with every
-    * scoring group committed when the build starts.
+    * one base segment, replacing any appended segments, stamped with every
+    * scoring group of the snapshot the build starts from. A rebuild writes
+    * its base segment under the name the current arm does not use, so a
+    * crash before the commit leaves the current arm intact.
     */
   def build(tokenized: DataFrame, dir: String): Unit = {
     val snap = PackedIndex.snapshot(dir)
+    val base =
+      if (snap.positional.exists(_.segments.contains("positions"))) "positions-b" else "positions"
     TableIO.write(pack(tokenized, snap.stats.shardBits, snap.stats.blockSize,
-      maxShards = snap.numShards),
-      s"$dir/positions")
-    commitList(dir, Seq("positions"), snap.groups.toSet)
+      maxShards = snap.numShards), s"$dir/$base")
+    PackedIndex.commit(snap.copy(positional = Some(PositionalArm(Seq(base), snap.groups.toSet))))
   }
 
   /** Extend the positional arm with NEWLY APPENDED docs only (cost ∝ the
     * batch, like PackedIndex.append): the batch packs into a fresh segment
-    * dir, then the segment list flips atomically, stamping the newest
-    * scoring group covered — a crash in between leaves an orphan dir that
-    * readers never see and that an append retry overwrites (the segment id
-    * derives from the committed list). `newTokenized` must carry the docs'
-    * FINAL ids, i.e. the same offset frame handed to PackedIndex.append,
-    * so the batch is the newest scoring group: the append is refused
-    * unless exactly that group is uncovered, and does nothing once it is
-    * covered (a retry after the flip).
+    * dir, then the commit record names it and stamps the newest scoring
+    * group covered — a crash in between leaves an orphan dir that readers
+    * never see and that an append retry overwrites (the segment id derives
+    * from the committed arm). `newTokenized` must carry the docs' FINAL
+    * ids, i.e. the same offset frame handed to PackedIndex.append, so the
+    * batch is the newest scoring group: the append is refused unless
+    * exactly that group is uncovered, and does nothing once it is covered
+    * (a retry after the commit).
     */
   def append(newTokenized: DataFrame, dir: String): Unit = {
     val snap = PackedIndex.snapshot(dir)
     val stats = snap.stats
-    val list = segmentList(dir)
-    require(TableIO.committed(s"$dir/${list.segments.head}"),
-      s"PositionalIndex.append: no committed positional arm at $dir — " +
-        "run PositionalIndex.build first")
-    val covered = stampOf(dir, list)
+    val arm = snap.positional.getOrElse(throw new IllegalArgumentException(
+      s"PositionalIndex.append: no positional arm at $dir — run PositionalIndex.build first"))
     val groups = snap.groups
-    val uncovered = groups.filterNot(covered)
+    val uncovered = groups.filterNot(arm.covers)
     if (uncovered.isEmpty) return
     require(uncovered == Seq(groups.last),
       s"PositionalIndex.append: the arm at $dir misses scoring groups " +
         s"${uncovered.mkString("[", ",", "]")} and one batch is only the newest " +
         s"(${groups.last}) — rebuild it with PositionalIndex.build")
-    val next = s"positions-a${list.segments.length}"
-    TableIO.write(pack(newTokenized, stats.shardBits, stats.blockSize),
-      s"$dir/$next")
-    commitList(dir, list.segments :+ next, covered + groups.last)
+    val next = s"positions-a${arm.segments.length}"
+    TableIO.write(pack(newTokenized, stats.shardBits, stats.blockSize), s"$dir/$next")
+    PackedIndex.commit(snap.copy(positional =
+      Some(PositionalArm(arm.segments :+ next, arm.covers + groups.last))))
   }
-
-  /** True iff `dir` carries a positional arm (segment list or legacy
-    * single `positions` dir).
-    */
-  def exists(dir: String): Boolean =
-    MetaIO.exists(s"$dir/positions.list") || TableIO.committed(s"$dir/positions")
 
   /** Repack the positional arm minus the tombstoned docs into `outDir` —
     * the positional leg of [[PackedIndex.compact]], sharing its shape:
     * rows whose block [base, maxDoc] ranges touch no tombstone pass
     * through HEADER-ONLY; touched rows decode, drop deleted postings, and
-    * re-block with the same codec. Ids are preserved, segments collapse to
-    * one, and the list is stamped with the compacted index's single group
-    * 0, whose manifest [[PackedIndex.compact]] commits after this write
+    * re-block with the same codec. Ids are preserved and segments
+    * collapse to one, stamped with the compacted index's single group 0;
+    * [[PackedIndex.compact]] commits the returned arm with that group
     * (`arm` is the source arm as [[load]] read it, so it is current).
     */
   private[index] def compactInto(arm: Dataset[PosPostings], outDir: String,
                                  bcTomb: org.apache.spark.broadcast.Broadcast[Array[Long]],
-                                 blockSize: Int): Unit = {
+                                 blockSize: Int): PositionalArm = {
     val spark = arm.sparkSession
     import spark.implicits._
     val repacked = arm.mapPartitions { it =>
@@ -247,32 +213,30 @@ object PositionalIndex {
       }
     }
     TableIO.write(repacked.toDF(), s"$outDir/positions")
-    commitList(outDir, Seq("positions"), Set(0))
+    PositionalArm(Seq("positions"), Set(0))
   }
 
   /** [[load]] against the index's current committed version. */
   def load(spark: SparkSession, dir: String): Dataset[PosPostings] =
     load(spark, PackedIndex.snapshot(dir))
 
-  /** Read the positional arm serving `snap`: its committed segments as one
-    * relation with the known [[PostingsSchema]]. The one read of the
-    * segment list also checks its stamp against `snap.groups` — no Spark
-    * job — and fails loudly when the arm is absent, unstamped, or covers
+  /** Read the positional arm serving `snap`: the segments its record
+    * names, as one relation with the known [[PostingsSchema]]. The arm's
+    * stamp is checked against `snap.groups` in memory — no file read, no
+    * Spark job — and the read fails loudly when the arm is absent or covers
     * other groups (it missed an append, or moved past the snapshot).
     */
   def load(spark: SparkSession, snap: IndexSnapshot): Dataset[PosPostings] = {
     val dir = snap.dir
-    val list = segmentList(dir)
-    val covered = stampOf(dir, list)
+    val arm = snap.positional.getOrElse(throw new IllegalArgumentException(
+      s"no positional arm at $dir — run PositionalIndex.build over the index corpus first"))
     val committed = snap.groups.toSet
-    require(covered == committed,
+    require(arm.covers == committed,
       s"positional arm at $dir is stale: it covers scoring groups " +
-        s"${covered.toSeq.sorted.mkString("[", ",", "]")} of the committed " +
+        s"${arm.covers.toSeq.sorted.mkString("[", ",", "]")} of the committed " +
         s"${committed.toSeq.sorted.mkString("[", ",", "]")} — run " +
         "PositionalIndex.append for the missed batch (or build to reset)")
-    val segs = list.segments.map(s => s"$dir/$s")
-    segs.foreach(s => require(TableIO.committed(s), s"PositionalIndex.load: segment " +
-      s"$s missing/uncommitted — run PositionalIndex.build over the index corpus first"))
-    TableIO.read(spark, PostingsSchema, segs: _*).as(Encoders.product[PosPostings])
+    TableIO.read(spark, PostingsSchema, arm.segments.map(s => s"$dir/$s"): _*)
+      .as(Encoders.product[PosPostings])
   }
 }

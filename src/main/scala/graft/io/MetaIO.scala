@@ -1,9 +1,9 @@
 package graft.io
 
 /** The engine's one storage boundary for everything it reads or writes
-  * outside a Spark table: the SMALL metadata sidecars (stats.json, group
-  * manifests, tombstones, watermark, segment lists), commit probes and
-  * scratch cleanup. Table-shaped artifacts (postings, df, staged docs) go
+  * outside a Spark table: the SMALL metadata files (a packed index's commit
+  * record, the IVF index's sidecars), commit probes and scratch cleanup.
+  * Table-shaped artifacts (postings, df, staged docs) go
   * through [[TableIO]], whose commit probe comes back here.
   *
   * The PATH picks the storage:
@@ -13,18 +13,18 @@ package graft.io
   *    Hadoop FileSystem API (already on the Spark classpath) through one
   *    held `Configuration`.
   * Local paths stay on `java.nio` because a Hadoop-local round-trip costs
-  * orders of magnitude more per sidecar write (checksum files, process-
+  * orders of magnitude more per small-file write (checksum files, process-
   * spawning permission calls) than the rename it wraps.
   *
   * Contract notes:
   *  - `writeAtomic` publishes all-or-nothing: a concurrent reader sees
   *    either the previous content or the new complete content, never a
-  *    partial file (the commit-marker protocol in PackedIndex depends on
-  *    this). Both arms write a `.tmp` sibling and rename it over the
-  *    target — atomic on POSIX and HDFS; object stores whose committers
-  *    emulate rename do not give this guarantee.
+  *    partial file (PackedIndex's one-record commit depends on this).
+  *    Both arms write a `.tmp` sibling and rename it over the target —
+  *    atomic on POSIX and HDFS; object stores whose committers emulate
+  *    rename do not give this guarantee.
   *  - cache-invalidation tokens are deliberately NOT part of this boundary:
-  *    query-side caches key on sidecar CONTENT, as a snapshot read it (see
+  *    query-side caches key on record CONTENT, as a snapshot read it (see
   *    graft.query.IndexCache), because mtime/size-style tokens alias
   *    same-millisecond equal-length rewrites and silently serve stale data.
   */
@@ -40,7 +40,7 @@ object MetaIO {
 
   // FileSystem.get caches instances per (scheme, authority, user); the
   // Configuration is built once (parsing the default resources per call
-  // dominated a sidecar read)
+  // dominated a small-file read)
   private lazy val conf = new org.apache.hadoop.conf.Configuration()
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 

@@ -5,17 +5,20 @@ import org.apache.spark.sql.types.StructType
 
 /** Table-format boundary for every persistent table the engine writes
   * (staged docs, packed postings groups, df tables): parquet directories,
-  * the directory is the table and its `_SUCCESS` file the commit marker.
+  * the directory is the table and its `_SUCCESS` file marks a complete
+  * write. A table is part of an index only once the index's commit record
+  * names it (see [[graft.index.PackedIndex]]); a resumed build also uses
+  * `committed` to skip a group whose write completed.
   * Spark's parquet reader/writer speak both scheme-less paths and Hadoop
-  * URIs; the commit probe goes through [[MetaIO]], so the
-  * location's path picks the storage exactly as it does for sidecars.
+  * URIs; the `_SUCCESS` probe goes through [[MetaIO]], so the
+  * location's path picks the storage exactly as it does for the record.
   * Serving tables are read with their constant schema (no inference job);
   * the schema-less read is for tables shaped by the caller's frame.
   *
   * SURVEY §1.2 specifies Iceberg tables for pages/postings; this container
   * has no Iceberg jars (verified: /opt/spark/jars, offline resolver). An
   * Iceberg implementation would map `write` to a table commit (snapshot),
-  * `committed` to table existence, and the group manifests to snapshot
+  * `committed` to table existence, and the commit record to snapshot
   * metadata, behind these four methods.
   */
 object TableIO {

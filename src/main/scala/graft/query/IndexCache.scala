@@ -15,10 +15,10 @@ import graft.index.{IndexSnapshot, IndexStats}
   * larger vocabularies fall back to the per-batch scan (recorded so the
   * size check itself isn't repeated per batch).
   *
-  * Invalidation: append/compact write a fresh df dir and atomically flip
-  * stats.json's dfDir pointer (and always change n/avgdl), so the
-  * snapshot's (stats, dfDir) — read in its one stats.json read — changes
-  * exactly when the df content may have. The cache reads no file: the key
+  * Invalidation: append/compact write a fresh df dir and commit a record
+  * naming it (and always change n/avgdl), so the snapshot's (stats, dfDir)
+  * — read in its one read of the commit record — changes exactly when the
+  * df content may have. The cache reads no file: the key
   * and the df dir it loads both come from the caller's snapshot, so a call
   * never pairs one version's stats with another version's df. Tombstones
   * are not cached here; they are a field of the snapshot.

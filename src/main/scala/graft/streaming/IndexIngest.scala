@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Continuous index ingestion (SURVEY §2.10): a Structured Streaming source
   * of raw pages drives the SAME build/append path as batch — each
   * micro-batch lands as one crash-safe index commit (group parquet → df →
-  * stats → manifest, exactly [[graft.index.PackedIndex.append]]'s protocol),
+  * commit record, exactly [[graft.index.PackedIndex.append]]'s protocol),
   * so a query running against the index sees atomic corpus growth and the
   * result of the streamed ingest is BIT-IDENTICAL to a batch rebuild over
   * the same pages (append == rebuild is pinned by AppendSpec; the streaming
@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * The streaming checkpoint (source offsets) lives next to the index, so a
   * restarted stream resumes from the last UNPROCESSED file while the index's
-  * own manifests make a half-applied batch idempotent to retry — the two
+  * commit record makes a half-applied batch idempotent to retry — the two
   * recovery mechanisms compose.
   */
 object IndexIngest {
@@ -28,7 +28,7 @@ object IndexIngest {
             maxFilesPerTrigger: Int = 1): StreamingQuery = {
     val handler: (DataFrame, Long) => Unit = (batch: DataFrame, _: Long) =>
       if (!batch.isEmpty) {
-        if (!graft.io.MetaIO.exists(s"$indexDir/stats.json"))
+        if (!graft.index.PackedIndex.exists(indexDir))
           graft.corpus.PagesPipeline.buildIndex(batch, indexDir, shardBits, groups)
         else
           graft.corpus.PagesPipeline.appendPages(batch, indexDir)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * index grow atomically and the streamed result is identical to batch
   * build-then-append over the same rows (IvfIngestSpec). The streaming
   * checkpoint composes with the segment list exactly as IndexIngest's does
-  * with the group manifests.
+  * with the packed index's commit record.
   */
 object IvfIngest {
 

@@ -167,50 +167,17 @@ class AppendSpec extends SparkSpec {
     }
   }
 
-  test("append retried after a crash between stats and manifest is idempotent") {
-    // crash point: new stats.json committed, group manifest NOT — the worst
-    // ordering (a stats-derived retry would double-count the new docs)
-    val dir = scratchDir("crash")
-    val first = PagesGen.pages(spark, 200, partitions = 4).toDF()
-    PagesPipeline.buildIndex(first, dir, shardBits = 6, groups = 2)
-    val extra = PagesGen.pages(spark, 300, partitions = 4)
-      .toDF().join(
-        spark.read.parquet(s"$dir/docs_raw").select(col("url")),
-        Seq("url"), "left_anti")
-    val man = PagesPipeline.appendPages(extra, dir)
-    val statsAfter = graft.index.PackedIndex.snapshot(dir).stats
-
-    // simulate the crash: delete the append's manifest (committed last), so
-    // everything else — packed group, df-gN, stats.json — is already the
-    // "new" state, then retry the identical append
-    val manifestFile = new java.io.File(s"$dir/manifest/group-${man.group}.json")
-    assert(manifestFile.exists())
-    assert(manifestFile.delete())
-    val man2 = PagesPipeline.appendPages(extra, dir)
-    val statsRetry = graft.index.PackedIndex.snapshot(dir).stats
-
-    assert(man2.group == man.group) // same group re-used, not a duplicate
-    assert(man2.docs == man.docs && man2.sumDl == man.sumDl)
-    assert(statsRetry.n == statsAfter.n, "retry must not double-count docs")
-    assert(statsRetry.avgdl == statsAfter.avgdl)
-    assert(statsRetry.avgRawIdf == statsAfter.avgRawIdf)
-    // queries still serve one copy of each matched doc
-    val hits = Wand.search(spark, dir, Seq(1L -> "the w3 w17"), 1000)
-      .select(col("doc_id")).collect().map(_.getLong(0))
-    assert(hits.length == hits.distinct.length)
-  }
-
   test("orphan (uncommitted) postings groups are invisible to readers") {
-    // crash point: a group's parquet fully written but its manifest never
-    // committed — a snapshot's postings must serve committed groups only (the
-    // manifest is the read-side commit marker), or uncommitted docs would be
-    // scored against stale df/stats until the retry
+    // crash point: a group's parquet fully written but the record naming it
+    // never committed — a snapshot's postings must serve committed groups
+    // only, or uncommitted docs would be scored against stale df/stats until
+    // the retry
     val dir = scratchDir("orphan")
     PagesPipeline.buildIndex(PagesGen.pages(spark, 200, partitions = 4).toDF(),
       dir, shardBits = 6, groups = 2)
     val before = graft.index.PackedIndex.snapshot(dir).postings(spark).count()
 
-    // fabricate the orphan: copy a committed group dir to grp=99, no manifest
+    // fabricate the orphan: copy a committed group dir to grp=99, unnamed
     val src = new java.io.File(s"$dir/postings/grp=0")
     val dst = new java.io.File(s"$dir/postings/grp=99")
     def copyRec(s: java.io.File, d: java.io.File): Unit =
@@ -223,6 +190,33 @@ class AppendSpec extends SparkSpec {
     val hits = Wand.search(spark, dir, Seq(1L -> "the w3 w17"), 1000)
       .select(col("doc_id")).collect().map(_.getLong(0))
     assert(hits.length == hits.distinct.length, "orphan docs served twice")
+  }
+
+  test("an append's df counts only committed groups: an orphan grp=99 changes nothing") {
+    def tok(rows: Seq[(Long, String)]) = graft.index.InvertedIndex.tokenize(
+      rows.toDF("doc_id", "text"), "doc_id", "text")
+    val rnd = new scala.util.Random(7)
+    val docs = (0L until 50L).map(id =>
+      id -> (Seq.fill(3 + rnd.nextInt(8))(s"w${rnd.nextInt(20)}") :+ "a").mkString(" "))
+    val dir = scratchDir("orphan-df")
+    graft.index.PackedIndex.build(tok(docs.take(40)), dir, shardBits = 3, groups = 2)
+    val src = java.nio.file.Paths.get(dir, "postings", "grp=0")
+    val dst = java.nio.file.Paths.get(dir, "postings", "grp=99")
+    java.nio.file.Files.createDirectories(dst)
+    java.nio.file.Files.list(src).forEach(f => java.nio.file.Files.copy(f, dst.resolve(f.getFileName)))
+    graft.index.PackedIndex.append(tok(docs.drop(40)), dir)
+    val fresh = scratchDir("orphan-df-fresh")
+    graft.index.PackedIndex.build(tok(docs), fresh, shardBits = 3, groups = 2)
+    def bits(d: String) = {
+      val s = graft.index.PackedIndex.snapshot(d).stats
+      (s.n, java.lang.Double.doubleToRawLongBits(s.avgdl),
+        java.lang.Double.doubleToRawLongBits(s.avgRawIdf))
+    }
+    def df(d: String) = graft.index.PackedIndex.loadDf(spark, d).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq
+    assert(df(dir).toMap.apply("a") == 50L, "the orphan group's postings were counted")
+    assert(df(dir) == df(fresh))
+    assert(bits(dir) == bits(fresh))
   }
 
   test("tombstone delete: deleted docs vanish, survivors keep exact scores") {

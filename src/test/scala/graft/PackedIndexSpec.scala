@@ -423,10 +423,10 @@ class PackedIndexSpec extends SparkSpec {
         s"compacted search mismatch for q$qid")
     }
 
-    // the id watermark survives compaction: the compacted index holds fewer
-    // docs than its highest id + 1, yet id allocation must stay above the
-    // ORIGINAL range (watermark.json; a manifest-sum watermark would hand
-    // out id 599-shifted ids that collide with surviving docs)
+    // the id high-water mark survives compaction: the compacted index holds
+    // fewer docs than its highest id + 1, yet id allocation must stay above
+    // the ORIGINAL range (the record's nextDocId; a sum of group docs would
+    // hand out ids that collide with surviving docs)
     assert(PackedIndex.snapshot(out).nextDocId == 600L)
     PackedIndex.delete(out, Seq(598L)) // highest SURVIVING id is deletable
     assert(PackedIndex.snapshot(out).tombstones.sameElements(Array(598L)))
@@ -440,8 +440,8 @@ class PackedIndexSpec extends SparkSpec {
       PackedIndex.delete(dir, Seq(10000L))
     }
 
-    // append to the compacted index: new ids start ABOVE the watermark and
-    // the watermark advances with the batch
+    // append to the compacted index: new ids start ABOVE nextDocId and
+    // nextDocId advances with the batch
     val extra: IndexedSeq[Array[String]] =
       IndexedSeq(Array("t0", "zz1"), Array("zz1", "zz2"))
     val extraDf = extra.zipWithIndex
@@ -463,12 +463,11 @@ class PackedIndexSpec extends SparkSpec {
     val clean = Wand.search(spark, out, Seq(1L -> "t0 t1"), 0).collect()
       .map(r => (r.getLong(1), r.getDouble(2))).sorted.toSeq
 
-    // simulate a crash BEFORE the manifest commit: readers must fail
-    // loudly (no committed groups), not serve a half-written index
+    // simulate a crash BEFORE the record commit: readers must fail
+    // loudly (no committed index), not serve a half-written index
     val out2 = scratchDir("cptc-out2")
     PackedIndex.compact(spark, dir, out2)
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(out2, "manifest", "group-0.json"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out2, "index.json"))
     intercept[IllegalArgumentException] {
       PackedIndex.snapshot(out2).postings(spark).count()
     }
@@ -524,21 +523,6 @@ class PackedIndexSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("compact ignores a crashed append's stats.json (manifests are truth)") {
-    val docs = randomCorpus(nDocs = 200, vocab = 60, seed = 51)
-    val dir = scratchDir("cstats")
-    buildIndex(docs, dir, shardBits = 7, groups = 2)
-    PackedIndex.delete(dir, Seq(3L, 4L))
-    // crash window: append's stats.json committed (counts the new batch),
-    // manifest not — compact's doc arithmetic must use the manifests
-    val snap = PackedIndex.snapshot(dir)
-    PackedIndex.writeStats(dir, snap.stats.copy(n = snap.stats.n + 37), snap.dfDir)
-    val out = scratchDir("cstats-out")
-    PackedIndex.compact(spark, dir, out)
-    assert(PackedIndex.snapshot(out).stats.n == 198L,
-      "crashed-append stats.n leaked into the compacted doc count")
-  }
-
   test("tombstone set is bounded: overflow fails with the compact remedy") {
     val docs = randomCorpus(nDocs = 100, vocab = 30, seed = 61)
     val dir = scratchDir("tbound")
@@ -555,21 +539,22 @@ class PackedIndexSpec extends SparkSpec {
   test("build is resumable: completed groups are skipped, result identical") {
     val docs = randomCorpus(nDocs = 300, vocab = 80, seed = 3)
     val dir = scratchDir("idx-resume")
-    val first = buildIndex(docs, dir, shardBits = 7, groups = 3)
-    // simulate a crash that lost group 1's manifest AND data
+    buildIndex(docs, dir, shardBits = 7, groups = 3)
+    val first = PackedIndex.snapshot(dir).manifests
+    // simulate a crash before the commit that lost group 1's data
     val g1 = new java.io.File(s"$dir/postings/grp=1")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
     }
     rm(g1)
-    Files.delete(java.nio.file.Path.of(s"$dir/manifest/group-1.json"))
-    // resume: groups 0 and 2 must be skipped (manifests exist), 1 rebuilt
+    Files.delete(java.nio.file.Path.of(s"$dir/index.json"))
+    // resume: groups 0 and 2 must be skipped (their writes committed), 1
+    // rebuilt, and every group counted as the clean build counted it
     val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
       .toDF("doc_id", "text")
     val tok = InvertedIndex.tokenize(df, "doc_id", "text")
-    val t0 = System.nanoTime()
     val manifests = PackedIndex.build(tok, dir, shardBits = 7, groups = 3, p = P)
-    assert(manifests.size == 3)
+    assert(manifests == first)
     // full parity after resume
     val oracle = new Bm25.Oracle(docs, P)
     val got = Wand.search(spark, dir, Seq(1L -> "t0 t5 t10"), 5).collect()

@@ -241,7 +241,7 @@ class PhraseSpec extends SparkSpec {
     val gotProx = rows(Phrase.proximityTopKPositional(spark, outDir,
       "table", "scan", slop = 3, k = 500))
     assert(gotProx == wantProx)
-    // lifecycle still composes AFTER compaction: append above the watermark
+    // lifecycle still composes AFTER compaction: append above nextDocId
     // to both arms (the compacted arm is stamped with its single group 0)
     val next = graft.index.PackedIndex.snapshot(outDir).nextDocId
     val late = tok(next -> "table scan z")
@@ -255,6 +255,9 @@ class PhraseSpec extends SparkSpec {
       wantPhrase.map(r => r._1 -> r._2) + (next -> 1L))
   }
 
+  private def armSegments(dir: String): Seq[String] =
+    graft.index.PackedIndex.snapshot(dir).positional.get.segments
+
   test("positional append: orphan segment dirs are invisible until the list flips") {
     val t = tok(0L -> "table scan a", 1L -> "b table scan")
     val dir = scratchDir("posorphan")
@@ -262,8 +265,8 @@ class PhraseSpec extends SparkSpec {
     graft.index.PositionalIndex.build(t, dir)
     val before = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
       .collect().map(_.getLong(0)).toSet
-    // simulate a crash AFTER the segment write, BEFORE the list flip:
-    // fabricate an orphan segment dir (copy of the base) with no list entry
+    // simulate a crash AFTER the segment write, BEFORE the commit:
+    // fabricate an orphan segment dir (copy of the base) the record does not name
     def copyRec(s: java.io.File, d: java.io.File): Unit =
       if (s.isDirectory) { d.mkdirs(); s.listFiles.foreach(c => copyRec(c, new java.io.File(d, c.getName))) }
       else java.nio.file.Files.copy(s.toPath, d.toPath)
@@ -272,7 +275,7 @@ class PhraseSpec extends SparkSpec {
     val after = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
       .collect().map(_.getLong(0)).toSet
     assert(after == before, "orphan positional segment leaked into results")
-    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions"))
+    assert(armSegments(dir) == Seq("positions"))
   }
 
   test("positional append behind two missed scoring appends fails loudly") {
@@ -289,7 +292,7 @@ class PhraseSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("misses scoring groups [1,2]"), ex.getMessage)
     assert(ex.getMessage.contains("PositionalIndex.build"), ex.getMessage)
-    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions"))
+    assert(armSegments(dir) == Seq("positions"))
     assert(intercept[IllegalArgumentException] {
       Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10).collect()
     }.getMessage.contains("stale"))
@@ -303,25 +306,10 @@ class PhraseSpec extends SparkSpec {
     graft.index.PackedIndex.append(extra, dir)
     graft.index.PositionalIndex.append(extra, dir)
     graft.index.PositionalIndex.append(extra, dir) // the batch is already covered
-    assert(graft.index.PositionalIndex.segments(dir) == Seq("positions", "positions-a1"))
+    assert(armSegments(dir) == Seq("positions", "positions-a1"))
     val hits = Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hits == Map(0L -> 1L, 1L -> 2L))
-  }
-
-  test("an arm whose segment list carries no lineage stamp fails loudly and names the rebuild") {
-    val t = tok(0L -> "table scan a", 1L -> "b table scan")
-    val dir = scratchDir("posnostamp")
-    graft.index.PackedIndex.build(t, dir, shardBits = 2, groups = 1)
-    graft.index.PositionalIndex.build(t, dir)
-    graft.io.MetaIO.writeAtomic(s"$dir/positions.list", "positions") // written before stamps
-    for (run <- Seq[() => Unit](
-        () => Phrase.topKPositional(spark, dir, Seq("table", "scan"), 10).collect(),
-        () => graft.index.PositionalIndex.append(tok(2L -> "c"), dir))) {
-      val ex = intercept[IllegalArgumentException](run())
-      assert(ex.getMessage.contains("no lineage stamp") &&
-        ex.getMessage.contains("PositionalIndex.build"), ex.getMessage)
-    }
   }
 
   test("proximityCount: ordered window pairs, hand-computed goldens") {

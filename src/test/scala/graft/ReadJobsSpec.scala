@@ -1,7 +1,6 @@
 package graft
 
 import graft.index.{InvertedIndex, PackedIndex, PositionalIndex}
-import graft.io.MetaIO
 import graft.query.{IndexCache, Phrase, PositionalMode, PositionalQuery, Wand}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -127,7 +126,7 @@ class ReadJobsSpec extends SparkSpec {
     val at4 = warmJobs()
     MultiGroupIndex.append(spark, dir, 200)
     MultiGroupIndex.append(spark, dir, 220)
-    assert(MetaIO.list(s"$dir/manifest").count(_.startsWith("group-")) == 6)
+    assert(PackedIndex.snapshot(dir).groups.size == 6)
     at4.zip(warmJobs())
   }
 

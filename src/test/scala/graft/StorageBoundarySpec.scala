@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import graft.io.MetaIO
 import graft.plans.Bm25TopKPlan
 import graft.query.{IndexCache, Phrase, Wand}
 import org.apache.spark.sql.DataFrame
@@ -59,8 +58,8 @@ class StorageBoundarySpec extends SparkSpec {
       IndexCache.invalidateAll()
       val got = rows(Wand.search(spark, dir, Seq(1L -> "the w3 w17"), 20))
       val n = graft.index.PackedIndex.snapshot(dir).stats.n
-      // the URI names the same dir: its sidecars are where the path says
-      assert(MetaIO.list(s"$local/manifest").count(_.startsWith("group-")) == 3)
+      // the URI names the same dir: its commit record is where the path says
+      assert(graft.index.PackedIndex.snapshot(local).groups.size == 3)
       (got, n)
     }
     val viaPath = grow(uri = false)

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import graft.index.{PackedIndex, PackedPostings, PosPostings, PositionalIndex}
+import graft.index.{PackedIndex, PackedPostings, PosPostings, PositionalArm, PositionalIndex}
 import graft.io.{MetaIO, TableIO}
 import graft.query.{IndexCache, Phrase, Wand}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -30,7 +30,7 @@ class TableSchemaSpec extends SparkSpec {
     PackedIndex.compact(spark, dir, out)
     for (d <- Seq(dir, out)) {
       val groups = MetaIO.list(s"$d/postings").filter(_.startsWith("grp="))
-      val segments = PositionalIndex.segments(d)
+      val segments = PackedIndex.snapshot(d).positional.get.segments
       assert(groups.nonEmpty && segments.nonEmpty)
       groups.foreach(g => assert(shape(inferred(s"$d/postings/$g")) ==
         shape(PackedIndex.PostingsSchema), s"$d/postings/$g"))
@@ -75,7 +75,7 @@ class TableSchemaSpec extends SparkSpec {
     MultiGroupIndex.append(spark, dir, 200)
     MultiGroupIndex.append(spark, dir, 220)
     val groups = MetaIO.list(s"$dir/postings").filter(_.startsWith("grp=")).sorted
-    val segments = PositionalIndex.segments(dir)
+    val segments = PackedIndex.snapshot(dir).positional.get.segments
     assert(groups.size == 6 && segments.size == 3)
 
     // the reference index holds the union read's rows as its only
@@ -91,8 +91,9 @@ class TableSchemaSpec extends SparkSpec {
     val positionsUnion = unionRead(segments.map(s => s"$dir/$s")).as[PosPostings]
     assert(canonPos(PositionalIndex.load(spark, dir)) == canonPos(positionsUnion))
     TableIO.write(positionsUnion.toDF(), s"$ref/positions")
-    MetaIO.writeAtomic(s"$ref/positions.list",
-      s"covers=${PackedIndex.snapshot(ref).groups.mkString(",")}\npositions")
+    val refSnap = PackedIndex.snapshot(ref)
+    PackedIndex.commit(refSnap.copy(
+      positional = Some(PositionalArm(Seq("positions"), refSnap.groups.toSet))))
 
     def answers(d: String): Seq[Seq[Seq[Any]]] = {
       IndexCache.invalidateAll()

@@ -11,15 +11,17 @@ For each seed, runs `python3 loadbench/run.py --workload W --seed S
 that runs first alternates: the parent on the 1st, 3rd, ... seed, the change
 on the 2nd, 4th, .... Each run's sidecar is copied to OUT/parent/ and
 OUT/change/ (OUT defaults to ./pairs-<workload>), so `--report OUT`
-re-prints the table later without running anything.
+re-prints the table later without running anything. A run that exits
+non-zero or leaves no sidecar keeps its output as OUT/<side>/W-seedS.log.
 
 The table gives, for every end-to-end metric the change's BENCHMARK.json
 declares, each side's median with its interquartile range (inclusive
 quartiles), the shift of the medians, the parent's IQR, and in how many
-pairs the change was better (ties count for neither side). Below it, every
-run's exit status, `correct`, failed operations, CPU steal share and CPU
-sentinel. The script exits 1 when any run exited non-zero or was not
-correct.
+pairs the change was better (ties count for neither side). Below it, per
+seed pair, the `index_bytes_by_entry` entries whose bytes differ between
+the sides, then every run's exit status, `correct`, failed operations, CPU
+steal share and CPU sentinel, and the saved log of each failed run. The
+script exits 1 when any run exited non-zero or was not correct.
 """
 import argparse
 import json
@@ -46,13 +48,15 @@ def run_one(checkout, workload, seed, seconds, out):
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     name = f"{workload}-seed{seed}-trace0.json"
     sidecar = Path(checkout) / ".loadbench" / "results" / name
+    log = out / f"{workload}-seed{seed}.log"
     out.mkdir(parents=True, exist_ok=True)
     if proc.returncode == 0 and sidecar.exists():
         shutil.copy(sidecar, out / name)
+        log.unlink(missing_ok=True)
     else:
         # a failed run keeps no stale sidecar of an earlier run in OUT
         (out / name).unlink(missing_ok=True)
-        (out / f"{workload}-seed{seed}.log").write_text(proc.stdout + proc.stderr)
+        log.write_text(proc.stdout + proc.stderr)
     return proc.returncode
 
 
@@ -87,17 +91,31 @@ def report(out, workload, seeds, declared, exits):
         print(f"{metric:<26} {f'{p2:.6g} ({p1:.6g}-{p3:.6g})':<32}"
               f" {f'{c2:.6g} ({c1:.6g}-{c3:.6g})':<32}"
               f" {shift:>+7.1f}% {p3 - p1:>11.4g} {wins:>4}/{len(paired)}")
+    print("\nindex_bytes_by_entry that differ (entry parent -> change):")
+    for seed in paired:
+        by_entry = [runs[side][seed].get("diag", {}).get("index_bytes_by_entry", {})
+                    for side in SIDES]
+        diff = [f"{k} {by_entry[0].get(k)} -> {by_entry[1].get(k)}"
+                for k in sorted(set(by_entry[0]) | set(by_entry[1]))
+                if by_entry[0].get(k) != by_entry[1].get(k)]
+        print(f"  seed {seed:>4}: {', '.join(diff) or 'none'}")
     bad = 0
     print("\nruns (side seed exit correct failed steal calib_start/end):")
     for side in SIDES:
-        for seed in sorted(set(runs[side]) | {s for (sd, s) in exits if sd == side}):
+        logs = {int(p.stem.rpartition("-seed")[2]): p
+                for p in (out / side).glob(f"{workload}-seed*.log")}
+        for seed in sorted(set(runs[side]) | set(logs)
+                           | {s for (sd, s) in exits if sd == side}):
+            if seeds is not None and seed not in seeds:
+                continue
             d = runs[side].get(seed)
-            code = exits.get((side, seed), 0)
+            code = exits.get((side, seed), "?" if seed in logs else 0)
             if d is None:
-                print(f"  {side:<6} {seed:>4} exit {code} (no sidecar)")
+                log = f", log {logs[seed]}" if seed in logs else ""
+                print(f"  {side:<6} {seed:>4} exit {code} (no sidecar{log})")
                 bad += 1
                 continue
-            bad += code != 0 or not d["correct"]
+            bad += code not in (0, "?") or not d["correct"]
             diag = d.get("diag", {})
             print(f"  {side:<6} {seed:>4} exit {code} correct {d['correct']} "
                   f"failed {d['failed']} steal {d['cpu_steal_share']:.4f} "

@@ -2,6 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.core.Bm25Params
 import graft.extract.HtmlText
 import graft.index.{DocIds, InvertedIndex, PackedIndex}
@@ -51,8 +52,10 @@ object PagesPipeline {
     // re-derived on the fly by each consumer (cheap, narrow), so the build
     // never writes/reads the much larger terms-array form, and the group
     // jobs' doc_id range predicates push straight into this parquet.
-    if (!TableIO.committed(rawPath)) TableIO.write(DocIds.assignDense(extracted(pages)), rawPath)
-    val raw = TableIO.read(spark, rawPath)
+    // read back with the writer's schema: assignDense appends doc_id
+    val ext = extracted(pages)
+    if (!TableIO.committed(rawPath)) TableIO.write(DocIds.assignDense(ext), rawPath)
+    val raw = TableIO.read(spark, ext.schema.add("doc_id", LongType), rawPath)
     PackedIndex.build(tokenized(raw), dir, shardBits, groups, p, stageInput = false)
   }
 
@@ -68,8 +71,9 @@ object PagesPipeline {
     // the ids exactly as the crashed attempt did
     val snap = PackedIndex.snapshot(dir)
     val rawPath = s"$dir/docs_raw_append_${snap.nextGroup}"
-    if (!TableIO.committed(rawPath)) TableIO.write(extracted(newPages), rawPath)
-    val raw = TableIO.read(spark, rawPath)
+    val ext = extracted(newPages)
+    if (!TableIO.committed(rawPath)) TableIO.write(ext, rawPath)
+    val raw = TableIO.read(spark, ext.schema, rawPath)
     val withIds = DocIds.assignDense(raw)
       .withColumn("doc_id", col("doc_id") + snap.nextDocId)
     PackedIndex.append(tokenized(withIds), snap)

@@ -48,11 +48,12 @@ final case class IndexStats(
   * ([[PackedIndex.commit]]).
   *
   * How long a version stays readable: committed groups and their postings
-  * are never rewritten, and an append keeps the df dir it supersedes
-  * until the append after it. So a snapshot serves correctly across one
-  * later append and any number of deletes; tombstones are the snapshot's
-  * own. A positional arm that covers other groups than the snapshot fails
-  * loudly ([[PositionalIndex.load]]).
+  * are never rewritten or deleted, and everything else a reader needs
+  * (stats, df, tombstones) is the snapshot's own or derives from its
+  * groups. So a snapshot serves correctly across any number of later
+  * appends and deletes, until its dir itself is removed. A positional arm
+  * that covers other groups than the snapshot fails loudly
+  * ([[PositionalIndex.load]]).
   *
   * @param manifests the committed groups, ascending by group
   * @param nextDocId the next free doc id: above every id the index ever
@@ -64,7 +65,7 @@ final case class IndexStats(
   * @param positional the positional arm's segments and lineage stamp
   */
 final case class IndexSnapshot private[graft] (
-    dir: String, stats: IndexStats, dfDir: String,
+    dir: String, stats: IndexStats,
     manifests: Seq[PackedIndex.GroupManifest], nextDocId: Long,
     tombstones: Array[Long], holes: Array[Long],
     positional: Option[PositionalArm]) {
@@ -88,17 +89,18 @@ final case class IndexSnapshot private[graft] (
     * come from the record, not a listing of postings/: a crashed append's
     * orphan grp=N dir is never served. Past 32 groups (Spark's parallel
     * partition discovery threshold) listing them is a Spark job;
-    * [[PackedIndex.compact]] folds them to one.
+    * [[PackedIndex.compact]] folds them to one. `of` narrows the read to
+    * some of the committed groups.
     */
-  def postings(spark: SparkSession): Dataset[PackedPostings] = {
-    require(manifests.nonEmpty, s"IndexSnapshot: no committed groups at $dir")
+  def postings(spark: SparkSession,
+               of: Seq[PackedIndex.GroupManifest] = manifests): Dataset[PackedPostings] = {
+    require(of.nonEmpty, s"IndexSnapshot: no committed groups at $dir")
     TableIO.read(spark, PackedIndex.PostingsSchema,
-      groups.map(g => s"$dir/postings/grp=$g"): _*).as(Encoders.product[PackedPostings])
+      of.map(m => s"$dir/postings/grp=${m.group}"): _*).as(Encoders.product[PackedPostings])
   }
 
-  /** The snapshot's df table as (term, df). */
-  def df(spark: SparkSession): DataFrame =
-    TableIO.read(spark, PackedIndex.DfSchema, s"$dir/$dfDir")
+  /** The snapshot's (term, df): a view of its groups ([[PackedIndex.dfOf]]). */
+  def df(spark: SparkSession): DataFrame = PackedIndex.dfOf(postings(spark))
 }
 
 /** Build + store of the packed inverted index.
@@ -109,10 +111,9 @@ final case class IndexSnapshot private[graft] (
   *                            sorted pack shuffle — a dir per shard would
   *                            mean thousands of driver-committed files and
   *                            one scheduler task per dir on every read)
-  *   df/ (or df-gN/)          (parquet) (term, df) global document frequency
   *   positions, positions-*   (parquet) the positional arm's segments
   *   index.json               the commit record: stats parameters and
-  *                            avgRawIdf, the live df dir, nextDocId, every
+  *                            avgRawIdf, nextDocId, every
   *                            committed group (docs, sumDl, terms, postings,
   *                            bytes), tombstones, holes and the positional
   *                            arm's segments and lineage stamp
@@ -126,6 +127,8 @@ final case class IndexSnapshot private[graft] (
   * retry recomputes the same dirs and overwrites every partial artifact.
   * n and avgdl are not stored: the snapshot derives them as Σdocs and
   * ΣsumDl / Σdocs over the groups, the same sums every write computes.
+  * Neither is df: it is the per-term sum of the groups' `nPostings`
+  * ([[IndexSnapshot.df]]), so a write stores only its own group.
   *
   * Writers: one at a time per index. Two concurrent appenders would both
   * write grp=N before either commits; exactly-once commits need
@@ -170,8 +173,14 @@ object PackedIndex {
   /** Schema of every `postings/grp=G` table: a [[PackedPostings]] `toDF()`. */
   val PostingsSchema: StructType = Encoders.product[PackedPostings].schema
 
-  /** Schema of every df table: `groupBy(term).agg(sum(nPostings) as df)`. */
+  /** Shape of the df view [[dfOf]]. */
   val DfSchema: StructType = new StructType().add("term", StringType).add("df", LongType)
+
+  /** (term, df) of a postings relation: Σ nPostings per term (a row counts
+    * the term's docs in its shard and group); `blocks` is never scanned.
+    */
+  def dfOf(postings: Dataset[PackedPostings]): DataFrame =
+    postings.groupBy(col("term")).agg(sum(col("nPostings")).as("df"))
 
   /** Auto-derived shardBits for a corpus with dense doc ids in
     * [0, nextDocId): the smallest width keeping numShards <=
@@ -292,8 +301,7 @@ object PackedIndex {
     * @return the committed groups (including resumed ones). A build retried
     *         after its commit changes nothing and returns the committed
     *         groups.
-    */
-  /** @param stageInput stage `tokenizedIn` to parquet under the index dir
+    * @param stageInput stage `tokenizedIn` to parquet under the index dir
     *                    before building (resume checkpoint; pays one
     *                    write+read of the terms arrays). Pass false when the
     *                    caller's frame is ALREADY a cheap re-derivation from
@@ -301,8 +309,7 @@ object PackedIndex {
     *                    the per-group doc_id range predicates push down) —
     *                    e.g. PagesPipeline, which stages extracted docs with
     *                    ids and tokenizes on the fly.
-    */
-  /** @param shardBits shard width (shard = doc_id >> shardBits); 0 (the
+    * @param shardBits shard width (shard = doc_id >> shardBits); 0 (the
     *                   default) auto-derives via [[deriveShardBits]] from
     *                   the corpus's max doc id, keeping the shard count
     *                   bounded at any scale. Pin it only to reproduce a
@@ -326,7 +333,7 @@ object PackedIndex {
     // local mode (MemoryStore churn) and is less resumable anyway.
     val docsPath = s"$dir/docs"
     if (!TableIO.committed(docsPath)) TableIO.write(tokenizedIn, docsPath)
-    val tokenized = TableIO.read(spark, docsPath)
+    val tokenized = TableIO.read(spark, tokenizedIn.schema, docsPath)
     buildFrom(tokenized, dir, shardBits, groups, p, blockSize)
   }
 
@@ -412,45 +419,39 @@ object PackedIndex {
         finally pool.shutdown()
       }
 
-    // stage 3: global df table from the packed rows (column-pruned scan of
-    // (term, nPostings) only — the blocks column is never read) + the
-    // deterministic epsilon floor, then the commit
+    // stage 3: the deterministic epsilon floor over the df view of the
+    // packed rows, then the commit
     val n = manifests.map(_.docs).sum
     // n == 0 would make avgdl 0/0 = NaN and poison every downstream BM25
     // division silently. An empty corpus is a caller bug.
     require(n > 0, s"PackedIndex.build: empty corpus (0 docs) at $dir")
-    commit(withDf(spark, IndexSnapshot(dir,
+    commit(withAvgRawIdf(spark, IndexSnapshot(dir,
       IndexStats(n, manifests.map(_.sumDl).sum.toDouble / n, 0.0,
         p.k1, p.b, p.epsilon, shardBits, blockSize),
-      "df", manifests, n, Array.empty, Array.empty, None)))
+      manifests, n, Array.empty, Array.empty, None)))
     manifests
   }
 
-  /** `snap` with its df table written and its avgRawIdf set: df over
-    * exactly the groups `snap` names, so an uncommitted group dir under
-    * postings/ never counts, into `snap.dfDir`. Build, append and compact
-    * share it; the result is what they commit.
+  /** `snap` with avgRawIdf set from the df view of exactly its groups (an
+    * uncommitted group dir never counts): what build, append, compact commit.
     */
-  private def withDf(spark: SparkSession, snap: IndexSnapshot): IndexSnapshot = {
-    TableIO.write(snap.postings(spark)
-      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"${snap.dir}/${snap.dfDir}")
+  private def withAvgRawIdf(spark: SparkSession, snap: IndexSnapshot): IndexSnapshot =
     snap.copy(stats = snap.stats.copy(
       avgRawIdf = InvertedIndex.avgRawIdf(snap.df(spark), snap.stats.n)))
-  }
 
   // ---- incremental append ----------------------------------------------
 
   /** Append new documents to an existing index (reference analogue:
     * `FaissRetrieval.add` / `ElasticRetriever.ingest`,
     * `models/retrieval_auto.py:294-303,424-425`): the new docs pack into a
-    * fresh group (docIds continue above the existing corpus), then global
-    * df/stats are recomputed exactly from sums — the result is
+    * fresh group (docIds continue above the existing corpus), then the
+    * stats are recomputed exactly from sums — the result is
     * BIT-IDENTICAL to a full rebuild over old+new (block bounds are
     * avgdl-independent, so existing groups stay valid under the new stats).
     *
-    * Crash-safe + idempotent: the group and its df go to dirs the committed
-    * version does not name (`postings/grp=N`, `df-gN`), and the record
-    * naming them is committed last. A retried append after any crash point
+    * Crash-safe + idempotent: the group goes to a dir the committed version
+    * does not name (`postings/grp=N`), and the record naming it is
+    * committed last. A retried append after any crash point
     * sees the same committed version, so it recomputes the same group id
     * and overwrites every partial artifact with identical content.
     *
@@ -471,13 +472,6 @@ object PackedIndex {
       .first()
     val nNew = row.getLong(0)
     val newSumDl = row.getLong(1)
-    // GC df dirs superseded by earlier appends (the CURRENT live dir is
-    // never touched; the one superseded by THIS append survives until the
-    // next one, giving in-flight readers a full append-cycle of grace)
-    MetaIO.list(dir).iterator
-      .filter(name => name != snap.dfDir &&
-        (name == "df" || name.startsWith("df-g")) && !name.endsWith(".tmp"))
-      .foreach(name => MetaIO.deleteRecursively(s"$dir/$name"))
     val n = old.n + nNew
     require(n > 0, s"append: index at $dir would still hold 0 docs")
     val nextGroup = snap.nextGroup
@@ -492,9 +486,9 @@ object PackedIndex {
     val man = GroupManifest(nextGroup, counters.terms.value,
       counters.postings.value, counters.bytes.value, nNew, newSumDl)
     val manifests = snap.manifests :+ man
-    commit(withDf(spark, snap.copy(
+    commit(withAvgRawIdf(spark, snap.copy(
       stats = old.copy(n = n, avgdl = manifests.map(_.sumDl).sum.toDouble / n),
-      dfDir = s"df-g$nextGroup", manifests = manifests,
+      manifests = manifests,
       nextDocId = snap.nextDocId + nNew)))
     man
   }
@@ -532,7 +526,7 @@ object PackedIndex {
     MetaIO.writeAtomic(recordPath(snap.dir), JsonMethods.compact(JObject(List(
       "k1" -> JDouble(s.k1), "b" -> JDouble(s.b), "epsilon" -> JDouble(s.epsilon),
       "shardBits" -> JLong(s.shardBits), "blockSize" -> JLong(s.blockSize),
-      "avgRawIdf" -> JDouble(s.avgRawIdf), "dfDir" -> JString(snap.dfDir),
+      "avgRawIdf" -> JDouble(s.avgRawIdf),
       "nextDocId" -> JLong(snap.nextDocId), "groups" -> JArray(groups.toList),
       "tombstones" -> ids(snap.tombstones), "holes" -> ids(snap.holes)) ++ arm)))
   }
@@ -565,17 +559,17 @@ object PackedIndex {
       IndexStats(n, manifests.map(_.sumDl).sum.toDouble / n, dbl(r("avgRawIdf")),
         dbl(r("k1")), dbl(r("b")), dbl(r("epsilon")),
         long(r("shardBits")).toInt, long(r("blockSize")).toInt),
-      str(r("dfDir")), manifests, long(r("nextDocId")),
+      manifests, long(r("nextDocId")),
       arr(r("tombstones")).map(long).toArray, arr(r("holes")).map(long).toArray,
       r.get("positional").map(obj).map(a => PositionalArm(arr(a("segments")).map(str),
         arr(a("covers")).map(long(_).toInt).toSet)))
   }
 
-  /** The LIVE df table as (term, df): the dir the commit record names. */
+  /** The committed version's df as (term, df) ([[IndexSnapshot.df]]). */
   def loadDf(spark: SparkSession, dir: String): DataFrame = snapshot(dir).df(spark)
 
   /** Physically apply tombstones (the Lucene segment-merge analogue):
-    * rewrite every posting list minus the deleted docs, recompute df and
+    * rewrite every posting list minus the deleted docs, recompute the
     * corpus stats over the survivors, and emit a complete fresh index at
     * `outDir` with NO tombstones. Surviving docs KEEP their doc ids (no
     * renumbering — downstream joins/labels/judgments stay valid, and the
@@ -717,8 +711,8 @@ object PackedIndex {
     // forever, never recycled. The holes (dead-id ledger) gain the ids
     // THIS compaction removed, so a re-issued delete of an already erased
     // doc is a no-op instead of corrupting the stat arithmetic.
-    commit(withDf(spark, IndexSnapshot(outDir,
-      stats.copy(n = n2, avgdl = sumDl2.toDouble / n2), "df", Seq(group), committed,
+    commit(withAvgRawIdf(spark, IndexSnapshot(outDir,
+      stats.copy(n = n2, avgdl = sumDl2.toDouble / n2), Seq(group), committed,
       Array.empty, (holes ++ tomb).distinct.sorted, arm)))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Table-format boundary for every persistent table the engine writes
-  * (staged docs, packed postings groups, df tables): parquet directories,
+  * (staged docs, packed postings groups): parquet directories,
   * the directory is the table and its `_SUCCESS` file marks a complete
   * write. A table is part of an index only once the index's commit record
   * names it (see [[graft.index.PackedIndex]]); a resumed build also uses
@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   * Spark's parquet reader/writer speak both scheme-less paths and Hadoop
   * URIs; the `_SUCCESS` probe goes through [[MetaIO]], so the
   * location's path picks the storage exactly as it does for the record.
-  * Serving tables are read with their constant schema (no inference job);
-  * the schema-less read is for tables shaped by the caller's frame.
+  * Index tables are read with a known schema (a constant for serving
+  * tables, the writing frame's for staged ones), so those reads pay no
+  * inference job; the schema-less read is left to the IVF index.
   *
   * SURVEY §1.2 specifies Iceberg tables for pages/postings; this container
   * has no Iceberg jars (verified: /opt/spark/jars, offline resolver). An
@@ -31,7 +32,7 @@ object TableIO {
     spark.read.parquet(location)
 
   /** Locations of a known-schema table as ONE relation, columns in
-    * `schema`'s order; listing them is a Spark job only past
+    * `schema`'s order, all nullable; listing them is a Spark job only past
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32).
     */
   def read(spark: SparkSession, schema: StructType, locations: String*): DataFrame =

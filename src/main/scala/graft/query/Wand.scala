@@ -62,9 +62,9 @@ object Wand {
   }
 
   /** Prepare a query batch against `snap`: look up global df for the union
-    * of query terms (the cached map, or one pushdown-filtered scan of the
-    * small df table), compute eps-floored idf from the snapshot's stats.
-    * Driver-side work is O(|distinct query terms|).
+    * of query terms (the cached map, or the df view of the same
+    * term-filtered postings the kernel scans), compute eps-floored idf from
+    * the snapshot's stats. Driver-side work is O(|distinct query terms|).
     */
   def prepare(spark: SparkSession, snap: IndexSnapshot,
               queries: Seq[(Long, String)],
@@ -97,15 +97,8 @@ object Wand {
         case Some(full) =>
           allTerms.iterator.flatMap(t => full.get(t).map(t -> _)).toMap
         case None =>
-          val dfTable = snap.df(spark)
-          val restricted =
-            if (allTerms.size <= IsinThreshold)
-              dfTable.filter(col("term").isin(allTerms: _*))
-            else {
-              import spark.implicits._
-              dfTable.join(broadcast(allTerms.toDF("term")), "term")
-            }
-          restricted.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          PackedIndex.dfOf(matched(spark, snap, allTerms))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
     tokenized.map { case (id, toks) =>
       // Query-time term boost (ES `term^boost` / Lucene boost semantics):
@@ -187,27 +180,23 @@ object Wand {
       k, allowedDocs, snap.tombstones, minShouldMatch)
   }
 
-  /** `snap`'s postings of the driver-side term list `terms`, shard-
-    * partitioned: `term IN (...)` pushed into the scan at or below
-    * [[IsinThreshold]] terms, above it a filter probing the list as a
-    * broadcast set (a broadcast variable, so unlike a broadcast join it
-    * runs no job of its own).
+  /** `snap`'s postings of the driver-side term list `terms`: `term IN
+    * (...)` pushed into the scan at or below [[IsinThreshold]] terms, above
+    * it a filter probing the list as a broadcast set (a broadcast variable,
+    * so unlike a broadcast join it runs no job of its own).
     */
+  private def matched(spark: SparkSession, snap: IndexSnapshot,
+                      terms: Seq[String]): Dataset[PackedPostings] =
+    if (terms.size <= IsinThreshold) snap.postings(spark).filter(col("term").isin(terms: _*))
+    else {
+      val bcTerms = spark.sparkContext.broadcast(terms.toSet)
+      snap.postings(spark).filter(udf((t: String) => bcTerms.value.contains(t)).apply(col("term")))
+    }
+
+  /** [[matched]], shard-partitioned. */
   private def matchedGrouped(spark: SparkSession, snap: IndexSnapshot,
-                             terms: Seq[String]): Dataset[PackedPostings] = {
-    import spark.implicits._
-    val postings = snap.postings(spark)
-    val matched =
-      (if (terms.size <= IsinThreshold)
-        postings.filter(col("term").isin(terms: _*))
-      else {
-        val bcTerms = spark.sparkContext.broadcast(terms.toSet)
-        postings.filter(udf((t: String) => bcTerms.value.contains(t)).apply(col("term")))
-      })
-        .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
-        .as[PackedPostings]
-    ShardServe.shardPartitioned(spark, snap.numShards, matched)
-  }
+                             terms: Seq[String]): Dataset[PackedPostings] =
+    ShardServe.shardPartitioned(spark, snap.numShards, matched(spark, snap, terms))
 
   /** The WAND kernel over an ALREADY shard-partitioned postings dataset;
     * [[searchDs]] hands the SAME pinned partitioned dataset to every chunk

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.col
 class CrashResumeSpec extends SparkSpec {
 
   /** Everything a reader of an index observes; stats as raw bits. */
-  private final case class Observed(stats: Seq[Any], dfDir: String, groups: Seq[Any],
+  private final case class Observed(stats: Seq[Any], groups: Seq[Any],
                                     nextDocId: Long, tombstones: Seq[Long], holes: Seq[Long],
                                     positional: Option[Any], df: Seq[Seq[Any]],
                                     hits: Seq[Seq[Any]], phrase: Either[String, Seq[Seq[Any]]])
@@ -31,7 +31,7 @@ class CrashResumeSpec extends SparkSpec {
       def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
       Observed(Seq(s.n, s.shardBits, s.blockSize) ++
           Seq(s.avgdl, s.avgRawIdf, s.k1, s.b, s.epsilon).map(java.lang.Double.doubleToRawLongBits),
-        snap.dfDir, snap.manifests, snap.nextDocId, snap.tombstones.toSeq, snap.holes.toSeq,
+        snap.manifests, snap.nextDocId, snap.tombstones.toSeq, snap.holes.toSeq,
         snap.positional, rows(snap.df(spark)), rows(Wand.search(spark, dir, queries, 0)),
         scala.util.Try(rows(Phrase.search(spark, dir,
           Seq(0L -> PositionalQuery.PhraseMatch(phrase)), 100))).toEither

@@ -1,5 +1,6 @@
 package graft
 
+import graft.corpus.{PagesGen, PagesPipeline}
 import graft.index.{InvertedIndex, PackedIndex, PositionalIndex}
 import graft.query.{IndexCache, Phrase, PositionalMode, PositionalQuery, Wand}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -53,6 +54,7 @@ object MultiGroupIndex {
   * shuffle and the result on a one-shard index; a multi-shard index adds
   * the rank window's shuffle. A phrase batch costs the same query jobs:
   * the positional arm's currency is a driver-side stamp check, not a job.
+  * A small append likewise runs its batch's jobs and no df table's.
   */
 class ReadJobsSpec extends SparkSpec {
 
@@ -65,6 +67,14 @@ class ReadJobsSpec extends SparkSpec {
     * and nothing counts it.
     */
   private val ChunkedJobs = 3 + 2 * 2 + 1
+
+  /** Jobs of a warm 2-page `PagesPipeline.appendPages` on a 40-page index:
+    * the staging write, the dense-id count, the batch totals, the pack
+    * shuffle and group write, and avgRawIdf's aggregate over the df view,
+    * each query stage its own job under AQE. No df table is written or read
+    * back, and the staged batch is read with its writer's schema.
+    */
+  private val AppendJobs = 12
 
   /** Stage names of one job, and whether it ran inside a SQL execution
     * (staging writes do; a schema-inference job is a bare RDD job).
@@ -111,6 +121,9 @@ class ReadJobsSpec extends SparkSpec {
 
   private def schemaJobs(jobs: Seq[Job]): Seq[String] =
     jobs.flatMap(_.stages).filter(_.startsWith("parquet at"))
+
+  /** The schema-inference jobs among jobs that also write parquet. */
+  private def inferenceJobs(jobs: Seq[Job]): Seq[String] = schemaJobs(jobs.filterNot(_.sql))
 
   /** Jobs of each of `runs` once warm, on a fresh index at 4 groups and
     * again after two appends to both arms: (at 4, at 6) per run.
@@ -195,6 +208,18 @@ class ReadJobsSpec extends SparkSpec {
       val seqJobs = jobsOf(seq())
       assert(dsJobs.size == seqJobs.size,
         s"one-chunk searchDs ran ${dsJobs.size} jobs, Wand.search ${seqJobs.size}: $dsJobs / $seqJobs")
+    }
+  }
+
+  test("a warm 2-page appendPages runs its batch's jobs: no df table and no schema inference") {
+    val dir = scratchDir("writejobs")
+    PagesPipeline.buildIndex(PagesGen.pages(spark, 40, partitions = 2).toDF(), dir)
+    def batch(seed: Long) = PagesGen.pages(spark, 2, partitions = 1, seed = seed).toDF()
+    listening {
+      PagesPipeline.appendPages(batch(1), dir) // warm
+      val jobs = jobsOf(PagesPipeline.appendPages(batch(2), dir))
+      assert(inferenceJobs(jobs).isEmpty, s"schema jobs in appendPages: $jobs")
+      assert(jobs.size == AppendJobs, s"a 2-page appendPages ran ${jobs.size} jobs: $jobs")
     }
   }
 

@@ -234,6 +234,27 @@ class RetrieverSpec extends SparkSpec {
     assert(graft.query.IndexCache.loads == before + 2)
   }
 
+  test("df cache: an append patches the cached map with its own group, equal to a full load") {
+    import graft.index.PackedIndex
+    import graft.query.IndexCache
+    import java.nio.file.{Files, Paths}
+    val dir = scratchDir("dfpatch")
+    MultiGroupIndex.build(spark, dir)
+    IndexCache.invalidateAll()
+    assert(IndexCache.dfMap(spark, PackedIndex.snapshot(dir)).isDefined)
+    PackedIndex.append(MultiGroupIndex.tok(spark, 200, 220), dir)
+    PackedIndex.delete(dir, Seq(5L, 210L))
+    val snap = PackedIndex.snapshot(dir)
+    // with the built group grp=0 moved away, only a patch can read the new version
+    val (grp0, moved) = (Paths.get(dir, "postings", "grp=0"), Paths.get(dir, "grp0-moved"))
+    Files.move(grp0, moved)
+    val patched = try IndexCache.dfMap(spark, snap) finally Files.move(moved, grp0)
+    IndexCache.invalidateAll()
+    val full = IndexCache.dfMap(spark, snap)
+    assert(patched.isDefined && patched == full)
+    assert(full.get == snap.df(spark).collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
+
   test("ensemble retriever fuses wand + cosine with RRF semantics") {
     // tiny pages index
     val dir = scratchDir("retr")

@@ -59,6 +59,23 @@ class SnapshotSpec extends SparkSpec {
     assert(freshPhrase != prePhrase && !freshPhrase.exists(h => victims.contains(h._2)))
   }
 
+  test("a snapshot pinned before two appends returns its exact hits after both") {
+    val dir = scratchDir("snap-two-appends")
+    MultiGroupIndex.build(spark, dir)
+    IndexCache.invalidateAll()
+    val queries = MultiGroupIndex.Queries :+ (5L -> "the")
+    val pinned = PackedIndex.snapshot(dir)
+    def pinnedSearch() = hits(Wand.search(spark, pinned, queries, 0, None, 1, Map.empty, Map.empty))
+    val pre = pinnedSearch()
+    assert(pre.nonEmpty)
+    PackedIndex.append(MultiGroupIndex.tok(spark, 200, 220), dir)
+    PackedIndex.append(MultiGroupIndex.tok(spark, 220, 240), dir)
+    // a fresh read first, so the df cache holds the newest version
+    val fresh = hits(Wand.search(spark, dir, queries, 0))
+    assert(fresh.exists(_._2 >= 220L), "a fresh snapshot misses the second append")
+    assert(pinnedSearch() == pre, "the pinned snapshot changed after two appends")
+  }
+
   test("query, plans, corpus and the positional arm read index state only through the snapshot") {
     val root = Paths.get("src/main/scala/graft")
     assert(Files.isDirectory(root), s"source tree not found from ${Paths.get("").toAbsolutePath}")

@@ -36,8 +36,9 @@ class TableSchemaSpec extends SparkSpec {
         shape(PackedIndex.PostingsSchema), s"$d/postings/$g"))
       segments.foreach(s => assert(shape(inferred(s"$d/$s")) ==
         shape(PositionalIndex.PostingsSchema), s"$d/$s"))
-      val df = s"$d/${PackedIndex.snapshot(d).dfDir}"
-      assert(shape(inferred(df)) == shape(PackedIndex.DfSchema), df)
+      val dfDirs = MetaIO.list(d).filter(_.startsWith("df"))
+      assert(dfDirs.isEmpty, s"$d holds df tables: $dfDirs")
+      assert(shape(PackedIndex.snapshot(d).df(spark).schema) == shape(PackedIndex.DfSchema), d)
     }
   }
 

@@ -15,14 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** Raw single-thread CPU sentinel: Mops of a fixed integer-hash spin.
-    * Measured at benchmark start AND end and recorded in the JSON line, so
-    * a degraded host window (this VM shows sporadic multi-second freezes —
-    * BENCH/METHODOLOGY.md) is visible in the artifact itself instead of
-    * masquerading as an engine regression. Nominal on this host: ~740 Mops
-    * (measured in a verified-clean window); a sentinel far below that marks
-    * the rep contaminated.
-    */
   /** Nominal single-thread sentinel on this host class, measured in clean
     * windows (BENCH/METHODOLOGY.md); a reading below [[DegradedFraction]]
     * of it marks the measurement window degraded IN THE ARTIFACT.
@@ -86,6 +78,14 @@ object Bench {
     removed
   }
 
+  /** Raw single-thread CPU sentinel: Mops of a fixed integer-hash spin.
+    * Measured at benchmark start AND end and recorded in the JSON line, so
+    * a degraded host window (this VM shows sporadic multi-second freezes —
+    * BENCH/METHODOLOGY.md) is visible in the artifact itself instead of
+    * masquerading as an engine regression. Nominal on this host: ~740 Mops
+    * (measured in a verified-clean window); a sentinel far below that marks
+    * the rep contaminated.
+    */
   def calibMops(): Double = {
     def spin(n: Int): Double = {
       val t0 = System.nanoTime()

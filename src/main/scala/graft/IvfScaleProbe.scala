@@ -73,7 +73,8 @@ object IvfScaleProbe {
       IvfIndex.build(emb, idxDir, nCells = nCells, iters = iters,
         storage = storage)
     }
-    val builtCells = IvfIndex.loadCentroids(idxDir).size
+    val snap = IvfIndex.snapshot(idxDir)
+    val builtCells = snap.nCells
     val segBytes = {
       def walk(f: java.io.File): Long =
         if (f.isFile) f.length()
@@ -95,15 +96,14 @@ object IvfScaleProbe {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     println(s"""{"probe":"ivf_scale_bruteforce","sec":${f"$bfSec%.1f"},"qps":${f"${nq / bfSec}%.1f"},"n_queries":$nq}""")
 
-    val cells = IvfIndex.loadCells(spark, idxDir)
-    val cellSizes = cells.groupBy(col("cell_id")).count()
+    val cellSizes = snap.cells(spark).groupBy(col("cell_id")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cents = IvfIndex.loadCentroids(idxDir)
+    val cents = snap.centroids
     for (nProbe <- Seq(4, 16, 64)) {
       val (sec, _) = timed {
-        IvfIndex.search(spark, idxDir, queries, k = 10, nProbe = nProbe).count()
+        IvfIndex.search(spark, snap, queries, 10, nProbe, None).count()
       }
-      val got = IvfIndex.search(spark, idxDir, queries, k = 10, nProbe = nProbe)
+      val got = IvfIndex.search(spark, snap, queries, 10, nProbe, None)
         .select(col("query_id"), col("vec_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val recall = (exact & got).size.toDouble / exact.size

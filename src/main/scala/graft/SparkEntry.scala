@@ -607,10 +607,6 @@ object SparkEntry {
     """sum(qt.q_mult * idf.idf * tf.tf * (1.2 + 1) /
       |      (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / (SELECT avgdl FROM stats))))""".stripMargin
 
-  /** Standard top-10 oracle (round-4dp score, doc_id-asc tiebreak) over a
-    * given corpus-cte prefix — shared by the raw-table and multi-format
-    * ingest queries so the ranking contract is stated once.
-    */
   /** The same top-10 tail over a CUSTOM query-term source: `qtSelect`
     * must yield (term, q_mult) and joins as alias qtx; `extraWhere`
     * (e.g. a NOT IN exclusion) lands between the joins and the GROUP BY.
@@ -633,6 +629,10 @@ object SparkEntry {
        |SELECT doc_id, score_r, rank FROM ranked WHERE rank <= 10""".stripMargin
   }
 
+  /** Standard top-10 oracle (round-4dp score, doc_id-asc tiebreak) over a
+    * given corpus-cte prefix — shared by the raw-table and multi-format
+    * ingest queries so the ranking contract is stated once.
+    */
   private[graft] def bm25TopKOracleSql(ctes: String): String =
     ctes +
       s""", scored AS (

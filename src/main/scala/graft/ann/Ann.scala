@@ -112,13 +112,6 @@ object Ann {
       .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
   }
 
-  /** IVF-style top-k: corpus vectors are assigned to their nearest of
-    * `centroids` (a small broadcastable table (cell_id, cvec)); each query
-    * probes its `nProbe` nearest cells and scores only those cells' vectors.
-    * Approximate (recall grows with nProbe); the 100TB-scale path — the
-    * corpus shuffle is once at index time (partition by cell), queries touch
-    * nProbe/|cells| of the data.
-    */
   /** Each query's `nProbe` nearest cells: (query_id, qvec, cell_id). The
     * probe-selection half of [[ivfTopK]], exposed so quality/cost sweeps
     * ([[ivfSweep]]) can account scanned vectors without re-deriving it.
@@ -136,6 +129,13 @@ object Ann {
       .select(col("query_id"), col("qvec"), col("cell_id"))
   }
 
+  /** IVF-style top-k: corpus vectors are assigned to their nearest of
+    * `centroids` (a small broadcastable table (cell_id, cvec)); each query
+    * probes its `nProbe` nearest cells and scores only those cells' vectors.
+    * Approximate (recall grows with nProbe); the 100TB-scale path — the
+    * corpus shuffle is once at index time (partition by cell), queries touch
+    * nProbe/|cells| of the data.
+    */
   def ivfTopK(queries: DataFrame, corpusWithCell: DataFrame,
               centroids: DataFrame, k: Int, nProbe: Int): DataFrame =
     // routed through the heap kernel (result-identical to the join+window
@@ -158,6 +158,15 @@ object Ann {
       .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
   }
 
+  /** Driver-memory bound for [[ivfTopKKernel]]'s collected probe set, in
+    * DOUBLES (rows x dim): the kernel collects (query_id, qvec) per probed
+    * cell to the driver and broadcasts it, so its footprint is
+    * ~8 bytes x nq x nProbe x dim. 64M doubles = ~512 MB — safe under the
+    * default driver heap; batches above it degrade to the fully-distributed
+    * [[ivfTopKWithProbes]] plan instead of OOM-ing the driver.
+    */
+  val KernelMaxProbeDoubles: Long = 64000000L
+
   /** IVF scoring through the brute-force HEAP KERNEL instead of the
     * join+window plan: the probe set (query_id, qvec, cell_id) is bounded
     * (nq x nProbe rows), so it broadcasts as a cell_id -> queries map and
@@ -170,15 +179,6 @@ object Ann {
     * the 2M-vector scale point, where the join+window form was slower than
     * a full brute-force scan.
     */
-  /** Driver-memory bound for [[ivfTopKKernel]]'s collected probe set, in
-    * DOUBLES (rows x dim): the kernel collects (query_id, qvec) per probed
-    * cell to the driver and broadcasts it, so its footprint is
-    * ~8 bytes x nq x nProbe x dim. 64M doubles = ~512 MB — safe under the
-    * default driver heap; batches above it degrade to the fully-distributed
-    * [[ivfTopKWithProbes]] plan instead of OOM-ing the driver.
-    */
-  val KernelMaxProbeDoubles: Long = 64000000L
-
   def ivfTopKKernel(probes: DataFrame, corpusWithCell: DataFrame,
                     k: Int): DataFrame = {
     require(k > 0, s"ivfTopKKernel: k must be positive (got $k)")
@@ -316,10 +316,6 @@ object Ann {
       .toDF("vec_id", "vec", "cell_id")
   }
 
-  /** Deterministic centroid seeding: every (N/nCells)-th vector by id. The
-    * count() is one column-pruned agg; at real scale replace with a
-    * hash-mod sample. cell_id = vec_id/step — no global window needed.
-    */
   /** Above this cell count the farthest-point refinement (O(nCells x
     * pool x dim) driver-side) is skipped and the plain hash-order prefix
     * seeds directly; Lloyd's sample at that scale smooths the residual

@@ -2,8 +2,48 @@ package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.{MetaIO, TableIO}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
+import graft.io.{JsonRecord, MetaIO, TableIO}
 import graft.index.PackedIndex
+import org.json4s.{JArray, JLong, JObject, JString}
+
+/** One committed version of an IVF index: the commit record `ivf.json` as
+  * [[IvfIndex.snapshot]] read it, in one file read. A call that takes one
+  * snapshot serves and filters against a single version; a write builds
+  * the next version as a copy of its snapshot and commits it
+  * ([[IvfIndex.commit]]). Committed segments and `centroids.tsv` are never
+  * rewritten or deleted, so a snapshot serves its version across any
+  * number of later appends and deletes.
+  *
+  * @param segments the committed cell segments, in commit order
+  * @param tombstones sorted deleted-but-unpurged vec_ids ([[IvfIndex.delete]])
+  * @param holes sorted vec_ids past compactions removed: the dead-id ledger
+  *              that makes a re-issued delete of an erased vector a no-op
+  */
+final case class IvfSnapshot private[graft] (
+    dir: String, nCells: Int, dim: Int, storage: String,
+    segments: Seq[IvfIndex.Segment], tombstones: Array[Long], holes: Array[Long]) {
+
+  /** Committed vectors: the sum of the segments' counts. */
+  def nVecs: Long = segments.map(_.vecs).sum
+
+  /** The trained centroids (cell_id, cvec), ascending by cell_id. */
+  def centroids: Array[(Long, Array[Double])] =
+    MetaIO.readString(s"$dir/centroids.tsv").split("\n").iterator
+      .map(_.trim).filter(_.nonEmpty).map { line =>
+        val Array(id, vs) = line.split("\t", 2)
+        id.toLong -> vs.split(",").map(_.toDouble)
+      }.toArray.sortBy(_._1)
+
+  /** The committed segments as ONE relation (vec_id, vec, cell_id) of the
+    * schema `storage` implies, so no read infers one. vec is always
+    * ARRAY<DOUBLE> here: f32 storage dequantizes on read, so every
+    * consumer scores in double.
+    */
+  def cells(spark: SparkSession): DataFrame =
+    IvfIndex.readSegments(spark, storage, segments.map(s => s"$dir/${s.name}"))
+      .select(col("vec_id"), col("vec").cast("array<double>").as("vec"), col("cell_id"))
+}
 
 /** PERSISTED IVF index — the dense sibling of the packed BM25 index:
   * build/train once, serve many query batches from storage (reference
@@ -20,30 +60,31 @@ import graft.index.PackedIndex
   *                          would mean driver-serial commits and a
   *                          scheduler task per dir, the same reasoning as
   *                          the postings shard column)
-  *   cells.list             segment list sidecar — the COMMIT MARKER,
-  *                          always written LAST (MetaIO-atomic flip, the
-  *                          PositionalIndex pattern: a crash leaves an
-  *                          invisible orphan dir a retry overwrites). Each
-  *                          line is `name<TAB>rowCount`: the per-segment
-  *                          counts make the nVecs stats refresh a driver-
-  *                          local SUM instead of a full-index scan, so a
-  *                          streaming append's cost stays proportional to
-  *                          the NEW segment, not the index (legacy
-  *                          count-less lines self-heal: the next append
-  *                          counts just those segments once and rewrites)
-  *   centroids.tsv          trained centroids (small: nCells x dim)
-  *   tombstones.txt         visibility-only deleted vec_ids ([[delete]])
-  *   holes.txt              vec_ids physically removed by past
-  *                          [[compact]] runs — the dead-id ledger that
-  *                          makes a re-issued delete of an already-erased
-  *                          vector a NO-OP instead of a phantom tombstone
-  *   ivf.json               stats: nCells, dim, nVecs, storage — nVecs is
-  *                          always derived from the committed segment
-  *                          counts after a list flip, never incremented,
-  *                          so a crash between the flip and the stats
-  *                          write leaves a stale-but-self-healing value
+  *   centroids.tsv          trained centroids (small: nCells x dim),
+  *                          written once by build or compact and never
+  *                          changed after
+  *   ivf.json               the commit record: nCells, dim, storage, the
+  *                          committed segments as (name, vecs), tombstones
+  *                          and holes. nVecs is derived as the sum of the
+  *                          segments' vecs
   *
-  * Vector storage (`storage` in ivf.json, fixed at build):
+  * Commit protocol (the [[graft.index.PackedIndex]] one): the record is
+  * the index's only metadata and its only commit marker. [[commit]] is its
+  * only writer, through the all-or-nothing
+  * [[graft.io.MetaIO.writeAtomic]]; [[snapshot]] is its only reader. Every
+  * write (build, append, delete, compact) does its data writes first, each
+  * into a dir or file no committed version names, and then commits the
+  * whole next version once, as its last step. A crash before that step
+  * leaves the previous version intact (or, for build and compact, no
+  * committed index), and a retry overwrites every partial artifact. A dir
+  * without a record is "no committed index" to every reader and writer.
+  * Serving reads two files: the record and `centroids.tsv`.
+  *
+  * Writers: one at a time per index. A delete and an append both commit
+  * the next version of the same record, so two concurrent writers would
+  * lose one of the commits.
+  *
+  * Vector storage (`storage` in the record, fixed at build):
   *   - "f64" (default): vec persisted as ARRAY<DOUBLE> — byte-exact
   *     round-trip of the input;
   *   - "f32": vec persisted as ARRAY<FLOAT> — HALF the scan bytes, the
@@ -59,15 +100,15 @@ import graft.index.PackedIndex
   * centroids (exactly faiss `index.add` after `train` — recall for new
   * data tracks how well the training sample covered it). Retraining is a
   * REBUILD INTO A FRESH DIR + caller-side swap (the compact() pattern):
-  * build() refuses a dir with a committed segment list, because
-  * overwriting the base segment in place would expose mixed old/new
-  * state to concurrent readers with no error.
+  * build() refuses a dir with a record, because overwriting the base
+  * segment in place would expose mixed old/new state to concurrent
+  * readers with no error.
   *
   * Idempotency: both build and append accept an optional segment NAME.
-  * An append whose name is already in the committed list is a no-op —
-  * the hook exactly-once ingestion rides (streaming/IvfIngest derives the
-  * name from the micro-batch id, so a replayed batch after a crash
-  * re-lands on the same segment instead of duplicating vectors).
+  * An append whose name the record already holds is a no-op that writes
+  * nothing — the hook exactly-once ingestion rides (streaming/IvfIngest
+  * derives the name from the micro-batch id, so a replayed batch after a
+  * crash re-lands on the same segment instead of duplicating vectors).
   *
   * Served results are bit-identical to the in-memory [[Ann.ivfTopK]] over
   * the same vectors and centroids (IvfIndexSpec pins it; f32 storage is
@@ -75,6 +116,9 @@ import graft.index.PackedIndex
   * quality/cost table applies to the persisted form unchanged.
   */
 object IvfIndex {
+
+  /** One committed cell segment: its dir name under the index and its rows. */
+  final case class Segment(name: String, vecs: Long)
 
   /** Lloyd trains on at most nCells x this many sampled vectors (the faiss
     * `max_points_per_centroid` discipline): k-means quality saturates at a
@@ -99,9 +143,9 @@ object IvfIndex {
   }
 
   /** Train (seed + Lloyd) and persist into a FRESH dir (see class doc).
-    * `corpus` is (vec_id, vec). Commit order: segment -> centroids ->
-    * stats -> cells.list (marker LAST); a crashed build is invisible and
-    * a retry overwrites every partial artifact.
+    * `corpus` is (vec_id, vec). Writes the segment and `centroids.tsv`,
+    * then commits the record; a crashed build leaves no committed index
+    * and a retry overwrites every partial artifact.
     *
     * `nCells = 0` (default-able) derives [[autoCells]](N) — pass an
     * explicit count only when the operating point is known. Training runs
@@ -111,11 +155,12 @@ object IvfIndex {
   def build(corpus: DataFrame, dir: String, nCells: Int, iters: Int,
             segmentName: String = "cells",
             storage: String = "f64"): Unit = {
-    require(!MetaIO.exists(s"$dir/cells.list"),
+    require(!exists(dir),
       s"IvfIndex.build: $dir already holds a committed index — retrain " +
         "rebuilds into a fresh dir and the caller swaps (the compact() pattern)")
     require(storage == "f64" || storage == "f32",
       s"IvfIndex.build: unknown storage mode '$storage' (f64|f32)")
+    val spark = corpus.sparkSession
     val c = corpus.select(col("vec_id").cast("long"),
       col("vec").cast("array<double>").as("vec"))
     val n = c.count()
@@ -141,63 +186,34 @@ object IvfIndex {
       .sortBy(_._1)
     require(cents.nonEmpty, s"IvfIndex.build: no centroids at $dir")
     MetaIO.mkdirs(dir)
-    val assigned = Ann.assignCells(c, centsDf(corpus.sparkSession, cents))
-    writeSegment(assigned, s"$dir/$segmentName", storage)
-    val nVecs = TableIO.read(corpus.sparkSession, s"$dir/$segmentName").count()
+    val assigned = Ann.assignCells(c, centsDf(spark, cents))
+    val seg = writeSegment(assigned, dir, segmentName, storage)
     MetaIO.writeAtomic(s"$dir/centroids.tsv", cents.map { case (id, v) =>
       s"$id\t${v.mkString(",")}"
     }.mkString("\n"))
-    MetaIO.writeAtomic(s"$dir/ivf.json", statsJson(
-      cents.length, cents.head._2.length, nVecs, storage))
-    MetaIO.writeAtomic(s"$dir/cells.list", s"$segmentName\t$nVecs") // marker LAST
+    commit(IvfSnapshot(dir, cents.length, cents.head._2.length, storage,
+      Seq(seg), Array.empty, Array.empty))
   }
 
   /** Add vectors against the frozen centroids: a fresh segment dir, then
-    * the segment list flips atomically; stats recompute AFTER the flip
-    * (see class doc). A crash leaves an invisible orphan a retry
-    * overwrites; an append whose `segmentName` is already committed is a
-    * no-op (it still refreshes stats, healing a crashed prior attempt).
-    * Per-append cost is proportional to the NEW segment only: committed
-    * segments' row counts ride the cells.list lines, so the nVecs refresh
-    * is a driver-local sum (long-running streaming ingest stays linear,
-    * not quadratic, in the stream's lifetime).
+    * the record naming it. A crash leaves an orphan dir no record names,
+    * which a retry overwrites; an append whose `segmentName` the record
+    * already holds writes nothing. Per-append cost is proportional to the
+    * NEW segment only: the record carries every segment's count, so nVecs
+    * needs no scan of the committed ones.
     */
   def append(newVecs: DataFrame, dir: String,
              segmentName: Option[String] = None): Unit = {
-    val spark = newVecs.sparkSession
-    val entries = segmentEntries(dir)
-    require(TableIO.committed(s"$dir/${entries.head._1}"),
-      s"IvfIndex.append: no committed index at $dir — run build first")
-    val next = segmentName.getOrElse(s"cells-a${entries.length}")
-    // self-heal legacy count-less lines (one bounded per-segment count,
-    // at most once — the rewrite below persists them)
-    val healed = entries.map { case (nm, cnt) =>
-      nm -> cnt.getOrElse(TableIO.read(spark, s"$dir/$nm").count())
+    val snap = snapshot(dir)
+    val next = segmentName.getOrElse(s"cells-a${snap.segments.length}")
+    if (!snap.segments.exists(_.name == next)) {
+      val c = newVecs.select(col("vec_id").cast("long"),
+        col("vec").cast("array<double>").as("vec"))
+      val seg = writeSegment(
+        Ann.assignCells(c, centsDf(newVecs.sparkSession, snap.centroids)),
+        dir, next, snap.storage)
+      commit(snap.copy(segments = snap.segments :+ seg))
     }
-    val stats = readStats(dir)
-    val finalEntries =
-      if (!healed.exists(_._1 == next)) {
-        val cents = loadCentroids(dir)
-        val c = newVecs.select(col("vec_id").cast("long"),
-          col("vec").cast("array<double>").as("vec"))
-        writeSegment(Ann.assignCells(c, centsDf(spark, cents)), s"$dir/$next",
-          storageMode(stats))
-        val cnt = TableIO.read(spark, s"$dir/$next").count()
-        val all = healed :+ (next -> cnt)
-        MetaIO.writeAtomic(s"$dir/cells.list",
-          all.map { case (nm, ct) => s"$nm\t$ct" }.mkString("\n"))
-        all
-      } else {
-        if (healed != entries.map { case (nm, c) => nm -> c.getOrElse(-1L) })
-          MetaIO.writeAtomic(s"$dir/cells.list",
-            healed.map { case (nm, ct) => s"$nm\t$ct" }.mkString("\n"))
-        healed
-      }
-    // stats from the COMMITTED per-segment counts — a driver-local sum,
-    // self-healing after a crash between list flip and stats write
-    MetaIO.writeAtomic(s"$dir/ivf.json", statsJson(
-      statLong(stats, "nCells"), statLong(stats, "dim"),
-      finalEntries.map(_._2).sum, storageMode(stats)))
   }
 
   /** Top-k cosine over the persisted index: probe selection runs
@@ -214,48 +230,30 @@ object IvfIndex {
     */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int, nProbe: Int,
-             allowedIds: Option[Array[Long]] = None): DataFrame = {
-    import spark.implicits._
-    val cents = loadCentroids(dir)
-    val probes = Ann.probeCells(queries, centsDf(spark, cents), nProbe)
+             allowedIds: Option[Array[Long]] = None): DataFrame =
+    search(spark, snapshot(dir), queries, k, nProbe, allowedIds)
+
+  /** [[search]] against the committed version `snap`. */
+  def search(spark: SparkSession, snap: IvfSnapshot, queries: DataFrame,
+             k: Int, nProbe: Int, allowedIds: Option[Array[Long]]): DataFrame = {
+    val probes = Ann.probeCells(queries, centsDf(spark, snap.centroids), nProbe)
       .localCheckpoint() // pinned: reused for the pushdown filter AND the join
     val probedCells = probes.select(col("cell_id"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val tomb = loadTombstones(dir)
-    // id-set filters: small sets ride the scan as pushdown-friendly IN
-    // predicates; large sets switch to broadcast joins (a 100k-element In
-    // bloats the plan and evaluates per row-group slower than a hash
-    // probe) — one shared threshold with the WAND term filters so the two
-    // serving paths can't drift
-    val isinMax = graft.query.Wand.IsinThreshold
-    var cells = loadCells(spark, dir)
-    cells =
-      if (probedCells.length <= isinMax)
-        cells.filter(col("cell_id").isin(probedCells: _*))
-      else
-        cells.join(broadcast(probedCells.toSeq.toDF("cell_id")),
-          Seq("cell_id"), "left_semi")
-    allowedIds.foreach { ids =>
-      cells =
-        if (ids.length <= isinMax) cells.filter(col("vec_id").isin(ids.toSeq: _*))
-        else cells.join(broadcast(ids.toSeq.toDF("vec_id")), Seq("vec_id"), "left_semi")
-    }
-    if (tomb.nonEmpty) {
-      cells =
-        if (tomb.length <= isinMax) cells.filter(!col("vec_id").isin(tomb.toSeq: _*))
-        else cells.join(broadcast(tomb.toSeq.toDF("vec_id")), Seq("vec_id"), "left_anti")
-    }
+    var cells = withIds(snap.cells(spark), "cell_id", probedCells, keep = true)
+    allowedIds.foreach(ids => cells = withIds(cells, "vec_id", ids, keep = true))
     // serve through the heap kernel, not the join+window plan: at the
     // 2M-vector probe the latter was SLOWER than a full brute-force scan
     // (it materializes scanned x probing-queries rows through a shuffle);
     // the kernel form is result-identical and 3-10x faster
-    Ann.ivfTopKKernel(probes, cells, k)
+    Ann.ivfTopKKernel(probes, live(snap, cells), k)
   }
 
   /** Visibility-only delete, the dense sibling of PackedIndex.delete:
     * tombstoned vec_ids are excluded from every search without rewriting
-    * cell segments or retraining. Atomic merged-set publish; idempotent.
-    * Bounded like the BM25 tombstones (the set rides into the scan filter).
+    * cell segments or retraining. The merged set is committed with the
+    * rest of the record; idempotent. Bounded like the BM25 tombstones (the
+    * set rides into the scan filter).
     *
     * Matches the sibling's FAIL-LOUDLY contract: ids already erased by a
     * past [[compact]] (the holes ledger) are silently skipped — a
@@ -269,25 +267,24 @@ object IvfIndex {
   def delete(spark: SparkSession, dir: String, vecIds: Seq[Long],
              maxTombstones: Int = PackedIndex.MaxTombstones): Unit = {
     import spark.implicits._
-    val holes = loadHoles(dir)
+    val snap = snapshot(dir)
     val live = vecIds.distinct
-      .filter(id => java.util.Arrays.binarySearch(holes, id) < 0)
+      .filter(id => java.util.Arrays.binarySearch(snap.holes, id) < 0)
     if (live.nonEmpty) {
       val unknown = live.toDF("vec_id")
-        .join(loadCells(spark, dir).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
+        .join(snap.cells(spark).select(col("vec_id")), Seq("vec_id"), "left_anti")
         .collect().map(_.getLong(0)).sorted
       require(unknown.isEmpty,
         s"IvfIndex.delete: ids name no committed vector at $dir: " +
           unknown.take(5).mkString(",") +
           (if (unknown.length > 5) s" (+${unknown.length - 5} more)" else ""))
     }
-    val merged = (loadTombstones(dir) ++ live).distinct.sorted
+    val merged = (snap.tombstones ++ live).distinct.sorted
     require(merged.length <= maxTombstones,
       s"IvfIndex.delete: tombstone set would reach ${merged.length} ids " +
         s"(bound $maxTombstones) — run compact() to apply them physically " +
         "(or rebuild over the filtered corpus for mass deletes)")
-    MetaIO.writeAtomic(s"$dir/tombstones.txt", merged.mkString("\n"))
+    commit(snap.copy(tombstones = merged))
   }
 
   /** Apply tombstones PHYSICALLY into a fresh dir — the dense sibling of
@@ -297,124 +294,112 @@ object IvfIndex {
     * so compacted search is bit-identical to a fresh build over survivors
     * with the same centroids; IvfIndexSpec pins it). The source dir is
     * untouched (readers keep serving it); the caller swaps when done.
-    * Erased ids land in the holes ledger so a re-issued [[delete]] of one
-    * is a no-op forever after.
+    * Erased ids join the holes ledger so a re-issued [[delete]] of one is
+    * a no-op forever after. The record is committed last, so a crashed
+    * compaction leaves `outDir` with no committed index.
     */
   def compact(spark: SparkSession, srcDir: String, outDir: String): Unit = {
-    import spark.implicits._
-    require(!MetaIO.exists(s"$outDir/cells.list"),
+    require(!exists(outDir),
       s"IvfIndex.compact: $outDir already holds a committed index")
-    val stats = readStats(srcDir)
-    val storage = storageMode(stats)
-    val tomb = loadTombstones(srcDir)
-    val isinMax = graft.query.Wand.IsinThreshold
-    var survivors = loadCells(spark, srcDir)
-    if (tomb.nonEmpty) {
-      survivors =
-        if (tomb.length <= isinMax)
-          survivors.filter(!col("vec_id").isin(tomb.toSeq: _*))
-        else
-          survivors.join(broadcast(tomb.toSeq.toDF("vec_id")),
-            Seq("vec_id"), "left_anti")
-    }
+    val snap = snapshot(srcDir)
     MetaIO.mkdirs(outDir)
-    writeSegment(survivors, s"$outDir/cells", storage)
-    val nVecs = TableIO.read(spark, s"$outDir/cells").count()
+    val seg = writeSegment(live(snap, snap.cells(spark)), outDir, "cells", snap.storage)
     MetaIO.writeAtomic(s"$outDir/centroids.tsv",
       MetaIO.readString(s"$srcDir/centroids.tsv"))
-    val holes = (loadHoles(srcDir) ++ tomb).distinct.sorted
-    if (holes.nonEmpty)
-      MetaIO.writeAtomic(s"$outDir/holes.txt", holes.mkString("\n"))
-    MetaIO.writeAtomic(s"$outDir/ivf.json", statsJson(
-      statLong(stats, "nCells"), statLong(stats, "dim"), nVecs, storage))
-    MetaIO.writeAtomic(s"$outDir/cells.list", s"cells\t$nVecs") // marker LAST
+    commit(IvfSnapshot(outDir, snap.nCells, snap.dim, snap.storage, Seq(seg),
+      Array.empty, (snap.holes ++ snap.tombstones).distinct.sorted))
   }
 
-  def loadTombstones(dir: String): Array[Long] =
-    PackedIndex.readIdFile(s"$dir/tombstones.txt")
+  // ---- the commit record -------------------------------------------------
 
-  /** Sorted vec_ids physically removed by past compactions. */
-  def loadHoles(dir: String): Array[Long] =
-    PackedIndex.readIdFile(s"$dir/holes.txt")
+  private def recordPath(dir: String): String = s"$dir/ivf.json"
+
+  /** True iff `dir` holds a committed index. */
+  def exists(dir: String): Boolean = MetaIO.exists(recordPath(dir))
+
+  /** Publish `snap` as the index's commit record, replacing the previous
+    * one all-or-nothing: the last step of every write.
+    */
+  private[graft] def commit(snap: IvfSnapshot): Unit =
+    JsonRecord.write(recordPath(snap.dir), List(
+      "nCells" -> JLong(snap.nCells), "dim" -> JLong(snap.dim),
+      "storage" -> JString(snap.storage),
+      "segments" -> JArray(snap.segments.toList.map(s =>
+        JObject("name" -> JString(s.name), "vecs" -> JLong(s.vecs)))),
+      "tombstones" -> JsonRecord.ids(snap.tombstones),
+      "holes" -> JsonRecord.ids(snap.holes)))
+
+  /** The committed version of the index at `dir`: one read of its commit
+    * record. A call that serves or changes the index takes one snapshot.
+    */
+  def snapshot(dir: String): IvfSnapshot = {
+    val (j, r) = JsonRecord.read("IvfIndex.snapshot", dir, recordPath(dir))
+    import j._
+    IvfSnapshot(dir, long(r("nCells")).toInt, long(r("dim")).toInt, str(r("storage")),
+      arr(r("segments")).map(obj).map(s => Segment(str(s("name")), long(s("vecs")))),
+      ids(r("tombstones")), ids(r("holes")))
+  }
 
   // ---- internals -------------------------------------------------------
+
+  /** On-disk schema of a cell segment under `storage`. */
+  private[graft] def segmentSchema(storage: String): StructType = new StructType()
+    .add("vec_id", LongType)
+    .add("vec", ArrayType(if (storage == "f32") FloatType else DoubleType))
+    .add("cell_id", LongType)
+
+  private[ann] def readSegments(spark: SparkSession, storage: String,
+                                locations: Seq[String]): DataFrame =
+    TableIO.read(spark, segmentSchema(storage), locations: _*)
 
   /** Cluster a segment's rows by cell before writing so parquet row-group
     * min/max on cell_id make the probe-time IN filter prune. f32 storage
     * quantizes the vec column to ARRAY<FLOAT> at write (half the scan
-    * bytes; see class doc).
+    * bytes; see class doc). Returns the written segment with its row
+    * count, read back with the known schema.
     */
-  private def writeSegment(assigned: DataFrame, location: String,
-                           storage: String): Unit = {
+  private def writeSegment(assigned: DataFrame, dir: String, name: String,
+                           storage: String): Segment = {
     val spark = assigned.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism, 4)
     val vecOut =
       if (storage == "f32") col("vec").cast("array<float>").as("vec")
       else col("vec")
+    val location = s"$dir/$name"
     TableIO.write(assigned
       .repartition(parts, col("cell_id"))
       .sortWithinPartitions(col("cell_id"), col("vec_id"))
       .select(col("vec_id"), vecOut, col("cell_id")), location)
+    Segment(name, readSegments(spark, storage, Seq(location)).count())
   }
 
-  /** Committed (segmentName, rowCount) entries; legacy lines without a
-    * count read as None and self-heal on the next [[append]].
-    */
-  private def segmentEntries(dir: String): Seq[(String, Option[Long])] =
-    if (MetaIO.exists(s"$dir/cells.list"))
-      MetaIO.readString(s"$dir/cells.list")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
-          line.split("\t", 2) match {
-            case Array(nm, cnt) => nm -> Some(cnt.toLong)
-            case Array(nm)      => nm -> None
-          }
-        }.toSeq
-    else Seq("cells" -> None)
+  /** `cells` without the snapshot's tombstoned ids. */
+  private def live(snap: IvfSnapshot, cells: DataFrame): DataFrame =
+    if (snap.tombstones.isEmpty) cells
+    else withIds(cells, "vec_id", snap.tombstones, keep = false)
 
-  private def segmentList(dir: String): Seq[String] =
-    segmentEntries(dir).map(_._1)
-
-  /** Union of committed cell segments, vec always presented as
-    * ARRAY<DOUBLE> regardless of the storage mode (f32 dequantizes here,
-    * so every consumer scores in double).
+  /** `df` restricted to (keep) or stripped of (!keep) rows whose `column`
+    * is in `ids`. Small sets ride the scan as pushdown-friendly IN
+    * predicates; large sets switch to broadcast joins (a 100k-element In
+    * bloats the plan and evaluates per row-group slower than a hash
+    * probe) — one shared threshold with the WAND term filters so the two
+    * serving paths can't drift.
     */
-  def loadCells(spark: SparkSession, dir: String): DataFrame = {
-    val segs = segmentList(dir)
-    segs.foreach { s =>
-      require(TableIO.committed(s"$dir/$s"),
-        s"IvfIndex.loadCells: segment $s missing/uncommitted at $dir")
-    }
-    segs.iterator
-      .map(s => TableIO.read(spark, s"$dir/$s")
-        .select(col("vec_id"), col("vec").cast("array<double>").as("vec"),
-          col("cell_id")))
-      .reduce(_ unionByName _)
+  private def withIds(df: DataFrame, column: String, ids: Array[Long],
+                      keep: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    if (ids.length <= graft.query.Wand.IsinThreshold) {
+      val in = col(column).isin(ids.toSeq: _*)
+      df.filter(if (keep) in else !in)
+    } else
+      df.join(broadcast(ids.toSeq.toDF(column)), Seq(column),
+        if (keep) "left_semi" else "left_anti")
   }
-
-  def loadCentroids(dir: String): Array[(Long, Array[Double])] =
-    MetaIO.readString(s"$dir/centroids.tsv").split("\n").iterator
-      .map(_.trim).filter(_.nonEmpty).map { line =>
-        val Array(id, vs) = line.split("\t", 2)
-        id.toLong -> vs.split(",").map(_.toDouble)
-      }.toArray.sortBy(_._1)
 
   private def centsDf(spark: SparkSession,
                       cents: Array[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
     cents.toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
   }
-
-  private def statsJson(nCells: Long, dim: Long, nVecs: Long,
-                        storage: String): String =
-    s"""{"nCells":$nCells,"dim":$dim,"nVecs":$nVecs,"storage":"$storage"}"""
-
-  private[graft] def readStats(dir: String): Map[String, String] =
-    PackedIndex.readJsonFlat(MetaIO.readString(s"$dir/ivf.json"))
-
-  private def statLong(stats: Map[String, String], key: String): Long =
-    stats(key).toLong
-
-  /** Legacy ivf.json (pre-f32) carries no storage field -> f64. */
-  private def storageMode(stats: Map[String, String]): String =
-    stats.getOrElse("storage", "f64")
 }

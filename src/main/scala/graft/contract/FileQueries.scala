@@ -44,10 +44,6 @@ object FileQueries {
 
   private val GuardSql = s"WHERE $GuardPred"
 
-  /** First 25 docs by doc_id — the bounded driver-side batch the tabular
-    * single-file queries aggregate (contract scale; the at-scale shape is
-    * one file per row via extractColumn, exercised by the per-row arms).
-    */
   /** lang/source values whose pandas-JSON rendering is plain quoting —
     * the string_agg oracles concatenate them raw, so values needing ujson
     * escapes ('"', '\', '/', controls) are excluded on BOTH sides (none
@@ -63,6 +59,10 @@ object FileQueries {
       s"$c NOT LIKE '%\"%' AND $c NOT LIKE '%\\%' AND $c NOT LIKE '%/%' " +
         s"AND NOT regexp_matches($c, '[\\x00-\\x1f]')").mkString(" AND ")
 
+  /** First 25 docs by doc_id — the bounded driver-side batch the tabular
+    * single-file queries aggregate (contract scale; the at-scale shape is
+    * one file per row via extractColumn, exercised by the per-row arms).
+    */
   private def head25(s: SparkSession, dir: String) =
     DocsCorpusRef.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("source"))

@@ -82,8 +82,8 @@ object Dedup {
     * Candidate generation joins docs sharing a RARE shingle (frequency cap
     * bounds the per-bucket fan-out); Jaccard is then computed exactly from
     * shingle-set sizes: |A∩B| from the join, |A∪B| = |A|+|B|-|A∩B|.
-    */
-  /** @param hashedShingles production mode: shingle strings are collapsed
+    *
+    * @param hashedShingles production mode: shingle strings are collapsed
     *        to xxhash64 keys BEFORE the frequency count and self-join, so
     *        the heavy shuffles move 8-byte longs instead of n-gram strings
     *        (~4-8x smaller; at the 2M-page scale point the string form

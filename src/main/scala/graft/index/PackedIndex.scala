@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.core.Bm25Params
-import graft.io.{MetaIO, TableIO}
-import org.json4s.{JArray, JDouble, JLong, JObject, JString, JValue}
-import org.json4s.jackson.JsonMethods
+import graft.io.{JsonRecord, MetaIO, TableIO}
+import org.json4s.{JArray, JDouble, JLong, JObject, JString}
 
 /** Persisted packed posting-list row: all blocks of one term within one
   * doc-shard. Doc-partitioned (shard = doc_id >> shardBits) so a WAND task
@@ -227,10 +226,6 @@ object PackedIndex {
 
   // ---- pack ------------------------------------------------------------
 
-  /** Pack one group's postings into PackedPostings rows. Input must contain
-    * (doc_id, term, tf, dl); rows are shuffled to co-locate (shard, term)
-    * and sorted so the packer streams consecutive runs.
-    */
   /** Per-build counters filled by the pack tasks (terms, postings,
     * compressed bytes) — avoids a second read of the committed output just
     * to count a group for the commit record.
@@ -241,6 +236,10 @@ object PackedIndex {
     val bytes = spark.sparkContext.longAccumulator("packedBytes")
   }
 
+  /** Pack one group's postings into PackedPostings rows. Input must contain
+    * (doc_id, term, tf, dl); rows are shuffled to co-locate (shard, term)
+    * and sorted so the packer streams consecutive runs.
+    */
   def packGroup(postingsDl: DataFrame, stats: IndexStats,
                 counters: Option[PackCounters] = None,
                 maxShards: Int = Int.MaxValue): Dataset[PackedPostings] = {
@@ -516,19 +515,19 @@ object PackedIndex {
     require(s.n == snap.manifests.map(_.docs).sum &&
       s.avgdl == snap.manifests.map(_.sumDl).sum.toDouble / s.n,
       s"commit: stats n=${s.n} avgdl=${s.avgdl} are not the sums of the groups at ${snap.dir}")
-    def ids(a: Array[Long]): JValue = JArray(a.toList.map(JLong(_)))
     val groups = snap.manifests.map(g => JObject("group" -> JLong(g.group),
       "docs" -> JLong(g.docs), "sumDl" -> JLong(g.sumDl), "terms" -> JLong(g.terms),
       "postings" -> JLong(g.postings), "bytes" -> JLong(g.bytes)))
     val arm = snap.positional.toList.map(a => "positional" -> JObject(
       "segments" -> JArray(a.segments.map(JString(_)).toList),
       "covers" -> JArray(a.covers.toList.sorted.map(JLong(_)))))
-    MetaIO.writeAtomic(recordPath(snap.dir), JsonMethods.compact(JObject(List(
+    JsonRecord.write(recordPath(snap.dir), List(
       "k1" -> JDouble(s.k1), "b" -> JDouble(s.b), "epsilon" -> JDouble(s.epsilon),
       "shardBits" -> JLong(s.shardBits), "blockSize" -> JLong(s.blockSize),
       "avgRawIdf" -> JDouble(s.avgRawIdf),
       "nextDocId" -> JLong(snap.nextDocId), "groups" -> JArray(groups.toList),
-      "tombstones" -> ids(snap.tombstones), "holes" -> ids(snap.holes)) ++ arm)))
+      "tombstones" -> JsonRecord.ids(snap.tombstones),
+      "holes" -> JsonRecord.ids(snap.holes)) ++ arm)
   }
 
   /** The committed version of the index at `dir`: one read of its commit
@@ -537,21 +536,8 @@ object PackedIndex {
     * commits (see [[IndexSnapshot]] for how long a version stays readable).
     */
   def snapshot(dir: String): IndexSnapshot = {
-    val path = recordPath(dir)
-    val text = try MetaIO.readString(path) catch {
-      case e: java.io.IOException => throw new IllegalArgumentException(
-        s"PackedIndex.snapshot: no committed index at $dir ($path is unreadable)", e)
-    }
-    def bad(v: JValue) = throw new IllegalArgumentException(s"$path: unexpected value $v")
-    def obj(v: JValue): Map[String, JValue] = v match {
-      case JObject(fields) => fields.toMap
-      case other => bad(other)
-    }
-    def arr(v: JValue): List[JValue] = v match { case JArray(xs) => xs; case other => bad(other) }
-    def str(v: JValue): String = v match { case JString(x) => x; case other => bad(other) }
-    def long(v: JValue): Long = v match { case JLong(x) => x; case other => bad(other) }
-    def dbl(v: JValue): Double = v match { case JDouble(x) => x; case other => bad(other) }
-    val r = obj(JsonMethods.parse(text, useBigIntForLong = false))
+    val (j, r) = JsonRecord.read("PackedIndex.snapshot", dir, recordPath(dir))
+    import j._
     val manifests = arr(r("groups")).map(obj).map(g => GroupManifest(long(g("group")).toInt,
       long(g("terms")), long(g("postings")), long(g("bytes")), long(g("docs")), long(g("sumDl"))))
     val n = manifests.map(_.docs).sum
@@ -560,7 +546,7 @@ object PackedIndex {
         dbl(r("k1")), dbl(r("b")), dbl(r("epsilon")),
         long(r("shardBits")).toInt, long(r("blockSize")).toInt),
       manifests, long(r("nextDocId")),
-      arr(r("tombstones")).map(long).toArray, arr(r("holes")).map(long).toArray,
+      ids(r("tombstones")), ids(r("holes")),
       r.get("positional").map(obj).map(a => PositionalArm(arr(a("segments")).map(str),
         arr(a("covers")).map(long(_).toInt).toSet)))
   }
@@ -716,6 +702,16 @@ object PackedIndex {
       Array.empty, (holes ++ tomb).distinct.sorted, arm)))
   }
 
+  /** Tombstone-set ceiling: every query broadcasts the full sorted id array
+    * (one binary search per candidate doc in the WAND loop), so the set must
+    * stay broadcast-sized. 1M ids = 8 MB on the wire — comfortably under
+    * Spark's broadcast sweet spot, far above any selective (GDPR-style)
+    * delete volume. A delete that would push past the bound fails loudly
+    * with the remedy (compact, which empties the set) rather than degrading
+    * every future query; mass deletes should be a filtered rebuild anyway.
+    */
+  val MaxTombstones: Int = 1 << 20
+
   /** Visibility-only delete (Lucene-style tombstones): marks doc ids as
     * deleted so every query path excludes them, WITHOUT rewriting postings
     * or corpus statistics — df/idf/avgdl stay frozen until a rebuild, the
@@ -733,16 +729,6 @@ object PackedIndex {
     * `maxTombstones` (see [[MaxTombstones]]); past it the delete fails with
     * the remedy rather than degrading every query's broadcast.
     */
-  /** Tombstone-set ceiling: every query broadcasts the full sorted id array
-    * (one binary search per candidate doc in the WAND loop), so the set must
-    * stay broadcast-sized. 1M ids = 8 MB on the wire — comfortably under
-    * Spark's broadcast sweet spot, far above any selective (GDPR-style)
-    * delete volume. A delete that would push past the bound fails loudly
-    * with the remedy (compact, which empties the set) rather than degrading
-    * every future query; mass deletes should be a filtered rebuild anyway.
-    */
-  val MaxTombstones: Int = 1 << 20
-
   def delete(dir: String, docIds: Seq[Long],
              maxTombstones: Int = MaxTombstones): Unit = {
     val snap = snapshot(dir)
@@ -764,22 +750,4 @@ object PackedIndex {
         "(or rebuild over a filtered corpus for mass deletes)")
     commit(snap.copy(tombstones = merged))
   }
-
-  /** Ids of a one-id-per-line sidecar file (tombstones and holes of
-    * [[graft.ann.IvfIndex]]); empty when the file is absent.
-    */
-  private[graft] def readIdFile(path: String): Array[Long] =
-    if (!MetaIO.exists(path)) Array.empty[Long]
-    else MetaIO.readString(path).split("\n").iterator
-      .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray
-
-  /** Parse a flat one-level JSON object (no nesting, no commas inside
-    * values); string values come back unquoted.
-    */
-  private[graft] def readJsonFlat(s: String): Map[String, String] =
-    s.trim.stripPrefix("{").stripSuffix("}").split(",").map { kv =>
-      val Array(k, v) = kv.split(":", 2)
-      k.trim.stripPrefix("\"").stripSuffix("\"") ->
-        v.trim.stripPrefix("\"").stripSuffix("\"")
-    }.toMap
 }

@@ -1,8 +1,9 @@
 package graft.io
 
 /** The engine's one storage boundary for everything it reads or writes
-  * outside a Spark table: the SMALL metadata files (a packed index's commit
-  * record, the IVF index's sidecars), commit probes and scratch cleanup.
+  * outside a Spark table: the SMALL metadata files (the commit records of
+  * packed and IVF indexes, IVF centroids), commit probes and scratch
+  * cleanup.
   * Table-shaped artifacts (postings, df, staged docs) go
   * through [[TableIO]], whose commit probe comes back here.
   *
@@ -19,7 +20,8 @@ package graft.io
   * Contract notes:
   *  - `writeAtomic` publishes all-or-nothing: a concurrent reader sees
   *    either the previous content or the new complete content, never a
-  *    partial file (PackedIndex's one-record commit depends on this).
+  *    partial file (the one-record commits of PackedIndex and IvfIndex
+  *    depend on this).
   *    Both arms write a `.tmp` sibling and rename it over the target —
   *    atomic on POSIX and HDFS; object stores whose committers emulate
   *    rename do not give this guarantee.

@@ -8,11 +8,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * drives the same build/append path as batch. The first non-empty batch
   * TRAINS the index (seed + Lloyd over that batch — the faiss train-on-
   * first-shard pattern); every later batch appends against the frozen
-  * centroids as one atomic segment flip, so a concurrent search sees the
-  * index grow atomically and the streamed result is identical to batch
-  * build-then-append over the same rows (IvfIngestSpec). The streaming
-  * checkpoint composes with the segment list exactly as IndexIngest's does
-  * with the packed index's commit record.
+  * centroids as one segment and one commit of the index's record
+  * (`ivf.json`), so a concurrent search sees the index grow atomically and
+  * the streamed result is identical to batch build-then-append over the
+  * same rows (IvfIngestSpec). The streaming checkpoint composes with the
+  * IVF record exactly as IndexIngest's does with the packed index's.
   */
 object IvfIngest {
 
@@ -23,13 +23,14 @@ object IvfIngest {
     // Exactly-once across foreachBatch REPLAYS: every batch (including the
     // bootstrap) lands in a segment NAMED BY ITS BATCH ID. A crash between
     // the index commit and the stream's checkpoint write re-delivers the
-    // batch; the named-segment no-op in IvfIndex.append (and build's
-    // idempotent overwrite when cells.list never flipped) makes the replay
-    // re-land on the same segment instead of duplicating vectors.
+    // batch. It replays onto its named segment against the record: an
+    // append whose segment the record already names writes nothing, and a
+    // build whose record was never committed overwrites its partial
+    // artifacts, so the replay never duplicates vectors.
     val handler: (DataFrame, Long) => Unit = (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
         val seg = s"cells-b$batchId"
-        if (!graft.io.MetaIO.exists(s"$indexDir/cells.list"))
+        if (!graft.ann.IvfIndex.exists(indexDir))
           graft.ann.IvfIndex.build(batch, indexDir, nCells, iters,
             segmentName = seg)
         else

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ann.IvfIndex
 import graft.corpus.{PagesGen, PagesPipeline}
 import graft.index.{DocIds, PackedIndex, PositionalIndex}
 import graft.io.MetaIO
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions.col
   * record. A crash after the data writes and before the commit leaves the
   * record of the version the write started from, so readers keep serving
   * exactly that version, and a retry produces what a clean run produces:
-  * the same stats bits, groups, df rows and answers.
+  * the same stats bits, groups, df rows and answers. The IVF index keeps
+  * the same protocol with its own record, `ivf.json`.
   */
 class CrashResumeSpec extends SparkSpec {
 
@@ -38,16 +40,34 @@ class CrashResumeSpec extends SparkSpec {
           .left.map(_.getMessage.replace(dir, "<dir>")))
     }
 
+  /** What a reader of the IVF index at `dir` observes: its record's fields
+    * and search rows, or the failure it meets.
+    */
+  private def ivfState(dir: String, queries: DataFrame): Either[String, Seq[Any]] =
+    scala.util.Try(IvfIndex.snapshot(dir)).toEither.left.map(_.getClass.getName).map { s =>
+      Seq(s.nCells, s.dim, s.storage, s.segments, s.nVecs, s.tombstones.toSeq, s.holes.toSeq,
+        IvfIndex.search(spark, dir, queries, k = 1000, nProbe = 4)
+          .collect().map(_.toSeq).toSeq.sortBy(_.mkString(",")))
+    }
+
+  /** Reads the committed version of an index at `dir` and returns what
+    * commits it again.
+    */
+  private type Pin = String => () => Unit
+  private val packed: Pin = dir => { val pre = PackedIndex.snapshot(dir); () => PackedIndex.commit(pre) }
+  private val ivf: Pin = dir => { val pre = IvfIndex.snapshot(dir); () => IvfIndex.commit(pre) }
+
   /** Runs `op` on the committed index at `dir`, then commits the version it
     * started from again: the state a crash after the op's data writes and
     * before its commit leaves. Readers must see the pre-op version; then
     * `op` runs again as the retry.
     */
-  private def crashThenRetry(dir: String, observe: String => Any)(op: => Unit): Unit = {
-    val pre = PackedIndex.snapshot(dir)
+  private def crashThenRetry(dir: String, observe: String => Any, pin: Pin = packed)
+                            (op: => Unit): Unit = {
+    val recommit = pin(dir)
     val before = observe(dir)
     op
-    PackedIndex.commit(pre)
+    recommit()
     assert(observe(dir) == before, "a crashed write leaked into the readers")
     op
   }
@@ -55,10 +75,10 @@ class CrashResumeSpec extends SparkSpec {
   /** The same for a write that creates the index at `dir` (build, compact):
     * before its commit there is no record, so every reader fails.
     */
-  private def crashThenRetryNew(dir: String, observe: String => Either[String, Observed])
-                               (op: => Unit): Unit = {
+  private def crashThenRetryNew(dir: String, observe: String => Either[String, Any],
+                                record: String = "index.json")(op: => Unit): Unit = {
     op
-    MetaIO.deleteRecursively(s"$dir/index.json")
+    MetaIO.deleteRecursively(s"$dir/$record")
     assert(observe(dir).isLeft, "an uncommitted index served readers")
     op
   }
@@ -162,5 +182,55 @@ class CrashResumeSpec extends SparkSpec {
     assert(PackedIndex.snapshot(dir).positional.get.segments == Seq("positions-b"))
     // one base segment now holds what the base and the appended segment held
     assert(observe(dir).map(_.copy(positional = None)) == appended.map(_.copy(positional = None)))
+  }
+
+  test("IVF build, append, delete and compact: a crash before the commit serves the pre-op version, a retry equals a clean run") {
+    val queries = IvfVecs.queries(spark, 4)
+    def observe(d: String) = ivfState(d, queries)
+    val clean = scratchDir("ivfcrash-clean")
+    val crashed = scratchDir("ivfcrash")
+    val compacted = Map(clean -> scratchDir("ivfcrash-clean-cpt"), crashed -> scratchDir("ivfcrash-cpt"))
+    val build = (d: String) => IvfIndex.build(IvfVecs(spark, 0, 200), d, nCells = 4, iters = 2)
+    val steps: Seq[(String, String => Unit)] = Seq(
+      "append" -> (d => IvfIndex.append(IvfVecs(spark, 200, 240), d)),
+      "named append" -> (d => IvfIndex.append(IvfVecs(spark, 240, 260), d, Some("cells-b7"))),
+      "delete" -> (d => IvfIndex.delete(spark, d, Seq(3L, 50L, 201L, 245L))))
+
+    build(clean)
+    crashThenRetryNew(crashed, observe, "ivf.json")(build(crashed))
+    assert(observe(crashed) == observe(clean), "build: retry != clean run")
+    for ((name, op) <- steps) {
+      op(clean)
+      crashThenRetry(crashed, observe, ivf)(op(crashed))
+      assert(observe(crashed) == observe(clean), s"$name: retry != clean run")
+    }
+    val answers = observe(clean).toOption.get
+    assert(answers(4) == 260L && answers.last.asInstanceOf[Seq[_]].nonEmpty, s"fixture: $answers")
+
+    IvfIndex.compact(spark, clean, compacted(clean))
+    crashThenRetryNew(compacted(crashed), observe, "ivf.json")(
+      IvfIndex.compact(spark, crashed, compacted(crashed)))
+    assert(observe(compacted(crashed)) == observe(compacted(clean)), "compact: retry != clean run")
+    assert(observe(crashed) == observe(clean), "compact changed its source")
+    for (d <- Seq(clean, crashed).flatMap(d => Seq(d, compacted(d)))) {
+      val entries = MetaIO.list(d).toSet
+      val files = entries.filterNot(e => new java.io.File(s"$d/$e").isDirectory)
+      assert(files == Set("ivf.json", "centroids.tsv"), s"$d: files beside the record: $entries")
+    }
+  }
+
+  test("an IVF build that crashed before its record is no committed index: search and append refuse it") {
+    val dir = scratchDir("ivfcrash-unrecorded")
+    IvfIndex.build(IvfVecs(spark, 0, 100), dir, nCells = 4, iters = 2)
+    // what a build leaves when it crashes once its segment and centroids
+    // are written: no other file
+    MetaIO.list(dir).filterNot(Set("cells", "centroids.tsv"))
+      .foreach(e => MetaIO.deleteRecursively(s"$dir/$e"))
+    assert(MetaIO.exists(s"$dir/cells/_SUCCESS") && MetaIO.exists(s"$dir/centroids.tsv"))
+    intercept[IllegalArgumentException] {
+      IvfIndex.search(spark, dir, IvfVecs.queries(spark, 2), k = 10, nProbe = 4).collect()
+    }
+    intercept[IllegalArgumentException](IvfIndex.append(IvfVecs(spark, 100, 120), dir))
+    assert(MetaIO.list(dir).toSet == Set("cells", "centroids.tsv"), "append wrote onto an uncommitted index")
   }
 }

@@ -25,7 +25,7 @@ class IvfIndexSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
     val dir = scratchDir("ivfidx")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 3)
-    val cents = IvfIndex.loadCentroids(dir)
+    val cents = IvfIndex.snapshot(dir).centroids
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
     val inMem = rows(Ann.ivfTopK(queries,
       Ann.assignCells(corpus, cents), cents, k = 10, nProbe = 3))
@@ -44,7 +44,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.append(extra, dir)
     // equivalence: persisted(base + appended) == in-memory over the FULL
     // corpus assigned with the BASE-trained centroids (faiss add semantics)
-    val cents = IvfIndex.loadCentroids(dir)
+    val cents = IvfIndex.snapshot(dir).centroids
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
     val full = base.union(extra)
     val want = rows(Ann.ivfTopK(queries,
@@ -54,9 +54,10 @@ class IvfIndexSpec extends SparkSpec {
     // appended ids are actually retrievable
     val hitIds = got.map(_._2)
     assert(hitIds.exists(_ >= 300L) || want.forall(_._2 < 300L))
-    // stats track the append
-    val statsJson = graft.io.MetaIO.readString(s"$dir/ivf.json")
-    assert(statsJson.contains("\"nVecs\":400"))
+    // the record counts each committed segment; nVecs is their sum
+    val snap = IvfIndex.snapshot(dir)
+    assert(snap.segments == Seq(IvfIndex.Segment("cells", 300L), IvfIndex.Segment("cells-a1", 100L)))
+    assert(snap.nVecs == 400L)
   }
 
   test("probe-time scan pushes the cell_id filter into parquet") {
@@ -65,13 +66,13 @@ class IvfIndexSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
     val dir = scratchDir("ivfplan")
     IvfIndex.build(corpus, dir, nCells = 8, iters = 2)
-    val cents = IvfIndex.loadCentroids(dir)
+    val cents = IvfIndex.snapshot(dir).centroids
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
     val probes = Ann.probeCells(queries, cents, nProbe = 2)
     val probedCells = probes.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).sorted
     assert(probedCells.length < 8, "fixture degenerate: all cells probed")
-    val scan = IvfIndex.loadCells(spark, dir)
+    val scan = IvfIndex.snapshot(dir).cells(spark)
       .filter(col("cell_id").isin(probedCells: _*))
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("cell_id"),
@@ -114,6 +115,10 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(corpus, dir, nCells = 4, iters = 2, segmentName = "cells-b0")
     IvfIndex.append(extra, dir, segmentName = Some("cells-b1"))
     val once = rows(IvfIndex.search(spark, dir, queries, k = 10, nProbe = 4))
+    val record = graft.io.MetaIO.readString(s"$dir/ivf.json")
+    def stamps = Seq("ivf.json", "cells-b0/_SUCCESS", "cells-b1/_SUCCESS")
+      .map(f => new java.io.File(s"$dir/$f").lastModified())
+    val stamped = stamps
     // replayed micro-batch (same segment name): must not duplicate vectors
     IvfIndex.append(extra, dir, segmentName = Some("cells-b1"))
     // replayed BOOTSTRAP batch arriving on the append path (the crash
@@ -121,8 +126,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.append(corpus, dir, segmentName = Some("cells-b0"))
     val twice = rows(IvfIndex.search(spark, dir, queries, k = 10, nProbe = 4))
     assert(twice == once && once.nonEmpty)
-    assert(graft.io.MetaIO.readString(s"$dir/ivf.json")
-      .contains("\"nVecs\":250"))
+    // a no-op writes nothing: neither the record nor a segment
+    assert(graft.io.MetaIO.readString(s"$dir/ivf.json") == record && stamps == stamped)
+    assert(IvfIndex.snapshot(dir).nVecs == 250L)
     // retrain-in-place is refused: rebuild targets a fresh dir + swap
     val ex = intercept[IllegalArgumentException] {
       IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
@@ -188,21 +194,21 @@ class IvfIndexSpec extends SparkSpec {
     // survivor corpus assigned with those centroids (bit-identical)
     val compacted = rows(IvfIndex.search(spark, out, queries, k = 10, nProbe = 8))
     assert(compacted == tombstoned && compacted.nonEmpty)
-    val cents = IvfIndex.loadCentroids(out)
+    val cents = IvfIndex.snapshot(out).centroids
       .toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "cvec")
     val survivors = corpus.filter(col("vec_id") >= 60L)
     val want = rows(Ann.ivfTopK(queries,
       Ann.assignCells(survivors, cents), cents, k = 10, nProbe = 8))
     assert(compacted == want)
-    // stats recomputed over survivors; tombstones gone; holes carry the dead
-    val stats = graft.io.MetaIO.readString(s"$out/ivf.json")
-    assert(stats.contains("\"nVecs\":240"), stats)
-    assert(IvfIndex.loadTombstones(out).isEmpty)
-    assert(IvfIndex.loadHoles(out).toSeq == dead)
+    // nVecs recomputed over survivors; tombstones gone; holes carry the dead
+    val snap = IvfIndex.snapshot(out)
+    assert(snap.nVecs == 240L, snap.segments)
+    assert(snap.tombstones.isEmpty)
+    assert(snap.holes.toSeq == dead)
     // re-issued erasure of an already-compacted id: no-op, not an error,
     // and it must NOT enter the tombstone set
     IvfIndex.delete(spark, out, Seq(10L, 20L))
-    assert(IvfIndex.loadTombstones(out).isEmpty)
+    assert(IvfIndex.snapshot(out).tombstones.isEmpty)
     assert(rows(IvfIndex.search(spark, out, queries, k = 10, nProbe = 8)) == compacted)
   }
 
@@ -214,7 +220,7 @@ class IvfIndexSpec extends SparkSpec {
       IvfIndex.delete(spark, dir, Seq(5L, 9999L))
     }
     assert(ex.getMessage.contains("9999"))
-    assert(IvfIndex.loadTombstones(dir).isEmpty) // nothing half-applied
+    assert(IvfIndex.snapshot(dir).tombstones.isEmpty) // nothing half-applied
   }
 
   test("f32 storage: half the vec bytes, rank-identical serving to f64") {
@@ -226,13 +232,17 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(corpus, d64, nCells = 8, iters = 3)
     IvfIndex.build(corpus, d32, nCells = 8, iters = 3, storage = "f32")
     // training happens BEFORE quantization -> identical centroids
-    assert(IvfIndex.loadCentroids(d64).map { case (i, v) => (i, v.toSeq) }.toSeq ==
-      IvfIndex.loadCentroids(d32).map { case (i, v) => (i, v.toSeq) }.toSeq)
+    assert(IvfIndex.snapshot(d64).centroids.map { case (i, v) => (i, v.toSeq) }.toSeq ==
+      IvfIndex.snapshot(d32).centroids.map { case (i, v) => (i, v.toSeq) }.toSeq)
     // persisted element type is FLOAT and the dequantized read is double
     val sch = spark.read.parquet(s"$d32/cells").schema("vec").dataType
     assert(sch.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.FloatType, sch.toString)
-    assert(graft.io.MetaIO.readString(s"$d32/ivf.json").contains("\"storage\":\"f32\""))
+    assert(IvfIndex.snapshot(d32).storage == "f32" && IvfIndex.snapshot(d64).storage == "f64")
+    // the known-schema read's constant == what the writer wrote, per mode
+    for ((d, mode) <- Seq(d64 -> "f64", d32 -> "f32"))
+      assert(spark.read.parquet(s"$d/cells").schema.catalogString ==
+        IvfIndex.segmentSchema(mode).catalogString, mode)
     // ranks (query_id, vec_id, rank) identical on this corpus; scores may
     // differ in last ulps from the quantization — that is the documented
     // contract (rank parity, not score hashes)
@@ -260,34 +270,11 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(corpus, dir, nCells = 0, iters = 2)
     // 400 vecs -> 20 derived cells; Lloyd may drop empty cells, so pin
     // nCells == surviving centroid count and within (2, 20]
-    val nCells = IvfIndex.readStats(dir)("nCells").toInt
-    assert(nCells == IvfIndex.loadCentroids(dir).length)
+    val nCells = IvfIndex.snapshot(dir).nCells
+    assert(nCells == IvfIndex.snapshot(dir).centroids.length)
     assert(nCells > 2 && nCells <= 20, s"derived nCells=$nCells")
     val queries = randCorpus(3, 8, 119)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
     assert(rows(IvfIndex.search(spark, dir, queries, k = 5, nProbe = 4)).nonEmpty)
-  }
-
-  test("cells.list carries per-segment counts; legacy count-less lists self-heal") {
-    val base = randCorpus(200, 8, 43)
-    val extra = randCorpus(40, 8, 44)
-      .select((col("vec_id") + 200L).as("vec_id"), col("vec"))
-    val dir = scratchDir("ivfcnt")
-    IvfIndex.build(base, dir, nCells = 4, iters = 2)
-    IvfIndex.append(extra, dir)
-    val lines = graft.io.MetaIO.readString(s"$dir/cells.list").split("\n")
-    assert(lines.length == 2 && lines.forall(_.contains("\t")), lines.mkString("|"))
-    assert(lines.map(_.split("\t")(1).toLong).sum == 240L)
-    // strip the counts (a round-5 index) — the next append must heal the
-    // lines back to counted form and still land on the right nVecs
-    graft.io.MetaIO.writeAtomic(s"$dir/cells.list",
-      lines.map(_.split("\t")(0)).mkString("\n"))
-    val extra2 = randCorpus(10, 8, 45)
-      .select((col("vec_id") + 240L).as("vec_id"), col("vec"))
-    IvfIndex.append(extra2, dir)
-    val healed = graft.io.MetaIO.readString(s"$dir/cells.list").split("\n")
-    assert(healed.length == 3 && healed.forall(_.contains("\t")))
-    assert(graft.io.MetaIO.readString(s"$dir/ivf.json")
-      .contains("\"nVecs\":250"))
   }
 }

@@ -49,8 +49,8 @@ class IvfIngestSpec extends SparkSpec {
     } finally q.stop()
 
     // same trained centroids (first batch is identical) -> identical hits
-    val cS = IvfIndex.loadCentroids(idxStream).map { case (id, v) => id -> v.toSeq }
-    val cB = IvfIndex.loadCentroids(idxBatch).map { case (id, v) => id -> v.toSeq }
+    val cS = IvfIndex.snapshot(idxStream).centroids.map { case (id, v) => id -> v.toSeq }
+    val cB = IvfIndex.snapshot(idxBatch).centroids.map { case (id, v) => id -> v.toSeq }
     assert(cS.toSeq == cB.toSeq && cS.nonEmpty)
     val queries = vecs(500, 504)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ann.IvfIndex
 import graft.corpus.{PagesGen, PagesPipeline}
 import graft.index.{InvertedIndex, PackedIndex, PositionalIndex}
 import graft.query.{IndexCache, Phrase, PositionalMode, PositionalQuery, Wand}
@@ -47,6 +48,23 @@ object MultiGroupIndex {
   }
 }
 
+/** Deterministic 8-dim vectors for the IVF index: vec_id i draws from its
+  * own seed, so an id range is the same rows wherever it is built.
+  */
+object IvfVecs {
+  def apply(spark: SparkSession, from: Long, until: Long): DataFrame = {
+    import spark.implicits._
+    (from until until).map { i =>
+      val rnd = new scala.util.Random(i)
+      (i, Seq.fill(8)(rnd.nextGaussian()))
+    }.toDF("vec_id", "vec")
+  }
+
+  /** `n` query vectors (query_id, qvec) drawn apart from any corpus id. */
+  def queries(spark: SparkSession, n: Int): DataFrame =
+    apply(spark, 10000L, 10000L + n).selectExpr("vec_id AS query_id", "vec AS qvec")
+}
+
 /** Pins the Spark jobs a small read runs. The engine wrote every serving
   * table itself, so a read must not pay a schema-inference job per
   * committed group: a `Wand.search` at a warm df cache costs its query
@@ -54,7 +72,9 @@ object MultiGroupIndex {
   * shuffle and the result on a one-shard index; a multi-shard index adds
   * the rank window's shuffle. A phrase batch costs the same query jobs:
   * the positional arm's currency is a driver-side stamp check, not a job.
-  * A small append likewise runs its batch's jobs and no df table's.
+  * A small append likewise runs its batch's jobs and no df table's. An
+  * IVF search reads its committed segments as one known-schema relation,
+  * so it too runs the same jobs at any segment count.
   */
 class ReadJobsSpec extends SparkSpec {
 
@@ -234,6 +254,24 @@ class ReadJobsSpec extends SparkSpec {
       val parquet = schemaJobs(jobs)
       assert(parquet.isEmpty, s"parquet jobs in a 2-chunk local-batch searchDs: $parquet")
       assert(jobs.size == ChunkedJobs, s"a 2-chunk searchDs ran ${jobs.size} jobs: $jobs")
+    }
+  }
+
+  test("an IvfIndex.search runs the same jobs at 1 and at 3 committed segments, and no schema inference job") {
+    val dir = scratchDir("readjobs-ivf")
+    IvfIndex.build(IvfVecs(spark, 0, 200), dir, nCells = 4, iters = 2)
+    val queries = IvfVecs.queries(spark, 3)
+    def search(): Unit = { IvfIndex.search(spark, dir, queries, k = 10, nProbe = 2).collect(); () }
+    listening {
+      search() // warm
+      val at1 = jobsOf(search())
+      IvfIndex.append(IvfVecs(spark, 200, 240), dir)
+      IvfIndex.append(IvfVecs(spark, 240, 280), dir)
+      assert(IvfIndex.snapshot(dir).segments.size == 3)
+      search()
+      val at3 = jobsOf(search())
+      assert(schemaJobs(at1 ++ at3).isEmpty, s"schema jobs in IvfIndex.search: $at1 / $at3")
+      assert(at1.size == at3.size, s"job count moved with the segment count: $at1 vs $at3")
     }
   }
 }

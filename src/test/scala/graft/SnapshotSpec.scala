@@ -1,5 +1,6 @@
 package graft
 
+import graft.ann.IvfIndex
 import graft.index.{PackedIndex, PositionalIndex}
 import graft.query.{IndexCache, Phrase, PositionalQuery, Wand}
 import org.apache.spark.sql.DataFrame
@@ -7,7 +8,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** One committed version per call: a reader holding an [[graft.index.IndexSnapshot]]
-  * keeps serving exactly that version while an append and a delete commit,
+  * (or an [[graft.ann.IvfSnapshot]]) keeps serving exactly that version while an append and a delete commit,
   * and a fresh snapshot sees both commits.
   */
 class SnapshotSpec extends SparkSpec {
@@ -76,6 +77,27 @@ class SnapshotSpec extends SparkSpec {
     assert(pinnedSearch() == pre, "the pinned snapshot changed after two appends")
   }
 
+  test("a pinned IVF snapshot returns its exact search rows after an append and a delete commit") {
+    val dir = scratchDir("snap-ivf")
+    IvfIndex.build(IvfVecs(spark, 0, 200), dir, nCells = 4, iters = 2)
+    val queries = IvfVecs.queries(spark, 3)
+    // k above the corpus size ranks every probed vector, so an appended or
+    // deleted one shows
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq.sorted
+    val pinned = IvfIndex.snapshot(dir)
+    def pinnedRows() = rows(IvfIndex.search(spark, pinned, queries, 1000, 4, None))
+    val pre = pinnedRows()
+    assert(pre.nonEmpty && pre == rows(IvfIndex.search(spark, dir, queries, k = 1000, nProbe = 4)))
+    IvfIndex.append(IvfVecs(spark, 200, 260), dir)
+    val victims = pre.map(_._2).distinct.take(3)
+    IvfIndex.delete(spark, dir, victims)
+    assert(pinnedRows() == pre, "the pinned IVF snapshot saw a later commit")
+    val fresh = rows(IvfIndex.search(spark, dir, queries, k = 1000, nProbe = 4))
+    assert(fresh.exists(_._2 >= 200L), "a fresh snapshot misses the append")
+    assert(!fresh.exists(h => victims.contains(h._2)), "a fresh snapshot misses the delete")
+  }
+
   test("query, plans, corpus and the positional arm read index state only through the snapshot") {
     val root = Paths.get("src/main/scala/graft")
     assert(Files.isDirectory(root), s"source tree not found from ${Paths.get("").toAbsolutePath}")
@@ -83,22 +105,23 @@ class SnapshotSpec extends SparkSpec {
       Files.readAllLines(f).asScala.toSeq.zipWithIndex
         .filterNot { case (line, _) => line.trim.startsWith("*") || line.trim.startsWith("//") ||
           line.trim.startsWith("/**") }
-    // the commit record and every metadata file it replaced, as a path
-    // component or a quoted name
+    // both indexes' commit records, every metadata file they replaced and
+    // the IVF centroids, as a path component or a quoted name
     val metadata = ("""[/"](index\.json|stats\.json|watermark\.json|tombstones\.txt|""" +
-      """holes\.txt|positions\.list)|/manifest[/"]""").r
+      """holes\.txt|positions\.list|ivf\.json|cells\.list|centroids\.tsv)|/manifest[/"]""").r
     val all = {
       val s = Files.walk(root)
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
     val readers = all.filterNot(f => f == root.resolve("index/PackedIndex.scala") ||
-      f.startsWith(root.resolve("ann")))
+      f == root.resolve("ann/IvfIndex.scala"))
     assert(readers.exists(_.endsWith("PositionalIndex.scala")) && readers.size > 50)
     val offenders = readers.flatMap(f => codeLines(f).collect {
       case (line, i) if metadata.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
     })
-    assert(offenders.isEmpty, s"index state read around PackedIndex.snapshot:\n${offenders.mkString("\n")}")
+    assert(offenders.isEmpty,
+      s"index state read around PackedIndex.snapshot or IvfIndex.snapshot:\n${offenders.mkString("\n")}")
     val cache = root.resolve("query/IndexCache.scala")
     val io = codeLines(cache).collect {
       case (line, i) if line.contains("MetaIO") || line.contains("TableIO") => s"$cache:${i + 1}"

@@ -57,7 +57,7 @@ class TableSchemaSpec extends SparkSpec {
     * parquet read per location, unioned by name.
     */
   private def unionRead(locations: Seq[String]): DataFrame =
-    locations.map(l => TableIO.read(spark, l)
+    locations.map(l => spark.read.parquet(l)
       .selectExpr("shard", "term", "nPostings", "blocks"))
       .reduce(_ unionByName _)
 

@@ -206,12 +206,12 @@ object SparkEntry {
     // J7/T4: packed block-max WAND path, end-to-end (build packed index,
     // query via the doc-sharded WAND kernel, merge per-shard top-k). Same
     // oracle as q_bm25_topk — proves the physical path is rank-identical.
-    // Routed through the strategy-planned operator (Bm25TopKPlan ->
-    // Bm25Strategy -> Bm25TopKExec) so the custom LogicalPlan/SparkStrategy
-    // surface is driver-exercised, not just unit-tested; Bm25PlanSpec proves
-    // it bit-identical to Wand.search.
+    // Served by Wand.search, whose kernel runs in the strategy-planned
+    // shard-kernel node (ShardKernel -> ShardKernelStrategy ->
+    // ShardKernelExec), so the custom LogicalPlan/SparkStrategy surface is
+    // driver-exercised; PlanHygieneSpec pins the node in this plan.
     "q_bm25_wand_topk" -> ((s, dir) => wandContractTopK(s, dir) { idx =>
-      graft.plans.Bm25TopKPlan.search(s, idx, contractQueryBatch, k = 200)
+      graft.query.Wand.search(s, idx, contractQueryBatch, k = 200)
     }),
 
     // S9/J7 filtered retrieval on the KERNEL path: same allowlist semantics

@@ -71,45 +71,16 @@ object Ann {
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors by cosine (ties: smaller corpus id first). Exact baseline with
-    * the scale-correct physical shape: the query batch is broadcast, each
-    * corpus partition keeps one bounded heap per query (the faiss
-    * ResultHeap pattern, retrieval_auto.py:335-347), and only
-    * numPartitions*k candidate rows per query reach the final per-query
-    * rank — the corpus itself never shuffles. (The earlier window-over-
-    * all-scored-rows version shuffled |corpus| x |queries| rows.)
+    * the scale-correct physical shape: the query batch is broadcast to the
+    * heap kernel ([[heapTopK]], every vector in one cell probed by every
+    * query), so the corpus itself never shuffles.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"bruteForceTopK: k must be positive (got $k)")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val qArr = queries
       .select(col("query_id").cast("long"), col("qvec").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val bc = spark.sparkContext.broadcast(qArr)
-    val partial = corpus
-      .select(col("vec_id").cast("long"), col("vec").cast("array<double>").as("vec"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        val heaps = qs.map(_ => new graft.query.ShardServe.TopKHeap(k))
-        it.foreach { case (id, vecSeq) =>
-          val vec = vecSeq.toArray
-          var qi = 0
-          while (qi < qs.length) {
-            heaps(qi).offer(cosineArr(qs(qi)._2, vec), id)
-            qi += 1
-          }
-        }
-        qs.iterator.zip(heaps.iterator).flatMap { case ((qid, _), h) =>
-          h.drain().iterator.map { case (s, d) => (qid, d, s) }
-        }
-      }
-      .toDF("query_id", "vec_id", "cos")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    partial.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
+    heapTopK(corpus.withColumn("cell_id", lit(0L)), Map(0L -> qArr), k)
   }
 
   /** Each query's `nProbe` nearest cells: (query_id, qvec, cell_id). The
@@ -149,8 +120,14 @@ object Ann {
     */
   def ivfTopKWithProbes(probes: DataFrame, corpusWithCell: DataFrame,
                         k: Int): DataFrame = {
-    val scored = corpusWithCell.join(broadcast(probes), Seq("cell_id"))
-      .withColumn("cos", cosine(col("qvec"), col("vec")))
+    rankByCos(corpusWithCell.join(broadcast(probes), Seq("cell_id"))
+      .withColumn("cos", cosine(col("qvec"), col("vec"))), k)
+  }
+
+  /** Per-query top-k of scored (query_id, vec_id, cos) rows by (cos desc,
+    * vec_id asc): (query_id, vec_id, cos, rank), rank 1..k.
+    */
+  private def rankByCos(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -167,13 +144,11 @@ object Ann {
     */
   val KernelMaxProbeDoubles: Long = 64000000L
 
-  /** IVF scoring through the brute-force HEAP KERNEL instead of the
+  /** IVF scoring through the HEAP KERNEL ([[heapTopK]]) instead of the
     * join+window plan: the probe set (query_id, qvec, cell_id) is bounded
-    * (nq x nProbe rows), so it broadcasts as a cell_id -> queries map and
-    * each corpus partition offers its vectors only to the queries probing
-    * their cell — no scored-row materialization, no shuffle of the
-    * (scanned x probing-queries) product, only numPartitions x k candidate
-    * rows per query reach the final rank. Result-identical to
+    * (nq x nProbe rows), so it broadcasts as a cell_id -> queries map — no
+    * scored-row materialization, no shuffle of the (scanned x
+    * probing-queries) product. Result-identical to
     * [[ivfTopKWithProbes]] (same candidate set; cosineArr reproduces the
     * column fold bit-for-bit; same tie-break) — measured 3-10x faster at
     * the 2M-vector scale point, where the join+window form was slower than
@@ -182,8 +157,6 @@ object Ann {
   def ivfTopKKernel(probes: DataFrame, corpusWithCell: DataFrame,
                     k: Int): DataFrame = {
     require(k > 0, s"ivfTopKKernel: k must be positive (got $k)")
-    val spark = corpusWithCell.sparkSession
-    import spark.implicits._
     // one small agg job bounds the collect BEFORE it happens (the probe set
     // is nq x nProbe rows — typically tiny, but nothing upstream caps nq)
     val sz = probes.agg(count(lit(1)), max(size(col("qvec")))).first()
@@ -200,40 +173,43 @@ object Ann {
       .collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getSeq[Double](2).toArray)))
       .groupBy(_._1).map { case (c, rs) => c -> rs.map(_._2) }
-    val bc = spark.sparkContext.broadcast(probeArr)
-    val partial = corpusWithCell
+    heapTopK(corpusWithCell, probeArr, k)
+  }
+
+  /** The heap kernel of [[bruteForceTopK]] and [[ivfTopKKernel]]: each
+    * partition of `rows` (vec_id, vec, cell_id) offers every vector to the
+    * queries (query_id, qvec) that `byCell` lists for its cell, into one
+    * bounded heap per query (the faiss ResultHeap pattern), so only
+    * numPartitions x k candidate rows per query reach [[rankByCos]].
+    */
+  private def heapTopK(rows: DataFrame, byCell: Map[Long, Array[(Long, Array[Double])]],
+                       k: Int): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(byCell)
+    val partial = rows
       .select(col("vec_id").cast("long"),
         col("vec").cast("array<double>").as("vec"),
         col("cell_id").cast("long"))
       .as[(Long, Seq[Double], Long)]
       .mapPartitions { it =>
-        val byCell = bc.value
-        val heaps = scala.collection.mutable.HashMap
-          .empty[Long, graft.query.ShardServe.TopKHeap]
+        val heapOf = scala.collection.mutable.HashMap.empty[Long, graft.query.ShardServe.TopKHeap]
+        val cells = bc.value.map { case (c, qs) => c -> (qs.map(_._2),
+          qs.map(q => heapOf.getOrElseUpdate(q._1, new graft.query.ShardServe.TopKHeap(k))))
+        }
         it.foreach { case (id, vecSeq, cell) =>
-          byCell.get(cell) match {
-            case None => ()
-            case Some(qs) =>
-              val vec = vecSeq.toArray
-              var i = 0
-              while (i < qs.length) {
-                val (qid, qvec) = qs(i)
-                heaps.getOrElseUpdate(qid, new graft.query.ShardServe.TopKHeap(k))
-                  .offer(cosineArr(qvec, vec), id)
-                i += 1
-              }
+          cells.get(cell).foreach { case (qvecs, heaps) =>
+            val vec = vecSeq.toArray
+            var i = 0
+            while (i < heaps.length) { heaps(i).offer(cosineArr(qvecs(i), vec), id); i += 1 }
           }
         }
-        heaps.iterator.flatMap { case (qid, h) =>
+        heapOf.iterator.flatMap { case (qid, h) =>
           h.drain().iterator.map { case (s, d) => (qid, d, s) }
         }
       }
       .toDF("query_id", "vec_id", "cos")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    partial.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
+    rankByCos(partial, k)
   }
 
   /** Quality/cost sweep for IVF: for each nProbe, the recall against the

@@ -105,8 +105,8 @@ final case class IvfSnapshot private[graft] (
   * readers with no error.
   *
   * Idempotency: both build and append accept an optional segment NAME.
-  * An append whose name the record already holds is a no-op that writes
-  * nothing — the hook exactly-once ingestion rides (streaming/IvfIngest
+  * An append whose given name the record already holds is a no-op that
+  * writes nothing — the hook exactly-once ingestion rides (streaming/IvfIngest
   * derives the name from the micro-batch id, so a replayed batch after a
   * crash re-lands on the same segment instead of duplicating vectors).
   *
@@ -197,16 +197,20 @@ object IvfIndex {
 
   /** Add vectors against the frozen centroids: a fresh segment dir, then
     * the record naming it. A crash leaves an orphan dir no record names,
-    * which a retry overwrites; an append whose `segmentName` the record
-    * already holds writes nothing. Per-append cost is proportional to the
-    * NEW segment only: the record carries every segment's count, so nVecs
-    * needs no scan of the committed ones.
+    * which a retry overwrites. Only a caller-given `segmentName` marks a
+    * replay: if the record already holds it, the append writes nothing. An
+    * unnamed append takes the first free `cells-a<i>` from i = the segment
+    * count, so it never collides with a named segment. Per-append cost is
+    * proportional to the NEW segment only: the record carries every
+    * segment's count, so nVecs needs no scan of the committed ones.
     */
   def append(newVecs: DataFrame, dir: String,
              segmentName: Option[String] = None): Unit = {
     val snap = snapshot(dir)
-    val next = segmentName.getOrElse(s"cells-a${snap.segments.length}")
-    if (!snap.segments.exists(_.name == next)) {
+    val taken = snap.segments.map(_.name).toSet
+    val next = segmentName.getOrElse(Iterator.from(snap.segments.length)
+      .map(i => s"cells-a$i").filterNot(taken).next())
+    if (!taken(next)) {
       val c = newVecs.select(col("vec_id").cast("long"),
         col("vec").cast("array<double>").as("vec"))
       val seg = writeSegment(

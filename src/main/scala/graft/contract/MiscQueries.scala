@@ -203,7 +203,7 @@ object MiscQueries {
     // ranking is deterministic so the read-back is DuckDB-oracle-exact)
     "q_ranking_tsv" -> ((s, dir) => {
       val out = graft.SparkEntry.scratchDir("graft-tsv") + "/r"
-      val ranked = graft.query.Bm25Query.rank(
+      val ranked = graft.query.ShardServe.globalRank(
         PipelineQueriesAccess.ranking(s, dir)
           .withColumn("score", col("rank").cast("double") * -1), 10)
         .select(col("query_id"), col("doc_id"), col("score"), col("rank"))

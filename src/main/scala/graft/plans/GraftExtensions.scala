@@ -4,14 +4,15 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Engine extension surface: registers graft's native expressions for SQL
-  * use. Activate with
+  * use and the shard-kernel planner strategy. Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * programmatically via [[GraftFunctions.register]].
+  * programmatically via [[GraftFunctions.register]] (the strategy registers
+  * itself on first use: [[ShardKernelStrategy.register]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction(GraftFunctions.pyWsTokenizeDescriptor)
-    e.injectPlannerStrategy(_ => Bm25Strategy)
+    e.injectPlannerStrategy(_ => ShardKernelStrategy)
   }
 }
 

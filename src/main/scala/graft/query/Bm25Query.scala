@@ -2,7 +2,6 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.core.Bm25Params
 import graft.index.InvertedIndex
 
@@ -13,7 +12,8 @@ import graft.index.InvertedIndex
   *   queries --tokenize--> (query_id, term, q_mult)   [tiny, broadcast]
   *   postings ⋈ query_terms (broadcast hash join; the `term IN (...)`
   *   restriction prunes the postings scan) ⋈ idf (broadcast) ⋈ doc_lens
-  *   --> groupBy(query_id, doc_id) sum  --> per-query top-k window.
+  *   --> groupBy(query_id, doc_id) sum  --> per-query top-k window
+  *   ([[ShardServe.globalRank]]).
   *
   * The only big shuffle is the final (query_id, doc_id) aggregation whose
   * input is already restricted to matched postings. Per-query top-k uses a
@@ -47,14 +47,6 @@ object Bm25Query {
       .agg(sum(col("q_mult") *
         InvertedIndex.bm25Term(col("idf"), col("tf"), col("dl"), lit(avgdl), p))
         .as("score"))
-
-  /** Per-query ranking: rank 1..k by score desc, doc_id asc. */
-  def rank(hits: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val r = hits.withColumn("rank", row_number().over(w))
-    if (k > 0) r.filter(col("rank") <= k) else r
-  }
 
   /** Ranking TSV sink — reference `save_ranking`
     * (`pipelines/retrieve.py:29-40`): `qid \t doc \t score \t rank`,

@@ -255,7 +255,7 @@ object Phrase {
     * UNION of the batch's terms is pulled with one pushed-down IN filter
     * and one shard repartition; per shard every term is decoded ONCE and
     * shared by all queries touching it; matches go straight into the
-    * task's heap per query ([[ShardServe.kernelHits]]), so the final
+    * task's heap per query ([[graft.plans.ShardKernelExec]]), so the final
     * per-query rank window sees <= numTasks x k rows — matched-doc counts
     * never materialize globally. A query naming a term the arm lacks
     * matches nothing (the shard kernel skips it).
@@ -283,9 +283,8 @@ object Phrase {
       .filter(col("term").isin(allTerms: _*))
     val bcTomb = spark.sparkContext.broadcast(snap.tombstones)
     val bcQueries = spark.sparkContext.broadcast(queries.toArray)
-    val grouped = ShardServe.shardPartitioned(spark, snap.numShards, posRows)
-    val hits = ShardServe.kernelHits(spark, grouped, k,
-      () => bcQueries.value.map(_._1))(_.shard) { (rows, heaps) =>
+    val hits = ShardServe.kernelHits(spark, posRows, snap.numShards, "phrase", k,
+      () => bcQueries.value.map(_._1)) { (rows, heaps) =>
       val qs = bcQueries.value
       val decoded = decodeShard(rows)
       var qi = 0

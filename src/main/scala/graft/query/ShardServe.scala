@@ -1,20 +1,20 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.plans.{ShardKernel, ShardKernelStrategy}
 
 /** The one serving driver behind every shard-kernel path — WAND scoring
-  * ([[Wand.search]], [[Wand.searchDs]], the plan-integrated
-  * [[graft.plans.Bm25TopKExec]]) and positional counts ([[Phrase.search]]
-  * and its one-query siblings):
+  * ([[Wand.search]], [[Wand.searchDs]], [[MoreLikeThis]]) and positional
+  * counts ([[Phrase.search]] and its one-query siblings):
   *
   *   term-filtered postings rows (packed or positional)
-  *     -> [[shardPartitioned]]: shard-capped repartition on `shard`, sorted
-  *        by (shard, term) so one streaming pass sees whole doc-shards
-  *     -> [[kernelHits]]: per task ONE [[TopKHeap]] per query; each shard's
-  *        rows go to the caller's per-shard kernel, which offers candidates
-  *        into those heaps; the task emits <= k rows per query
+  *     -> [[kernelHits]]: the plan node [[graft.plans.ShardKernel]]; its
+  *        exec reads the rows in [[Layout]], so one streaming pass sees
+  *        whole doc-shards, keeps ONE [[TopKHeap]] per query per task, and
+  *        emits <= k rows per query
   *     -> [[globalRank]]: per-query row_number by (score desc, doc_id asc)
   *        over numTasks x k candidate rows.
   *
@@ -26,60 +26,47 @@ object ShardServe {
 
   final case class Hit(query_id: Long, doc_id: Long, score: Double)
 
-  /** Repartition term-filtered postings rows (any row type with `shard` and
-    * `term` columns) so each task holds whole doc-shards. Explicit partition
-    * count: the kernel stage is compute-bound per shard group, not
-    * bytes-bound — AQE's byte-based coalescing would pack the (small,
-    * compressed) matched postings into a handful of long serial tasks. A
-    * user-specified repartition is exempt from AQE coalescing;
-    * sortWithinPartitions then lets one streaming pass group by shard.
-    * Capped at `numShards`, the index's shard count
-    * ([[graft.index.IndexSnapshot.numShards]]): hash-on-shard cannot use
-    * more partitions than distinct shards — the excess were empty tasks.
+  /** The shard layout a kernel reads: clustered on `shard` into
+    * [[kernelPartitions]] partitions, sorted by (shard, term). The one rule
+    * behind [[shardPartitioned]] and the kernel exec's child requirements.
+    */
+  val Layout: Seq[String] = Seq("shard", "term")
+
+  /** The kernel's partition count. Explicit: the kernel stage is
+    * compute-bound per shard group, not bytes-bound — AQE's byte-based
+    * coalescing would pack the (small, compressed) matched postings into a
+    * handful of long serial tasks; a required count is exempt from it.
+    * Capped at `numShards` ([[graft.index.IndexSnapshot.numShards]]):
+    * hash-on-shard cannot fill more partitions than distinct shards.
+    */
+  def kernelPartitions(spark: SparkSession, numShards: Int): Int =
+    math.max(math.min(spark.sparkContext.defaultParallelism * 4, numShards), 1)
+
+  /** `rows` in [[Layout]], for a caller that pins them and serves many
+    * batches from the pin ([[Wand.searchDs]]): a kernel over it plans no
+    * exchange and no sort.
     */
   def shardPartitioned[T](spark: SparkSession, numShards: Int,
-                          rows: Dataset[T]): Dataset[T] = {
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      numShards), 1)
-    rows
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-  }
+                          rows: Dataset[T]): Dataset[T] =
+    rows.repartition(kernelPartitions(spark, numShards), col(Layout.head))
+      .sortWithinPartitions(Layout.map(col): _*)
 
-  /** Per-task kernel stage over an ALREADY shard-partitioned dataset (so a
-    * caller may pin one partitioned dataset and serve many batches from it,
-    * as [[Wand.searchDs]] does). `perShard(rows, heaps)` runs once per
-    * shard group and offers query i's candidates into `heaps(i)`;
-    * `queryIds()` (evaluated once per task, typically from the kernel's
-    * broadcast) names query i in the output. Returns the pre-rank
-    * candidates (query_id, doc_id, score). `k <= 0` keeps every candidate.
+  /** The pre-rank candidates (query_id, doc_id, score) of a `name`d
+    * [[ShardKernel.Kernel]] over the postings `rows` (any row type with
+    * `shard` and `term` columns) of an index of `numShards` shards.
     */
-  def kernelHits[T](spark: SparkSession, grouped: Dataset[T], k: Int,
-                    queryIds: () => Array[Long])(shardOf: T => Int)(
+  def kernelHits[T](spark: SparkSession, rows: Dataset[T], numShards: Int,
+                    name: String, k: Int, queryIds: () => Array[Long])(
       perShard: (Iterator[T], Array[TopKHeap]) => Unit): DataFrame = {
-    import spark.implicits._
-    val kEff = if (k > 0) k else Int.MaxValue
-    grouped.mapPartitions { it =>
-      val ids = queryIds()
-      val heaps = Array.fill(ids.length)(new TopKHeap(kEff))
-      val buf = it.buffered
-      while (buf.hasNext) {
-        val shard = shardOf(buf.head)
-        val rows = scala.collection.mutable.ArrayBuffer.empty[T]
-        while (buf.hasNext && shardOf(buf.head) == shard) rows += buf.next()
-        perShard(rows.iterator, heaps)
-      }
-      ids.iterator.zip(heaps.iterator).flatMap { case (q, h) =>
-        h.drain().iterator.map { case (s, d) => Hit(q, d, s) }
-      }
-    }.toDF()
+    ShardKernelStrategy.register(spark)
+    ColumnBridge.ofRows(spark, ShardKernel(
+      new ShardKernel.Kernel(name, rows.encoder, k, queryIds)(perShard),
+      kernelPartitions(spark, numShards), rows.queryExecution.analyzed))
   }
 
   /** No candidates, in [[kernelHits]]' schema. */
-  def emptyHits(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[Hit].toDF()
-  }
+  def emptyHits(spark: SparkSession): DataFrame =
+    spark.emptyDataset(Encoders.product[Hit]).toDF()
 
   /** Per-query global rank: (query_id, doc_id, score, rank), rank 1..k by
     * (score desc, doc_id asc); `k <= 0` ranks every candidate.
@@ -94,7 +81,7 @@ object ShardServe {
   /** Bounded top-k heap keeping the k best under (score desc, docId asc);
     * root is the WORST kept entry. Primitive parallel arrays — kernels run
     * millions of offers per task, so the heap must be allocation-free.
-    * Storage is allocated on the first offer: [[kernelHits]] creates one
+    * Storage is allocated on the first offer: the kernel creates one
     * heap per query per task, and most queries touch few tasks. Positional
     * counts are offered as `cnt.toDouble` (exact below 2^53, and the same
     * order as (count desc, doc asc)). Also the dense brute-force kernel's

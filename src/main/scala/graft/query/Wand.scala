@@ -9,7 +9,8 @@ import graft.index.{IndexSnapshot, IndexStats, PackedBlock, PackedIndex, PackedP
   * Physical plan (the shared [[ShardServe]] driver, this file supplying the
   * per-shard kernel):
   *   packed postings scan, `term IN (query terms)` pushed to parquet
-  *     -> shard-capped repartition on `shard`, sorted by (shard, term)
+  *     -> shard-capped exchange on `shard`, sorted by (shard, term), both
+  *        planned under the kernel node [[graft.plans.ShardKernelExec]]
   *        (shuffle proportional to the MATCHED postings only, guaranteeing
   *        every query term of a doc range is co-located even if file
   *        splits would have torn a shard apart)
@@ -161,23 +162,37 @@ object Wand {
       minShouldMatch), k)
 
   /** [[search]] of an already-prepared batch before the global rank:
-    * (query_id, doc_id, score), at most k rows per (task, query) — the body
-    * of the plan-integrated [[graft.plans.Bm25TopKExec]], whose plan ranks
-    * on top, and of [[MoreLikeThis]], which selects terms from the
-    * prepared idf maps first.
+    * (query_id, doc_id, score), at most k rows per (task, query), from the
+    * shard kernel node — the body of [[search]], of [[MoreLikeThis]], which
+    * selects terms from the prepared idf maps first, and of each
+    * [[searchDs]] chunk, which hands every chunk the SAME `pinned`,
+    * laid-out postings so the scan+shuffle runs once per batch. Results
+    * are independent of any extra terms present in the rows (cursors exist
+    * only for each query's own terms).
     */
   private[graft] def candidates(spark: SparkSession, snap: IndexSnapshot,
                                 prepared: Seq[PreparedQuery], k: Int,
                                 allowedDocs: Option[Array[Long]] = None,
-                                minShouldMatch: Int = 1): DataFrame = {
+                                minShouldMatch: Int = 1,
+                                pinned: Option[Dataset[PackedPostings]] = None): DataFrame = {
+    if (!prepared.exists(_.idf.nonEmpty)) return ShardServe.emptyHits(spark)
     // must_not terms join the pushed-down posting scan: their lists feed
     // per-query exclusion cursors in the shard kernel (no scoring cursors —
     // only positive terms carry idf entries)
-    val terms =
-      (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
-    if (terms.isEmpty) return ShardServe.emptyHits(spark)
-    wandHits(spark, matchedGrouped(spark, snap, terms), snap.stats, prepared,
-      k, allowedDocs, snap.tombstones, minShouldMatch)
+    val rows = pinned.getOrElse(matched(spark, snap,
+      (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct))
+    val bc = spark.sparkContext.broadcast((snap.stats, prepared))
+    val bcAllowed = spark.sparkContext.broadcast(
+      allowedDocs.map(_.sorted).orNull)
+    // tombstoned docs are invisible to every search (PackedIndex.delete)
+    val bcDenied = spark.sparkContext.broadcast(
+      if (snap.tombstones.isEmpty) null else snap.tombstones)
+    ShardServe.kernelHits(spark, rows, snap.numShards, "wand", k,
+      () => bc.value._2.iterator.map(_.queryId).toArray) { (rows, heaps) =>
+      val (st, qs) = bc.value
+      scoreShard(rows, qs, st, bcAllowed.value, bcDenied.value,
+        minShouldMatch, heaps)
+    }
   }
 
   /** `snap`'s postings of the driver-side term list `terms`: `term IN
@@ -192,38 +207,6 @@ object Wand {
       val bcTerms = spark.sparkContext.broadcast(terms.toSet)
       snap.postings(spark).filter(udf((t: String) => bcTerms.value.contains(t)).apply(col("term")))
     }
-
-  /** [[matched]], shard-partitioned. */
-  private def matchedGrouped(spark: SparkSession, snap: IndexSnapshot,
-                             terms: Seq[String]): Dataset[PackedPostings] =
-    ShardServe.shardPartitioned(spark, snap.numShards, matched(spark, snap, terms))
-
-  /** The WAND kernel over an ALREADY shard-partitioned postings dataset;
-    * [[searchDs]] hands the SAME pinned partitioned dataset to every chunk
-    * so the scan+shuffle runs once per batch, not per chunk. Results are
-    * independent of any extra terms present in the rows (cursors exist
-    * only for each query's own terms).
-    */
-  private def wandHits(spark: SparkSession, grouped: Dataset[PackedPostings],
-                       stats: IndexStats, prepared: Seq[PreparedQuery],
-                       k: Int, allowedDocs: Option[Array[Long]],
-                       tomb: Array[Long], minShouldMatch: Int): DataFrame = {
-    if (prepared.isEmpty || !prepared.exists(_.idf.nonEmpty))
-      return ShardServe.emptyHits(spark)
-    val bc = spark.sparkContext.broadcast((stats, prepared))
-    val bcAllowed = spark.sparkContext.broadcast(
-      allowedDocs.map(_.sorted).orNull)
-    // tombstoned docs are invisible to every search (PackedIndex.delete)
-    val bcDenied = spark.sparkContext.broadcast(
-      if (tomb.isEmpty) null else tomb)
-    ShardServe.kernelHits(spark, grouped, k,
-      () => bc.value._2.iterator.map(_.queryId).toArray)(_.shard) {
-      (rows, heaps) =>
-        val (st, qs) = bc.value
-        scoreShard(rows, qs, st, bcAllowed.value, bcDenied.value,
-          minShouldMatch, heaps)
-    }
-  }
 
   /** Dataset-typed query batch: the large-batch path. The query frame is
     * collected to the driver once ([[ChunkedServe.collect]]; the driver
@@ -259,23 +242,22 @@ object Wand {
       return search(spark, snap, batch.toSeq, k, allowedDocs, minShouldMatch,
         mustNot, Map.empty)
     // Above one chunk the index side is prepared ONCE for the whole batch:
-    // the union of the batch's tokens (built on the driver with the same
-    // CPython-parity tokenizer as prepare()) restricts the postings scan,
-    // and the shard-partitioned result is pinned so every chunk's kernel
-    // job reads the cached partitions instead of re-running the scan +
-    // shuffle per chunk. Per-chunk results are identical (cursors exist
-    // only for each query's own terms). The pin lives strictly inside this
+    // the union of the batch's tokens (the same CPython-parity tokenizer as
+    // prepare()) restricts the postings scan, and the result is pinned in
+    // the kernel's layout, so every chunk's kernel reads the cached
+    // partitions with no exchange. The pin lives strictly inside this
     // call: materialized before the chunk pool starts, unpersisted after.
     val terms = (batch.iterator.map(_._2) ++ mustNot.valuesIterator)
       .flatMap(graft.tokenize.PyTokenize.split(_)).toSeq.distinct
-    val grouped = matchedGrouped(spark, snap, terms)
+    val grouped = ShardServe.shardPartitioned(spark, snap.numShards,
+      matched(spark, snap, terms))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
       ChunkedServe.serve(batch, chunkSize) { chunk =>
-        ShardServe.globalRank(wandHits(spark, grouped, snap.stats,
+        ShardServe.globalRank(candidates(spark, snap,
           prepare(spark, snap, chunk, mustNot), k, allowedDocs,
-          snap.tombstones, minShouldMatch), k)
+          minShouldMatch, Some(grouped)), k)
       }
     } finally grouped.unpersist(false)
   }
@@ -439,7 +421,7 @@ object Wand {
 
   /** WAND over one shard's matched rows for every query in the batch,
     * offering query i's candidates into `heaps(i)` — the task-owned heaps
-    * of [[ShardServe.kernelHits]]. A (shard, term) can appear in MULTIPLE
+    * of the shard kernel node. A (shard, term) can appear in MULTIPLE
     * rows when the shard spans build groups (incremental appends land in
     * new groups): their block lists cover disjoint, monotone docId ranges
     * and are concatenated in baseDocId order to form one logical posting

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuous index ingestion (SURVEY §2.10): a Structured Streaming source
   * of raw pages drives the SAME build/append path as batch — each
-  * micro-batch lands as one crash-safe index commit (group parquet → df →
+  * micro-batch lands as one crash-safe index commit (group parquet →
   * commit record, exactly [[graft.index.PackedIndex.append]]'s protocol),
   * so a query running against the index sees atomic corpus growth and the
   * result of the streamed ingest is BIT-IDENTICAL to a batch rebuild over

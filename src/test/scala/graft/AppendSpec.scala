@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** Incremental append == full rebuild (bit-identical), plus salting
   * primitives.
   */
-class AppendSpec extends SparkSpec {
+class AppendSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("append to an index is bit-identical to a full rebuild") {
@@ -242,10 +243,13 @@ class AppendSpec extends SparkSpec {
     // pre-delete run (stats frozen until rebuild, like Lucene pre-merge)
     assert(after.toSet == base.filterNot(h => deadSet.contains(h._2)).toSet)
 
-    // the strategy-planned path honors tombstones too
-    val planHits = graft.plans.Bm25TopKPlan.search(spark, dir, queries, 10)
-      .collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(planHits.intersect(deadSet).isEmpty)
+    // the bounded top-k, planned through ShardKernelExec, honors them too
+    val planned = Wand.search(spark, dir, queries, 10)
+    val planHits = planned.collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(collect(planned.queryExecution.executedPlan) {
+      case e: graft.plans.ShardKernelExec => e
+    }.size == 1)
+    assert(planHits.nonEmpty && planHits.intersect(deadSet).isEmpty)
 
     // append after delete: new docs are visible, tombstones persist
     val extra = PagesGen.pages(spark, 350, partitions = 4)

@@ -120,7 +120,7 @@ class Bm25OracleSpec extends SparkSpec {
     val qdf = queries.toDF("query_id", "text")
     val hits = Bm25Query.scoreBatch(post, idf, dls, st.getDouble(1),
       Bm25Query.queryTerms(qdf), P)
-    val ranked = Bm25Query.rank(hits, 3).collect()
+    val ranked = graft.query.ShardServe.globalRank(hits, 3).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         (r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toMap
 

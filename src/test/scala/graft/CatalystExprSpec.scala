@@ -36,8 +36,8 @@ class CatalystExprSpec extends SparkSpec {
     // spark.sql.extensions=graft.plans.GraftExtensions \u2014 both injections
     // must be live WITHOUT any programmatic registration call
     assert(spark.sessionState.planner.extraPlanningStrategies
-      .contains(graft.plans.Bm25Strategy),
-      "Bm25Strategy not injected by spark.sql.extensions")
+      .contains(graft.plans.ShardKernelStrategy),
+      "ShardKernelStrategy not injected by spark.sql.extensions")
     assert(spark.catalog.functionExists("py_ws_tokenize"),
       "py_ws_tokenize not in the catalog via injectFunction")
   }

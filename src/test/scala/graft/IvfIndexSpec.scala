@@ -134,6 +134,17 @@ class IvfIndexSpec extends SparkSpec {
       IvfIndex.build(corpus, dir, nCells = 4, iters = 2)
     }
     assert(ex.getMessage.contains("fresh dir"))
+    // only a caller-given name is a replay: an unnamed append whose
+    // automatic name a named segment already took lands under the next
+    // free name instead of dropping its batch
+    val auto = scratchDir("ivfautoname")
+    IvfIndex.build(corpus, auto, nCells = 4, iters = 2)
+    IvfIndex.append(extra, auto, segmentName = Some("cells-a2"))
+    val more = randCorpus(30, 8, 21).select((col("vec_id") + 250L).as("vec_id"), col("vec"))
+    IvfIndex.append(more, auto)
+    val grown = IvfIndex.snapshot(auto)
+    assert(grown.segments.map(_.name) == Seq("cells", "cells-a2", "cells-a3"))
+    assert(grown.nVecs == 280L)
   }
 
   test("id-set filters above the isin threshold (broadcast join path) agree with small sets") {

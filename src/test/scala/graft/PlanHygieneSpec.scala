@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (e.g. a lost filter pushdown) would still pass row-level tests while
   * scanning orders of magnitude more data.
   */
-class PlanHygieneSpec extends SparkSpec {
+class PlanHygieneSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private lazy val dir: String = {
     val d = scratchDir("plan-idx")
@@ -110,11 +111,13 @@ class PlanHygieneSpec extends SparkSpec {
         plan.take(1500))
   }
 
-  test("q_bm25_wand_topk runs through the strategy-planned Bm25TopKExec") {
+  test("q_bm25_wand_topk runs through the strategy-planned ShardKernelExec") {
     val df = SparkEntry.queries("q_bm25_wand_topk")(spark, "/root/testdata/sf0.001")
     df.collect() // execute so AQE finalizes
-    assert(df.queryExecution.executedPlan.toString.contains("Bm25TopK"),
-      df.queryExecution.executedPlan.toString.take(800))
+    val kernels = collect(df.queryExecution.executedPlan) {
+      case e: graft.plans.ShardKernelExec => e
+    }
+    assert(kernels.size == 1, df.queryExecution.executedPlan.toString.take(800))
   }
 
   test("persisted dictionary: prefix suggest pushes StartsWith; small-batch " +

@@ -4,8 +4,14 @@ import graft.ann.IvfIndex
 import graft.corpus.{PagesGen, PagesPipeline}
 import graft.index.{InvertedIndex, PackedIndex, PositionalIndex}
 import graft.query.{IndexCache, Phrase, PositionalMode, PositionalQuery, Wand}
+import graft.plans.ShardKernelExec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** A multi-group index with a positional arm: four build groups, then
   * batches appended to both arms, each append one more committed group.
@@ -76,7 +82,7 @@ object IvfVecs {
   * IVF search reads its committed segments as one known-schema relation,
   * so it too runs the same jobs at any segment count.
   */
-class ReadJobsSpec extends SparkSpec {
+class ReadJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Jobs of a warm 2-chunk local-batch `Wand.searchDs` on [[MultiGroupIndex]]
     * (13 shards) and the collect of its result: three pin the batch's
@@ -254,6 +260,39 @@ class ReadJobsSpec extends SparkSpec {
       val parquet = schemaJobs(jobs)
       assert(parquet.isEmpty, s"parquet jobs in a 2-chunk local-batch searchDs: $parquet")
       assert(jobs.size == ChunkedJobs, s"a 2-chunk searchDs ran ${jobs.size} jobs: $jobs")
+    }
+  }
+
+  test("each chunk of a 2-chunk searchDs plans its kernel over the pin: no exchange, no sort") {
+    val dir = scratchDir("readjobs-pin")
+    MultiGroupIndex.build(spark, dir)
+    val batch = spark.createDataFrame((1L to 40L).map(i =>
+      i -> s"w$i w${(i * 7) % 200} the")).toDF("query_id", "text")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the kernel nodes of each executed plan that has one: the chunks'
+    def kernelsPerPlan(): Seq[Seq[ShardKernelExec]] = {
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq.map(p => collect(p) { case e: ShardKernelExec => e }).filter(_.nonEmpty)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Wand.searchDs(spark, dir, batch, 10, chunkSize = 20).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (kernelsPerPlan().size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val chunks = kernelsPerPlan()
+    assert(chunks.size == 2 && chunks.forall(_.size == 1),
+      s"chunk plans with ShardKernelExec nodes: ${chunks.map(_.size)}")
+    for (kernel <- chunks.map(_.head)) {
+      val between = collect(kernel.child) { case e: Exchange => e; case s: SortExec => s }
+      assert(between.isEmpty, s"a chunk plans $between between the pin and its kernel:\n$kernel")
+      assert(collect(kernel.child) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"a chunk's kernel does not read the pin:\n$kernel")
     }
   }
 

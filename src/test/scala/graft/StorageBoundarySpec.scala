@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import graft.plans.Bm25TopKPlan
-import graft.query.{IndexCache, Phrase, Wand}
+import graft.query.{IndexCache, MoreLikeThis, Phrase, Wand}
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
@@ -32,14 +31,14 @@ class StorageBoundarySpec extends SparkSpec {
 
     def serve(d: String): Seq[Set[Seq[Any]]] = {
       IndexCache.invalidateAll()
-      Seq(rows(Bm25TopKPlan.search(spark, d, queries, 10)),
+      Seq(rows(MoreLikeThis.search(spark, d, queries, maxTerms = 3, k = 10)),
         rows(Wand.search(spark, d, queries, 10)),
         rows(Wand.searchDs(spark, d, batch, 10, chunkSize = 5)),
         rows(Phrase.topKPositional(spark, d, phrase, 10)))
     }
     val viaPath = serve(dir)
     val viaUri = serve(uri)
-    Seq("Bm25TopKExec", "Wand.search", "Wand.searchDs", "Phrase.topKPositional")
+    Seq("MoreLikeThis.search", "Wand.search", "Wand.searchDs", "Phrase.topKPositional")
       .zipWithIndex.foreach { case (name, i) =>
         assert(viaPath(i).nonEmpty, s"$name: empty fixture result")
         assert(viaUri(i) == viaPath(i), s"$name diverged through the file:// URI")
